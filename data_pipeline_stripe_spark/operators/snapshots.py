@@ -3590,136 +3590,210 @@ def snapshot_delete_where(spark: SparkSession, table_dir: str,
                      "files_rewritten": 0}
 
 
-def _retry_unpinned_cdc(table_dir: str, pinned: bool, attempt_fn,
-                        refresh_fn, verb: str, max_retries: int = 20):
-    """Verb-level OCC retry for the merge-on-read CDC verbs
-    (``snapshot_delete_keys`` / ``snapshot_upsert_keys`` /
-    ``snapshot_apply_cdc_mor``, r13 second half): their semantic is
-    "apply this change to the table state AT PUBLISH TIME" — the
-    sidecars and data files are immutable and derive from the BATCH,
-    not from any read of the table — so when the caller did NOT pin
-    ``base_version``, losing a race to an interleaved REWRITE
-    (another trickle delete, a compaction, a merge) just means
-    re-reading the head manifest and re-publishing on top of it: the
-    serial restatement, no data re-written, no work lost. Racing
-    trickle CDC writers therefore never abort each other. A caller
-    who DID pin base_version keeps strict read-validation (the
-    mismatch aborts — they derived something from that read). Only
-    the version-moved conflict retries; every other conflict (e.g. a
-    concurrent expire swept the unpublished sidecar) is re-raised —
-    those need the caller to re-run the verb from scratch."""
-    # the three version-moved shapes: the plain mismatch, a narrowing
-    # range with an expired prefix, an interleaved rewrite the
-    # narrowing refuses — all mean only "the head moved", which these
-    # verbs re-derive over by definition
-    retryable = ("moved to version", "moved past the read version",
-                 "is a concurrent")
-    for _ in range(max_retries + 1):
-        try:
-            return attempt_fn()
-        except SnapshotConflictError as exc:
-            if pinned or not any(s in str(exc) for s in retryable):
-                raise
-            refresh_fn()
-    raise SnapshotConflictError(
-        f"{verb}: {table_dir} kept moving through {max_retries} "
-        "re-derivations — raise max_retries or quiesce the writers")
+def _write_key_sidecar(spark: SparkSession, table_dir: str,
+                       keys: DataFrame, key_cols: list[str],
+                       null_msg: str) -> dict | None:
+    """Write ``keys`` as a key sidecar (``eqdel/<id>``) and return its
+    equality-delete descriptor ``{path, cols, rows, bands}`` — or None,
+    with the directory removed, when no row was written (a descriptor
+    of nothing would cost every later read an anti-join).
 
+    Single evaluation, zero Spark jobs: the row count, the key bands
+    and the NULL-key refusal come from the WRITTEN files' parquet
+    footers, each read once (``_collect_file_stats``). Bands (per-column
+    key min/max, which let readers and the CDF skip files the keys
+    cannot touch — ``_eq_desc_may_touch``) are recorded only for
+    integral and string columns: their Python ordering agrees with
+    Spark's and Spark's writer does not truncate their footer min/max
+    (float min/max can silently exclude NaN rows). NULL keys are
+    refused — an anti-join never matches NULL, so the key would delete
+    or replace nothing; only a footer reporting a NULL (or no null
+    count) pays a Spark probe, to fetch the example row for
+    ``null_msg``."""
+    import shutil
 
-def _key_sidecar_stats(written: DataFrame, key_cols: list[str]
-                       ) -> tuple[int, dict]:
-    """(row count, key bands) of a written key sidecar in ONE job:
-    count + per-column min/max together. Bands are recorded for
-    str/int (non-bool) keys only — the types whose Python ordering
-    agrees with Spark's (the bucket-derivation rationale); other
-    types just skip the band (conservative, never wrong)."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegralType, StringType
 
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        f for c in key_cols
-        for f in (F.min(c).alias(f"__lo_{c}"),
-                  F.max(c).alias(f"__hi_{c}"))]
-    row = written.agg(*aggs).first().asDict()
-    bands = {}
-    for c in key_cols:
-        lo, hi = row[f"__lo_{c}"], row[f"__hi_{c}"]
-        if (type(lo) in (int, str) and type(hi) in (int, str)
-                and lo is not None):
-            bands[c] = [lo, hi]
-    return row["__n"], bands
-
-
-def _key_sidecar_footer(spark: SparkSession, table_dir: str, rel: str,
-                        key_cols: list[str], null_msg: str
-                        ) -> tuple[int, dict]:
-    """(row count, key bands) of a WRITTEN key sidecar from its parquet
-    FOOTERS — zero Spark jobs where ``_key_sidecar_stats`` paid one agg
-    job and the NULL-key probe a second (guide §1: at gate scale the
-    job launches dominate the tiny-frame compute). Identical output
-    contract: bands only for columns whose PHYSICAL type is integer or
-    string (the types whose Python ordering agrees with Spark's —
-    floats stay band-less exactly as before because footer min/max can
-    silently exclude NaN rows, and dates stay band-less because the
-    agg path never recorded them), min/max exact for those types
-    (Spark's parquet writer does not truncate row-group statistics).
-
-    NULL keys: footer null counts answer the refusal check driver-side;
-    only an actual violation (or a footer lacking null counts — not a
-    shape Spark's writer produces) pays a Spark probe, to fetch the
-    example row for ``null_msg``."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
+    rel = os.path.join("eqdel", uuid.uuid4().hex[:12])
     abs_dir = os.path.join(table_dir, rel)
-    n_total = 0
+    keys = keys.select(*key_cols)
+    keys.coalesce(1).write.mode("error").parquet(abs_dir)
+    bandable = {f.name for f in keys.schema.fields
+                if isinstance(f.dataType, (IntegralType, StringType))}
     lo_hi: dict[str, list] = {}
-    bandable: dict[str, bool] = {c: True for c in key_cols}
-    nulls_known = True
-    n_nulls = 0
+    n_rows, n_nulls = 0, 0  # n_nulls is None once a footer lacks a count
     for f in sorted(os.listdir(abs_dir)):
         if not f.endswith(".parquet"):
             continue
-        pf = pq.ParquetFile(os.path.join(abs_dir, f))
-        n_total += pf.metadata.num_rows
-        arrow_schema = pf.schema_arrow
-        stats, _ = _collect_file_stats(os.path.join(abs_dir, f))
+        stats, rows = _collect_file_stats(os.path.join(abs_dir, f))
+        if not rows:
+            continue
+        n_rows += rows
         for c in key_cols:
-            field = arrow_schema.field(c) if c in arrow_schema.names \
-                else None
-            ok_type = field is not None and (
-                pa.types.is_integer(field.type)
-                or pa.types.is_string(field.type)
-                or pa.types.is_large_string(field.type))
-            st = stats.get(c) or {}
-            if st.get("nulls") is None:
-                nulls_known = False
-            else:
-                n_nulls += st["nulls"]
+            st = stats.get(c, {})
+            n_nulls = (None if n_nulls is None or st.get("nulls") is None
+                       else n_nulls + st["nulls"])
             lo, hi = st.get("min"), st.get("max")
-            if (not ok_type or lo is None or hi is None
-                    or type(lo) not in (int, str)
-                    or type(hi) not in (int, str)):
-                bandable[c] = False
-                continue
-            if c in lo_hi:
-                lo_hi[c][0] = min(lo_hi[c][0], lo)
-                lo_hi[c][1] = max(lo_hi[c][1], hi)
+            if lo is None or hi is None:
+                bandable.discard(c)
+            elif c in lo_hi:
+                lo_hi[c] = [min(lo_hi[c][0], lo), max(lo_hi[c][1], hi)]
             else:
                 lo_hi[c] = [lo, hi]
-    if not nulls_known or n_nulls > 0:
-        # rare path: fetch the example row (and the authoritative
-        # answer when footers lacked null counts) with one Spark probe
-        written = spark.read.parquet(abs_dir)
+    if not n_rows:
+        shutil.rmtree(abs_dir)
+        return None
+    if n_nulls != 0:
         null_cond = F.lit(False)
         for c in key_cols:
             null_cond = null_cond | F.col(c).isNull()
-        bad = written.filter(null_cond).limit(1)
-        if not bad.isEmpty():
-            raise ValueError(null_msg.format(row=bad.first().asDict()))
-    bands = {c: lo_hi[c] for c in key_cols
-             if bandable.get(c) and c in lo_hi and n_total > 0}
-    return n_total, bands
+        bad = spark.read.parquet(abs_dir).filter(null_cond).first()
+        if bad is not None:
+            raise ValueError(null_msg.format(row=bad.asDict()))
+    return {"path": rel, "cols": key_cols, "rows": n_rows,
+            "bands": {c: lo_hi[c] for c in key_cols if c in bandable}}
+
+
+# the version-moved conflict shapes: the plain mismatch, a narrowing
+# range with an expired prefix, an interleaved rewrite the narrowing
+# refuses — all mean only "the head moved"
+_HEAD_MOVED = ("moved to version", "moved past the read version",
+               "is a concurrent")
+
+
+def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
+                base_version: int | None, epoch_key: str | None,
+                inputs, dedup_keys: bool = False
+                ) -> tuple[int, int, int, int]:
+    """The one commit path of the merge-on-read verbs
+    (``snapshot_delete_keys`` / ``snapshot_upsert_keys`` /
+    ``snapshot_apply_cdc_mor``): an O(batch) commit that opens ZERO
+    existing data files.
+
+    After the base version is resolved, a replayed ``epoch_key`` is
+    answered as a no-op and the key columns are checked against the
+    table schema, ``inputs(key_cols)`` — the verb's own input step —
+    returns ``(rows, dels)``: rows to append, or None, and delete keys,
+    or None. The rows are written as a data commit (additive schema
+    evolution and CHECK constraints as for an append) and their WRITTEN
+    keys — deduplicated when ``dedup_keys`` — as a ``covered`` key
+    sidecar: every such key has its replacement in this commit, so the
+    CDF serves the delta as 'U' rows and needs no D rows for it. The
+    delete keys become an uncovered sidecar whose D rows the CDF
+    computes lazily, band-pruned. No rows written and no delete keys
+    means no commit.
+
+    Each descriptor's ``seq`` is the version it publishes at, stamped
+    by the publish loop, so interleaved disjoint appends rebase beneath
+    it — the serial order. When the caller did not pin
+    ``base_version``, losing the race to an interleaved REWRITE
+    (another trickle verb, a compaction, a merge) only means the head
+    moved: the sidecars and data derive from the batch, not from a
+    read of the table, so the routine re-reads the head and publishes
+    on top of it with nothing re-written — racing trickle CDC writers
+    never abort each other. A pinned base keeps strict read-validation
+    and aborts; every other conflict (e.g. an expire swept an
+    unpublished sidecar) re-raises.
+
+    Returns (version, rows appended, covered keys, delete keys); an
+    epoch replay or an empty batch returns (head, 0, 0, 0)."""
+    import shutil
+
+    from pyspark.sql.types import StructType
+
+    key_cols = [key] if isinstance(key, str) else list(key)
+    if not key_cols:
+        raise ValueError(f"{verb}: key_cols is empty")
+    pinned = base_version is not None
+    if not pinned:
+        base_version = snapshot_current_version(table_dir)
+    if base_version is None:
+        raise ValueError(f"{verb}: {table_dir} has no commits — use "
+                         "snapshot_commit for the initial load")
+    manifest = _read_manifest_meta(table_dir, base_version)
+    last = manifest.get("last_epoch")
+    if epoch_key is not None and last is not None and (
+            _epoch_sort_key(epoch_key) <= _epoch_sort_key(last)):
+        return base_version, 0, 0, 0
+
+    def check(m: dict, rows: DataFrame | None) -> None:
+        cols = {f["name"] for f in json.loads(m["schema"])["fields"]}
+        missing = [c for c in key_cols if c not in cols]
+        if missing:
+            raise ValueError(
+                f"{verb}: key column(s) {missing} not in the table "
+                f"schema {sorted(cols)}")
+        if rows is not None:
+            _evolved_schema_json(m["schema"], rows.schema)
+
+    check(manifest, None)
+    rows, dels = inputs(key_cols)
+    entries: list[dict] = []
+    descs: list[dict] = []
+    n_rows = n_covered = n_deleted = 0
+    if rows is not None:
+        check(manifest, rows)  # before paying the data write
+        data_rel = os.path.join("data", uuid.uuid4().hex[:12])
+        rows.write.mode("error").parquet(os.path.join(table_dir, data_rel))
+        entries = _file_entries(table_dir, data_rel)
+        n_rows = sum(e["rows"] for e in entries)
+        if not n_rows:
+            shutil.rmtree(os.path.join(table_dir, data_rel))
+            rows, entries = None, []
+        else:
+            written = spark.read.parquet(
+                os.path.join(table_dir, data_rel)).select(*key_cols)
+            desc = _write_key_sidecar(
+                spark, table_dir,
+                written.dropDuplicates() if dedup_keys else written,
+                key_cols, f"{verb}: an upsert row has a NULL key value "
+                "({row}) — the row it replaces would survive next to "
+                "it; filter such rows")
+            n_covered = desc["rows"]
+            descs.append(dict(desc, covered=True))
+    if dels is not None:
+        desc = _write_key_sidecar(
+            spark, table_dir, dels, key_cols,
+            f"{verb}: a delete key has a NULL key value "
+            "({row}) — an equality delete never matches NULL; filter "
+            "such rows")
+        if desc:
+            n_deleted = desc["rows"]
+            descs.append(desc)
+    if not descs:
+        return base_version, 0, 0, 0
+    validated = manifest.get("constraints")
+    if entries:
+        _enforce_constraints(spark, table_dir, validated, entries,
+                             rows.schema.json(), verb)
+    for _ in range(21):
+        try:
+            version = _publish_commit(
+                table_dir, mode="rewrite", new_entries=entries,
+                batch_schema=(rows.schema if entries else StructType
+                              .fromJson(json.loads(manifest["schema"]))),
+                epoch_key=epoch_key, expected_version=base_version,
+                reuse_segments=list(manifest["segments"]),
+                changes_entries=None,  # the CDF derives it (see above)
+                cdf_key=key_cols[0] if len(key_cols) == 1 else key_cols,
+                dirty_probe=lambda e: False,  # every append commutes
+                eq_deletes=list(manifest.get("eq_deletes") or []) + descs,
+                extra_commit_dirs={d["path"] for d in descs},
+                validated_constraints=validated if entries else "skip",
+                revalidate=(lambda c: _enforce_constraints(
+                    spark, table_dir, c, entries, rows.schema.json(), verb))
+                if entries else None)
+            return version, n_rows, n_covered, n_deleted
+        except SnapshotConflictError as exc:
+            if pinned or not any(s in str(exc) for s in _HEAD_MOVED):
+                raise
+        base_version = snapshot_current_version(table_dir)
+        manifest = _read_manifest_meta(table_dir, base_version)
+        check(manifest, rows)
+    raise SnapshotConflictError(
+        f"{verb}: {table_dir} kept moving through 20 re-derivations — "
+        "quiesce the writers")
 
 
 def snapshot_delete_keys(spark: SparkSession, table_dir: str,
@@ -3733,12 +3807,12 @@ def snapshot_delete_keys(spark: SparkSession, table_dir: str,
     position-delete verb READS the dirty band to resolve row positions
     (O(band) per delete, every delete); this verb writes the key
     values as a sidecar parquet (``eqdel/<id>``) and attaches a
-    manifest-level descriptor ``{path, cols, seq}`` — readers
-    broadcast-anti-join it against every entry whose segment sequence
-    number is OLDER than the delete, so a key re-inserted afterwards
-    survives (Iceberg's sequence-number rule). Commit metadata and
-    commit I/O are O(keys): flat in table size AND in band size — the
-    claim deletion vectors cannot make.
+    manifest-level descriptor ``{path, cols, rows, bands, seq}`` —
+    readers broadcast-anti-join it against every entry whose segment
+    sequence number is OLDER than the delete, so a key re-inserted
+    afterwards survives (Iceberg's sequence-number rule). Commit
+    metadata and commit I/O are O(keys): flat in table size AND in
+    band size — the claim deletion vectors cannot make.
 
     Application points: ``snapshot_read`` / ``snapshot_scan`` / the
     merge-family dirty reads / the batch+streaming Python DataSource.
@@ -3753,94 +3827,19 @@ def snapshot_delete_keys(spark: SparkSession, table_dir: str,
     untouched (older manifests carry the shorter descriptor list).
 
     ``keys`` is a DataFrame of exactly ``key_cols`` (extra columns are
-    projected away; duplicates collapsed); NULL key values are refused
-    (an anti-join NULL never matches — the delete would silently skip
-    them). Interleaved DISJOINT appends rebase (the delete applies to
-    them — exactly the serial order, since their sequence numbers
-    precede the delete's); interleaved REWRITES (another trickle
-    delete, a compaction, a merge) RE-DERIVE when ``base_version``
-    was not pinned — the verb's semantic is "delete these keys from
-    the state at publish", the sidecar derives from the batch alone,
-    so racing trickle CDC writers never abort each other
-    (``_retry_unpinned_cdc``); a pinned base keeps strict
-    read-validation and aborts. Returns (version, {"keys": n}). A key
-    set matching nothing still commits (the descriptor is dropped
+    projected away; duplicates collapsed) — this verb's input step;
+    the commit is ``_mor_commit``'s, shared with
+    ``snapshot_upsert_keys`` and ``snapshot_apply_cdc_mor``: NULL key
+    values and key columns the table lacks are refused, interleaved
+    disjoint appends rebase, interleaved rewrites re-derive unless
+    ``base_version`` is pinned. Returns (version, {"keys": n}). An
+    empty key set commits nothing and returns the current version; a
+    key set matching nothing still commits (the descriptor is dropped
     once provably useless) — resolving matches would require the band
     read this verb exists to avoid."""
-    from pyspark.sql import functions as F
-
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    if not key_cols:
-        raise ValueError("snapshot_delete_keys: key_cols is empty")
-    pinned = base_version is not None
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(
-            f"snapshot_delete_keys: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
-
-    def check_key_cols(m: dict) -> None:
-        cols = {f["name"] for f in json.loads(m["schema"])["fields"]}
-        missing = [c for c in key_cols if c not in cols]
-        if missing:
-            raise ValueError(
-                f"snapshot_delete_keys: key column(s) {missing} not in "
-                f"the table schema {sorted(cols)}")
-
-    check_key_cols(manifest)
-    key_df = keys.select(*key_cols).dropDuplicates()
-    eq_rel = os.path.join("eqdel", uuid.uuid4().hex[:12])
-    # one evaluation: write, then validate the WRITTEN keys (the same
-    # nondeterminism rationale as replaceWhere's stray check)
-    key_df.coalesce(1).write.mode("error").parquet(
-        os.path.join(table_dir, eq_rel))
-    from pyspark.sql.types import StructType
-
-    # KEY BANDS (r13 second half): per-column key min/max, recorded in
-    # the descriptor so readers / CDF skip files whose footer stats
-    # cannot intersect them (_eq_desc_may_touch) — read from the
-    # written sidecar's FOOTERS with the NULL refusal, zero Spark jobs
-    # (r14: was one agg job + one null-probe job per delete)
-    n_keys, bands = _key_sidecar_footer(
-        spark, table_dir, eq_rel, key_cols,
-        "snapshot_delete_keys: a key row has a NULL key value "
-        "({row}) — an equality delete can never match NULL; filter "
-        "such rows or use snapshot_delete_where with an is_null term")
-    # the delete's seq is the version it PUBLISHES at — not knowable
-    # before the OCC loop wins, so the descriptor records a seq the
-    # loop rewrites per attempt via the callback below
-    desc = {"path": eq_rel, "cols": key_cols, "rows": n_keys,
-            "bands": bands}
-
-    def attempt() -> int:
-        return _publish_commit(
-            table_dir, mode="rewrite",
-            new_entries=[],
-            batch_schema=StructType.fromJson(
-                json.loads(manifest["schema"])),
-            expected_version=base_version,
-            reuse_segments=list(manifest["segments"]),
-            changes_entries=None,  # CDF is computed lazily at read time
-            cdf_key=(key_cols[0] if len(key_cols) == 1 else key_cols),
-            dirty_probe=lambda e: False,  # every append is provably
-            #                               disjoint: the delete applies
-            #                               to it by sequence number,
-            #                               exactly the serial
-            #                               restatement
-            eq_deletes=list(manifest.get("eq_deletes") or []) + [desc],
-            extra_commit_dirs={eq_rel})
-
-    def refresh() -> None:
-        # unpinned semantics: "delete these keys from the state at
-        # publish" — re-derive on the moved head (sidecar unchanged)
-        nonlocal base_version, manifest
-        base_version = snapshot_current_version(table_dir)
-        manifest = _read_manifest_meta(table_dir, base_version)
-        check_key_cols(manifest)
-
-    version = _retry_unpinned_cdc(table_dir, pinned, attempt, refresh,
-                                  "snapshot_delete_keys")
+    version, _, _, n_keys = _mor_commit(
+        spark, table_dir, "snapshot_delete_keys", key_cols, base_version,
+        None, lambda kc: (None, keys.select(*kc).dropDuplicates()))
     return version, {"keys": n_keys}
 
 
@@ -3872,125 +3871,16 @@ def snapshot_upsert_keys(spark: SparkSession, table_dir: str,
     are replaced — Delta's non-append rule; ``skipChangeCommits``
     skips it).
 
-    OPTIMIZE materializes the replacement and drops the descriptor;
-    reads/time-travel/conflict rules follow ``snapshot_delete_keys``
-    (interleaved disjoint appends rebase — the descriptor re-stamps
-    above them, the serial order; interleaved rewrites RE-DERIVE when
-    ``base_version`` was not pinned, abort when it was —
-    ``_retry_unpinned_cdc``). NULL key values are refused (an
-    anti-join NULL never matches — the old row would survive next to
-    its replacement). Returns
-    (version, {"rows": n, "keys": n_distinct})."""
-    from pyspark.sql import functions as F
-
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    if not key_cols:
-        raise ValueError("snapshot_upsert_keys: key_cols is empty")
-    pinned = base_version is not None
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(
-            f"snapshot_upsert_keys: {table_dir} has no commits — use "
-            "snapshot_commit for the initial load")
-    manifest = _read_manifest_meta(table_dir, base_version)
-    if epoch_key is not None:
-        last = manifest.get("last_epoch")
-        if last is not None and (
-                _epoch_sort_key(epoch_key) <= _epoch_sort_key(last)):
-            return base_version, {"rows": 0, "keys": 0}
-    cols = {f["name"] for f in json.loads(manifest["schema"])["fields"]}
-    missing = [c for c in key_cols if c not in cols]
-    if missing:
-        raise ValueError(
-            f"snapshot_upsert_keys: key column(s) {missing} not in the "
-            f"table schema {sorted(cols)}")
-    # additive evolution allowed, incompatible types refused — before
-    # paying the data write
-    _evolved_schema_json(manifest["schema"], df.schema)
-
-    commit_id = uuid.uuid4().hex[:12]
-    data_rel = os.path.join("data", commit_id)
-    df.write.mode("error").parquet(os.path.join(table_dir, data_rel))
-    new_entries = _file_entries(table_dir, data_rel)
-    # single evaluation: keys come from the WRITTEN rows (the same
-    # nondeterminism rationale as replaceWhere's stray check). The
-    # NULL-key refusal answers from the data files' FOOTER null counts
-    # (already collected in new_entries) — a Spark probe runs only on
-    # an actual violation, to fetch the example row (r14, guide §1:
-    # was an unconditional probe job per upsert)
-    written = spark.read.parquet(os.path.join(table_dir, data_rel))
-    footer_nulls = 0
-    for e in new_entries:
-        for c in key_cols:
-            n = (e.get("stats") or {}).get(c, {}).get("nulls")
-            footer_nulls = (None if n is None or footer_nulls is None
-                            else footer_nulls + n)
-    if footer_nulls is None or footer_nulls > 0:
-        null_cond = F.lit(False)
-        for c in key_cols:
-            null_cond = null_cond | F.col(c).isNull()
-        bad = written.filter(null_cond).limit(1)
-        if not bad.isEmpty():
-            raise ValueError(
-                "snapshot_upsert_keys: an upsert row has a NULL key "
-                f"value ({bad.first().asDict()}) — the replaced row "
-                "would survive next to its replacement; filter such "
-                "rows")
-    key_df = written.select(*key_cols).dropDuplicates()
-    eq_rel = os.path.join("eqdel", uuid.uuid4().hex[:12])
-    key_df.coalesce(1).write.mode("error").parquet(
-        os.path.join(table_dir, eq_rel))
-    n_keys, bands = _key_sidecar_footer(
-        spark, table_dir, eq_rel, key_cols,
-        "snapshot_upsert_keys: an upsert row has a NULL key value "
-        "({row}) — the replaced row would survive next to its "
-        "replacement; filter such rows")
-    # covered: every key in this descriptor has a replacement row in
-    # the SAME commit's delta — CDF needs no D rows for it (the U
-    # replaces the old row in any replay)
-    desc = {"path": eq_rel, "cols": key_cols,
-            "rows": n_keys, "bands": bands, "covered": True}
-    validated = manifest.get("constraints")
-    _enforce_constraints(spark, table_dir, validated, new_entries,
-                         df.schema.json(), "snapshot_upsert_keys")
-
-    from pyspark.sql.types import StructType
-
-    def attempt() -> int:
-        return _publish_commit(
-            table_dir, mode="rewrite",
-            new_entries=new_entries,
-            batch_schema=df.schema,
-            epoch_key=epoch_key,
-            expected_version=base_version,
-            reuse_segments=list(manifest["segments"]),
-            changes_entries=None,  # CDF synthesizes the delta as U
-            cdf_key=(key_cols[0] if len(key_cols) == 1 else key_cols),
-            dirty_probe=lambda e: False,  # disjoint appends commute:
-            #                               the descriptor re-stamps
-            #                               above them (serial
-            #                               restatement)
-            eq_deletes=list(manifest.get("eq_deletes") or []) + [desc],
-            extra_commit_dirs={eq_rel},
-            validated_constraints=validated,
-            revalidate=lambda c: _enforce_constraints(
-                spark, table_dir, c, new_entries, df.schema.json(),
-                "snapshot_upsert_keys"))
-
-    def refresh() -> None:
-        # unpinned semantics: "upsert these rows into the state at
-        # publish" — re-derive on the moved head (data + sidecar
-        # unchanged; constraints still re-validate against `validated`
-        # inside the publish loop)
-        nonlocal base_version, manifest
-        base_version = snapshot_current_version(table_dir)
-        manifest = _read_manifest_meta(table_dir, base_version)
-        _evolved_schema_json(manifest["schema"], df.schema)
-
-    version = _retry_unpinned_cdc(table_dir, pinned, attempt, refresh,
-                                  "snapshot_upsert_keys")
-    n_rows = sum(e.get("rows") or 0 for e in new_entries)
+    OPTIMIZE materializes the replacement and drops the descriptor.
+    The input step is ``df`` itself; the commit is ``_mor_commit``'s
+    (the ``covered`` descriptor holds the WRITTEN rows' distinct keys;
+    NULL keys refused — the old row would survive next to its
+    replacement; conflict rules as ``snapshot_delete_keys``). A ``df``
+    that writes no rows commits nothing and returns the current
+    version. Returns (version, {"rows": n, "keys": n_distinct})."""
+    version, n_rows, n_keys, _ = _mor_commit(
+        spark, table_dir, "snapshot_upsert_keys", key_cols, base_version,
+        epoch_key, lambda kc: (df, None), dedup_keys=True)
     return version, {"rows": n_rows, "keys": n_keys}
 
 
@@ -4019,139 +3909,42 @@ def snapshot_apply_cdc_mor(spark: SparkSession, table_dir: str,
     The two final key sets are disjoint by construction (one winning
     action per key), so a replay of the commit's feed (delta as 'U',
     lazy D rows for the delete descriptor, same ``_commit_version``)
-    is unambiguous. NULL change keys are refused; op values outside
-    {'U','D'} are refused on the winning change per key (fail-closed,
-    ``apply_cdc``'s rule). ``epoch_key`` gives the exactly-once
-    replay no-op. An empty batch is a no-op returning the current
-    version. Returns (version, {"upserts": n, "deletes": n})."""
+    is unambiguous. The input step is the winner selection (no dedup
+    pass: ``row_number() == 1`` yields one row per key) with op values
+    outside {'U','D'} refused on the winning change per key
+    (fail-closed, ``apply_cdc``'s rule); the commit is
+    ``_mor_commit``'s — NULL change keys and key columns the table
+    lacks are refused, ``epoch_key`` gives the exactly-once replay
+    no-op. An empty batch is a no-op returning the current version.
+    Returns (version, {"upserts": n, "deletes": n})."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    key_cols = [key] if isinstance(key, str) else list(key)
-    if not key_cols:
-        raise ValueError("snapshot_apply_cdc_mor: key is empty")
-    pinned = base_version is not None
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(
-            f"snapshot_apply_cdc_mor: {table_dir} has no commits — "
-            "use snapshot_commit for the initial load")
-    manifest = _read_manifest_meta(table_dir, base_version)
-    if epoch_key is not None:
-        last = manifest.get("last_epoch")
-        if last is not None and (
-                _epoch_sort_key(epoch_key) <= _epoch_sort_key(last)):
-            return base_version, {"upserts": 0, "deletes": 0}
-    for c in (seq, op):
-        if c not in changes.columns:
-            raise ValueError(
-                f"snapshot_apply_cdc_mor: changes must carry the "
-                f"{c!r} column")
-    w = W.partitionBy(*key_cols).orderBy(F.col(seq).desc())
-    last = (changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1).drop("__rn", seq))
-    # fail CLOSED on junk ops — validated on the winning change per
-    # key, exactly apply_cdc's rule
-    last = last.withColumn(
-        op,
-        F.when(
-            F.col(op).isNull() | ~F.col(op).isin("U", "D"),
-            F.raise_error(F.concat(
-                F.lit("snapshot_apply_cdc_mor: op must be 'U' or "
-                      "'D', got "),
-                F.coalesce(F.col(op), F.lit("NULL")))),
-        ).otherwise(F.col(op)))
-    ups = last.filter(F.col(op) == "U").drop(op)
-    dels = last.filter(F.col(op) == "D").select(*key_cols)
+    def winners(key_cols: list[str]):
+        for c in (seq, op):
+            if c not in changes.columns:
+                raise ValueError(
+                    f"snapshot_apply_cdc_mor: changes must carry the "
+                    f"{c!r} column")
+        w = W.partitionBy(*key_cols).orderBy(F.col(seq).desc())
+        last = (changes.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1).drop("__rn", seq))
+        last = last.withColumn(
+            op,
+            F.when(
+                F.col(op).isNull() | ~F.col(op).isin("U", "D"),
+                F.raise_error(F.concat(
+                    F.lit("snapshot_apply_cdc_mor: op must be 'U' or "
+                          "'D', got "),
+                    F.coalesce(F.col(op), F.lit("NULL")))),
+            ).otherwise(F.col(op)))
+        ups = last.filter(F.col(op) == "U").drop(op)
+        return (None if ups.isEmpty() else ups,
+                last.filter(F.col(op) == "D"))
 
-    def key_sidecar(df: DataFrame, label: str):
-        """Write a key sidecar from ``df``'s WRITTEN keys — returns
-        (descriptor-or-None, commit dirs). Single evaluation: the
-        descriptor's stats come from the written file's FOOTER (row
-        count, bands, NULL refusal — zero Spark jobs; r14, was a
-        null-probe job + an agg job per sidecar). No dedup pass: the
-        row_number()==1 winner selection above already yields exactly
-        one row per key."""
-        rel = os.path.join("eqdel", uuid.uuid4().hex[:12])
-        df.select(*key_cols).coalesce(1) \
-            .write.mode("error").parquet(os.path.join(table_dir, rel))
-        n, bands = _key_sidecar_footer(
-            spark, table_dir, rel, key_cols,
-            f"snapshot_apply_cdc_mor: a {label} change has a NULL "
-            "key value ({row}) — filter such rows")
-        if n == 0:
-            return None, set()
-        return ({"path": rel, "cols": key_cols, "rows": n,
-                 "bands": bands}, {rel})
-
-    commit_dirs: set[str] = set()
-    new_entries: list[dict] = []
-    descs: list[dict] = []
-    n_up = 0
-    if not ups.isEmpty():
-        _evolved_schema_json(manifest["schema"], ups.schema)
-        commit_id = uuid.uuid4().hex[:12]
-        data_rel = os.path.join("data", commit_id)
-        ups.write.mode("error").parquet(
-            os.path.join(table_dir, data_rel))
-        new_entries = _file_entries(table_dir, data_rel)
-        n_up = sum(e.get("rows") or 0 for e in new_entries)
-        written = spark.read.parquet(os.path.join(table_dir, data_rel))
-        d_u, dirs = key_sidecar(written, "upsert")
-        if d_u is not None:
-            d_u["covered"] = True
-            descs.append(d_u)
-            commit_dirs |= dirs
-    d_d, dirs = key_sidecar(dels, "delete")
-    n_del = d_d["rows"] if d_d is not None else 0
-    if d_d is not None:
-        descs.append(d_d)
-        commit_dirs |= dirs
-    if not new_entries and d_d is None:
-        return base_version, {"upserts": 0, "deletes": 0}
-    validated = manifest.get("constraints")
-    if new_entries:
-        _enforce_constraints(spark, table_dir, validated, new_entries,
-                             ups.schema.json(), "snapshot_apply_cdc_mor")
-    from pyspark.sql.types import StructType
-
-    def attempt() -> int:
-        batch_schema = (ups.schema if new_entries else
-                        StructType.fromJson(
-                            json.loads(manifest["schema"])))
-        return _publish_commit(
-            table_dir, mode="rewrite",
-            new_entries=new_entries,
-            batch_schema=batch_schema,
-            epoch_key=epoch_key,
-            expected_version=base_version,
-            reuse_segments=list(manifest["segments"]),
-            changes_entries=None,
-            cdf_key=(key_cols[0] if len(key_cols) == 1 else key_cols),
-            dirty_probe=lambda e: False,  # disjoint appends commute
-            #                               (the descriptors re-stamp
-            #                               above them — serial
-            #                               restatement)
-            eq_deletes=list(manifest.get("eq_deletes") or []) + descs,
-            extra_commit_dirs=commit_dirs,
-            validated_constraints=validated if new_entries else "skip",
-            revalidate=(lambda c: _enforce_constraints(
-                spark, table_dir, c, new_entries, batch_schema.json(),
-                "snapshot_apply_cdc_mor")) if new_entries else None)
-
-    def refresh() -> None:
-        # unpinned semantics: "apply this CDC batch to the state at
-        # publish" — re-derive on the moved head (data + sidecars
-        # unchanged)
-        nonlocal base_version, manifest
-        base_version = snapshot_current_version(table_dir)
-        manifest = _read_manifest_meta(table_dir, base_version)
-        if new_entries:
-            _evolved_schema_json(manifest["schema"], ups.schema)
-
-    version = _retry_unpinned_cdc(table_dir, pinned, attempt, refresh,
-                                  "snapshot_apply_cdc_mor")
+    version, n_up, _, n_del = _mor_commit(
+        spark, table_dir, "snapshot_apply_cdc_mor", key, base_version,
+        epoch_key, winners)
     return version, {"upserts": n_up, "deletes": n_del}
 
 

@@ -51,6 +51,12 @@ def read_dim_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFr
     return spark.read.csv(path, header=True, schema=schema)
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a backtick-quoted identifier (an embedded backtick is
+    written doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def read_dim_rows(spark: SparkSession, rows: Iterable[Mapping[str, Any]],
                   schema: T.StructType) -> DataFrame:
     """Small dimension from an in-memory payload (REST response, rate dict).
@@ -77,9 +83,9 @@ def read_dim_rows(spark: SparkSession, rows: Iterable[Mapping[str, Any]],
         df = inline_dim(spark, ordered, schema)
         if df.schema != schema:
             df = df.select(*[
-                F.when(F.lit(True), F.col(f.name)).alias(f.name)
+                F.when(F.lit(True), df[_quoted(f.name)]).alias(f.name)
                 if f.nullable and not df.schema[f.name].nullable
-                else F.col(f.name)
+                else df[_quoted(f.name)]
                 for f in schema.fields])
         if df.schema == schema:
             return df
@@ -108,7 +114,8 @@ def fetch_dim(spark: SparkSession, url: str, schema: T.StructType,
     return read_dim_rows(spark, rows, schema)
 
 
-def inline_dim(spark: SparkSession, rows: list[tuple], columns: str) -> DataFrame:
+def inline_dim(spark: SparkSession, rows: list[tuple],
+               columns: str | T.StructType) -> DataFrame:
     """Tiny literal dimension as a pure-JVM VALUES relation.
 
     ``spark.createDataFrame(local_rows)`` routes through a Python RDD
@@ -149,11 +156,12 @@ def inline_dim(spark: SparkSession, rows: list[tuple], columns: str) -> DataFram
 
     names = [f.name for f in schema.fields]
     values = ", ".join("(" + ", ".join(lit(v) for v in r) + ")" for r in rows)
-    quoted = ", ".join(f"`{n}`" for n in names)
-    df = spark.sql(f"SELECT * FROM VALUES {values} AS t({quoted})")
+    quoted = [_quoted(n) for n in names]
+    df = spark.sql(
+        f"SELECT * FROM VALUES {values} AS t({', '.join(quoted)})")
     return df.select(
-        *[df[f"`{n}`"].cast(f.dataType).alias(n)
-          for n, f in zip(names, schema.fields)])
+        *[df[q].cast(f.dataType).alias(f.name)
+          for q, f in zip(quoted, schema.fields)])
 
 
 def empty_frame(spark: SparkSession, schema) -> DataFrame:

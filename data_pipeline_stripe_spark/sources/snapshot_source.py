@@ -252,8 +252,9 @@ def _cdf_slices(table_dir: str, start_v: int, end_v: int) -> list[tuple]:
                           if d not in ((parent_m or {})
                                        .get("eq_deletes") or [])]
                 if new_eq and parent_m is not None:
-                    # MERGE-ON-READ commit family (snapshot_upsert_keys
-                    # / snapshot_apply_cdc_mor / snapshot_delete_keys):
+                    # MERGE-ON-READ commit (snapshots._mor_commit, the
+                    # one commit path of snapshot_upsert_keys /
+                    # snapshot_apply_cdc_mor / snapshot_delete_keys):
                     # the delta files serve as 'U' rows — their keys
                     # are COVERED by their descriptor, no band scan
                     parent_segs = {s["path"]

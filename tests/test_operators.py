@@ -1,6 +1,9 @@
 """Unit tests for composed operators (operators/)."""
 
+import os
 from datetime import datetime
+
+import pytest
 
 from data_pipeline_stripe_spark.operators import asof_join
 
@@ -4600,6 +4603,120 @@ def test_trickle_cdc_verbs_rederive_on_interleaved_rewrite(
                 "k", base_version=head)
     finally:
         S._publish_commit = real_publish
+
+
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn submitted), from the DAG
+    scheduler's job-id counter."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    out = fn()
+    return out, scheduler.nextJobId() - before
+
+
+def _mor_table(spark, path):
+    """A one-file snapshot table (k, v) over k in 0..99."""
+    from pyspark.sql import functions as F
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    S.snapshot_commit(spark, path, spark.range(100).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")).coalesce(1))
+    return path
+
+
+def _cdc(spark, ks, op):
+    """CDC changes (k, v, seq=1, op) for k in range(*ks)."""
+    from pyspark.sql import functions as F
+
+    return spark.range(*ks).select(
+        F.col("id").alias("k"), (F.col("id") * 7).alias("v"),
+        F.lit(1).alias("seq"), F.lit(op).alias("op"))
+
+
+@pytest.mark.parametrize("verb, budget", [
+    ("upsert_keys", 4),
+    ("delete_keys", 1),
+    ("apply_cdc_mor_upserts", 5),
+    ("apply_cdc_mor_deletes", 1),
+    ("apply_cdc_mor_both", 8),
+])
+def test_trickle_cdc_verb_job_budget(spark, tmp_path, verb, budget):
+    """Spark jobs per call of the merge-on-read verbs stay within their
+    budget. The upserts-only apply pays no probe on its empty delete
+    sidecar (7 jobs before the shared sidecar writer, now 5)."""
+    from pyspark.sql import functions as F
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = _mor_table(spark, str(tmp_path / "t"))
+    calls = {
+        "upsert_keys": lambda: S.snapshot_upsert_keys(
+            spark, t, _cdc(spark, (10, 20), "U").select("k", "v"), "k"),
+        "delete_keys": lambda: S.snapshot_delete_keys(
+            spark, t, spark.range(5).select(F.col("id").alias("k")), "k"),
+        "apply_cdc_mor_upserts": lambda: S.snapshot_apply_cdc_mor(
+            spark, t, _cdc(spark, (10, 20), "U"), "k"),
+        "apply_cdc_mor_deletes": lambda: S.snapshot_apply_cdc_mor(
+            spark, t, _cdc(spark, (0, 5), "D"), "k"),
+        "apply_cdc_mor_both": lambda: S.snapshot_apply_cdc_mor(
+            spark, t, _cdc(spark, (10, 20), "U").unionByName(
+                _cdc(spark, (50, 55), "D")), "k"),
+    }
+    (version, _), jobs = _spark_jobs(spark, calls[verb])
+    assert version == 1
+    assert jobs <= budget, f"{verb} ran {jobs} Spark jobs > {budget}"
+    # every sidecar directory left behind is referenced by the commit
+    m = S._read_manifest_meta(t, version)
+    assert sorted(os.path.join("eqdel", d)
+                  for d in os.listdir(os.path.join(t, "eqdel"))) \
+        == sorted(d["path"] for d in m["eq_deletes"])
+
+
+@pytest.mark.parametrize("verb", ["delete_keys", "upsert_keys",
+                                  "apply_cdc_mor"])
+def test_trickle_cdc_verbs_empty_input_commits_nothing(
+        spark, tmp_path, verb):
+    """No input rows means no commit for every merge-on-read verb: the
+    head is returned with zero counts, no version is burned, and no
+    data or sidecar directory is left behind."""
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = _mor_table(spark, str(tmp_path / "t"))
+    empty = _cdc(spark, (0, 0), "U")
+    calls = {
+        "delete_keys": (lambda: S.snapshot_delete_keys(
+            spark, t, empty.select("k"), "k"), {"keys": 0}),
+        "upsert_keys": (lambda: S.snapshot_upsert_keys(
+            spark, t, empty.select("k", "v"), "k"),
+            {"rows": 0, "keys": 0}),
+        "apply_cdc_mor": (lambda: S.snapshot_apply_cdc_mor(
+            spark, t, empty, "k"), {"upserts": 0, "deletes": 0}),
+    }
+    fn, zero = calls[verb]
+    assert fn() == (0, zero)
+    assert S.snapshot_current_version(t) == 0
+    eqdel = os.path.join(t, "eqdel")
+    assert not os.path.isdir(eqdel) or not os.listdir(eqdel)
+    assert len(os.listdir(os.path.join(t, "data"))) == 1
+
+
+def test_apply_cdc_mor_refuses_key_column_the_table_lacks(spark, tmp_path):
+    """Like its two siblings, snapshot_apply_cdc_mor refuses a key the
+    table schema lacks: a 'D' on it could never match the older rows
+    (their value is NULL), so the delete would silently do nothing —
+    and the upsert would schema-evolve the key column in."""
+    from pyspark.sql import functions as F
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = _mor_table(spark, str(tmp_path / "t"))
+    changes = _cdc(spark, (0, 3), "D").unionByName(
+        _cdc(spark, (200, 201), "U")).withColumn("zz", F.col("k"))
+    with pytest.raises(ValueError, match="not in the"):
+        S.snapshot_apply_cdc_mor(spark, t, changes, "zz")
+    assert S.snapshot_current_version(t) == 0
+    assert "zz" not in S.snapshot_read(spark, t).columns
 
 
 def test_equality_delete_cdf_restore_expire(spark, tmp_path):

@@ -118,6 +118,24 @@ def test_read_dim_rows_preserves_declared_nullability(spark):
     assert "ExistingRDD" not in plan
 
 
+def test_read_dim_rows_backtick_in_field_name(spark):
+    """A field name containing a backtick is quoted by doubling it, both
+    in the VALUES alias list and in the per-column lookup."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("a`b", T.StringType(), True),
+        T.StructField("n", T.LongType(), True),
+    ])
+    df = read_dim_rows(spark, [{"a`b": "x", "n": 1}, {"a`b": "y"}], schema)
+    assert df.schema == schema
+    assert sorted((r["a`b"], r["n"]) for r in df.collect()) \
+        == [("x", 1), ("y", None)]
+    direct = inline_dim(spark, [("x", 1)], schema)
+    assert direct.columns == ["a`b", "n"]
+    assert direct.first()["a`b"] == "x"
+
+
 def test_typed_events_boundary(spark):
     """Stringly-typed raw events become typed at the boundary: offset
     timestamps normalize to UTC instants, itemPrice becomes decimal,
