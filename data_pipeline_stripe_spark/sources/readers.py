@@ -15,6 +15,7 @@ explicit schema, and callers broadcast-join them.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from collections.abc import Iterable, Mapping
@@ -30,6 +31,8 @@ from ..schemas import EVENTS_RAW_SCHEMA, TABLE_NAMES, TESTDATA_SCHEMAS
 # dimensions stay unsplit (they broadcast anyway).
 FACT_TABLES = {"lineitem", "orders", "events", "documents", "embeddings"}
 _NEEDS_REBALANCE: dict[tuple, bool] = {}
+
+log = logging.getLogger(__name__)
 
 
 def read_events_json(spark: SparkSession, path_glob: str,
@@ -69,26 +72,31 @@ def read_dim_rows(spark: SparkSession, rows: Iterable[Mapping[str, Any]],
     ordered = [tuple(r.get(f.name) for f in schema.fields) for r in rows]
     # scalar payloads ride the JVM VALUES path (see inline_dim — a local
     # list costs seconds of Python tasks per materialization on a wide
-    # local master); anything non-scalar falls back to createDataFrame.
-    # VALUES relations of non-null literals infer nullable=false columns,
-    # so relax each too-strict column back to the DECLARED nullability
-    # with when(true, col) — nullable at analysis time, constant-folded
-    # to a bare column reference in the physical plan (pure JVM, no
-    # Python RDD). If the shape still cannot match (a NULL literal in a
-    # declared non-nullable column), let createDataFrame enforce the
-    # contract instead.
-    if ordered and all(
-            v is None or isinstance(v, (str, int, float, bool))
-            for r in ordered for v in r):
+    # local master). VALUES relations of non-null literals infer
+    # nullable=false columns, so relax each too-strict column back to the
+    # DECLARED nullability with nullif(col, NULL): nullable at analysis
+    # time, folded into the LocalRelation by the optimizer (pure JVM, no
+    # Python RDD). Only what the VALUES shape cannot carry falls back to
+    # createDataFrame: a non-scalar value, or a NULL in a column declared
+    # NOT NULL (createDataFrame enforces that contract).
+    mismatched = [f.name for i, f in enumerate(schema.fields)
+                  if not all(r[i] is None
+                             or isinstance(r[i], (str, int, float, bool))
+                             for r in ordered)]
+    if not mismatched:
         df = inline_dim(spark, ordered, schema)
-        if df.schema != schema:
-            df = df.select(*[
-                F.when(F.lit(True), df[_quoted(f.name)]).alias(f.name)
-                if f.nullable and not df.schema[f.name].nullable
-                else df[_quoted(f.name)]
-                for f in schema.fields])
-        if df.schema == schema:
+        df = df.select(*[
+            F.nullif(df[_quoted(f.name)], F.lit(None)).alias(f.name)
+            if f.nullable and not df.schema[f.name].nullable
+            else df[_quoted(f.name)]
+            for f in schema.fields])
+        mismatched = [f.name for f, got in zip(schema.fields, df.schema.fields)
+                      if f != got]
+        if not mismatched:
             return df
+    log.warning("read_dim_rows: column(s) %s do not fit a VALUES relation "
+                "with the declared schema; building the dimension with "
+                "createDataFrame (Python tasks on every scan)", mismatched)
     return spark.createDataFrame(ordered, schema)
 
 

@@ -4531,8 +4531,8 @@ def test_compact_only_files_with_deletes(spark, tmp_path):
 
 def test_trickle_cdc_verbs_rederive_on_interleaved_rewrite(
         spark, tmp_path):
-    """Lock-free trickle writers (r13 second half —
-    _retry_unpinned_cdc): an UNPINNED snapshot_delete_keys /
+    """Lock-free trickle writers (r13 second half — the re-derive loop
+    in _mor_commit): an UNPINNED snapshot_delete_keys /
     snapshot_upsert_keys whose publish loses the race to an
     interleaved REWRITE (here: another equality delete, injected
     between the manifest read and the publish) re-derives on the

@@ -8,11 +8,18 @@ import os
 
 import pytest
 
+from data_pipeline_stripe_spark.llm.dedup import (
+    exact_dedup_groups,
+    minhash_lsh_pairs,
+)
+from data_pipeline_stripe_spark.llm.similarity import rp_lsh_pairs
 from data_pipeline_stripe_spark.pipelines import (
     royalties_report,
     top10_report,
     usage_report,
+    write_royalties_json,
     write_top10_csv,
+    write_usage_parquet,
 )
 from data_pipeline_stripe_spark.schemas import (
     CATEGORIES_SCHEMA,
@@ -21,6 +28,7 @@ from data_pipeline_stripe_spark.schemas import (
     EXCHANGE_RATES_SCHEMA,
     RESOURCES_SCHEMA,
 )
+from data_pipeline_stripe_spark.sources import read_dim_rows, read_events_json
 
 
 def _events(spark, rows):
@@ -203,3 +211,84 @@ def test_royalties_conversion_and_drop_paths(spark, dims):
         ("2024-01", "p2"): 0.0,    # promoted
         ("2024-02", "p1"): 3.0,
     }
+
+
+def _codegen_compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_nightly_cycle_reuses_generated_code(spark, tmp_path):
+    """A second reports cycle plus curation pass compiles no generated
+    class: the whole working set of one cycle stays in the codegen cache
+    (session.CODEGEN_CACHE_ENTRIES) between cycles."""
+    import json
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(7)
+    ev_dir = tmp_path / "events"
+    ev_dir.mkdir()
+    countries = [("US", "USD", "United States"), ("FR", "EUR", "France"),
+                 ("JP", "JPY", "Japan"), ("AR", "ARS", "Argentina")]
+    with open(ev_dir / "part-0.json", "w") as f:
+        for i in range(200):
+            day, hour = 1 + i % 5, i % 24
+            f.write(json.dumps({
+                "eventId": f"e{i}",
+                "eventTime": f"2024-01-{day:02d}T{hour:02d}:00:00+01:00",
+                "processTime": f"2024-01-{day:02d}T{hour:02d}:00:30",
+                "resourceId": f"r{int(rng.integers(0, 12))}",
+                "userId": f"u{i % 17}",
+                "countryCode": countries[i % len(countries)][0],
+                "duration": int(rng.integers(1, 3600)),
+                "itemPrice": f"{rng.integers(99, 5000) / 100:.2f}"}) + "\n")
+    cat_ids = ["3.5", "7", "12"]
+    dims = (
+        read_dim_rows(spark, [
+            {"id": f"r{i}", "name": f"res {i}", "categoryId": cat_ids[i % 3],
+             "providerId": f"p{i % 4}", "promotion": str(i % 5 == 0).lower()}
+            for i in range(12)], RESOURCES_SCHEMA),
+        read_dim_rows(spark, [
+            {"tenant": "t", "id": c, "name": f"cat {c}", "percent": "10"}
+            for c in cat_ids], CATEGORIES_SCHEMA),
+        read_dim_rows(spark, [
+            {"CountryCode": cc, "Code": code, "Country": name}
+            for cc, code, name in countries], COUNTRIES_SCHEMA),
+        read_dim_rows(spark, [{"code": "EUR", "rate": 1.09},
+                              {"code": "JPY", "rate": 0.0068}],
+                      EXCHANGE_RATES_SCHEMA),
+    )
+    words = [f"w{i}" for i in range(50)]
+    texts = [" ".join(rng.choice(words, 12)) for _ in range(30)]
+    texts[1] = texts[0]
+    docs_path, emb_path = str(tmp_path / "docs"), str(tmp_path / "emb")
+    pq.write_table(pa.table({"doc_id": np.arange(30, dtype=np.int64),
+                             "text": texts}), docs_path)
+    vecs = rng.standard_normal((24, 64)).astype(np.float32)
+    pq.write_table(pa.table({
+        "vec_id": np.arange(24, dtype=np.int64),
+        "embedding": pa.array(list(vecs), type=pa.list_(pa.float32()))}),
+        emb_path)
+    out = tmp_path / "out"
+
+    def nightly_cycle():
+        res, cat, ctry, rts = dims
+        ev = read_events_json(spark, str(ev_dir))
+        write_top10_csv(top10_report(ev, res, cat), f"{out}/top10")
+        write_usage_parquet(usage_report(ev), f"{out}/usage")
+        write_royalties_json(royalties_report(ev, res, cat, ctry, rts),
+                             f"{out}/royalties")
+        docs = spark.read.parquet(docs_path)
+        emb = spark.read.parquet(emb_path)
+        exact_dedup_groups(docs).collect()
+        minhash_lsh_pairs(docs).collect()
+        rp_lsh_pairs(emb).collect()
+
+    nightly_cycle()
+    before = _codegen_compiles(spark)
+    nightly_cycle()
+    assert _codegen_compiles(spark) - before == 0

@@ -2,10 +2,18 @@
 reference's driver-side ingest loops (SURVEY.md §2.1)."""
 
 import json
+import logging
 
+import pytest
 from pyspark.sql import functions as F
 
-from data_pipeline_stripe_spark.schemas import COUNTRIES_SCHEMA, EVENTS_RAW_SCHEMA
+from data_pipeline_stripe_spark.schemas import (
+    CATEGORIES_SCHEMA,
+    COUNTRIES_SCHEMA,
+    EVENTS_RAW_SCHEMA,
+    EXCHANGE_RATES_SCHEMA,
+    RESOURCES_SCHEMA,
+)
 from data_pipeline_stripe_spark.sources import (
     read_dim_csv,
     read_dim_rows,
@@ -101,21 +109,56 @@ def test_inline_dim_nonfinite_floats(spark):
     assert rows["b"] == float("inf") and rows["c"] == float("-inf")
 
 
-def test_read_dim_rows_preserves_declared_nullability(spark):
+_DIM_PAYLOADS = {
+    "resources": (RESOURCES_SCHEMA, [
+        {"id": "r1", "name": "Res One", "categoryId": "3.5",
+         "providerId": "p1", "promotion": "false"},
+        {"id": "r2", "name": "Res Two", "categoryId": "7",
+         "providerId": "p2", "promotion": "true"}]),
+    "categories": (CATEGORIES_SCHEMA, [
+        {"tenant": "t", "id": "3.5", "name": "Cat A", "percent": "10"}]),
+    "countries": (COUNTRIES_SCHEMA, [
+        {"CountryCode": "US", "Code": "USD", "Country": "United States"}]),
+    "rates": (EXCHANGE_RATES_SCHEMA, [
+        {"code": "USD", "rate": 1.0}, {"code": "EUR", "rate": 1.1}]),
+}
+
+
+@pytest.mark.parametrize("dim", sorted(_DIM_PAYLOADS))
+def test_read_dim_rows_preserves_declared_nullability(spark, dim):
     """The VALUES fast path must hand back the DECLARED schema verbatim —
-    non-null literals infer nullable=false, which read_dim_rows coerces
-    back (the r13 fetch_dim regression)."""
+    non-null literals infer nullable=false, which read_dim_rows relaxes
+    back (the r13 fetch_dim regression) — and stay a pure-JVM plan for
+    every stripe dimension's all-non-null payload."""
+    schema, payload = _DIM_PAYLOADS[dim]
+    df = read_dim_rows(spark, payload, schema)
+    assert df.schema == schema
+    # still the JVM path: no Python-RDD scan in the plan (the node prints
+    # as LogicalRDD in the optimized plan, ExistingRDD in the physical one)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan
+    assert sorted(tuple(r) for r in df.collect()) == sorted(
+        tuple(row[f.name] for f in schema.fields) for row in payload)
+
+
+def test_read_dim_rows_logs_its_fallback(spark, caplog):
+    """A NULL in a column declared NOT NULL cannot ride the VALUES path;
+    the createDataFrame fallback is logged once, naming that column."""
     from pyspark.sql import types as T
 
     schema = T.StructType([
-        T.StructField("code", T.StringType(), True),
+        T.StructField("code", T.StringType(), False),
         T.StructField("rate", T.DoubleType(), True),
     ])
-    df = read_dim_rows(spark, [{"code": "USD", "rate": 1.0}], schema)
-    assert df.schema == schema
-    # still the JVM path: no Python-RDD scan in the plan
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "ExistingRDD" not in plan
+    with caplog.at_level(logging.WARNING,
+                         logger="data_pipeline_stripe_spark.sources.readers"):
+        with pytest.raises(Exception, match="code"):
+            read_dim_rows(spark, [{"code": None, "rate": 1.0}], schema)
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "['code']" in warnings[0].getMessage()
+    assert "createDataFrame" in warnings[0].getMessage()
 
 
 def test_read_dim_rows_backtick_in_field_name(spark):

@@ -6,6 +6,11 @@ Runs the named query through the same noop-sink methodology as bench.py.
 With --profile, wraps the run in cProfile and prints the top call sites by
 cumulative time — for multi-action gates this attributes wall time to the
 specific commit/read/count sites (py4j socket waits charge to the caller).
+
+Each run also prints the generated classes Janino compiled during it (the
+``CodegenMetrics`` compile-count delta) and the driver JVM's JIT compile
+time (the ``CompilationMXBean`` total-time delta), so a run that misses
+the codegen cache shows as compiles > 0.
 """
 
 from __future__ import annotations
@@ -36,11 +41,20 @@ def main() -> None:
                         shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run() -> float:
+    jvm = spark._jvm
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+
+    def run() -> str:
+        c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+        j0 = jit.getTotalCompilationTime()
         t0 = time.time()
         df = REGISTRY[name].fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+        dt = time.time() - t0
+        return (f"{dt:.3f}s, codegen compiles "
+                f"{codegen.METRIC_COMPILATION_TIME().getCount() - c0}, "
+                f"JIT compile {jit.getTotalCompilationTime() - j0} ms")
 
     # warmup (JVM codegen)
     from pyspark.sql import functions as F  # noqa: F401
@@ -51,14 +65,14 @@ def main() -> None:
         if do_profile and i == runs - 1:
             prof = cProfile.Profile()
             prof.enable()
-            dt = run()
+            stats = run()
             prof.disable()
-            print(f"{name} run{i}: {dt:.3f}s")
+            print(f"{name} run{i}: {stats}")
             st = pstats.Stats(prof)
             st.sort_stats("cumulative")
             st.print_stats(45)
         else:
-            print(f"{name} run{i}: {run():.3f}s")
+            print(f"{name} run{i}: {run()}")
     spark.stop()
 
 
