@@ -835,6 +835,21 @@ def _evolved_schema_json(prev_schema_json: str, df_schema) -> str:
     return union.json()
 
 
+def _write_parquet(table_dir: str, root: str, df: DataFrame,
+                   *partition_cols: str) -> str:
+    """Write ``df`` as parquet into a FRESH ``<root>/<id>`` directory of
+    the table (``data`` for commit data, ``changes`` for change logs)
+    and return that table-relative directory. Nothing references it
+    until a manifest publishes, so a failed commit leaves only
+    ``snapshot_expire``'s garbage."""
+    rel = os.path.join(root, uuid.uuid4().hex[:12])
+    writer = df.write.mode("error")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(os.path.join(table_dir, rel))
+    return rel
+
+
 def _file_entries(table_dir: str, rel_dir: str) -> list[dict]:
     """Manifest entries (path + footer stats) for every parquet file
     under ``table_dir/rel_dir`` — used for data commit dirs
@@ -859,7 +874,6 @@ def _file_entries(table_dir: str, rel_dir: str) -> list[dict]:
 def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
                     mode: str = "append",
                     epoch_key: str | None = None,
-                    max_retries: int = 20,
                     expected_version: int | None = None,
                     cluster_cols="auto") -> int:
     """Commit ``df`` as the next version of ``table_dir``. Returns the
@@ -922,15 +936,8 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
             _read_manifest_meta(table_dir, early_prev)["schema"],
             df.schema)
 
-    commit_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(table_dir, "data", commit_id)
-    df.write.mode("error").parquet(data_dir)
-    new_entries = _file_entries(table_dir, os.path.join("data", commit_id))
-    validated = (None if early_prev is None else
-                 _read_manifest_meta(table_dir,
-                                     early_prev).get("constraints"))
-    _enforce_constraints(spark, table_dir, validated, new_entries,
-                         df.schema.json(), "snapshot_commit")
+    new_entries = _file_entries(table_dir,
+                                _write_parquet(table_dir, "data", df))
     if cluster_cols == "auto":
         # appends inherit the table's clustering lineage (the batch may
         # not be clustered, but the declared layout intent stands);
@@ -940,14 +947,12 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
     return _publish_commit(
         table_dir, mode=mode, new_entries=new_entries,
         batch_schema=df.schema, epoch_key=epoch_key,
-        max_retries=max_retries, expected_version=expected_version,
-        cluster_cols=cluster_cols,
+        expected_version=expected_version, cluster_cols=cluster_cols,
         # a plain overwrite replaces the table: the old partition spec
         # describes files that are gone (appends keep it — their
         # unpartitioned entries simply never partition-prune)
         partition_spec=("inherit" if mode == "append" else None),
-        validated_constraints=validated,
-        revalidate=lambda c: _enforce_constraints(
+        enforce=lambda c: _enforce_constraints(
             spark, table_dir, c, new_entries, df.schema.json(),
             "snapshot_commit"))
 
@@ -956,10 +961,8 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
                     batch_schema, epoch_key: str | None = None,
                     max_retries: int = 20,
                     expected_version: int | None = None,
-                    keep_paths: set[str] | None = None,
                     keep_segments: list[dict] | None = None,
                     keep_entries: list[dict] | None = None,
-                    reuse_segments: list[dict] | None = None,
                     changes_entries: list[dict] | None = None,
                     cdf_key=None,
                     cluster_cols="inherit",
@@ -967,8 +970,7 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
                     constraints="inherit",
                     dirty_probe=None,
                     extra_commit_dirs: set[str] | None = None,
-                    validated_constraints="skip",
-                    revalidate=None,
+                    enforce=None,
                     eq_deletes="inherit",
                     extra_segments: list[dict] | None = None) -> int:
     """The OCC publish loop over ALREADY-WRITTEN immutable file entries
@@ -993,12 +995,11 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
     copy-on-write commit the MERGE/compaction verbs use: the manifest
     carries forward untouched prior segments verbatim
     (``keep_segments``), rewrites the partially-kept entries into fresh
-    segments (``keep_entries``), and adds ``new_entries`` — or, for the
-    legacy/test surface, filters the prior version's materialized
-    entries by ``keep_paths``. ``reuse_segments`` (RESTORE) adopts the
-    given descriptors as the whole file set with zero re-serialization.
-    A rewrite is always derived from a read, so ``expected_version`` is
-    mandatory.
+    segments (``keep_entries``), and adds ``new_entries``. Metadata-only
+    commits (RESTORE, constraint add/drop, manifest compaction) pass
+    the whole file set as ``keep_segments`` alone — adopted with zero
+    re-serialization. A rewrite is always derived from a read, so
+    ``expected_version`` is mandatory.
 
     CONFLICT NARROWING (r12, VERDICT r11 item 3): when a rewrite finds
     the table moved past ``expected_version``, it aborts UNLESS
@@ -1034,18 +1035,16 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
     landing between a commit's data write and its publish was
     inherited without re-validating the already-written files (the
     race ``snapshot_add_constraint``'s docstring documented). Now
-    every data-adding verb passes ``validated_constraints`` (the
-    constraint dict it enforced its written files against, possibly
-    None) and ``revalidate`` (a callable that re-runs the enforcement
-    against a given dict, raising ValueError on a violating row). On
-    every publish attempt the loop diffs the EFFECTIVE inherited
-    constraints against the validated set; a grown/changed constraint
-    triggers ``revalidate`` — O(new files), runs at most once per
-    distinct constraint state — and the ValueError aborts the commit
-    before publication. The legacy ``"skip"`` sentinel (direct/test
-    callers, and verbs whose carried rows are provably
-    already-validated: compaction, delete, drop, restore) preserves
-    the old inherit-without-revalidation behavior. Rewrites can also
+    every data-adding verb passes ``enforce``, a callable that checks
+    its written files against a given constraint dict and raises
+    ValueError on a violating row. The loop calls it on the first
+    attempt and again whenever the EFFECTIVE inherited constraints
+    hold a (name, expression) pair it has not enforced yet — O(new
+    files) per distinct constraint state — and the ValueError aborts
+    the commit before publication. Verbs whose carried rows are
+    provably already-validated (compaction, delete, drop, restore)
+    pass no ``enforce`` and inherit the constraints as they are.
+    Rewrites can also
     REBASE THROUGH interleaved METADATA-ONLY commits (constraint
     add/drop, manifest compaction — commits whose entry set is
     byte-identical to their parent's): carrying the base's segments
@@ -1057,11 +1056,6 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
         raise ValueError(
             "snapshot _publish_commit: rewrite commits are derived from "
             "a read — expected_version is mandatory")
-    if keep_paths is not None and (keep_segments is not None
-                                   or keep_entries is not None):
-        raise ValueError(
-            "snapshot _publish_commit: pass keep_paths OR "
-            "keep_segments/keep_entries, not both")
     commit_id = uuid.uuid4().hex[:12]
     # the directories whose survival every publish attempt re-verifies:
     # until the link wins, nothing references them, so a concurrent
@@ -1079,8 +1073,7 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
     #                                      expected_version)
     rebase_segs: list[dict] = []  # interleaved appends carried by a
     #                               narrowed-conflict rebase
-    revalidated_state: dict | None = None  # last constraint set the
-    #                                        revalidate hook cleared
+    enforced: set | None = None  # (name, expr) pairs `enforce` cleared
     # does THIS commit add an equality-delete descriptor? (a descriptor
     # without a seq is the one being added — snapshot_delete_keys) —
     # drives the cdf_delta unit below
@@ -1147,24 +1140,11 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
                 prev_manifest["schema"], batch_schema)
         elif mode == "rewrite" and prev is not None:
             if base_segs is None:
-                if reuse_segments is not None:
-                    base_segs = list(reuse_segments)
-                elif keep_paths is not None:
-                    # legacy/test surface: filter the base's materialized
-                    # entries and re-serialize the keepers
-                    base_m = _read_manifest_meta(table_dir,
-                                                 expected_version)
-                    kept = [e for e in _manifest_files(table_dir, base_m)
-                            if e["path"] in keep_paths]
-                    base_segs = _write_segments_grouped(
-                        table_dir, kept,
+                base_segs = list(keep_segments or [])
+                if keep_entries:
+                    base_segs += _write_segments_grouped(
+                        table_dir, keep_entries,
                         prev_manifest.get("eq_deletes"))
-                else:
-                    base_segs = list(keep_segments or [])
-                    if keep_entries:
-                        base_segs += _write_segments_grouped(
-                            table_dir, keep_entries,
-                            prev_manifest.get("eq_deletes"))
             segments = base_segs + rebase_segs + new_segs
             schema_json = _evolved_schema_json(
                 prev_manifest["schema"], batch_schema)
@@ -1172,27 +1152,17 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
             segments = new_segs
             schema_json = batch_schema.json()
         # METADATA-CONFLICT DETECTION (r13): a constraint that landed
-        # after this commit's files were written and validated must be
-        # re-enforced on them (or the commit must abort) — inheriting
-        # it unchecked would publish data the table's contract was
-        # never allowed to see
+        # after this commit's files were written must be enforced on
+        # them too (or the commit must abort) — inheriting it unchecked
+        # would publish data the table's contract was never allowed
+        # to see
         eff_constraints = (prev_manifest.get("constraints")
                            if constraints == "inherit" else constraints)
-        if ((new_entries or extra_segments) and constraints == "inherit"
-                and validated_constraints != "skip"):
-            base_c = validated_constraints or {}
-            grown = {k: v for k, v in (eff_constraints or {}).items()
-                     if base_c.get(k) != v}
-            if grown and grown != revalidated_state:
-                if revalidate is None:
-                    raise SnapshotConflictError(
-                        f"snapshot_commit: constraint(s) "
-                        f"{sorted(grown)} landed on {table_dir} while "
-                        "this commit was in flight and its written "
-                        "files were validated against an older set — "
-                        "re-run the commit")
-                revalidate(eff_constraints)  # ValueError on violation
-                revalidated_state = dict(grown)
+        pairs = set((eff_constraints or {}).items())
+        if enforce is not None and (enforced is None
+                                    or not pairs <= enforced):
+            enforce(eff_constraints)  # ValueError on a violating row
+            enforced = (enforced or set()) | pairs
         delta = _entry_totals(new_entries)
         if extra_segments:
             delta = {
@@ -1371,8 +1341,8 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
         return version
     raise SnapshotConflictError(
         f"snapshot_commit: lost the commit race {max_retries + 1} times "
-        f"on {table_dir} — sustained contention; raise max_retries or "
-        "serialize the writers")
+        f"on {table_dir} — sustained contention; serialize the writers "
+        "or re-run the commit")
 
 
 def snapshot_version_at(table_dir: str, as_of: float) -> int:
@@ -1400,15 +1370,20 @@ def snapshot_version_at(table_dir: str, as_of: float) -> int:
 
 
 def _resolve_version(table_dir: str, version: int | None,
-                     as_of: float | None = None) -> dict:
+                     as_of: float | None = None,
+                     verb: str = "snapshot_read") -> dict:
+    """The manifest of ``version`` (default: the current head) or of
+    the version current ``as_of``; raises ``"<verb>: ... has no
+    commits"`` on an empty table. Write verbs derive from the returned
+    manifest and validate their publish against its ``version``."""
     if version is not None and as_of is not None:
         raise ValueError(
-            "snapshot_read: pass version OR as_of, not both")
+            f"{verb}: pass version OR as_of, not both")
     if as_of is not None:
         version = snapshot_version_at(table_dir, as_of)
     v = snapshot_current_version(table_dir) if version is None else version
     if v is None:
-        raise ValueError(f"snapshot_read: {table_dir} has no commits")
+        raise ValueError(f"{verb}: {table_dir} has no commits")
     return _read_manifest_meta(table_dir, v)
 
 
@@ -2119,9 +2094,9 @@ _CDF_COLS = ("_change_type", "_commit_version")
 
 def _band_probe(keys: list[str], bands: dict[str, tuple]):
     """The file-level dirty test for a write touching the key BOX
-    given by ``bands``: may-match on every banded column (the same two
-    ``_file_may_match`` probes ``_split_dirty`` uses), conservatively
-    dirty when stats are missing. Works unchanged on segment rollup
+    given by ``bands``: may-match on every banded column (min <= hi and
+    max >= lo — two ``_file_may_match`` probes), conservatively dirty
+    when stats are missing. Works unchanged on segment rollup
     pseudo-entries, so the one probe drives the file split, the
     segment split, and conflict narrowing."""
     def probe(entry: dict) -> bool:
@@ -2174,30 +2149,12 @@ def _split_dirty_by_probe(table_dir: str, m: dict, probe
     return dirty, keep_segs, keep_entries
 
 
-def _split_dirty(manifest: dict, keys: list[str],
-                 bands: dict[str, tuple]) -> tuple[list, list]:
-    """Partition a manifest's file entries into (dirty, clean) for a
-    write touching the key BOX given by ``bands`` (per-column
-    [lo, hi]): a file is DIRTY iff, for EVERY banded column, its footer
-    stats admit some value in that column's band (min <= hi and
-    max >= lo — exactly the two ``_file_may_match`` probes), and
-    conservatively dirty when a column has no stats. For a composite
-    key the box is the product of the per-column bands — a superset of
-    the actual key set (the conjunction of interval probes is the
-    tightest file-level test the independent per-column stats support),
-    so every file that could hold a matched or deleted row is dirty by
-    construction; clean files are carried forward by path, never read
-    or rewritten."""
-    dirty, clean = [], []
-    for e in manifest["files"]:
-        st = e.get("stats", {})
-        if all(_file_may_match(st, k, ">=", bands[k][0])
-               and _file_may_match(st, k, "<=", bands[k][1])
-               for k in keys if k in bands):
-            dirty.append(e)
-        else:
-            clean.append(e)
-    return dirty, clean
+def _cdf_cols_taken(cols: list[str], *extra: str) -> bool:
+    """True when a table column collides with a reserved CDF column
+    name (or one of ``extra``): no change log can be recorded for such
+    a table — the log and the read would be ambiguous."""
+    reserved = {c.casefold() for c in (*_CDF_COLS, *extra)}
+    return any(c.casefold() in reserved for c in cols)
 
 
 def _write_change_log(spark: SparkSession, table_dir: str,
@@ -2213,17 +2170,63 @@ def _write_change_log(spark: SparkSession, table_dir: str,
     carried-forward ones (which cannot have changed)."""
     from .merge import snapshot_diff
 
-    taken = {c.casefold() for c in cols}
-    if taken & {"op", *(c.casefold() for c in _CDF_COLS)}:
+    if _cdf_cols_taken(cols, "op"):
         return None
     from pyspark.sql import functions as F
 
     log = snapshot_diff(before, after, key).select(
         F.col("op").alias("_change_type"), *cols)
-    change_id = uuid.uuid4().hex[:12]
-    rel = os.path.join("changes", change_id)
-    log.write.mode("error").parquet(os.path.join(table_dir, rel))
-    return _file_entries(table_dir, rel)
+    return _file_entries(table_dir,
+                         _write_parquet(table_dir, "changes", log))
+
+
+def _write_delete_log(table_dir: str, deleted: DataFrame,
+                      cols: list[str]) -> list[dict] | None:
+    """Write ``deleted`` (the removed rows, old values) as a D-row
+    change log under ``changes/<id>/`` and return its manifest entries
+    — the log of the verbs that only remove rows (partition drop,
+    DELETE WHERE). None when the table's columns collide with the
+    reserved CDF names."""
+    if _cdf_cols_taken(cols):
+        return None
+    from pyspark.sql import functions as F
+
+    return _file_entries(table_dir, _write_parquet(
+        table_dir, "changes",
+        deleted.select(F.lit("D").alias("_change_type"), *cols)))
+
+
+def _cow_publish(spark: SparkSession, table_dir: str, verb: str,
+                 manifest: dict, rel: str, schema, dirty_df: DataFrame,
+                 keep_segs: list[dict], keep_entries: list[dict],
+                 probe, key) -> tuple[int, list[dict]]:
+    """The shared tail of the copy-on-write verbs (MERGE, CDC apply,
+    replaceWhere), run once the verb has written its replacement files
+    (``schema``) into ``rel``: harvest their entries; with ``key``,
+    record the exact change log of ``dirty_df`` → the COMMITTED files
+    (read back, not the lazy plan: re-executing it could evaluate
+    nondeterministic expressions differently than the write did — feed
+    ≠ table — and would pay the dirty-band work twice); then publish a
+    REWRITE of the read version ``manifest`` that carries the clean
+    segments/entries forward, rebases over interleaved appends the
+    verb's dirty ``probe`` clears, and enforces the table's CHECK
+    constraints on the new files. Returns (version, new entries)."""
+    new_entries = _file_entries(table_dir, rel)
+    changes_entries = None
+    if key is not None:
+        cols = [f["name"] for f in json.loads(manifest["schema"])["fields"]]
+        committed_new = _read_entries(spark, table_dir, new_entries,
+                                      schema.json())
+        changes_entries = _write_change_log(
+            spark, table_dir, dirty_df, committed_new, key, cols)
+    version = _publish_commit(
+        table_dir, mode="rewrite", new_entries=new_entries,
+        batch_schema=schema, expected_version=manifest["version"],
+        keep_segments=keep_segs, keep_entries=keep_entries,
+        changes_entries=changes_entries, cdf_key=key, dirty_probe=probe,
+        enforce=lambda c: _enforce_constraints(
+            spark, table_dir, c, new_entries, schema.json(), verb))
+    return version, new_entries
 
 
 def _rewrite_layout(df: DataFrame, manifest: dict, n_dirty: int) -> DataFrame:
@@ -2278,7 +2281,7 @@ def snapshot_merge(spark: SparkSession, table_dir: str,
     """Transactional, predicate-scoped copy-on-write MERGE INTO the
     snapshot table: split the current version's files into DIRTY (key
     stats intersect the update batch's [min, max] key band —
-    ``_split_dirty``) and CLEAN, ``merge_upsert`` the update batch
+    ``_band_probe``) and CLEAN, ``merge_upsert`` the update batch
     against ONLY the dirty files' rows (matched → full-row update,
     unmatched → insert; clean files cannot hold a match by stats), and
     commit rewritten-dirty + carried-clean as a REWRITE validated
@@ -2379,11 +2382,9 @@ def snapshot_merge(spark: SparkSession, table_dir: str,
             raise ValueError(
                 "snapshot_merge: with a composite key pass source_scope "
                 "as {column: (lo, hi)}, not a bare tuple")
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(f"snapshot_merge: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
+    manifest = _resolve_version(table_dir, base_version,
+                                verb="snapshot_merge")
+    base_version = manifest["version"]
     cols = [f["name"] for f in json.loads(manifest["schema"])["fields"]]
     if "merge_action" in (c.casefold() for c in cols):
         # merge_upsert emits a synthetic 'merge_action' audit column;
@@ -2471,36 +2472,12 @@ def snapshot_merge(spark: SparkSession, table_dir: str,
     else:
         new_state = merged.drop("merge_action")
 
-    commit_id = uuid.uuid4().hex[:12]
-    rel = os.path.join("data", commit_id)
-    _rewrite_layout(new_state, manifest, len(dirty)).write \
-        .mode("error").parquet(os.path.join(table_dir, rel))
-    new_entries = _file_entries(table_dir, rel)
-    # diff against the COMMITTED files, not the lazy plan: re-executing
-    # the merge plan for the log could evaluate nondeterministic SET
-    # expressions differently than the write did (feed ≠ table), and
-    # would pay the dirty-band join twice
-    committed_new = _read_entries(spark, table_dir, new_entries,
-                                  new_state.schema.json())
-    changes_entries = _write_change_log(
-        spark, table_dir, dirty_df, committed_new, keys, cols)
-    _enforce_constraints(spark, table_dir, manifest.get("constraints"),
-                         new_entries, new_state.schema.json(),
-                         "snapshot_merge")
-    version = _publish_commit(
-        table_dir, mode="rewrite",
-        new_entries=new_entries,
-        batch_schema=new_state.schema,
-        expected_version=base_version,
-        keep_segments=keep_segs,
-        keep_entries=keep_entries,
-        changes_entries=changes_entries,
-        cdf_key=keys[0] if len(keys) == 1 else keys,
-        dirty_probe=probe,
-        validated_constraints=manifest.get("constraints"),
-        revalidate=lambda c: _enforce_constraints(
-            spark, table_dir, c, new_entries,
-            new_state.schema.json(), "snapshot_merge"))
+    rel = _write_parquet(table_dir, "data",
+                         _rewrite_layout(new_state, manifest, len(dirty)))
+    version, _ = _cow_publish(
+        spark, table_dir, "snapshot_merge", manifest, rel,
+        new_state.schema, dirty_df, keep_segs, keep_entries, probe,
+        keys[0] if len(keys) == 1 else keys)
     clean_df = _read_entries(
         spark, table_dir, clean, manifest["schema"],
         eq_deletes=manifest.get("eq_deletes")).withColumn(
@@ -2531,11 +2508,9 @@ def snapshot_apply_cdc(spark: SparkSession, table_dir: str,
     from .merge import _key_cols
 
     keys = _key_cols(key)
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(f"snapshot_apply_cdc: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
+    manifest = _resolve_version(table_dir, base_version,
+                                verb="snapshot_apply_cdc")
+    base_version = manifest["version"]
     cols = [f["name"] for f in json.loads(manifest["schema"])["fields"]]
     if "cdc_action" in (c.casefold() for c in cols):
         raise ValueError(
@@ -2557,34 +2532,12 @@ def snapshot_apply_cdc(spark: SparkSession, table_dir: str,
     applied = apply_cdc(dirty_df, changes, keys, seq=seq, op=op)
     new_state = applied.drop("cdc_action")
 
-    commit_id = uuid.uuid4().hex[:12]
-    rel = os.path.join("data", commit_id)
-    _rewrite_layout(new_state, manifest, len(dirty)).write \
-        .mode("error").parquet(os.path.join(table_dir, rel))
-    new_entries = _file_entries(table_dir, rel)
-    # diff against the committed files (see snapshot_merge): one
-    # evaluation of the CDC plan, and the feed records what was written
-    committed_new = _read_entries(spark, table_dir, new_entries,
-                                  new_state.schema.json())
-    changes_entries = _write_change_log(
-        spark, table_dir, dirty_df, committed_new, keys, cols)
-    _enforce_constraints(spark, table_dir, manifest.get("constraints"),
-                         new_entries, new_state.schema.json(),
-                         "snapshot_apply_cdc")
-    version = _publish_commit(
-        table_dir, mode="rewrite",
-        validated_constraints=manifest.get("constraints"),
-        revalidate=lambda c: _enforce_constraints(
-            spark, table_dir, c, new_entries,
-            new_state.schema.json(), "snapshot_apply_cdc"),
-        new_entries=new_entries,
-        batch_schema=new_state.schema,
-        expected_version=base_version,
-        keep_segments=keep_segs,
-        keep_entries=keep_entries,
-        changes_entries=changes_entries,
-        cdf_key=keys[0] if len(keys) == 1 else keys,
-        dirty_probe=probe)
+    rel = _write_parquet(table_dir, "data",
+                         _rewrite_layout(new_state, manifest, len(dirty)))
+    version, _ = _cow_publish(
+        spark, table_dir, "snapshot_apply_cdc", manifest, rel,
+        new_state.schema, dirty_df, keep_segs, keep_entries, probe,
+        keys[0] if len(keys) == 1 else keys)
     return version, applied
 
 
@@ -2780,11 +2733,9 @@ def snapshot_compact(spark: SparkSession, table_dir: str,
     descriptor that is seq- and key-band-applicable): the trickle-CDC
     maintenance pass is O(debt files), not O(table).
     Returns (new_version, files_before, files_after). ``base_version`` (r12) lets a long-running job derive against the version it actually READ (default: current at call time); publication then rebases over provably-disjoint interleaved appends and aborts on genuine overlap — see ``snapshot_merge``."""
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(f"snapshot_compact: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
+    manifest = _resolve_version(table_dir, base_version,
+                                verb="snapshot_compact")
+    base_version = manifest["version"]
     files_before = sum(s["n_files"] for s in manifest["segments"])
     if only_with_deletes:
         # REWRITE FILES WITH DELETES (r13 second half — Iceberg's
@@ -2849,8 +2800,6 @@ def snapshot_compact(spark: SparkSession, table_dir: str,
                        eq_deletes=manifest.get("eq_deletes"))
     if cluster_cols is None:
         cluster_cols = manifest.get("cluster_cols")
-    commit_id = uuid.uuid4().hex[:12]
-    rel = os.path.join("data", commit_id)
     spec = manifest.get("partition_spec")
     if spec:
         # PARTITION-SPEC-PRESERVING (r13, ADVICE r12 low: harvesting
@@ -2875,10 +2824,9 @@ def snapshot_compact(spark: SparkSession, table_dir: str,
         staged = staged.repartition(max(target_files, 1), *pcols)
         if cluster_cols:
             staged = staged.sortWithinPartitions(*pcols, *cluster_cols)
-        staged.write.mode("error").partitionBy(*pcols).parquet(
-            os.path.join(table_dir, rel))
         new_entries = _file_entries_partitioned(
-            table_dir, rel, spec, tolerate_default=True)
+            table_dir, _write_parquet(table_dir, "data", staged, *pcols),
+            spec, tolerate_default=True)
     else:
         if cluster_cols:
             compacted = (df.repartitionByRange(target_files,
@@ -2886,9 +2834,8 @@ def snapshot_compact(spark: SparkSession, table_dir: str,
                          .sortWithinPartitions(*cluster_cols))
         else:
             compacted = df.repartition(target_files)
-        compacted.write.mode("error").parquet(
-            os.path.join(table_dir, rel))
-        new_entries = _file_entries(table_dir, rel)
+        new_entries = _file_entries(
+            table_dir, _write_parquet(table_dir, "data", compacted))
     version = _publish_commit(
         table_dir, mode="rewrite",
         new_entries=new_entries,
@@ -2951,12 +2898,8 @@ def snapshot_overwrite_where(spark: SparkSession, table_dir: str,
             "snapshot_overwrite_where: an empty predicate replaces the "
             "whole table — use snapshot_commit(mode='overwrite') for "
             "that (it is the documented CDF/stream barrier)")
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(
-            f"snapshot_overwrite_where: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
+    manifest = _resolve_version(table_dir, base_version,
+                                verb="snapshot_overwrite_where")
     cols = [f["name"] for f in json.loads(manifest["schema"])["fields"]]
     if sorted(replacement.columns) != sorted(cols):
         raise ValueError(
@@ -2971,9 +2914,6 @@ def snapshot_overwrite_where(spark: SparkSession, table_dir: str,
         table_dir, manifest, probe)
     dirty_df = _read_entries(spark, table_dir, dirty, manifest["schema"],
                              eq_deletes=manifest.get("eq_deletes"))
-    commit_id = uuid.uuid4().hex[:12]
-    rel = os.path.join("data", commit_id)
-    abs_dir = os.path.join(table_dir, rel)
     # Write the REPLACEMENT first, alone, then stray-check the WRITTEN
     # files (ADVICE r11): the check must see the same evaluation the
     # commit publishes — a nondeterministic replacement plan could pass
@@ -2982,9 +2922,10 @@ def snapshot_overwrite_where(spark: SparkSession, table_dir: str,
     # total (the write); the read-back is O(replacement). An abort here
     # leaves only this unreferenced dir — snapshot_expire's garbage.
     replacement_cols = dirty_df.columns
-    _rewrite_layout(replacement.select(*replacement_cols), manifest,
-                    max(len(dirty), 1)).write \
-        .mode("error").parquet(abs_dir)
+    rel = _write_parquet(table_dir, "data", _rewrite_layout(
+        replacement.select(*replacement_cols), manifest,
+        max(len(dirty), 1)))
+    abs_dir = os.path.join(table_dir, rel)
     written = spark.read.schema(dirty_df.schema).parquet(abs_dir)
     stray = written.filter(~F.coalesce(cond, F.lit(False))).limit(1)
     if not stray.isEmpty():
@@ -3002,29 +2943,9 @@ def snapshot_overwrite_where(spark: SparkSession, table_dir: str,
     _rewrite_layout(kept, manifest, max(len(dirty), 1)).write \
         .mode("append").parquet(abs_dir)
     new_state = kept.unionByName(replacement.select(*replacement_cols))
-    new_entries = _file_entries(table_dir, rel)
-    changes_entries = None
-    if key is not None:
-        committed_new = _read_entries(spark, table_dir, new_entries,
-                                      new_state.schema.json())
-        changes_entries = _write_change_log(
-            spark, table_dir, dirty_df, committed_new, key, cols)
-    _enforce_constraints(spark, table_dir, manifest.get("constraints"),
-                         new_entries, new_state.schema.json(),
-                         "snapshot_overwrite_where")
-    version = _publish_commit(
-        table_dir, mode="rewrite",
-        validated_constraints=manifest.get("constraints"),
-        revalidate=lambda c: _enforce_constraints(
-            spark, table_dir, c, new_entries,
-            new_state.schema.json(), "snapshot_overwrite_where"),
-        new_entries=new_entries,
-        batch_schema=new_state.schema,
-        expected_version=base_version,
-        keep_segments=keep_segs,
-        keep_entries=keep_entries,
-        changes_entries=changes_entries, cdf_key=key,
-        dirty_probe=probe)
+    version, new_entries = _cow_publish(
+        spark, table_dir, "snapshot_overwrite_where", manifest, rel,
+        new_state.schema, dirty_df, keep_segs, keep_entries, probe, key)
     n_written = sum(e["rows"] for e in new_entries)
     n_carried = (sum(s["n_files"] for s in keep_segs)
                  + len(keep_entries))
@@ -3185,8 +3106,6 @@ def snapshot_commit_partitioned(spark: SparkSession, table_dir: str,
     staged = df
     for col, expr in exprs:
         staged = staged.withColumn(col, expr)
-    commit_id = uuid.uuid4().hex[:12]
-    rel = os.path.join("data", commit_id)
     # NULL transform values are validated on the WRITTEN output, not by
     # a pre-check job (r13, VERDICT r12 item 6 — the same
     # double-evaluation class ADVICE r11 flagged for replaceWhere: a
@@ -3195,21 +3114,16 @@ def snapshot_commit_partitioned(spark: SparkSession, table_dir: str,
     # __HIVE_DEFAULT_PARTITION__ and the strict harvest below raises
     # BEFORE publication; the unreferenced dir is snapshot_expire's
     # garbage. One evaluation total (the write).
-    staged.write.mode("error").partitionBy(*[c for c, _ in exprs]) \
-        .parquet(os.path.join(table_dir, rel))
-    new_entries = _file_entries_partitioned(table_dir, rel, spec)
-    validated = (None if early_prev is None else
-                 _read_manifest_meta(table_dir,
-                                     early_prev).get("constraints"))
-    _enforce_constraints(spark, table_dir, validated, new_entries,
-                         df.schema.json(), "snapshot_commit_partitioned")
+    new_entries = _file_entries_partitioned(
+        table_dir,
+        _write_parquet(table_dir, "data", staged, *[c for c, _ in exprs]),
+        spec)
     return _publish_commit(
         table_dir, mode=mode, new_entries=new_entries,
         batch_schema=df.schema,
         cluster_cols=("inherit" if mode == "append" else None),
         partition_spec=spec,
-        validated_constraints=validated,
-        revalidate=lambda c: _enforce_constraints(
+        enforce=lambda c: _enforce_constraints(
             spark, table_dir, c, new_entries, df.schema.json(),
             "snapshot_commit_partitioned"),
         **kwargs)
@@ -3383,18 +3297,13 @@ def snapshot_drop_partitions(spark: SparkSession, table_dir: str,
     nothing. Conflict narrowing applies: interleaved appends whose
     entries provably match the drop abort (the serial drop would have
     removed them); others rebase. ``base_version`` (r12) lets a long-running job derive against the version it actually READ (default: current at call time); publication then rebases over provably-disjoint interleaved appends and aborts on genuine overlap — see ``snapshot_merge``."""
-    from pyspark.sql import functions as F
-
     if not predicates:
         raise ValueError(
             "snapshot_drop_partitions: empty predicate drops the whole "
             "table — use snapshot_commit(mode='overwrite')")
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(
-            f"snapshot_drop_partitions: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
+    manifest = _resolve_version(table_dir, base_version,
+                                verb="snapshot_drop_partitions")
+    base_version = manifest["version"]
     spec = manifest.get("partition_spec") or []
     spec_fields = {f["name"]: f for f in spec}
     for term in predicates:
@@ -3423,16 +3332,12 @@ def snapshot_drop_partitions(spark: SparkSession, table_dir: str,
     if not dropped:
         return base_version, {"files_dropped": 0, "rows_dropped": 0}
     changes_entries = None
-    cols = [f["name"] for f in json.loads(manifest["schema"])["fields"]]
-    if key is not None and not (
-            {c.casefold() for c in cols}
-            & {c.casefold() for c in _CDF_COLS}):
-        chg_rel = os.path.join("changes", uuid.uuid4().hex[:12])
-        _read_entries(spark, table_dir, dropped, manifest["schema"],
-                      eq_deletes=manifest.get("eq_deletes")) \
-            .select(F.lit("D").alias("_change_type"), *cols) \
-            .write.mode("error").parquet(os.path.join(table_dir, chg_rel))
-        changes_entries = _file_entries(table_dir, chg_rel)
+    if key is not None:
+        changes_entries = _write_delete_log(
+            table_dir,
+            _read_entries(spark, table_dir, dropped, manifest["schema"],
+                          eq_deletes=manifest.get("eq_deletes")),
+            [f["name"] for f in json.loads(manifest["schema"])["fields"]])
     from pyspark.sql.types import StructType
 
     rows = [e.get("rows") if e.get("rows") is None
@@ -3495,12 +3400,9 @@ def snapshot_delete_where(spark: SparkSession, table_dir: str,
             "snapshot_delete_where: an empty predicate deletes the "
             "whole table — use snapshot_commit(mode='overwrite') with "
             "an empty frame for that")
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(
-            f"snapshot_delete_where: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
+    manifest = _resolve_version(table_dir, base_version,
+                                verb="snapshot_delete_where")
+    base_version = manifest["version"]
     cols = [f["name"] for f in json.loads(manifest["schema"])["fields"]]
     cond = F.lit(True)
     for term in predicates:
@@ -3566,13 +3468,7 @@ def snapshot_delete_where(spark: SparkSession, table_dir: str,
         else:
             updated.append(e)  # probed dirty, no row matched: unchanged
     # exact D-row change log (old values) for the CDF surface
-    changes_entries: list[dict] | None = None
-    if not ({c.casefold() for c in cols}
-            & {c.casefold() for c in _CDF_COLS}):
-        chg_rel = os.path.join("changes", uuid.uuid4().hex[:12])
-        matched.select(F.lit("D").alias("_change_type"), *cols) \
-            .write.mode("error").parquet(os.path.join(table_dir, chg_rel))
-        changes_entries = _file_entries(table_dir, chg_rel)
+    changes_entries = _write_delete_log(table_dir, matched, cols)
     from pyspark.sql.types import StructType
 
     version = _publish_commit(
@@ -3763,10 +3659,6 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
             descs.append(desc)
     if not descs:
         return base_version, 0, 0, 0
-    validated = manifest.get("constraints")
-    if entries:
-        _enforce_constraints(spark, table_dir, validated, entries,
-                             rows.schema.json(), verb)
     for _ in range(21):
         try:
             version = _publish_commit(
@@ -3774,14 +3666,13 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
                 batch_schema=(rows.schema if entries else StructType
                               .fromJson(json.loads(manifest["schema"]))),
                 epoch_key=epoch_key, expected_version=base_version,
-                reuse_segments=list(manifest["segments"]),
+                keep_segments=list(manifest["segments"]),
                 changes_entries=None,  # the CDF derives it (see above)
                 cdf_key=key_cols[0] if len(key_cols) == 1 else key_cols,
                 dirty_probe=lambda e: False,  # every append commutes
                 eq_deletes=list(manifest.get("eq_deletes") or []) + descs,
                 extra_commit_dirs={d["path"] for d in descs},
-                validated_constraints=validated if entries else "skip",
-                revalidate=(lambda c: _enforce_constraints(
+                enforce=(lambda c: _enforce_constraints(
                     spark, table_dir, c, entries, rows.schema.json(), verb))
                 if entries else None)
             return version, n_rows, n_covered, n_deleted
@@ -3995,26 +3886,21 @@ def snapshot_add_constraint(spark: SparkSession, table_dir: str,
     through). Constraints survive overwrites (they describe the TABLE,
     not a data generation); ``snapshot_drop_constraint`` removes one.
     Race note (CLOSED in r13, VERDICT r12 item 1): an append in
-    flight while the constraint lands validated against the set it
-    read at write time, but the publish loop now diffs the inherited
-    constraints against that validated set and RE-VALIDATES the
-    commit's written files against any grown constraint before
-    publication (``_publish_commit`` metadata-conflict detection —
-    Delta's rule); a violating in-flight commit aborts instead of
-    silently escaping the contract. The add's own head validation
-    covers everything committed before it."""
+    flight while the constraint lands has its written files enforced
+    inside the publish loop, against every constraint the loop has not
+    enforced them against yet — including one that landed after the
+    write (``_publish_commit`` metadata-conflict detection — Delta's
+    rule); a violating in-flight commit aborts instead of silently
+    escaping the contract. The add's own head validation covers
+    everything committed before it."""
     from pyspark.sql import functions as F
 
     if not name or not isinstance(expr, str) or not expr.strip():
         raise ValueError(
             "snapshot_add_constraint: pass a non-empty name and a SQL "
             "boolean expression")
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(
-            f"snapshot_add_constraint: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
+    manifest = _resolve_version(table_dir, base_version,
+                                verb="snapshot_add_constraint")
     constraints = dict(manifest.get("constraints") or {})
     if name in constraints:
         raise ValueError(
@@ -4037,8 +3923,8 @@ def snapshot_add_constraint(spark: SparkSession, table_dir: str,
         table_dir, mode="rewrite",
         new_entries=[],
         batch_schema=StructType.fromJson(json.loads(manifest["schema"])),
-        expected_version=base_version,
-        reuse_segments=list(manifest["segments"]),
+        expected_version=manifest["version"],
+        keep_segments=list(manifest["segments"]),
         changes_entries=[],
         constraints=constraints)
 
@@ -4048,12 +3934,8 @@ def snapshot_drop_constraint(table_dir: str, name: str,
     """DROP CONSTRAINT: metadata-only removal of a named CHECK
     (raises if the name is unknown — a silent no-op would let a typo
     leave the constraint enforced)."""
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(
-            f"snapshot_drop_constraint: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
+    manifest = _resolve_version(table_dir, base_version,
+                                verb="snapshot_drop_constraint")
     constraints = dict(manifest.get("constraints") or {})
     if name not in constraints:
         raise ValueError(
@@ -4066,8 +3948,8 @@ def snapshot_drop_constraint(table_dir: str, name: str,
         table_dir, mode="rewrite",
         new_entries=[],
         batch_schema=StructType.fromJson(json.loads(manifest["schema"])),
-        expected_version=base_version,
-        reuse_segments=list(manifest["segments"]),
+        expected_version=manifest["version"],
+        keep_segments=list(manifest["segments"]),
         changes_entries=[],
         constraints=constraints)
 
@@ -4103,19 +3985,15 @@ def snapshot_compact_manifests(table_dir: str,
     Stale rows (positions for a path whose entry moved to a newer
     vector under supersession) are NOT carried — each entry
     contributes exactly the rows recorded under its own path."""
-    if base_version is None:
-        base_version = snapshot_current_version(table_dir)
-    if base_version is None:
-        raise ValueError(
-            f"snapshot_compact_manifests: {table_dir} has no commits")
-    manifest = _read_manifest_meta(table_dir, base_version)
+    manifest = _resolve_version(table_dir, base_version,
+                                verb="snapshot_compact_manifests")
     segs = manifest["segments"]
     undersized = [s for s in segs
                   if s["n_files"] < _SEGMENT_MAX_ENTRIES]
     entries = _manifest_files(table_dir, manifest)
     dv_dirs = sorted({e["dv"]["path"] for e in entries if e.get("dv")})
     if len(undersized) <= 1 and len(dv_dirs) <= 1:
-        return base_version  # nothing worth merging
+        return manifest["version"]  # nothing worth merging
     from pyspark.sql.types import StructType
 
     extra_dirs: set[str] = set()
@@ -4162,8 +4040,8 @@ def snapshot_compact_manifests(table_dir: str,
         table_dir, mode="rewrite",
         new_entries=[],
         batch_schema=StructType.fromJson(json.loads(manifest["schema"])),
-        expected_version=base_version,
-        reuse_segments=new_segs,
+        expected_version=manifest["version"],
+        keep_segments=new_segs,
         changes_entries=[],
         extra_commit_dirs=extra_dirs)
 
@@ -4472,7 +4350,7 @@ def snapshot_restore(spark: SparkSession, table_dir: str, version: int,
         new_entries=[],
         batch_schema=target_schema,
         expected_version=head,
-        reuse_segments=list(target_m["segments"]),
+        keep_segments=list(target_m["segments"]),
         # restored state = the TARGET's data — including the equality
         # deletes active at that version (inheriting the head's would
         # delete keys the target never saw deleted, or resurrect ones
@@ -4622,7 +4500,7 @@ def snapshot_fast_forward(table_dir: str, name: str) -> int:
         table_dir, mode="rewrite", new_entries=[],
         batch_schema=schema,
         expected_version=head,
-        reuse_segments=list(bm["segments"]),
+        keep_segments=list(bm["segments"]),
         changes_entries=None,
         eq_deletes=bm.get("eq_deletes") or [],
         constraints=bm.get("constraints"),
@@ -4699,22 +4577,15 @@ def snapshot_cherry_pick(spark: SparkSession, table_dir: str,
         return head
     delta_entries = [e for s in delta_segs
                      for e in _segment_entries(table_dir, s)]
-    head_m = (_read_manifest_meta(table_dir, head)
-              if head is not None else {})
-
-    def revalidate(cset):
-        _enforce_constraints(spark, table_dir, cset, delta_entries,
-                             bm["schema"], "snapshot_cherry_pick")
-
-    revalidate(head_m.get("constraints"))
     from pyspark.sql.types import StructType
 
     return _publish_commit(
         table_dir, mode="append", new_entries=[],
         batch_schema=StructType.fromJson(json.loads(bm["schema"])),
         extra_segments=delta_segs,
-        validated_constraints=head_m.get("constraints") or {},
-        revalidate=revalidate)
+        enforce=lambda c: _enforce_constraints(
+            spark, table_dir, c, delta_entries, bm["schema"],
+            "snapshot_cherry_pick"))
 
 
 def snapshot_drop_branch(table_dir: str, name: str) -> None:

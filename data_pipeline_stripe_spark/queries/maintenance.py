@@ -1145,7 +1145,7 @@ def snapshot_compact_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snapshot_partial_merge_parity(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """Predicate-scoped copy-on-write MERGE
-    (operators/snapshots.py:snapshot_merge + _split_dirty): the base is
+    (operators/snapshots.py:snapshot_merge + _band_probe): the base is
     committed as THREE key-band appends (k <= 400, (400, 800],
     (800, 1200], one file each; every fourth key withheld so the update
     batch also INSERTS); the update batch touches only the middle band.

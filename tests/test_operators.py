@@ -4034,13 +4034,16 @@ def test_constraint_landing_mid_append_aborts_violating_commit(
     assert S.snapshot_read(spark, t).filter("k = 901").count() == 1
 
 
-def test_rewrite_rebases_through_constraint_add(spark, tmp_path):
-    """Metadata-conflict detection (r13, VERDICT r12 item 1b): a merge
-    derived from a pre-add read must REBASE through the interleaved
-    metadata-only constraint commit (previously: unconditional
-    SnapshotConflictError) — and enforce the new constraint on its own
-    rewritten files: the violating merge aborts, the clean one
-    publishes with the constraint recorded."""
+@pytest.mark.parametrize("verb", ["merge", "apply_cdc",
+                                  "overwrite_where"])
+def test_rewrite_rebases_through_constraint_add(spark, tmp_path, verb):
+    """Metadata-conflict detection (r13, VERDICT r12 item 1b): a
+    copy-on-write rewrite (merge, CDC apply, replaceWhere) derived from
+    a pre-add read must REBASE through the interleaved metadata-only
+    constraint commit (previously: unconditional SnapshotConflictError)
+    — and enforce the new constraint on its own rewritten files: the
+    violating rewrite aborts, the clean one publishes with the
+    constraint recorded."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -4053,11 +4056,22 @@ def test_rewrite_rebases_through_constraint_add(spark, tmp_path):
     stale = S.snapshot_current_version(t)
     S.snapshot_add_constraint(spark, t, "nonneg", "v >= 0")
 
+    def rewrite(upd):
+        if verb == "merge":
+            return S.snapshot_merge(spark, t, upd, "k", base_version=stale)
+        if verb == "apply_cdc":
+            return S.snapshot_apply_cdc(
+                spark, t, upd.withColumns({"seq": F.lit(1),
+                                           "op": F.lit("U")}),
+                "k", base_version=stale)
+        return S.snapshot_overwrite_where(
+            spark, t, [("k", "=", 5)], upd, key="k", base_version=stale)
+
     bad_upd = spark.createDataFrame([(5, -1)], "k long, v long")
     with pytest.raises(ValueError, match="nonneg"):
-        S.snapshot_merge(spark, t, bad_upd, "k", base_version=stale)
+        rewrite(bad_upd)
     good_upd = spark.createDataFrame([(5, 777)], "k long, v long")
-    v = S.snapshot_merge(spark, t, good_upd, "k", base_version=stale)[0]
+    v = rewrite(good_upd)[0]
     m = S._read_manifest_meta(t, v)
     assert m["constraints"] == {"nonneg": "v >= 0"}
     out = S.snapshot_read(spark, t)
@@ -4671,6 +4685,49 @@ def test_trickle_cdc_verb_job_budget(spark, tmp_path, verb, budget):
     assert sorted(os.path.join("eqdel", d)
                   for d in os.listdir(os.path.join(t, "eqdel"))) \
         == sorted(d["path"] for d in m["eq_deletes"])
+
+
+@pytest.mark.parametrize("constrained", [False, True])
+@pytest.mark.parametrize("verb, budget, constrained_budget", [
+    ("append", 1, 2),
+    ("merge", 8, 9),
+    ("apply_cdc", 8, 9),
+    ("overwrite_where", 6, 7),
+    ("delete_where", 7, 7),
+    ("compact", 2, 2),
+])
+def test_copy_on_write_verb_job_budget(spark, tmp_path, verb, budget,
+                                       constrained_budget, constrained):
+    """Spark jobs per call of the copy-on-write verbs over the one-file
+    table and a 10-key band, without and with one CHECK constraint (the
+    constraint costs the data-adding verbs one enforcement job)."""
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = _mor_table(spark, str(tmp_path / "t"))
+    if verb == "compact":  # a second file to compact with the first
+        S.snapshot_commit(spark, t, _cdc(spark, (100, 110), "U")
+                          .select("k", "v").coalesce(1))
+    if constrained:
+        S.snapshot_add_constraint(spark, t, "nonneg", "v >= 0")
+    head = S.snapshot_current_version(t)
+    band = [("k", ">=", 10), ("k", "<", 20)]
+    rows = _cdc(spark, (10, 20), "U")
+    calls = {
+        "append": lambda: S.snapshot_commit(
+            spark, t, _cdc(spark, (100, 110), "U").select("k", "v")),
+        "merge": lambda: S.snapshot_merge(
+            spark, t, rows.select("k", "v"), "k")[0],
+        "apply_cdc": lambda: S.snapshot_apply_cdc(spark, t, rows, "k")[0],
+        "overwrite_where": lambda: S.snapshot_overwrite_where(
+            spark, t, band, rows.select("k", "v"), key="k")[0],
+        "delete_where": lambda: S.snapshot_delete_where(
+            spark, t, band, key="k")[0],
+        "compact": lambda: S.snapshot_compact(spark, t)[0],
+    }
+    version, jobs = _spark_jobs(spark, calls[verb])
+    assert version == head + 1
+    limit = constrained_budget if constrained else budget
+    assert jobs <= limit, f"{verb} ran {jobs} Spark jobs > {limit}"
 
 
 @pytest.mark.parametrize("verb", ["delete_keys", "upsert_keys",

@@ -177,11 +177,11 @@ def main() -> None:
         # partitioning — up to 32 files per band — so the bound is the
         # stats-derived dirty set, not a constant)
         from data_pipeline_stripe_spark.operators.snapshots import \
-            _split_dirty
-        dirty, clean = _split_dirty(pre_manifest, ["k"],
-                                    {"k": (401, 800)})
-        dirty_paths = {e["path"] for e in dirty}
-        clean_paths = {e["path"] for e in clean}
+            _band_probe
+        probe = _band_probe(["k"], {"k": (401, 800)})
+        dirty_paths = {e["path"] for e in pre_manifest["files"]
+                       if probe(e)}
+        clean_paths = pre - dirty_paths
         if (not rewritten_src <= dirty_paths
                 or not clean_paths <= post or not clean_paths):
             raise RuntimeError(
