@@ -525,6 +525,16 @@ def _is_metadata_only_commit(table_dir: str, parent_m: dict,
     return p_entries == c_entries
 
 
+def _added_segments(parent_m: dict | None, m: dict) -> list[dict]:
+    """The segment descriptors commit ``m`` carries that its parent
+    ``parent_m`` lacks (all of them for a root commit, ``parent_m``
+    None). Every commit reuses unchanged segments by reference, so for
+    an append this IS its delta — O(delta) metadata, no file-list
+    diff."""
+    base = {s["path"] for s in parent_m["segments"]} if parent_m else set()
+    return [s for s in m["segments"] if s["path"] not in base]
+
+
 def _disjoint_append_segments(table_dir: str, from_v: int, to_v: int,
                               dirty_probe) -> list[dict]:
     """Validate the commits interleaved in ``(from_v, to_v]`` for a
@@ -558,8 +568,7 @@ def _disjoint_append_segments(table_dir: str, from_v: int, to_v: int,
                 f"is a concurrent {m['mode']} — a rewrite derived from "
                 f"version {from_v} cannot be rebased over it; re-read "
                 "and re-derive")
-        parent_paths = {s["path"] for s in parent_m["segments"]}
-        new = [s for s in m["segments"] if s["path"] not in parent_paths]
+        new = _added_segments(parent_m, m)
         for seg in new:
             if not dirty_probe(_segment_pseudo_entry(seg)):
                 continue  # provably outside the dirty band
@@ -1481,23 +1490,19 @@ def _read_entries(spark: SparkSession, table_dir: str,
             out = out.unionByName(f)
         return out
 
+    # files outside every applicable delete keep the exact no-delete
+    # plan; groups key on descriptor identity (eq_deletes' own objects)
     eq = eq_deletes or []
-    groups: dict[tuple, list[dict]] = {}
+    groups: dict[tuple, tuple[list[dict], list[dict]]] = {}
     for e in entries:
-        # a descriptor applies iff the data is OLDER than the delete
-        # AND its key band may intersect the file (band-pruned — files
-        # outside every band keep the exact no-delete plan)
-        key = tuple(i for i, d in enumerate(eq)
-                    if e.get("_seq", 0) < d["seq"]
-                    and _eq_desc_may_touch(e, d))
-        groups.setdefault(key, []).append(e)
+        ds = _applicable_eq_deletes(e, eq)
+        groups.setdefault(tuple(map(id, ds)), (ds, []))[1].append(e)
     outs: list[DataFrame] = []
-    for key, subset in groups.items():
+    for ds, subset in groups.values():
         df = read_subset(subset)
         if df is None:
             continue
-        for i in key:
-            d = eq[i]
+        for d in ds:
             keys_df = spark.read.parquet(
                 os.path.join(table_dir, d["path"])) \
                 .select(*d["cols"]).dropDuplicates()
@@ -1605,7 +1610,7 @@ def _entry_not_null_may_match(entry: dict, col: str) -> bool:
 def _eq_desc_may_touch(entry: dict, desc: dict) -> bool:
     """Can this equality-delete descriptor's key set match ANY row of
     this entry? Decided from the descriptor's recorded per-column key
-    min/max (``bands`` — harvested by ``snapshot_delete_keys`` for
+    min/max (``bands`` — harvested by ``_write_key_sidecar`` for
     str/int keys) against the entry's footer stats: a file whose
     column range cannot intersect the key band provably contains no
     matching row, so readers skip its anti-join entirely and CDF
@@ -1619,6 +1624,18 @@ def _eq_desc_may_touch(entry: dict, desc: dict) -> bool:
                 and _entry_may_match(entry, (col, "<=", hi))):
             return False
     return True
+
+
+def _applicable_eq_deletes(entry: dict, eq: list[dict]) -> list[dict]:
+    """The descriptors of ``eq`` that apply to one file entry or
+    segment pseudo-entry: the delete is NEWER than the data (its seq
+    exceeds the entry's ``_seq`` — a key re-inserted after the delete
+    survives it) and its key band may intersect the entry's stats
+    (``_eq_desc_may_touch``). The one delete-scope rule of every read,
+    metadata view and delete-debt probe."""
+    seq = entry.get("_seq", 0)
+    return [d for d in eq
+            if seq < d["seq"] and _eq_desc_may_touch(entry, d)]
 
 
 def _entry_may_match(entry: dict, term) -> bool:
@@ -1653,13 +1670,15 @@ def _entry_may_match(entry: dict, term) -> bool:
     return _file_may_match(stats, c, op, v)
 
 
-def _pruned_entries(table_dir: str, predicates: list[tuple],
-                    version: int | None
-                    ) -> tuple[list[dict], dict, dict]:
-    """(surviving file entries, manifest, plan stats) for a conjunction
-    of ``(column, op, literal)`` predicates — the ONE pruning decision
-    both ``snapshot_pruned_files`` (the pinnable view) and
-    ``snapshot_scan`` (the read) share, so they cannot diverge.
+def _pruned_entries(table_dir: str, m: dict, predicates: list[tuple]
+                    ) -> tuple[list[dict], dict]:
+    """(surviving file entries, plan stats) of the resolved manifest
+    ``m`` for a conjunction of ``(column, op, literal)`` predicates —
+    the ONE live-file plan that ``snapshot_scan``,
+    ``snapshot_pruned_files``, ``snapshot_plan_stats``, the batch
+    ``snapshot_table`` reader and the stream's initial load share, so
+    they cannot diverge. Each entry carries its segment's ``_seq`` for
+    equality-delete scoping (``_applicable_eq_deletes``).
 
     TWO-LEVEL (r12): segment descriptors are probed FIRST via their
     column-stat rollups — a segment whose rollup proves no member file
@@ -1668,7 +1687,6 @@ def _pruned_entries(table_dir: str, predicates: list[tuple],
     surviving segments' entries are probed file-by-file. The plan
     stats record {files_kept, files_total, segments_opened,
     segments_total} so gates can pin that segment pruning happened."""
-    m = _resolve_version(table_dir, version)
     # hidden partitioning (r12): source-column terms imply
     # partition-field terms, used for PRUNING only — the caller's
     # original terms stay the row filter, so this can only drop
@@ -1692,7 +1710,7 @@ def _pruned_entries(table_dir: str, predicates: list[tuple],
     stats = {"files_kept": len(kept), "files_total": files_total,
              "segments_opened": opened,
              "segments_total": len(m["segments"])}
-    return kept, m, stats
+    return kept, stats
 
 
 def snapshot_pruned_files(table_dir: str,
@@ -1703,9 +1721,9 @@ def snapshot_pruned_files(table_dir: str,
     ``(column, op, literal)`` predicates against the manifest's
     per-file column stats — the planning decision ``snapshot_scan``
     makes, exposed so tests can pin that pruning actually happened."""
-    kept, m, _ = _pruned_entries(table_dir, predicates, version)
-    return [e["path"] for e in kept], sum(
-        s["n_files"] for s in m["segments"])
+    kept, stats = _pruned_entries(
+        table_dir, _resolve_version(table_dir, version), predicates)
+    return [e["path"] for e in kept], stats["files_total"]
 
 
 def snapshot_plan_stats(table_dir: str, predicates: list[tuple],
@@ -1715,8 +1733,8 @@ def snapshot_plan_stats(table_dir: str, predicates: list[tuple],
     that a banded scan of a many-segment table opened only the
     segments its predicate may match (VERDICT r11 item 1's gate pin
     (b))."""
-    _, _, stats = _pruned_entries(table_dir, predicates, version)
-    return stats
+    return _pruned_entries(
+        table_dir, _resolve_version(table_dir, version), predicates)[1]
 
 
 def _term_filter(term):
@@ -1827,7 +1845,8 @@ def snapshot_scan(spark: SparkSession, table_dir: str,
     Iceberg's serve-both-generations rule, replacing the r12 refusal;
     only bool/float literals (undecidable against tuples) still
     raise."""
-    kept, m, _ = _pruned_entries(table_dir, predicates, version)
+    m = _resolve_version(table_dir, version)
+    kept, _ = _pruned_entries(table_dir, m, predicates)
     spec_names = {f["name"] for f in m.get("partition_spec") or []}
 
     def term_cols(t) -> set:
@@ -1880,10 +1899,12 @@ def _manifest_chain(table_dir: str, from_version: int, to_version: int,
     ``to_version`` raises the lineage ValueError. ``from_version == -1``
     walks to the root (initial-load form); otherwise the returned list
     STARTS with ``from_version``'s own manifest (the range anchor).
-    Mode classification (append-only? change-log recorded?) stays at
-    the call sites — it is what legitimately differs between them.
-    Returns META manifests (segment descriptors, no materialized
-    ``files``) — delta consumers walk segments, O(delta) metadata."""
+    Mode classification happens in two places over this walk, one per
+    contract: ``_appended_entries`` (append-only: the incremental read
+    and the plain stream) and ``_change_units`` (the change feed: the
+    batch CDF and the CDF stream). Returns META manifests (segment
+    descriptors, no materialized ``files``) — delta consumers walk
+    segments, O(delta) metadata."""
     try:
         chain: list[dict] = []
         v: int | None = to_version
@@ -1908,40 +1929,54 @@ def _manifest_chain(table_dir: str, from_version: int, to_version: int,
         ) from exc
 
 
+def _appended_entries(table_dir: str, from_version: int,
+                      to_version: int, context: str, remedy: str,
+                      skip_change_commits: bool = False
+                      ) -> tuple[list[dict], dict]:
+    """(file entries ADDED in ``(from_version, to_version]``, the
+    ``to_version`` manifest) — the append-only range walk of
+    ``snapshot_read_incremental`` and the plain stream source. Each
+    APPEND contributes its added segments' entries; any other commit
+    in range raises a ValueError naming its mode, with the caller's
+    ``remedy`` (its delta is not expressible as added files — Delta's
+    rule for non-append commits) — unless ``skip_change_commits`` (the
+    stream's Delta ``skipChangeCommits``), which serves appends only."""
+    chain = _manifest_chain(table_dir, from_version, to_version, context)
+    entries: list[dict] = []
+    for parent_m, m in zip(chain, chain[1:]):
+        if m["mode"] != "append":
+            if skip_change_commits:
+                continue
+            raise ValueError(
+                f"{context}: version {m['version']} of {table_dir} is a "
+                f"{m['mode']} — the range has no append-only delta; "
+                f"{remedy}")
+        entries.extend(e for seg in _added_segments(parent_m, m)
+                       for e in _segment_entries(table_dir, seg))
+    return entries, chain[-1]
+
+
 def snapshot_read_incremental(spark: SparkSession, table_dir: str,
                               from_version: int,
                               to_version: int | None = None) -> DataFrame:
     """Rows ADDED strictly after ``from_version`` up to ``to_version``
     (default current) — the CDF/incremental-consumer read. Walks the
-    manifest parent chain from ``to`` back to ``from`` and requires
-    every step to be an APPEND (append-only fast path: each commit's
-    delta = its new file entries, so the range delta is just the files
-    present at ``to`` and absent at ``from`` — no data diffing).
-    Raises on an overwrite in the range: its delta is not expressible
-    as added files, so the consumer must fall back to a full re-read
-    (exactly Delta CDF's behavior for non-append commits without a
-    change log)."""
+    manifest parent chain and requires every step to be an APPEND
+    (append-only fast path: each commit's delta = its new file
+    entries — no data diffing). Raises, naming the mode, on any other
+    commit in the range (overwrite, merge, compaction, merge-on-read
+    delete ...): its delta is not expressible as added files, so the
+    consumer must fall back to a full re-read (exactly Delta CDF's
+    behavior for non-append commits without a change log)."""
     to_v = (snapshot_current_version(table_dir)
             if to_version is None else to_version)
     if to_v is None or to_v < from_version:
         raise ValueError(
             f"snapshot_read_incremental: bad range ({from_version}, "
             f"{to_v}] on {table_dir}")
-    chain = _manifest_chain(table_dir, from_version, to_v,
-                            "snapshot_read_incremental")
-    for m in chain[1:]:
-        if m["mode"] != "append":
-            raise ValueError(
-                f"snapshot_read_incremental: version {m['version']} is "
-                "an overwrite — the range has no append-only delta; "
-                "re-read the full table instead")
-    to_m = chain[-1]
-    # appends reuse every prior segment by reference, so the range
-    # delta is exactly the segments present at ``to`` and absent at
-    # ``from`` — O(delta) metadata, no full file-list diff (r12)
-    base_segs = {s["path"] for s in chain[0]["segments"]}
-    delta = [e for s in to_m["segments"] if s["path"] not in base_segs
-             for e in _segment_entries(table_dir, s)]
+    delta, to_m = _appended_entries(
+        table_dir, from_version, to_v, "snapshot_read_incremental",
+        "re-read the full table instead")
     return _read_entries(spark, table_dir, delta, to_m["schema"])
 
 
@@ -2541,6 +2576,68 @@ def snapshot_apply_cdc(spark: SparkSession, table_dir: str,
     return version, applied
 
 
+def _change_units(table_dir: str, chain: list[dict], context: str,
+                  with_root: bool = False):
+    """The change-feed classification of a ``_manifest_chain`` — the
+    ONE rule set the batch CDF (``snapshot_read_cdf``) and the CDF
+    stream source render, so the stream serves exactly the batch feed.
+    Yields ``(kind, manifest, items)`` per in-range commit (the chain's
+    first manifest is the range anchor; ``with_root`` also classifies
+    it, the stream's initial-load form):
+
+    - ``"I"``: an APPEND's added file entries (insert rows);
+    - ``"U"``: a MERGE-ON-READ commit's added file entries (upsert
+      rows — their keys are COVERED by their descriptor, no D needed),
+      yielded only when the commit added files;
+    - ``"D"``: ``(parent manifest, uncovered descriptors, candidates)``
+      for a merge-on-read commit's UNCOVERED descriptors (pure deletes,
+      no log by design): the D rows are the parent's live rows they
+      match, computed lazily by the reader. Each candidate is
+      ``(parent entry, prior descriptors, dead descriptors)`` — prior
+      = the parent's own deletes applicable to the entry
+      (``_applicable_eq_deletes``), dead = the uncovered descriptors
+      whose key band may touch it. Every parent segment precedes the
+      delete, so the dead scope is band-only; a parent file no
+      uncovered descriptor can touch is no candidate — the D scan
+      covers the delete's band, not the table;
+    - ``"log"``: a rewrite's recorded change-log entries (empty for a
+      compaction — zero changes).
+
+    A non-append commit with no recorded log and no new descriptors (a
+    plain overwrite) raises ``"<context>: ... no recorded change log"``
+    — its delta is not expressible (Delta CDF's own rule)."""
+    pairs = (zip([None] + chain[:-1], chain) if with_root
+             else zip(chain, chain[1:]))
+    for parent_m, m in pairs:
+        if m["mode"] == "append":
+            yield "I", m, [e for seg in _added_segments(parent_m, m)
+                           for e in _segment_entries(table_dir, seg)]
+            continue
+        if m.get("changes") is not None:
+            yield "log", m, m["changes"]
+            continue
+        prior = (parent_m or {}).get("eq_deletes") or []
+        new_eq = [d for d in m.get("eq_deletes") or [] if d not in prior]
+        if not new_eq or parent_m is None:
+            raise ValueError(
+                f"{context}: version {m['version']} of {table_dir} is a "
+                f"{m['mode']} with no recorded change log — its delta is "
+                "not expressible; re-read the full table")
+        upserts = [e for seg in _added_segments(parent_m, m)
+                   for e in _segment_entries(table_dir, seg)]
+        if upserts:
+            yield "U", m, upserts
+        uncovered = [d for d in new_eq if not d.get("covered")]
+        if uncovered:
+            cands = []
+            for e in _manifest_files(table_dir, parent_m):
+                dead = [d for d in uncovered if _eq_desc_may_touch(e, d)]
+                if dead:
+                    cands.append(
+                        (e, _applicable_eq_deletes(e, prior), dead))
+            yield "D", m, (parent_m, uncovered, cands)
+
+
 def snapshot_read_cdf(spark: SparkSession, table_dir: str,
                       from_version: int,
                       to_version: int | None = None) -> DataFrame:
@@ -2555,6 +2652,10 @@ def snapshot_read_cdf(spark: SparkSession, table_dir: str,
       (exact: compaction records ``[]`` and contributes nothing, so an
       incremental consumer SURVIVES compaction — the r9 limitation
       where one non-append commit stranded every incremental reader);
+    - MERGE-ON-READ (upsert_keys / delete_keys / apply_cdc_mor — no log
+      by design) → its delta files as 'U' rows, and the parent rows its
+      uncovered delete descriptors match as 'D' rows, computed here
+      over the delete's key band (``_change_units``);
     - plain OVERWRITE (no log recorded) → raises ValueError: its delta
       is not expressible and the consumer must fall back to a full
       re-read (Delta CDF's own rule).
@@ -2577,91 +2678,45 @@ def snapshot_read_cdf(spark: SparkSession, table_dir: str,
     chain = _manifest_chain(table_dir, from_version, to_v,
                             "snapshot_read_cdf")
     head_schema = chain[-1]["schema"]
-    taken = {f["name"].casefold()
-             for f in json.loads(head_schema)["fields"]}
-    if taken & {c.casefold() for c in _CDF_COLS}:
+    if _cdf_cols_taken(
+            [f["name"] for f in json.loads(head_schema)["fields"]]):
         raise ValueError(
             "snapshot_read_cdf: the table schema uses a reserved CDF "
             f"column name ({_CDF_COLS}) — rename it to read the feed")
     frames = []
-    for parent_m, m in zip(chain, chain[1:]):
-        if m["mode"] == "append":
-            parent_segs = {s["path"] for s in parent_m["segments"]}
-            delta = [e for s in m["segments"]
-                     if s["path"] not in parent_segs
-                     for e in _segment_entries(table_dir, s)]
-            f = _read_entries(spark, table_dir, delta, m["schema"]) \
-                .withColumn("_change_type", F.lit("I"))
-        else:
-            entries = m.get("changes")
-            new_eq = [d for d in (m.get("eq_deletes") or [])
-                      if d not in (parent_m.get("eq_deletes") or [])]
-            if entries is None and new_eq:
-                # MERGE-ON-READ commit family (r13): no change log by
-                # design. The delta files (snapshot_upsert_keys /
-                # snapshot_apply_cdc_mor upserts) serve as 'U' rows —
-                # their keys are COVERED by their descriptor, no D
-                # needed (the U replaces the old row in any replay).
-                parent_segs = {s["path"] for s in parent_m["segments"]}
-                up_delta = [e for s in m["segments"]
-                            if s["path"] not in parent_segs
-                            for e in _segment_entries(table_dir, s)]
-                if up_delta:
-                    f = _read_entries(spark, table_dir, up_delta,
-                                      m["schema"]) \
-                        .withColumn("_change_type", F.lit("U"))
-                    frames.append(f.withColumn(
-                        "_commit_version",
-                        F.lit(m["version"]).cast("long")))
-                # UNCOVERED descriptors (snapshot_delete_keys / the
-                # mor-apply's final-D keys): their D rows are computed
-                # LAZILY here, at first CDF read of the range (the
-                # read pays the band scan the commit refused to).
-                # Within one commit every parent segment precedes the
-                # delete, so the seq scope is vacuous; folding
-                # descriptor-by-descriptor keeps a row matched by two
-                # descriptors a single D. Key-band pruning first:
-                # files no uncovered descriptor can touch contribute
-                # no D rows, so the scan covers the delete's band,
-                # not the table.
-                uncovered = [d for d in new_eq if not d.get("covered")]
-                if uncovered:
-                    touched = [
-                        e for e in _manifest_files(table_dir, parent_m)
-                        if any(_eq_desc_may_touch(e, d)
-                               for d in uncovered)]
-                    remaining = _read_entries(
-                        spark, table_dir, touched,
-                        parent_m["schema"],
-                        eq_deletes=parent_m.get("eq_deletes"))
-                    dead: list[DataFrame] = []
-                    for d in uncovered:
-                        keys_df = spark.read.parquet(
-                            os.path.join(table_dir, d["path"])) \
-                            .select(*d["cols"]).dropDuplicates()
-                        dead.append(remaining.join(
-                            F.broadcast(keys_df), on=list(d["cols"]),
-                            how="left_semi"))
-                        remaining = remaining.join(
-                            F.broadcast(keys_df), on=list(d["cols"]),
-                            how="left_anti")
-                    f = dead[0]
-                    for extra in dead[1:]:
-                        f = f.unionByName(extra)
-                    f = f.withColumn("_change_type", F.lit("D"))
-                    frames.append(f.withColumn(
-                        "_commit_version",
-                        F.lit(m["version"]).cast("long")))
-                continue
-            if entries is None:
-                raise ValueError(
-                    f"snapshot_read_cdf: version {m['version']} is a "
-                    f"{m['mode']} with no recorded change log — its "
-                    "delta is not expressible; re-read the full table")
-            if not entries:
+    for kind, m, items in _change_units(table_dir, chain,
+                                        "snapshot_read_cdf"):
+        if kind == "log":
+            if not items:
                 continue  # layout-only commit (compaction): zero changes
             f = spark.read.parquet(
-                *[os.path.join(table_dir, e["path"]) for e in entries])
+                *[os.path.join(table_dir, e["path"]) for e in items])
+        elif kind == "D":
+            # the parent's live rows the commit's uncovered descriptors
+            # match, folded descriptor-by-descriptor so a row matched
+            # by two descriptors is a single D
+            parent_m, uncovered, cands = items
+            remaining = _read_entries(
+                spark, table_dir, [e for e, _, _ in cands],
+                parent_m["schema"], eq_deletes=parent_m.get("eq_deletes"))
+            dead: list[DataFrame] = []
+            for d in uncovered:
+                keys_df = spark.read.parquet(
+                    os.path.join(table_dir, d["path"])) \
+                    .select(*d["cols"]).dropDuplicates()
+                dead.append(remaining.join(
+                    F.broadcast(keys_df), on=list(d["cols"]),
+                    how="left_semi"))
+                remaining = remaining.join(
+                    F.broadcast(keys_df), on=list(d["cols"]),
+                    how="left_anti")
+            f = dead[0]
+            for extra in dead[1:]:
+                f = f.unionByName(extra)
+            f = f.withColumn("_change_type", F.lit("D"))
+        else:
+            f = _read_entries(spark, table_dir, items, m["schema"]) \
+                .withColumn("_change_type", F.lit(kind))
         frames.append(f.withColumn(
             "_commit_version", F.lit(m["version"]).cast("long")))
     if not frames:
@@ -2759,21 +2814,15 @@ def snapshot_compact(spark: SparkSession, table_dir: str,
                 # WITHOUT opening it — possible exactly when the
                 # descriptor recorded its DV-member count (r13 second
                 # half; legacy descriptors open conservatively) and
-                # no equality delete is seq+band-applicable to the
-                # rollup
+                # no equality delete applies to the rollup
                 n_dv = e.get("_seg_n_dv")
                 if n_dv is None or n_dv > 0:
                     return True
-                seq = e.get("_seq", 0)
-                return any(seq < d["seq"] and _eq_desc_may_touch(e, d)
-                           for d in eq)
-            if pred_probe is not None and not pred_probe(e):
+            elif pred_probe is not None and not pred_probe(e):
                 return False
-            if e.get("dv"):
+            elif e.get("dv"):
                 return True
-            seq = e.get("_seq", 0)
-            return any(seq < d["seq"] and _eq_desc_may_touch(e, d)
-                       for d in eq)
+            return bool(_applicable_eq_deletes(e, eq))
 
         dirty, keep_segs, keep_entries = _split_dirty_by_probe(
             table_dir, manifest, probe)
@@ -4243,9 +4292,7 @@ def _eq_deletes_rows(table_dir: str, manifest: dict) -> list[tuple]:
     entries = _manifest_files(table_dir, manifest)
     rows = []
     for d in eq:
-        n_app = sum(1 for e in entries
-                    if e.get("_seq", 0) < d["seq"]
-                    and _eq_desc_may_touch(e, d))
+        n_app = sum(1 for e in entries if _applicable_eq_deletes(e, [d]))
         rows.append((
             d["path"],
             json.dumps(d["cols"]),
@@ -4269,18 +4316,15 @@ def _files_rows(table_dir: str, manifest: dict) -> list[tuple]:
     eq = manifest.get("eq_deletes") or []
     rows = []
     for e in _manifest_files(table_dir, manifest):
-        seq = e.get("_seq", 0)
-        n_eq = sum(1 for d in eq
-                   if seq < d["seq"] and _eq_desc_may_touch(e, d))
         part = e.get("partition")
         stats = e.get("stats")
         rows.append((
             e["path"],
-            seq,
+            e.get("_seq", 0),
             e.get("rows"),
             e.get("bytes"),
             bool(e.get("dv")),
-            n_eq,
+            len(_applicable_eq_deletes(e, eq)),
             json.dumps(part, sort_keys=True) if part is not None
             else None,
             json.dumps(stats, sort_keys=True) if stats else None,
@@ -4484,14 +4528,11 @@ def snapshot_fast_forward(table_dir: str, name: str) -> int:
 
     schema = StructType.fromJson(json.loads(bm["schema"]))
     if append_only:
-        base_paths = {s["path"] for s in chain[0]["segments"]}
-        delta_segs = [s for s in bm["segments"]
-                      if s["path"] not in base_paths]
         return _publish_commit(
             table_dir, mode="append", new_entries=[],
             batch_schema=schema,
             expected_version=head,
-            extra_segments=delta_segs,
+            extra_segments=_added_segments(chain[0], bm),
             eq_deletes=bm.get("eq_deletes") or [],
             constraints=bm.get("constraints"),
             partition_spec=bm.get("partition_spec"),
@@ -4568,11 +4609,10 @@ def snapshot_cherry_pick(spark: SparkSession, table_dir: str,
                 f"metadata ({field}) since the fork — a cherry-pick "
                 "carries data only; use snapshot_fast_forward from an "
                 "unmoved fork point")
-    base_paths = {s["path"] for s in fork_m["segments"]}
     # strip the branch-chain seq stamps: the publish loop re-stamps
     # them with ITS winning sequence number per attempt
     delta_segs = [{k: v for k, v in s.items() if k != "seq"}
-                  for s in bm["segments"] if s["path"] not in base_paths]
+                  for s in _added_segments(fork_m, bm)]
     if not delta_segs:
         return head
     delta_entries = [e for s in delta_segs

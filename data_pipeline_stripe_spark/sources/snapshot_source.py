@@ -5,11 +5,17 @@ The sink side of the loop is proven by the epoch-keyed idempotent
 commit (stream_snapshot_sink_parity); this module closes the loop: a
 downstream job subscribes to a snapshot table and receives each new
 APPEND as a micro-batch — the Delta-source pattern where the streaming
-offset IS the table version. The driver side only walks manifests
-(version → file-entry set difference, the same O(delta) chain walk as
-``snapshot_read_incremental``); every data file becomes one
-``InputPartition`` whose rows are read INSIDE an executor task as
-Arrow record batches (no driver data path, no per-row Python cost).
+offset IS the table version. This module plans nothing of its own: the
+driver side takes its file lists from the read plans of
+``operators/snapshots.py`` — the append-only range walk
+``snapshot_read_incremental`` uses (``_appended_entries``), the live-file
+plan of ``snapshot_scan`` (``_pruned_entries``, with the equality-delete
+scope ``_applicable_eq_deletes``) for the initial load and the batch
+reader, and the change-feed classifier of ``snapshot_read_cdf``
+(``_change_units``) — so a stream serves exactly the batch result over
+the same range. Every data file becomes one ``InputPartition`` whose
+rows are read INSIDE an executor task as Arrow record batches (no
+driver data path, no per-row Python cost).
 
 Offsets are ``{"version": N}`` with -1 meaning "nothing consumed yet"
 (the first batch serves the whole current version — Delta's
@@ -142,170 +148,83 @@ class SnapshotFileSlice(InputPartition):
 
 def _delta_entries(table_dir: str, start_v: int, end_v: int,
                    skip_change_commits: bool = False) -> list[dict]:
-    """File entries ADDED in (start_v, end_v] — ``start_v == -1`` means
-    the full file set of ``end_v`` (initial load, no history walk).
-    Append-only classification over the SHARED chain walk
-    (``_manifest_chain`` — one place owns the expired/ancestor
-    contract); raises ValueError on an overwrite/rewrite in range (the
-    caller must restart from a full re-read) UNLESS
+    """File entries ADDED in ``(start_v, end_v]`` — the plain stream's
+    append-only range walk, shared with ``snapshot_read_incremental``
+    (``_appended_entries``): raises ValueError on an overwrite/rewrite
+    in range (the caller must restart from a full re-read) UNLESS
     ``skip_change_commits`` (Delta's ``skipChangeCommits``): then
     rewrite commits contribute NOTHING — only appends' deltas are
     served, so the stream survives merges/compactions/backfills at the
     documented cost that updated/deleted rows are never re-served
     (the CDF source is the exact form)."""
-    from ..operators.snapshots import (_manifest_chain, _manifest_files,
-                                       _read_manifest_meta,
-                                       _segment_entries)
+    from ..operators.snapshots import _appended_entries
 
-    if start_v < 0:
-        try:
-            m = _read_manifest_meta(table_dir, end_v)
-            entries = _manifest_files(table_dir, m)
-        except FileNotFoundError as exc:
-            raise ValueError(
-                f"snapshot stream source: version {end_v} of {table_dir} "
-                "is expired — widen snapshot_expire retention past the "
-                "consumer's checkpoint lag") from exc
-        # the initial load serves the LIVE state: active equality
-        # deletes apply (seq- and key-band-scoped per entry, exactly
-        # _read_entries' rule) — without this the first batch served
-        # rows the table had already deleted. In-range append deltas
-        # below never need this: an eq-delete in range is a rewrite
-        # (the plain source raises or, under skipChangeCommits,
-        # documents that already-served rows are not retracted), and
-        # files appended after it are newer than its seq.
-        from ..operators.snapshots import _eq_desc_may_touch
+    return _appended_entries(
+        table_dir, start_v, end_v, "snapshot stream source",
+        "restart the stream from a fresh checkpoint (full re-read), or "
+        "pass option('skipChangeCommits', 'true') to serve appends only",
+        skip_change_commits)[0]
 
-        for e in entries:
-            eq = [(d["path"], list(d["cols"]))
-                  for d in (m.get("eq_deletes") or [])
-                  if e.get("_seq", 0) < d["seq"]
-                  and _eq_desc_may_touch(e, d)]
-            if eq:
-                e["_eq"] = eq
-        return entries
-    chain = _manifest_chain(table_dir, start_v, end_v,
-                            "snapshot stream source")
-    entries: list[dict] = []
-    for parent_m, m in zip(chain, chain[1:]):
-        if m["mode"] != "append":
-            if skip_change_commits:
-                continue
-            raise ValueError(
-                f"snapshot stream source: version {m['version']} of "
-                f"{table_dir} is a {m['mode']} — the offset range has "
-                "no append-only delta; restart the stream from a fresh "
-                "checkpoint (full re-read), or pass "
-                "option('skipChangeCommits', 'true') to serve appends "
-                "only")
-        # appends reuse parent segments by reference: the delta is the
-        # NEW segments' entries — O(delta) metadata per step (r12)
-        base = {s["path"] for s in parent_m["segments"]}
-        for seg in m["segments"]:
-            if seg["path"] not in base:
-                entries.extend(_segment_entries(table_dir, seg))
-    return entries
+
+def _file_slices(table_dir: str, entries: list[dict], columns: list[str],
+                 schema_json: str, eq: list[dict]
+                 ) -> list[SnapshotFileSlice]:
+    """One executor-side slice per live file entry, carrying its
+    deletion vector and the descriptors of ``eq`` that apply to it
+    (``_applicable_eq_deletes``) — the one entry → slice constructor of
+    the batch reader and the plain stream. An empty plan is one empty
+    slice."""
+    from ..operators.snapshots import _applicable_eq_deletes
+
+    if not entries:
+        return [SnapshotFileSlice(None, columns)]
+    join = os.path.join
+    return [
+        SnapshotFileSlice(
+            join(table_dir, e["path"]), columns, schema_json=schema_json,
+            dv_abs=(join(table_dir, e["dv"]["path"]) if e.get("dv")
+                    else None),
+            rel_path=e["path"],
+            eq_abs=[(join(table_dir, d["path"]), tuple(d["cols"]))
+                    for d in _applicable_eq_deletes(e, eq)] or None)
+        for e in entries
+    ]
 
 
 def _cdf_slices(table_dir: str, start_v: int, end_v: int) -> list[tuple]:
     """(rel_path, kind, version, dv_rel, prior_eq, dead_eq) change
     slices for the feed over ``(start_v, end_v]`` — ``start_v == -1``
-    includes version 0's initial commit as 'I' rows. Appends
-    contribute their delta data files (kind 'data'); rewrites
-    contribute their recorded change-log files (kind 'log' — empty log
-    = compaction = nothing); an EQUALITY-DELETE commit
-    (``snapshot_delete_keys`` — O(keys) metadata, NO recorded log by
-    design) contributes its parent's live data files as kind 'eqdead'
-    slices whose executors compute the D rows lazily (read the file,
-    drop rows a DV or an older descriptor already deleted, KEEP the
-    rows the commit's new key sidecars match) — the same lazy
-    semantics as the batch CDF (``snapshot_read_cdf``), distributed
-    per-file instead of refusing the range (r13); a MERGE-ON-READ
-    UPSERT (``snapshot_upsert_keys`` — descriptor + new files in one
-    commit) contributes its delta files as kind 'upsert' ('U' rows,
-    no band scan). Only a rewrite with NO recorded log and no new
-    descriptors (plain overwrite) still raises, Delta's own CDF
-    rule."""
-    from ..operators.snapshots import _manifest_chain, _segment_entries
+    includes version 0's initial commit as 'I' rows. Renders the batch
+    CDF's own classification (``_change_units``) per file: 'I' units
+    as kind 'data', 'U' units as kind 'upsert', recorded change logs
+    as kind 'log' (empty log = compaction = nothing), and every 'D'
+    candidate — a parent file an equality delete's key band may touch
+    — as kind 'eqdead', whose executor computes the D rows lazily: read
+    the file, drop rows its DV or a prior descriptor already deleted,
+    KEEP the rows the commit's new key sidecars match. A rewrite with
+    no recorded log and no new descriptors (plain overwrite) raises,
+    Delta's own CDF rule."""
+    from ..operators.snapshots import _change_units, _manifest_chain
 
-    chain = _manifest_chain(table_dir, start_v, end_v,
-                            "snapshot CDF source")
-    # pair each in-range manifest with its parent (the range anchor /
-    # root has none): appends need the parent segment set for their
-    # delta
-    nodes = (list(zip([None] + chain[:-1], chain)) if start_v < 0
-             else list(zip(chain, chain[1:])))
+    def refs(ds: list[dict]) -> list[tuple]:
+        return [(d["path"], list(d["cols"])) for d in ds]
+
+    context = "snapshot CDF source"
+    chain = _manifest_chain(table_dir, start_v, end_v, context)
     slices: list[tuple] = []
-    for parent_m, m in nodes:
+    for kind, m, items in _change_units(table_dir, chain, context,
+                                        with_root=start_v < 0):
         v = m["version"]
-        if m["mode"] == "append":
-            base = ({s["path"] for s in parent_m["segments"]}
-                    if parent_m is not None else set())
+        if kind == "D":
             slices.extend(
-                (e["path"], "data", v, None, None, None)
-                for seg in m["segments"] if seg["path"] not in base
-                for e in _segment_entries(table_dir, seg))
+                (e["path"], "eqdead", v,
+                 e["dv"]["path"] if e.get("dv") else None,
+                 refs(prior) or None, refs(dead))
+                for e, prior, dead in items[2])
         else:
-            entries = m.get("changes")
-            if entries is None:
-                new_eq = [d for d in (m.get("eq_deletes") or [])
-                          if d not in ((parent_m or {})
-                                       .get("eq_deletes") or [])]
-                if new_eq and parent_m is not None:
-                    # MERGE-ON-READ commit (snapshots._mor_commit, the
-                    # one commit path of snapshot_upsert_keys /
-                    # snapshot_apply_cdc_mor / snapshot_delete_keys):
-                    # the delta files serve as 'U' rows — their keys
-                    # are COVERED by their descriptor, no band scan
-                    parent_segs = {s["path"]
-                                   for s in parent_m["segments"]}
-                    slices.extend(
-                        (e["path"], "upsert", v, None, None, None)
-                        for s in m["segments"]
-                        if s["path"] not in parent_segs
-                        for e in _segment_entries(table_dir, s))
-                    # UNCOVERED descriptors (pure deletes): the D rows
-                    # are the PARENT's live rows matching their key
-                    # sidecars: per parent file, drop what a DV / an
-                    # OLDER descriptor (seq-scoped, exactly
-                    # _read_entries' rule) already deleted, keep the
-                    # uncovered-descriptor matches. Every parent
-                    # segment precedes the delete, so those
-                    # descriptors' seq scope is vacuous (batch CDF's
-                    # own note). Key-band pruning: a file no uncovered
-                    # descriptor can touch contributes no D rows and
-                    # gets NO slice — the D scan covers the band, not
-                    # the table.
-                    from ..operators.snapshots import _eq_desc_may_touch
-
-                    uncov = [d for d in new_eq if not d.get("covered")]
-                    prior = parent_m.get("eq_deletes") or []
-                    for seg in parent_m["segments"] if uncov else ():
-                        seq = seg.get("seq", 0)
-                        for e in _segment_entries(table_dir, seg):
-                            dead_eq = [(d["path"], list(d["cols"]))
-                                       for d in uncov
-                                       if _eq_desc_may_touch(e, d)]
-                            if not dead_eq:
-                                continue
-                            prior_eq = [(d["path"], list(d["cols"]))
-                                        for d in prior
-                                        if seq < d["seq"]
-                                        and _eq_desc_may_touch(e, d)] \
-                                or None
-                            slices.append(
-                                (e["path"], "eqdead", v,
-                                 (e["dv"]["path"] if e.get("dv")
-                                  else None),
-                                 prior_eq, dead_eq))
-                    continue
-                raise ValueError(
-                    f"snapshot CDF source: version {v} of {table_dir} "
-                    f"is a {m['mode']} with no recorded change log — "
-                    "its delta is not expressible; restart the "
-                    "consumer from a full re-read")
-            slices.extend((e["path"], "log", v, None, None, None)
-                          for e in entries)
+            slice_kind = {"I": "data", "U": "upsert", "log": "log"}[kind]
+            slices.extend((e["path"], slice_kind, v, None, None, None)
+                          for e in items)
     return slices
 
 
@@ -332,8 +251,8 @@ def _version_delta_size(table_dir: str, v: int,
 
 
 def _version_delta_count(table_dir: str, v: int, cdf: bool) -> int:
-    """File count of ``_version_delta_size`` (kept as the simple unit
-    the tests and the default budget use)."""
+    """File count of ``_version_delta_size`` — the admission unit
+    ``maxFilesPerTrigger`` counts, as one number for tests."""
     return _version_delta_size(table_dir, v, cdf)[0]
 
 
@@ -459,15 +378,13 @@ def _read_slice(partition: SnapshotFileSlice):
     accounting, which the DV step owns)."""
     if partition.abs_path is None:
         return
-    import pyarrow.parquet as pq
-
     gen = _read_slice_raw(partition)
     positions = _dv_positions(partition)
     if positions is not None and len(positions):
         gen = _apply_dv(gen, positions)
-    if getattr(partition, "eq_abs", None):
+    if partition.eq_abs:
         gen = _apply_eq(gen, partition.eq_abs)
-    if getattr(partition, "eq_dead_abs", None):
+    if partition.eq_dead_abs:
         # kind 'eqdead' (CDF over an equality-delete commit): after
         # dropping everything already dead, what REMAINS AND MATCHES
         # the commit's new key sidecars is exactly its D rows
@@ -476,17 +393,6 @@ def _read_slice(partition: SnapshotFileSlice):
 
 
 def _read_slice_raw(partition: SnapshotFileSlice):
-    import pyarrow.parquet as pq
-
-    if partition.schema_json is None:
-        # legacy slice shape (no declared schema carried) — exact-
-        # generation files only
-        pf = pq.ParquetFile(partition.abs_path)
-        for batch in pf.iter_batches(columns=partition.columns):
-            # select() pins the declared column ORDER — parquet files
-            # may store columns in a different physical order
-            yield batch.select(partition.columns)
-        return
     # Aligned read — build Arrow batches in the declared schema
     # exactly: NULL-filled columns the file predates (schema evolution
     # inside the range — previously a permanent stream failure on the
@@ -498,6 +404,7 @@ def _read_slice_raw(partition: SnapshotFileSlice):
     # data (NULL where the file predates it) — ADVICE r10.
     import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
@@ -739,25 +646,32 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
                                  if dead_eq else None))
                 for (rel, kind, v, dv_rel, prior_eq, dead_eq) in slices
             ]
-        entries = _delta_entries(self.table_dir, s, e,
-                                 self.skip_change_commits)
-        if not entries:
-            return [SnapshotFileSlice(None, self.columns)]
-        return [
-            SnapshotFileSlice(
-                os.path.join(self.table_dir, en["path"]),
-                self.columns, schema_json=self.schema_json,
-                # only the initial head load can see DV-carrying or
-                # eq-delete-scoped entries (append deltas are fresh
-                # files); the live state must serve post-delete rows
-                dv_abs=(os.path.join(self.table_dir, en["dv"]["path"])
-                        if en.get("dv") else None),
-                rel_path=en["path"],
-                eq_abs=([(os.path.join(self.table_dir, p), tuple(c))
-                         for p, c in en["_eq"]]
-                        if en.get("_eq") else None))
-            for en in entries
-        ]
+        if s >= 0:
+            entries = _delta_entries(self.table_dir, s, e,
+                                     self.skip_change_commits)
+            # an equality delete in range is a rewrite (refused, or
+            # skipped under skipChangeCommits), and every appended file
+            # is newer than the deletes before it: none applies
+            eq: list[dict] = []
+        else:
+            # the initial load serves the LIVE state of ``e`` through
+            # the batch reader's plan: DVs and active equality deletes
+            # apply
+            from ..operators.snapshots import (_pruned_entries,
+                                               _read_manifest_meta)
+
+            try:
+                m = _read_manifest_meta(self.table_dir, e)
+                entries, _ = _pruned_entries(self.table_dir, m, [])
+            except FileNotFoundError as exc:
+                raise ValueError(
+                    f"snapshot stream source: version {e} of "
+                    f"{self.table_dir} is expired — widen "
+                    "snapshot_expire retention past the consumer's "
+                    "checkpoint lag") from exc
+            eq = m.get("eq_deletes") or []
+        return _file_slices(self.table_dir, entries, self.columns,
+                            self.schema_json, eq)
 
     def read(self, partition: SnapshotFileSlice):
         return _read_slice(partition)
@@ -847,51 +761,17 @@ class SnapshotTableBatchReader(DataSourceReader):
         self.pushed_terms: list[tuple] = []
 
     def partitions(self):
-        from ..operators.snapshots import (_derived_partition_terms,
-                                           _entry_may_match,
-                                           _segment_entries,
-                                           _segment_pseudo_entry)
+        from ..operators.snapshots import _pruned_entries
 
-        # hidden partitioning (r12): SQL predicates on SOURCE columns
-        # imply partition-field terms — pure-SQL reads of a
-        # bucket/day-partitioned table prune without ever naming the
-        # hidden field (every pushed filter still re-evaluates in
-        # Spark, so derivation can only remove unmatchable files)
-        from ..operators.snapshots import _eq_desc_may_touch
-
-        probes = self.pushed_terms + _derived_partition_terms(
-            self.manifest.get("partition_spec"), self.pushed_terms)
-        eq = self.manifest.get("eq_deletes") or []
-        entries = []
-        for seg in self.manifest["segments"]:
-            pseudo = _segment_pseudo_entry(seg)
-            if not all(_entry_may_match(pseudo, t) for t in probes):
-                continue  # whole segment provably unmatchable
-            seq = seg.get("seq", 0)
-            # equality deletes scoped by data age (r13) AND key band
-            # (r13 second half): only deletes NEWER than this
-            # segment's data, whose recorded key min/max may intersect
-            # the file's stats, anti-filter its rows
-            for e in _segment_entries(self.table_dir, seg):
-                if not all(_entry_may_match(e, t) for t in probes):
-                    continue
-                eq_abs = [(os.path.join(self.table_dir, d["path"]),
-                           tuple(d["cols"]))
-                          for d in eq
-                          if seq < d["seq"]
-                          and _eq_desc_may_touch(e, d)] or None
-                entries.append((e, eq_abs))
-        if not entries:
-            return [SnapshotFileSlice(None, self.columns)]
-        return [
-            SnapshotFileSlice(
-                os.path.join(self.table_dir, e["path"]),
-                self.columns, schema_json=self.schema_json,
-                dv_abs=(os.path.join(self.table_dir, e["dv"]["path"])
-                        if e.get("dv") else None),
-                rel_path=e["path"], eq_abs=eq_abs)
-            for e, eq_abs in entries
-        ]
+        # the live-file plan of snapshot_scan: two-level pruning on the
+        # pushed terms plus the partition-field terms they imply
+        # (hidden partitioning — every pushed filter still re-evaluates
+        # in Spark, so pruning only removes unmatchable files)
+        entries, _ = _pruned_entries(self.table_dir, self.manifest,
+                                     self.pushed_terms)
+        return _file_slices(self.table_dir, entries, self.columns,
+                            self.schema_json,
+                            self.manifest.get("eq_deletes") or [])
 
     def read(self, partition: SnapshotFileSlice):
         return _read_slice(partition)
@@ -1058,15 +938,15 @@ class SnapshotTableDataSource(DataSource):
         fields = [StructField(f.name, f.dataType, True)
                   for f in committed.fields]
         if str(self.options.get("cdf", "false")).lower() == "true":
-            reserved = {"_change_type", "_commit_version"}
-            taken = {f.name.casefold() for f in committed.fields}
-            if taken & reserved:
+            from ..operators.snapshots import _CDF_COLS, _cdf_cols_taken
+
+            if _cdf_cols_taken([f.name for f in committed.fields]):
                 # same rule as snapshot_read_cdf: a real column under a
                 # reserved name would be served AS the change labels —
                 # silent replica corruption, so refuse up front
                 raise ValueError(
                     "snapshot CDF source: the table schema uses a "
-                    f"reserved CDF column name ({sorted(reserved)}) — "
+                    f"reserved CDF column name ({sorted(_CDF_COLS)}) — "
                     "rename it to stream the feed")
             fields += [StructField("_change_type", StringType(), True),
                        StructField("_commit_version", LongType(), True)]

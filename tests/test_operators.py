@@ -2084,6 +2084,15 @@ def test_snapshot_stats_pruning_and_incremental_read(spark, tmp_path):
                     mode="append")
     post = snapshot_read_incremental(spark, t, 3)
     assert sorted(r.id for r in post.collect()) == list(range(300, 310))
+    # any other non-append in range is refused under its real mode: a
+    # compaction (v5) is a rewrite, not an overwrite
+    from data_pipeline_stripe_spark.operators.snapshots import (
+        snapshot_compact)
+
+    assert snapshot_compact(spark, t, target_files=1)[0] == 5
+    with pytest.raises(ValueError, match=r"version 5 of .* is a rewrite "
+                       "— the range has no append-only delta"):
+        snapshot_read_incremental(spark, t, 4)
     # a range touching an EXPIRED version raises the API's contract
     # error, not a raw FileNotFoundError (r9 review fix)
     from data_pipeline_stripe_spark.operators.snapshots import (

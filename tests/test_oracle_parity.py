@@ -5,6 +5,7 @@ sf0.01). Approximate operators (no oracle) get a rows-only sanity check."""
 import duckdb
 import pytest
 
+from tests.test_plans import NONEQUI_OK, PYTHON_OK
 from tools.oracle_check import TABLES, table_hash
 
 import __spark_entry__ as entry_mod
@@ -192,6 +193,15 @@ def test_no_compared_float_sum_in_oracles():
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
     sdf = QUERIES[name](spark, sf_dir)
+    # the 100 TB smell test, on the frame this test builds anyway: no
+    # CartesianProduct ever, no nested-loop join and no Python
+    # evaluation outside the declared allow-lists (tests/test_plans.py)
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert name in NONEQUI_OK or "BroadcastNestedLoopJoin" not in plan
+    assert name in PYTHON_OK or not any(
+        node in plan
+        for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"))
     srows = [tuple(r) for r in sdf.collect()]
     if name not in ORACLES:
         assert len(srows) >= 0  # rows-only check (approximate operator)

@@ -1728,12 +1728,14 @@ def test_equality_delete_key_band_pruning(spark, tmp_path):
     footer stats cannot intersect the band are PROVABLY untouched, so
     (a) the streaming CDF's eqdead slices cover only the band's files,
     (b) the batch DataSource attaches the sidecar only to in-band
-    slices, and (c) reads stay correct either way."""
+    slices, (c) reads stay correct either way, and (d) the metadata
+    views and the delete-debt compaction scope the delete to the same
+    one file as the read path."""
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
     from data_pipeline_stripe_spark.sources.snapshot_source import (
-        SnapshotTableBatchReader, _cdf_slices)
+        SnapshotTableBatchReader, _cdf_slices, register_snapshot_source)
 
     t = str(tmp_path / "eqband")
     df = spark.range(40).select(F.col("id").alias("k"))
@@ -1757,6 +1759,23 @@ def test_equality_delete_key_band_pruning(spark, tmp_path):
     without = [p for p in parts if not p.eq_abs]
     assert len(with_eq) == 1 and len(without) == 1
     # (c) reads are exact
+    assert sorted(r.k for r in S.snapshot_read(spark, t).collect()) \
+        == sorted(set(range(40)) - {3, 7})
+    # (d) the files / eq_deletes views and compact(only_with_deletes)
+    # see the in-band file, and only it
+    register_snapshot_source(spark)
+    in_band, out_band = with_eq[0].rel_path, without[0].rel_path
+
+    def view(kind):
+        return (spark.read.format("snapshot_table")
+                .option("metadata", kind).load(t).collect())
+
+    assert {r["path"]: r["n_eq_deletes_applicable"]
+            for r in view("files")} == {in_band: 1, out_band: 0}
+    assert [r["n_files_applicable"] for r in view("eq_deletes")] == [1]
+    v_c, _, _ = S.snapshot_compact(spark, t, only_with_deletes=True)
+    kept = {e["path"] for e in S._read_manifest(t, v_c)["files"]}
+    assert {in_band, out_band} - kept == {in_band}
     assert sorted(r.k for r in S.snapshot_read(spark, t).collect()) \
         == sorted(set(range(40)) - {3, 7})
 
