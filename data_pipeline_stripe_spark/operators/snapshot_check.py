@@ -1,0 +1,140 @@
+"""Change-feed checks for snapshot tables (operators/snapshots.py): the
+three laws a gate, a test or an interleaving harness asserts after a
+run of commits, each written once.
+
+- ``check_replay``: applying the change feed over ``(from, to]`` to the
+  ``from`` state reproduces the ``to`` state. A stream's sink output
+  is checked the same way, after it is shown equal to the batch feed
+  over the same range (Structured Streaming, SIGMOD'18: a stream's
+  output equals the batch query over the same prefix).
+- ``check_feed``: the feed over a range holds exactly the expected
+  number of rows per change type.
+- ``check_carried``: a copy-on-write rewrite carried exactly ``n`` base
+  file entries forward unchanged and dropped every other base file —
+  the rewrite stayed inside its band (the Iceberg spec's rule that an
+  unchanged data file keeps its manifest entry).
+
+Each check raises ``RuntimeError`` naming the caller's ``context``.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..sources.readers import empty_frame
+from .merge import apply_cdc
+from .snapshots import (_read_manifest, snapshot_current_version,
+                        snapshot_read, snapshot_read_cdf)
+
+
+def frames_differ(a: DataFrame, b: DataFrame) -> bool:
+    """Multiset inequality of two frames in ONE Spark job: the union of
+    both ``exceptAll`` directions under one ``isEmpty()``, which
+    short-circuits on the first differing row (two ``count()`` calls
+    would pay two job launches for the same answer)."""
+    return not a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty()
+
+
+def feed_changes(feed: DataFrame) -> DataFrame:
+    """A change feed as an ``apply_cdc`` change batch with
+    ``seq="_commit_version"`` and ``op="_change_type"``: I and U rows
+    upsert, D rows delete."""
+    return feed.withColumn(
+        "_change_type",
+        F.when(F.col("_change_type") == "D", F.lit("D"))
+        .otherwise(F.lit("U")))
+
+
+def _batch_feed(spark: SparkSession, table_dir: str, from_version: int,
+                to_version: int) -> DataFrame:
+    """The batch feed over ``(from_version, to_version]``. At -1, the
+    CDF stream's default start, the stream's initial load serves
+    version 0's rows as 'I' before the feed from version 0
+    (sources/snapshot_source.py); ``snapshot_read_cdf`` always excludes
+    its anchor version, so those rows are read here."""
+    if from_version >= 0:
+        return snapshot_read_cdf(spark, table_dir, from_version,
+                                 to_version)
+    root = (snapshot_read(spark, table_dir, version=0)
+            .withColumn("_change_type", F.lit("I"))
+            .withColumn("_commit_version", F.lit(0).cast("long")))
+    return root.unionByName(
+        snapshot_read_cdf(spark, table_dir, 0, to_version),
+        allowMissingColumns=True)
+
+
+def check_replay(spark: SparkSession, table_dir: str, key,
+                 from_version: int, to_version: int | None = None, *,
+                 feed: DataFrame | None = None,
+                 context: str) -> DataFrame:
+    """Replay the change feed over ``(from_version, to_version]``
+    (default: the head) onto the ``from_version`` state and raise unless
+    the result equals ``snapshot_read(to_version)`` as a multiset.
+    ``key`` may be composite. ``feed`` is a stream's sink output over
+    that range; it must first equal the batch feed over the same range.
+    ``from_version`` -1 is the stream's default start: the base is then
+    empty, with the head's schema. Returns the replayed rows (table
+    columns), so a gate can hash them."""
+    to_v = (snapshot_current_version(table_dir) if to_version is None
+            else to_version)
+    batch = _batch_feed(spark, table_dir, from_version, to_v)
+    if feed is None:
+        feed = batch
+    elif frames_differ(feed, batch.select(*feed.columns)):
+        raise RuntimeError(
+            f"{context}: the streamed change feed over ({from_version}, "
+            f"{to_v}] differs from the batch feed over the same range")
+    head = snapshot_read(spark, table_dir, version=to_v)
+    base = (empty_frame(spark, head.schema) if from_version < 0
+            else snapshot_read(spark, table_dir, version=from_version))
+    replayed = apply_cdc(base, feed_changes(feed), key,
+                         seq="_commit_version",
+                         op="_change_type").drop("cdc_action")
+    if frames_differ(replayed, head):
+        raise RuntimeError(
+            f"{context}: replaying the change feed over ({from_version}, "
+            f"{to_v}] does not reproduce version {to_v}")
+    return replayed
+
+
+def check_feed(spark: SparkSession, table_dir: str, from_version: int,
+               to_version: int, expect: dict, *,
+               context: str) -> DataFrame:
+    """Raise unless the feed over ``(from_version, to_version]`` holds
+    exactly ``expect`` rows per change type (``{"D": n}``; a type not
+    named means 0). The count is one Spark job: the feed is coalesced
+    into one partition, so the grouping needs no shuffle. Building the
+    feed may add its own (a change log's schema read, an equality
+    delete's broadcast keys). Returns the feed."""
+    feed = snapshot_read_cdf(spark, table_dir, from_version, to_version)
+    got = {r["_change_type"]: r["count"] for r in
+           feed.coalesce(1).groupBy("_change_type").count().collect()}
+    want = {t: n for t, n in expect.items() if n}
+    if got != want:
+        raise RuntimeError(
+            f"{context}: the change feed over ({from_version}, "
+            f"{to_version}] has {got} rows per change type, expected "
+            f"{want}")
+    return feed
+
+
+def check_carried(table_dir: str, base_version: int, version: int,
+                  n: int, *, context: str) -> None:
+    """Raise unless exactly ``n`` of ``base_version``'s file entries
+    reach ``version`` unchanged (same path, same stats, no new deletion
+    vector) and every other base file is gone. A manifest diff: no
+    Spark job."""
+    pre = {e["path"]: e
+           for e in _read_manifest(table_dir, base_version)["files"]}
+    post = {e["path"]: e
+            for e in _read_manifest(table_dir, version)["files"]}
+    kept = [p for p in pre if p in post]
+    unchanged = [p for p in kept if post[p] == pre[p]]
+    if len(unchanged) != n or len(kept) != n:
+        raise RuntimeError(
+            f"{context}: expected exactly {n} of the {len(pre)} files of "
+            f"version {base_version} carried into version {version} "
+            f"unchanged and the rest rewritten, got {len(unchanged)} "
+            f"unchanged and {len(kept) - len(unchanged)} changed of "
+            f"{len(kept)} kept")

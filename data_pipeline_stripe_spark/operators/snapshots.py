@@ -2662,10 +2662,10 @@ def snapshot_read_cdf(spark: SparkSession, table_dir: str,
 
     Applying the feed over the ``from_version`` state with
     ``apply_cdc`` (seq = ``_commit_version``, I/U → upserts, D →
-    deletes) reproduces the ``to_version`` state exactly — the gated
-    ``snapshot_cdf_read_parity`` replays it. Deleted rows carry their
-    pre-delete values; updates are logged only when a value actually
-    changed (``snapshot_diff`` semantics)."""
+    deletes) reproduces the ``to_version`` state exactly —
+    ``operators/snapshot_check.py:check_replay`` asserts it. Deleted
+    rows carry their pre-delete values; updates are logged only when a
+    value actually changed (``snapshot_diff`` semantics)."""
     from pyspark.sql import functions as F
 
     to_v = (snapshot_current_version(table_dir)

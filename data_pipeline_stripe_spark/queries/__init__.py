@@ -59,86 +59,58 @@ from . import maintenance  # noqa: E402,F401
 _WINDOW = 50
 
 PRIORITY_THIS_ROUND = [
-    # round 13 pins. Pinned here = code changed THIS round (rule 1).
-    #
-    # r13 NEW surfaces (VERDICT r12's ranked agenda + ADVICE r12):
-    # 2. equality deletes: O(keys) commits (zero data files opened),
-    #    sequence-number scoping, lazy CDF, OPTIMIZE materializes
-    "snapshot_equality_delete_parity",
-    # 1. metadata-conflict detection: constraints landing mid-commit
-    #    re-validate or abort; rewrites rebase through metadata-only
-    #    commits (constraint add/drop, manifest re-chunks)
-    "snapshot_metadata_conflict_parity",
-    # 5. write-audit-publish: branches over symlinked shared storage,
-    #    fast-forward publish, tags as retention pins
-    "snapshot_wap_parity",
-    # 3. streaming IVF index maintenance: epoch-keyed assignment
-    #    appends + drift-triggered one-step retrain + probe leg
-    "stream_ivf_index_maintenance_parity",
-    # ADVICE r12 (high): deletion vectors on PARTITIONED layouts
-    #    (marker-based path extraction), partition-field IN, and
-    #    spec-preserving OPTIMIZE — composed in one lifecycle
-    "snapshot_partitioned_delete_parity",
-    # r13 second half: the streaming CDF source rides equality-delete
-    #    commits (executor-side 'eqdead' Arrow slices compute the lazy
-    #    D rows — the seal's one refused shape), seq becomes the
-    #    last_seq table counter (branch-delete soundness), cherry-pick
-    "stream_cdf_equality_delete_parity",
-    # r13 second half: history/files METADATA tables through pure SQL
-    #    (band-scoped delete applicability visible per file)
-    "snapshot_metadata_tables_parity",
-    # r13 second half: merge-on-read upserts (one commit = new rows +
-    #    eq-delete descriptor for their keys; O(new), zero band reads;
-    #    CDF serves the delta as U)
-    "snapshot_upsert_keys_parity",
-    # r13 second half: the full I/U/D CDC loop composed merge-on-read
-    #    (CDF stream -> foreachBatch snapshot_apply_cdc_mor, every
-    #    applied batch O(batch) with zero replica band reads)
-    "stream_snapshot_replication_mor_parity",
-    # 4. mixed-generation partition scans (new gate leg) + numeric
-    #    segment bands (bucket fields vote at segment level)
-    "snapshot_partition_spec_parity",
-    #
-    # r13 REFACTORED code paths re-gating (rule 1): the publish loop
-    # gained sequence stamping + eq-delete resolution + constraint
-    # re-validation; _read_entries gained eq-delete grouping; expire
-    # gained tag pins / branch references / eqdel GC;
-    # snapshot_current_version answers from the _latest hint; the
-    # batch DataSource slices carry eq sidecars; compact re-derives
-    # partition tuples; compact_manifests consolidates DVs — the
-    # whole snapshot/stream family's substrate changed again
-    "snapshot_manifest_scale_parity",
-    "snapshot_deletion_vector_parity",
-    "snapshot_conflict_rebase_parity",
-    "snapshot_check_constraint_parity",
-    "snapshot_sql_surface_parity",
-    "stream_lsh_index_maintenance_parity",
-    "stream_snapshot_source_ratelimited_parity",
-    "stream_snapshot_cdf_source_parity",
-    "stream_snapshot_source_parity",
-    "stream_snapshot_source_skip_changes_parity",
-    "stream_snapshot_sink_parity",
-    "stream_snapshot_replication_parity",
-    "snapshot_replace_where_parity",
-    "snapshot_merge_composite_key_parity",
-    "snapshot_merge_upsert_parity",
-    "snapshot_partial_merge_parity",
-    "snapshot_merge_delete_unmatched_parity",
-    "snapshot_merge_update_unmatched_parity",
-    "snapshot_cdf_read_parity",
+    # Group 1: queries whose code changed after their last window (rule
+    # 1) — the report and curation queries, and the snapshot gates whose
+    # verbs or read plans were rewritten (trickle CDC verbs; copy-on-write
+    # verbs and the publish loop; the read plan shared by scans,
+    # incremental reads, the CDF and the stream source). Gates that also
+    # belong to group 2 are listed there.
+    "quality_gate_orders_report",
+    "doc_mixture_resample",
+    "graph_bfs_3hop",
+    "feature_snapshot_user_weekly",
+    "top10_event_types_daily",
+    "platform_usage_monthly",
+    "royalties_monthly_usd",
+    "royalties_monthly_usd_bucketed",
+    "pydatasource_rates_by_code",
     "snapshot_compact_parity",
     "snapshot_clustered_compact_parity",
+    "snapshot_manifest_scale_parity",
+    "snapshot_sql_surface_parity",
     "snapshot_stats_pruned_read",
     "snapshot_null_in_pruned_read",
     "snapshot_clustered_write_parity",
-    "snapshot_expire_retention_parity",
-    "snapshot_time_travel_roundtrip",
-    "snapshot_concurrent_commit_parity",
     "snapshot_incremental_read_parity",
-    "snapshot_schema_evolution_parity",
-    "snapshot_as_of_read_parity",
+    "stream_snapshot_source_parity",
+    "stream_snapshot_source_ratelimited_parity",
+    "stream_snapshot_source_skip_changes_parity",
+    #
+    # Group 2: every gate whose checks moved onto the change-feed checker
+    # (operators/snapshot_check.py) or onto the shared orders fixture.
+    "snapshot_merge_upsert_parity",
+    "snapshot_partial_merge_parity",
+    "snapshot_cdf_read_parity",
+    "snapshot_merge_delete_unmatched_parity",
     "snapshot_history_parity",
     "snapshot_restore_parity",
+    "snapshot_merge_update_unmatched_parity",
+    "snapshot_replace_where_parity",
+    "snapshot_merge_composite_key_parity",
+    "snapshot_deletion_vector_parity",
+    "snapshot_conflict_rebase_parity",
+    "snapshot_partition_spec_parity",
+    "snapshot_check_constraint_parity",
+    "snapshot_partitioned_delete_parity",
+    "snapshot_metadata_conflict_parity",
+    "snapshot_equality_delete_parity",
+    "snapshot_wap_parity",
+    "snapshot_metadata_tables_parity",
+    "snapshot_upsert_keys_parity",
+    "stream_snapshot_cdf_source_parity",
+    "stream_cdf_equality_delete_parity",
+    "stream_snapshot_replication_parity",
+    "stream_snapshot_replication_mor_parity",
 ]
 
 COVERAGE_DEBT_THIS_ROUND: list[str] = [
@@ -146,8 +118,8 @@ COVERAGE_DEBT_THIS_ROUND: list[str] = [
     # (CORRECTNESS_r11.json on disk) — the union is self-contained;
     # no new debt this round.
 ]
-# Rotation note: with the r13 head (42 pins + 0 debt), 8 rotating
-# slots resume the tile over the remaining queries.
+# Rotation note: with this head (43 pins + 0 debt), 7 rotating slots
+# resume the tile over the remaining queries.
 
 
 def _round_number() -> int:

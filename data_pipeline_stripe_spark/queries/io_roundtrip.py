@@ -40,16 +40,6 @@ from .stripe import (
 )
 
 
-def frames_differ(a, b) -> bool:
-    """Multiset inequality of two frames in ONE Spark job: the gates'
-    two-direction ``exceptAll().count() or exceptAll().count()`` form
-    paid two full job launches per parity check (guide §1 — at gate
-    scale the job overhead dominates the comparison itself); the union
-    of both directions under one isEmpty() answers the same question
-    and short-circuits on the first differing row."""
-    return not a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty()
-
-
 def _scratch(sf_dir: str, name: str) -> str:
     """Per-(query, SF) scratch dir under the repo (gitignored). Cleared on
     entry so every run writes fresh files — the write IS the thing under
@@ -61,6 +51,16 @@ def _scratch(sf_dir: str, name: str) -> str:
     path = os.path.join(repo_root, ".scratch", name, tag)
     shutil.rmtree(path, ignore_errors=True)
     return path
+
+
+def _orders_kpc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The snapshot gates' orders fixture: ``(k, pri, cents)``, the
+    order key, its priority and its total in whole cents."""
+    return load_table(spark, sf_dir, "orders", rebalance=False).select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderpriority").alias("pri"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
 
 
 _EVENTS_BLOB_SCHEMA = T.StructType([

@@ -16,9 +16,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.snapshot_check import (check_carried, check_feed,
+                                        check_replay, frames_differ)
 from ..sources import load_table
 from ..sources.readers import inline_dim
-from .io_roundtrip import _scratch, frames_differ
+from .io_roundtrip import _orders_kpc, _scratch
 from .registry import query
 
 
@@ -1031,20 +1033,10 @@ def snapshot_merge_upsert_parity(spark: SparkSession,
                                        snapshot_read)
 
     table_dir = _scratch(sf_dir, "snapshot_merge")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(F.col("o_orderkey") <= 600).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    upd = orders.filter(
-        (F.col("o_orderkey") > 300) & (F.col("o_orderkey") <= 900)
-    ).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        (F.round(F.col("o_totalprice") * 100) * 2).cast("long")
-        .alias("cents"),
-    )
+    orders = _orders_kpc(spark, sf_dir)
+    base = orders.filter(F.col("k") <= 600)
+    upd = orders.filter((F.col("k") > 300) & (F.col("k") <= 900)) \
+        .withColumn("cents", F.col("cents") * 2)
     snapshot_commit(spark, table_dir, base, mode="append")
     version, merged = snapshot_merge(spark, table_dir, upd, "k")
     # gate through the TABLE: actions from the merge frame, values from
@@ -1157,19 +1149,13 @@ def snapshot_partial_merge_parity(spark: SparkSession,
     full-table merge semantics (the oracle joins base and updates over
     the WHOLE table), actions included — a row lost from a carried
     file, a stale dirty row, or a misclassified action flips it."""
-    from ..operators.snapshots import (_read_manifest, snapshot_commit,
+    from ..operators.snapshots import (snapshot_commit,
                                        snapshot_current_version,
                                        snapshot_merge, snapshot_read)
 
     table_dir = _scratch(sf_dir, "snapshot_partial_merge")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(
-        (F.col("o_orderkey") <= 1200) & (F.col("o_orderkey") % 4 != 1)
-    ).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    orders = _orders_kpc(spark, sf_dir)
+    base = orders.filter((F.col("k") <= 1200) & (F.col("k") % 4 != 1))
     bands = [
         F.col("k") <= 400,
         (F.col("k") > 400) & (F.col("k") <= 800),
@@ -1179,31 +1165,12 @@ def snapshot_partial_merge_parity(spark: SparkSession,
         snapshot_commit(spark, table_dir,
                         base.filter(band).coalesce(1), mode="append")
     base_version = snapshot_current_version(table_dir)
-    pre = {e["path"]: e
-           for e in _read_manifest(table_dir, base_version)["files"]}
 
-    upd = orders.filter(
-        (F.col("o_orderkey") > 400) & (F.col("o_orderkey") <= 800)
-    ).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        (F.round(F.col("o_totalprice") * 100) * 2).cast("long")
-        .alias("cents"),
-    )
+    upd = orders.filter((F.col("k") > 400) & (F.col("k") <= 800)) \
+        .withColumn("cents", F.col("cents") * 2)
     version, merged = snapshot_merge(spark, table_dir, upd, "k")
-    post = {e["path"]: e
-            for e in _read_manifest(table_dir, version)["files"]}
-    carried = set(pre) & set(post)
-    if len(carried) != 2 or any(post[p] != pre[p] for p in carried):
-        raise RuntimeError(
-            f"snapshot_partial_merge_parity: expected exactly the two "
-            f"untouched band files carried forward identically, got "
-            f"{len(carried)} of {len(pre)} — the merge rewrote more "
-            "than the dirty band")
-    if not (set(pre) - carried).isdisjoint(post):
-        raise RuntimeError(
-            "snapshot_partial_merge_parity: the dirty band's file "
-            "survived the rewrite — stale rows would double-count")
+    check_carried(table_dir, base_version, version, 2,
+                  context="snapshot_partial_merge_parity")
     actions = merged.select(F.col("k"), "merge_action")
     committed = snapshot_read(spark, table_dir, version=version)
     return (
@@ -1246,21 +1213,18 @@ def snapshot_cdf_read_parity(spark: SparkSession,
     'I' rows, the CDC commit via its recorded change log (deletes carry
     their OLD values), the compaction as ZERO rows (the query raises if
     it contributes any). Three gated sections: ``final`` (the head
-    table), ``replay`` (apply_cdc of the FEED over the version-0 read —
-    the oracle forces it equal to final by computing the same state
-    twice: a feed that lost a delete, replayed the compaction, or
-    double-applied an update flips it), and ``deleted`` (the feed's 'D'
-    rows vs the plain k <= 150 predicate)."""
-    from ..operators.merge import apply_cdc
+    table), ``replay`` (``check_replay``: the FEED applied over the
+    version-0 read, asserted equal to the head in-gate, and forced equal
+    to final by the oracle computing the same state twice: a feed that
+    lost a delete, replayed the compaction, or double-applied an update
+    flips it), and ``deleted`` (the feed's 'D' rows vs the plain
+    k <= 150 predicate)."""
     from ..operators.snapshots import (snapshot_apply_cdc,
                                        snapshot_commit, snapshot_compact,
                                        snapshot_read, snapshot_read_cdf)
 
     table_dir = _scratch(sf_dir, "snapshot_cdf")
-    ord_df = load_table(spark, sf_dir, "orders", rebalance=False).select(
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    ord_df = _orders_kpc(spark, sf_dir).drop("pri")
     snapshot_commit(spark, table_dir,
                     ord_df.filter(F.col("k") <= 600).coalesce(1),
                     mode="append")
@@ -1288,20 +1252,12 @@ def snapshot_cdf_read_parity(spark: SparkSession,
         ord_df.filter((F.col("k") > 1000) & (F.col("k") <= 1100))
         .coalesce(1), mode="append")
 
+    # a layout-only commit is silent in the feed
+    check_feed(spark, table_dir, compact_version - 1, compact_version,
+               {}, context="snapshot_cdf_read_parity")
+    replayed = check_replay(spark, table_dir, "k", 0,
+                            context="snapshot_cdf_read_parity")
     feed = snapshot_read_cdf(spark, table_dir, 0)
-    if feed.filter(F.col("_commit_version")
-                   == F.lit(compact_version)).count() != 0:
-        raise RuntimeError(
-            "snapshot_cdf_read_parity: the compaction contributed "
-            "change rows — a layout-only commit must be silent in the "
-            "feed")
-    replay_changes = feed.select(
-        "k", "cents",
-        F.col("_commit_version").alias("seq"),
-        F.when(F.col("_change_type") == "D", F.lit("D"))
-        .otherwise(F.lit("U")).alias("op"))
-    replayed = apply_cdc(
-        snapshot_read(spark, table_dir, version=0), replay_changes, "k")
 
     def shape(df: DataFrame, section: str) -> DataFrame:
         return df.select(F.lit(section).alias("section"),
@@ -1521,20 +1477,14 @@ def snapshot_merge_delete_unmatched_parity(spark: SparkSession,
     the CDF with their pre-delete values). The hash then gates the
     final state + actions against the full-semantics oracle (deleted
     rows absent; out-of-scope rows 'kept')."""
-    from ..operators.snapshots import (_read_manifest, snapshot_commit,
+    from ..operators.snapshots import (snapshot_commit,
                                        snapshot_current_version,
                                        snapshot_merge, snapshot_read,
                                        snapshot_read_cdf)
 
     table_dir = _scratch(sf_dir, "snapshot_merge_delete")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(
-        (F.col("o_orderkey") <= 1200) & (F.col("o_orderkey") % 5 != 1)
-    ).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    orders = _orders_kpc(spark, sf_dir)
+    base = orders.filter((F.col("k") <= 1200) & (F.col("k") % 5 != 1))
     bands = [
         F.col("k") <= 400,
         (F.col("k") > 400) & (F.col("k") <= 800),
@@ -1544,30 +1494,15 @@ def snapshot_merge_delete_unmatched_parity(spark: SparkSession,
         snapshot_commit(spark, table_dir,
                         base.filter(band).coalesce(1), mode="append")
     base_version = snapshot_current_version(table_dir)
-    pre = {e["path"]: e
-           for e in _read_manifest(table_dir, base_version)["files"]}
 
     src = orders.filter(
-        (F.col("o_orderkey") > 400) & (F.col("o_orderkey") <= 800)
-        & (F.col("o_orderkey") % 3 == 0)
-    ).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        (F.round(F.col("o_totalprice") * 100) * 2).cast("long")
-        .alias("cents"),
-    )
+        (F.col("k") > 400) & (F.col("k") <= 800) & (F.col("k") % 3 == 0)
+    ).withColumn("cents", F.col("cents") * 2)
     version, merged = snapshot_merge(
         spark, table_dir, src, "k",
         not_matched_by_source="delete", source_scope=(401, 800))
-    post = {e["path"]: e
-            for e in _read_manifest(table_dir, version)["files"]}
-    carried = set(pre) & set(post)
-    if len(carried) != 2 or any(post[p] != pre[p] for p in carried):
-        raise RuntimeError(
-            "snapshot_merge_delete_unmatched_parity: expected both "
-            "out-of-scope band files carried forward identically, got "
-            f"{len(carried)} of {len(pre)} — the delete clause widened "
-            "the copy-on-write past its scope band")
+    check_carried(table_dir, base_version, version, 2,
+                  context="snapshot_merge_delete_unmatched_parity")
     deleted_keys = {
         r["k"] for r in merged.filter(
             F.col("merge_action") == "deleted").select("k").collect()}
@@ -1625,10 +1560,7 @@ def snapshot_history_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        snapshot_history, snapshot_merge)
 
     table_dir = _scratch(sf_dir, "snapshot_history")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False).select(
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    orders = _orders_kpc(spark, sf_dir).drop("pri")
     for cond in (F.col("k") <= 500,
                  (F.col("k") > 500) & (F.col("k") <= 1000),
                  F.col("k") > 1000):
@@ -1686,13 +1618,10 @@ def snapshot_restore_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     version-0 reconstruction."""
     from ..operators.snapshots import (_read_manifest, snapshot_commit,
                                        snapshot_merge, snapshot_read,
-                                       snapshot_read_cdf, snapshot_restore)
+                                       snapshot_restore)
 
     table_dir = _scratch(sf_dir, "snapshot_restore")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False).select(
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    orders = _orders_kpc(spark, sf_dir).drop("pri")
     snapshot_commit(spark, table_dir,
                     orders.filter(F.col("k") <= 800).coalesce(1),
                     mode="append")                                  # v0
@@ -1715,20 +1644,12 @@ def snapshot_restore_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "snapshot_restore_parity: the pre-restore head lost rows — "
             "restore must preserve history")
-    feed = snapshot_read_cdf(spark, table_dir, from_version=2,
-                             to_version=v)
-    by_type = {r["_change_type"]: r["n"] for r in
-               feed.groupBy("_change_type").agg(F.count("*").alias("n"))
-               .collect()}
-    n_appended = orders.filter(F.col("k") > 800).count()
-    n_merged = upd.count()
-    if (by_type.get("D", 0) != n_appended
-            or by_type.get("U", 0) != n_merged
-            or by_type.get("I", 0) != 0):
-        raise RuntimeError(
-            f"snapshot_restore_parity: restore change log {by_type} != "
-            f"expected D={n_appended} U={n_merged} I=0 — the feed must "
-            "express the restore exactly")
+    # the feed expresses the restore exactly: the appended keys as D,
+    # the merged cents reverted as U
+    check_feed(spark, table_dir, 2, v,
+               {"D": orders.filter(F.col("k") > 800).count(),
+                "U": upd.count()},
+               context="snapshot_restore_parity")
     return snapshot_read(spark, table_dir, version=v).select(
         F.col("k").alias("o_orderkey"), "cents")
 
@@ -1774,60 +1695,36 @@ def snapshot_merge_update_unmatched_parity(spark: SparkSession,
     U rows in the change feed (count asserted: every in-band base row
     changes — matched cents double, unmatched pri flips). The hash
     gates rows + actions against the full-semantics oracle."""
-    from ..operators.snapshots import (_read_manifest, snapshot_commit,
+    from ..operators.snapshots import (snapshot_commit,
                                        snapshot_current_version,
-                                       snapshot_merge, snapshot_read,
-                                       snapshot_read_cdf)
+                                       snapshot_merge, snapshot_read)
 
     table_dir = _scratch(sf_dir, "snapshot_merge_update_unmatched")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(
-        (F.col("o_orderkey") <= 1200) & (F.col("o_orderkey") % 5 != 1)
-    ).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    orders = _orders_kpc(spark, sf_dir)
+    base = orders.filter((F.col("k") <= 1200) & (F.col("k") % 5 != 1))
     for band in (F.col("k") <= 400,
                  (F.col("k") > 400) & (F.col("k") <= 800),
                  F.col("k") > 800):
         snapshot_commit(spark, table_dir,
                         base.filter(band).coalesce(1), mode="append")
     base_version = snapshot_current_version(table_dir)
-    pre = {e["path"]: e
-           for e in _read_manifest(table_dir, base_version)["files"]}
 
     src = orders.filter(
-        (F.col("o_orderkey") > 400) & (F.col("o_orderkey") <= 800)
-        & (F.col("o_orderkey") % 3 == 0)
-    ).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        (F.round(F.col("o_totalprice") * 100) * 2).cast("long")
-        .alias("cents"),
-    )
+        (F.col("k") > 400) & (F.col("k") <= 800) & (F.col("k") % 3 == 0)
+    ).withColumn("cents", F.col("cents") * 2)
     version, merged = snapshot_merge(
         spark, table_dir, src, "k",
         not_matched_by_source={"pri": F.lit("STALE")},
         source_scope=(401, 800))
-    post = {e["path"]: e
-            for e in _read_manifest(table_dir, version)["files"]}
-    carried = set(pre) & set(post)
-    if len(carried) != 2 or any(post[p] != pre[p] for p in carried):
-        raise RuntimeError(
-            "snapshot_merge_update_unmatched_parity: expected both "
-            "out-of-scope band files carried forward identically — the "
-            "update clause widened the copy-on-write past its scope")
-    n_u = snapshot_read_cdf(spark, table_dir, from_version=version - 1,
-                            to_version=version) \
-        .filter(F.col("_change_type") == "U").count()
-    n_in_band = base.filter(
-        (F.col("k") > 400) & (F.col("k") <= 800)).count()
-    if n_u != n_in_band:
-        raise RuntimeError(
-            f"snapshot_merge_update_unmatched_parity: the feed logs "
-            f"{n_u} U rows, expected {n_in_band} (every in-band base "
-            "row changes: matched cents double, unmatched pri flips)")
+    context = "snapshot_merge_update_unmatched_parity"
+    check_carried(table_dir, base_version, version, 2, context=context)
+    # every in-band base row changes (matched cents double, unmatched
+    # pri flips); the source keys the base withholds insert
+    check_feed(spark, table_dir, version - 1, version,
+               {"U": base.filter((F.col("k") > 400)
+                                 & (F.col("k") <= 800)).count(),
+                "I": src.filter(F.col("k") % 5 == 1).count()},
+               context=context)
     actions = merged.select(F.col("k"), "merge_action")
     committed = snapshot_read(spark, table_dir, version=version)
     return (
@@ -1878,19 +1775,13 @@ def snapshot_replace_where_parity(spark: SparkSession,
     against the head, both against the oracle's delete-then-insert
     twice. A plain overwrite here would strand the feed (documented
     barrier); this is the verb that keeps consumers incremental."""
-    from ..operators.merge import apply_cdc
-    from ..operators.snapshots import (_read_manifest, snapshot_commit,
+    from ..operators.snapshots import (snapshot_commit,
                                        snapshot_current_version,
                                        snapshot_overwrite_where,
-                                       snapshot_read, snapshot_read_cdf)
+                                       snapshot_read)
 
     table_dir = _scratch(sf_dir, "snapshot_replace_where")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(F.col("o_orderkey") <= 1200).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    base = _orders_kpc(spark, sf_dir).filter(F.col("k") <= 1200)
     bands = [
         F.col("k") <= 400,
         (F.col("k") > 400) & (F.col("k") <= 800),
@@ -1900,8 +1791,6 @@ def snapshot_replace_where_parity(spark: SparkSession,
         snapshot_commit(spark, table_dir,
                         base.filter(band).coalesce(1), mode="append")
     base_version = snapshot_current_version(table_dir)
-    pre = {e["path"]: e
-           for e in _read_manifest(table_dir, base_version)["files"]}
 
     repl = base.filter(
         (F.col("k") > 400) & (F.col("k") <= 800)
@@ -1910,30 +1799,12 @@ def snapshot_replace_where_parity(spark: SparkSession,
     version, stats = snapshot_overwrite_where(
         spark, table_dir,
         [("k", ">", 400), ("k", "<=", 800)], repl, key="k")
-    post = {e["path"]: e
-            for e in _read_manifest(table_dir, version)["files"]}
-    carried = set(pre) & set(post)
-    if len(carried) != 2 or any(post[p] != pre[p] for p in carried):
-        raise RuntimeError(
-            f"snapshot_replace_where_parity: expected both out-of-band "
-            f"files carried forward identically, got {len(carried)} of "
-            f"{len(pre)} — replaceWhere rewrote more than its scope")
-    if not (set(pre) - carried).isdisjoint(post):
-        raise RuntimeError(
-            "snapshot_replace_where_parity: the replaced band's file "
-            "survived — stale rows would double-count")
-
-    # the CDF rides through: replay the backfill's feed over the
-    # pre-overwrite state and it must reproduce the head exactly
-    feed = snapshot_read_cdf(spark, table_dir, base_version, version)
-    changes = feed.select(
-        "k", "pri", "cents",
-        F.col("_commit_version").alias("seq"),
-        F.when(F.col("_change_type").isin("I", "U"), F.lit("U"))
-        .otherwise(F.lit("D")).alias("op"),
-    )
-    before = snapshot_read(spark, table_dir, version=base_version)
-    replayed = apply_cdc(before, changes, "k").drop("cdc_action")
+    context = "snapshot_replace_where_parity"
+    check_carried(table_dir, base_version, version, 2, context=context)
+    # the CDF rides through: the backfill's feed replayed over the
+    # pre-overwrite state reproduces the head exactly
+    replayed = check_replay(spark, table_dir, "k", base_version, version,
+                            context=context)
     final = snapshot_read(spark, table_dir, version=version)
     return (
         final.select(F.lit("final").alias("section"),
@@ -1991,41 +1862,27 @@ def snapshot_merge_composite_key_parity(spark: SparkSession,
     replays the feed with the composite-key apply_cdc over the
     pre-merge state and hash-checks replica == head == the oracle's
     two-key FULL OUTER JOIN."""
-    from ..operators.merge import apply_cdc
-    from ..operators.snapshots import (_read_manifest, snapshot_commit,
+    from ..operators.snapshots import (snapshot_commit,
                                        snapshot_current_version,
-                                       snapshot_merge, snapshot_read,
-                                       snapshot_read_cdf)
+                                       snapshot_merge, snapshot_read)
 
     table_dir = _scratch(sf_dir, "snapshot_merge_composite")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    keyed = orders.filter(F.col("o_orderkey") <= 1200).select(
-        F.expr("(o_orderkey - 1) div 400").alias("bucket"),
-        (F.col("o_orderkey") % 400).alias("seq"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    keyed = _orders_kpc(spark, sf_dir).filter(F.col("k") <= 1200).select(
+        F.expr("(k - 1) div 400").alias("bucket"),
+        (F.col("k") % 400).alias("seq"), "pri", "cents")
     base = keyed.filter(F.col("seq") % 4 != 1)
     for b in range(3):
         snapshot_commit(spark, table_dir,
                         base.filter(F.col("bucket") == b).coalesce(1),
                         mode="append")
     base_version = snapshot_current_version(table_dir)
-    pre = {e["path"]: e
-           for e in _read_manifest(table_dir, base_version)["files"]}
 
-    upd = keyed.filter(F.col("bucket") == 1)         .withColumn("cents", F.col("cents") * 2)
+    upd = keyed.filter(F.col("bucket") == 1) \
+        .withColumn("cents", F.col("cents") * 2)
     version, merged = snapshot_merge(spark, table_dir, upd,
                                      ["bucket", "seq"])
-    post = {e["path"]: e
-            for e in _read_manifest(table_dir, version)["files"]}
-    carried = set(pre) & set(post)
-    if len(carried) != 2 or any(post[p] != pre[p] for p in carried):
-        raise RuntimeError(
-            f"snapshot_merge_composite_key_parity: expected the two "
-            f"outer-bucket files carried forward identically, got "
-            f"{len(carried)} of {len(pre)} — the composite band box "
-            "dirtied more than the touched bucket")
+    context = "snapshot_merge_composite_key_parity"
+    check_carried(table_dir, base_version, version, 2, context=context)
     acts = {r["merge_action"]: r["count"]
             for r in merged.groupBy("merge_action").count().collect()}
     if not (acts.get("updated", 0) > 0 and acts.get("inserted", 0) > 0
@@ -2034,17 +1891,8 @@ def snapshot_merge_composite_key_parity(spark: SparkSession,
             f"snapshot_merge_composite_key_parity: expected all three "
             f"merge actions to occur, got {acts} — the composite join "
             "or the fixture bands are broken")
-
-    feed = snapshot_read_cdf(spark, table_dir, base_version, version)
-    changes = feed.select(
-        "bucket", "seq", "pri", "cents",
-        F.col("_commit_version").alias("seq_no"),
-        F.when(F.col("_change_type").isin("I", "U"), F.lit("U"))
-        .otherwise(F.lit("D")).alias("op"),
-    )
-    before = snapshot_read(spark, table_dir, version=base_version)
-    replayed = apply_cdc(before, changes, ["bucket", "seq"],
-                         seq="seq_no").drop("cdc_action")
+    replayed = check_replay(spark, table_dir, ["bucket", "seq"],
+                            base_version, version, context=context)
     final = snapshot_read(spark, table_dir, version=version)
     return (
         final.select(F.lit("final").alias("section"),
@@ -2765,15 +2613,10 @@ def snapshot_deletion_vector_parity(spark: SparkSession,
                                        snapshot_compact,
                                        snapshot_current_version,
                                        snapshot_delete_where,
-                                       snapshot_read, snapshot_read_cdf)
+                                       snapshot_read)
 
     table_dir = _scratch(sf_dir, "snapshot_deletion_vector")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(F.col("o_orderkey") <= 1200).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    base = _orders_kpc(spark, sf_dir).filter(F.col("k") <= 1200)
     for band in [F.col("k") <= 400,
                  (F.col("k") > 400) & (F.col("k") <= 800),
                  F.col("k") > 800]:
@@ -2828,20 +2671,19 @@ def snapshot_deletion_vector_parity(spark: SparkSession,
         raise RuntimeError(
             "snapshot_deletion_vector_parity: a delete matched no rows "
             "— the fixture bands are wrong")
-    # the CDF rides through BOTH deletes (captured before compaction
-    # only by range: compaction contributes zero rows by contract)
-    feed = snapshot_read_cdf(spark, table_dir, base_version)
+    # the CDF rides through BOTH deletes as D rows only (captured
+    # before compaction only by range: compaction contributes zero rows
+    # by contract)
+    feed = check_feed(
+        spark, table_dir, base_version, v2,
+        {"D": info1["rows_deleted"] + info2["rows_deleted"]},
+        context="snapshot_deletion_vector_parity")
     # (c) OPTIMIZE materializes vectors away
     v3, _, _ = snapshot_compact(spark, table_dir, target_files=2)
     if any(e.get("dv") for e in _read_manifest(table_dir, v3)["files"]):
         raise RuntimeError(
             "snapshot_deletion_vector_parity: compaction carried "
             "deletion vectors forward instead of materializing them")
-    bad = feed.filter(F.col("_change_type") != "D").count()
-    if bad:
-        raise RuntimeError(
-            f"snapshot_deletion_vector_parity: the delete feed served "
-            f"{bad} non-D rows")
     final = snapshot_read(spark, table_dir).select(
         F.lit("final").alias("section"), "k", "pri", "cents")
     deleted = feed.select(F.lit("deleted").alias("section"),
@@ -2912,12 +2754,7 @@ def snapshot_conflict_rebase_parity(spark: SparkSession,
                                        snapshot_merge, snapshot_read)
 
     table_dir = _scratch(sf_dir, "snapshot_conflict_rebase")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    ord_all = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    ord_all = _orders_kpc(spark, sf_dir)
     base = ord_all.filter((F.col("k") <= 1200) & (F.col("k") % 4 != 1))
     snapshot_commit(spark, table_dir,
                     base.filter(F.col("k") <= 600).coalesce(1))
@@ -3046,8 +2883,7 @@ def snapshot_partition_spec_parity(spark: SparkSession,
                                        snapshot_drop_partitions,
                                        snapshot_expire,
                                        snapshot_pruned_files,
-                                       snapshot_read, snapshot_read_cdf,
-                                       snapshot_scan)
+                                       snapshot_read, snapshot_scan)
 
     table_dir = _scratch(sf_dir, "snapshot_partition_spec")
     ev = load_table(spark, sf_dir, "events", rebalance=False).select(
@@ -3102,12 +2938,9 @@ def snapshot_partition_spec_parity(spark: SparkSession,
             f"snapshot_partition_spec_parity: dropped "
             f"{info['rows_dropped']} rows, expected "
             f"{expect_dropped_rows}")
-    feed = snapshot_read_cdf(spark, table_dir, base_version)
-    if (feed.count() != expect_dropped_rows
-            or feed.filter(F.col("_change_type") != "D").count()):
-        raise RuntimeError(
-            "snapshot_partition_spec_parity: the drop's change feed "
-            "is not exactly the dropped rows as D")
+    check_feed(spark, table_dir, base_version, v_drop,
+               {"D": expect_dropped_rows},
+               context="snapshot_partition_spec_parity")
     # materialize the time-travel section BEFORE retention sweeps the
     # dropped files (the pre-drop manifests are about to expire)
     base_agg = (snapshot_read(spark, table_dir, version=base_version)
@@ -3214,16 +3047,10 @@ def snapshot_check_constraint_parity(spark: SparkSession,
                                        snapshot_add_constraint,
                                        snapshot_commit,
                                        snapshot_current_version,
-                                       snapshot_merge, snapshot_read,
-                                       snapshot_read_cdf)
+                                       snapshot_merge, snapshot_read)
 
     table_dir = _scratch(sf_dir, "snapshot_check_constraint")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(F.col("o_orderkey") <= 800).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    base = _orders_kpc(spark, sf_dir).filter(F.col("k") <= 800)
     snapshot_commit(spark, table_dir,
                     base.filter(F.col("k") <= 400).coalesce(1))
     snapshot_commit(spark, table_dir,
@@ -3239,10 +3066,8 @@ def snapshot_check_constraint_parity(spark: SparkSession,
         raise RuntimeError(
             "snapshot_check_constraint_parity: ADD CONSTRAINT "
             "re-serialized segments — not metadata-only")
-    if snapshot_read_cdf(spark, table_dir, v_add - 1).count():
-        raise RuntimeError(
-            "snapshot_check_constraint_parity: the constraint commit "
-            "emitted change rows")
+    check_feed(spark, table_dir, v_add - 1, v_add, {},
+               context="snapshot_check_constraint_parity")
 
     # violating APPEND and MERGE must abort with NO version published
     bad_append = inline_dim(spark, [(9001, "1-URGENT", -5)],
@@ -3350,8 +3175,7 @@ def snapshot_partitioned_delete_parity(spark: SparkSession,
                                        snapshot_delete_where,
                                        snapshot_drop_partitions,
                                        snapshot_pruned_files,
-                                       snapshot_read, snapshot_read_cdf,
-                                       snapshot_scan)
+                                       snapshot_read, snapshot_scan)
 
     table_dir = _scratch(sf_dir, "snapshot_partitioned_delete")
     ev = load_table(spark, sf_dir, "events", rebalance=False).select(
@@ -3405,12 +3229,9 @@ def snapshot_partitioned_delete_parity(spark: SparkSession,
         raise RuntimeError(
             f"snapshot_partitioned_delete_parity: {left} deleted rows "
             "still readable — the delete silently no-op'ed")
-    feed = snapshot_read_cdf(spark, table_dir, base_version)
-    if (feed.count() != expect_deleted
-            or feed.filter(F.col("_change_type") != "D").count()):
-        raise RuntimeError(
-            "snapshot_partitioned_delete_parity: the delete feed is "
-            "not exactly the deleted rows as D")
+    check_feed(spark, table_dir, base_version, v_del,
+               {"D": expect_deleted},
+               context="snapshot_partitioned_delete_parity")
 
     # (b) partition-field IN: exact planned files, through the vectors
     days = ["2024-01-10", "2024-01-20"]
@@ -3514,12 +3335,7 @@ def snapshot_metadata_conflict_parity(spark: SparkSession,
     from ..operators import snapshots as S
 
     table_dir = _scratch(sf_dir, "snapshot_metadata_conflict")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(F.col("o_orderkey") <= 900).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    base = _orders_kpc(spark, sf_dir).filter(F.col("k") <= 900)
     S.snapshot_commit(spark, table_dir,
                       base.filter(F.col("k") <= 400).coalesce(1))
     S.snapshot_commit(spark, table_dir,
@@ -3670,12 +3486,7 @@ def snapshot_equality_delete_parity(spark: SparkSession,
     eq_dir = _scratch(sf_dir, "snapshot_eq_delete")
     pos_dir = _scratch(sf_dir, "snapshot_eq_delete_twin")
     # tiny predicate band: the fact rebalance exchange is pure overhead
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(F.col("o_orderkey") <= 1200).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    base = _orders_kpc(spark, sf_dir).filter(F.col("k") <= 1200)
     for d in (eq_dir, pos_dir):
         S.snapshot_commit(spark, d,
                           base.filter(F.col("k") <= 600).coalesce(1))
@@ -3726,13 +3537,10 @@ def snapshot_equality_delete_parity(spark: SparkSession,
             "re-insert did not survive — sequence scoping is broken")
 
     # (c) lazy CDF D rows == the position twin's recorded ones
-    eq_feed = S.snapshot_read_cdf(spark, eq_dir, base_version,
-                                  to_version=v_eq)
-    if eq_feed.filter(F.col("_change_type") != "D").count():
-        raise RuntimeError(
-            "snapshot_equality_delete_parity: the eq delete's feed "
-            "served non-D rows")
-    deleted = eq_feed.select("k", "pri", "cents")
+    deleted = check_feed(
+        spark, eq_dir, base_version, v_eq, {"D": info["keys"]},
+        context="snapshot_equality_delete_parity",
+    ).select("k", "pri", "cents")
 
     # (d) OPTIMIZE materializes the sidecars away
     v_c, _, _ = S.snapshot_compact(spark, eq_dir, target_files=2)
@@ -3808,17 +3616,8 @@ def snapshot_wap_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     table_dir = _scratch(sf_dir, "snapshot_wap")
     twin_dir = _scratch(sf_dir, "snapshot_wap_twin")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    wide = orders.filter(F.col("o_orderkey") <= 1300).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    base = orders.filter(F.col("o_orderkey") <= 1000).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    wide = _orders_kpc(spark, sf_dir).filter(F.col("k") <= 1300)
+    base = wide.filter(F.col("k") <= 1000)
     main_part = base.filter(F.col("k") <= 800)
     delta_part = base.filter(F.col("k") > 800)
     for d in (table_dir, twin_dir):
@@ -3843,9 +3642,9 @@ def snapshot_wap_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "snapshot_wap_parity: the audit found nothing to fail on")
     S.snapshot_drop_branch(table_dir, "bad")
+    n_main = main_part.count()
     if (S.snapshot_current_version(table_dir) != fork_v
-            or S.snapshot_read(spark, table_dir).count()
-            != main_part.count()):
+            or S.snapshot_read(spark, table_dir).count() != n_main):
         raise RuntimeError(
             "snapshot_wap_parity: the failed audit leaked into main")
 
@@ -3856,7 +3655,8 @@ def snapshot_wap_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     if S.snapshot_current_version(table_dir) != fork_v:
         raise RuntimeError(
             "snapshot_wap_parity: the branch commit advanced main")
-    if S.snapshot_read(spark, bdir).count() != base.count():
+    n_base = base.count()
+    if S.snapshot_read(spark, bdir).count() != n_base:
         raise RuntimeError(
             "snapshot_wap_parity: the branch does not read its own "
             "staged state")
@@ -3878,10 +3678,9 @@ def snapshot_wap_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "snapshot_wap_parity: the fast-forwarded state diverged "
             "from the direct-commit twin")
-    feed = S.snapshot_read_cdf(spark, table_dir, fork_v)
-    if feed.filter(F.col("_change_type") != "I").count():
-        raise RuntimeError(
-            "snapshot_wap_parity: the publish CDF served non-I rows")
+    feed = check_feed(spark, table_dir, fork_v, v_pub,
+                      {"I": n_base - n_main},
+                      context="snapshot_wap_parity")
 
     # (d) the tag survives an aggressive expire
     S.snapshot_expire(table_dir, keep_last=1, tmp_grace_seconds=0)
@@ -3917,12 +3716,8 @@ def snapshot_wap_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "snapshot_wap_parity: the cherry-pick did not publish as "
             "an append")
-    pick_feed = S.snapshot_read_cdf(spark, table_dir, head_before_pick)
-    if (pick_feed.filter(F.col("_change_type") != "I").count()
-            or pick_feed.count() != late.count()):
-        raise RuntimeError(
-            "snapshot_wap_parity: the pick CDF is not exactly the "
-            "branch rows as I")
+    check_feed(spark, table_dir, head_before_pick, v_pick,
+               {"I": late.count()}, context="snapshot_wap_parity")
     pick_head = S.snapshot_read(spark, table_dir)
     survivors = pick_head.filter(
         (F.col("k") > 1000) & (F.col("k") <= 1100)).count()
@@ -3989,12 +3784,7 @@ def snapshot_metadata_tables_parity(spark: SparkSession,
 
     register_snapshot_source(spark)
     table_dir = _scratch(sf_dir, "snapshot_metadata_tables")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    base = orders.filter(F.col("o_orderkey") <= 1200).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    base = _orders_kpc(spark, sf_dir).filter(F.col("k") <= 1200)
     S.snapshot_commit(spark, table_dir,
                       base.filter(F.col("k") <= 500).coalesce(1),
                       mode="append")                               # v0
@@ -4103,16 +3893,10 @@ def snapshot_upsert_keys_parity(spark: SparkSession,
     reproduces the head. The oracle restates the final layering
     directly from orders."""
     from ..operators import snapshots as S
-    from ..operators.merge import apply_cdc
 
     table_dir = _scratch(sf_dir, "snapshot_upsert_keys")
     twin_dir = _scratch(sf_dir, "snapshot_upsert_keys_twin")
-    orders = load_table(spark, sf_dir, "orders", rebalance=False)
-    wide = orders.filter(F.col("o_orderkey") <= 1200).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    wide = _orders_kpc(spark, sf_dir).filter(F.col("k") <= 1200)
     base = wide.filter(F.col("k") <= 1000)
     up1 = wide.filter((F.col("k") > 300) & (F.col("k") <= 600)) \
         .withColumn("cents", F.col("cents") * 2 + 1)
@@ -4157,26 +3941,10 @@ def snapshot_upsert_keys_parity(spark: SparkSession,
             "from the copy-on-write twin")
 
     # (c) each upsert version's feed = its delta as U
-    for v, up in ((v1, up1), (v2, up2)):
-        feed = S.snapshot_read_cdf(spark, table_dir, v - 1,
-                                   to_version=v)
-        n_u = feed.filter(F.col("_change_type") == "U").count()
-        if feed.count() != up.count() or n_u != feed.count():
-            raise RuntimeError(
-                f"snapshot_upsert_keys_parity: version {v} feed is "
-                "not exactly its delta as U rows")
-
+    context = "snapshot_upsert_keys_parity"
+    for v, info in ((v1, info1), (v2, info2)):
+        check_feed(spark, table_dir, v - 1, v, {"U": info["rows"]},
+                   context=context)
     # (d) full-range replay from version 0 reproduces the head
-    replayed = apply_cdc(
-        S.snapshot_read(spark, table_dir, version=0),
-        S.snapshot_read_cdf(spark, table_dir, 0, to_version=v2)
-        .select("k", "pri", "cents",
-                F.col("_commit_version").alias("seq"),
-                F.when(F.col("_change_type") == "D", F.lit("D"))
-                .otherwise(F.lit("U")).alias("op")),
-        "k").drop("cdc_action")
-    if frames_differ(replayed, head):
-        raise RuntimeError(
-            "snapshot_upsert_keys_parity: replaying the feed did not "
-            "reproduce the head")
+    check_replay(spark, table_dir, "k", 0, v2, context=context)
     return head

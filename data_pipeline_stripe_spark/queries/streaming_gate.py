@@ -25,9 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators.snapshot_check import (check_replay, feed_changes,
+                                        frames_differ)
 from ..sources import load_table
 from ..sources.readers import empty_frame, inline_dim
-from .io_roundtrip import _scratch, frames_differ
+from .io_roundtrip import _orders_kpc, _scratch
 from .registry import query
 
 
@@ -698,16 +700,15 @@ def stream_snapshot_cdf_source_parity(spark: SparkSession,
     consume EXACTLY that delta from the checkpoint — the query raises
     if the first drain missed rows, if the restart re-served consumed
     versions, or if the U/D change rows are missing or mislabeled.
-    The drained feed is then REPLAYED (apply_cdc over an empty base,
-    seq = _commit_version) and the hash gates the replayed state
+    The drained feed must equal the batch feed from the stream's
+    default start, and REPLAYED over an empty base (``check_replay``)
+    it must reproduce the head; the hash gates the replayed state
     against the oracle's direct computation — a feed that drops a
     delete, double-serves an insert, or loses a pre-delete value
     cannot reproduce the head table."""
     import glob
 
-    from ..operators.merge import apply_cdc
-    from ..operators.snapshots import (snapshot_apply_cdc, snapshot_commit,
-                                       snapshot_read)
+    from ..operators.snapshots import snapshot_apply_cdc, snapshot_commit
     from ..sources.snapshot_source import register_snapshot_source
 
     register_snapshot_source(spark)
@@ -782,25 +783,10 @@ def stream_snapshot_cdf_source_parity(spark: SparkSession,
             f"{n_deleted} D rows, expected {expect_deleted} — deletes "
             "must ride the restarted CDF stream")
 
-    # replay the feed over an empty base: I/U upsert, D delete, ordered
-    # by commit version — must reproduce the head table exactly
-    empty = empty_frame(spark, "k long, event_type string, cents long")
-    replayed = apply_cdc(
-        empty,
-        feed.select(
-            "k", "event_type", "cents",
-            F.col("_commit_version").alias("seq"),
-            F.when(F.col("_change_type") == "D", F.lit("D"))
-            .otherwise(F.lit("U")).alias("op"),
-        ),
-        "k").drop("cdc_action")
-    head_rows = snapshot_read(spark, table_dir).count()
-    replay_rows = replayed.count()
-    if replay_rows != head_rows:
-        raise RuntimeError(
-            f"stream_snapshot_cdf_source_parity: replaying the feed "
-            f"yields {replay_rows} rows but the table head has "
-            f"{head_rows} — the feed is not a faithful delta")
+    # the drained feed equals the batch feed from the stream's default
+    # start, and replayed over an empty base it reproduces the head
+    replayed = check_replay(spark, table_dir, "k", -1, feed=feed,
+                            context="stream_snapshot_cdf_source_parity")
     return (
         replayed.groupBy("event_type")
         .agg(F.count("*").alias("n_events"),
@@ -857,15 +843,12 @@ def stream_cdf_equality_delete_parity(spark: SparkSession,
     the first delete's slot-0 keys (cents*10+5 — newer than both
     deletes) land. The restarted stream must consume exactly that
     delta; per-version D counts are pinned in-gate; the drained feed
-    replays over an empty base (apply_cdc, seq=_commit_version) and
-    must reproduce the head table, which the oracle restates
-    directly."""
+    must equal the batch feed over the same range and, replayed over
+    an empty base (``check_replay``), reproduce the head table, which
+    the oracle restates directly."""
     import glob
 
-    from ..operators.merge import apply_cdc
-    from ..operators.snapshots import (snapshot_commit,
-                                       snapshot_delete_keys,
-                                       snapshot_read)
+    from ..operators.snapshots import snapshot_commit, snapshot_delete_keys
     from ..sources.snapshot_source import register_snapshot_source
 
     register_snapshot_source(spark)
@@ -946,24 +929,10 @@ def stream_cdf_equality_delete_parity(spark: SparkSession,
             f"stream_cdf_equality_delete_parity: D rows per version "
             f"{d_by_v} != expected {{2: {exp_d2}, 4: {exp_d4}}} — the "
             "eqdead slices mis-scope the descriptors")
-    # replay the feed over an empty base: must reproduce the head
-    empty = empty_frame(spark, "k long, event_type string, cents long")
-    replayed = apply_cdc(
-        empty,
-        feed.select(
-            "k", "event_type", "cents",
-            F.col("_commit_version").alias("seq"),
-            F.when(F.col("_change_type") == "D", F.lit("D"))
-            .otherwise(F.lit("U")).alias("op"),
-        ),
-        "k").drop("cdc_action")
-    head_rows = snapshot_read(spark, table_dir).count()
-    replay_rows = replayed.count()
-    if replay_rows != head_rows:
-        raise RuntimeError(
-            f"stream_cdf_equality_delete_parity: replaying the feed "
-            f"yields {replay_rows} rows but the table head has "
-            f"{head_rows} — the feed is not a faithful delta")
+    # the drained feed equals the batch feed; replayed over an empty
+    # base it reproduces the head
+    replayed = check_replay(spark, table_dir, "k", -1, feed=feed,
+                            context="stream_cdf_equality_delete_parity")
     return (
         replayed.groupBy("event_type")
         .agg(F.count("*").alias("n_events"),
@@ -1013,11 +982,7 @@ def stream_snapshot_replication_parity(spark: SparkSession,
     dst_dir = os.path.join(scratch, "table_b")
     ckpt = os.path.join(scratch, "_ckpt")
 
-    orders = load_table(spark, sf_dir, "orders", rebalance=False).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    orders = _orders_kpc(spark, sf_dir)
     snapshot_commit(spark, src_dir,
                     orders.filter(F.col("k") <= 600).coalesce(1),
                     mode="append")                                  # v0
@@ -1035,15 +1000,8 @@ def stream_snapshot_replication_parity(spark: SparkSession,
                   .option("cdf", "true").load(src_dir))
 
         def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            snapshot_apply_cdc(
-                spark, dst_dir,
-                batch_df.select(
-                    "k", "pri", "cents",
-                    F.col("_commit_version").alias("seq"),
-                    F.when(F.col("_change_type") == "D", F.lit("D"))
-                    .otherwise(F.lit("U")).alias("op"),
-                ),
-                "k")
+            snapshot_apply_cdc(spark, dst_dir, feed_changes(batch_df), "k",
+                               seq="_commit_version", op="_change_type")
 
         q = (
             stream.writeStream.outputMode("append")
@@ -1142,11 +1100,7 @@ def stream_snapshot_replication_mor_parity(spark: SparkSession,
     dst_dir = os.path.join(scratch, "table_b")
     ckpt = os.path.join(scratch, "_ckpt")
 
-    orders = load_table(spark, sf_dir, "orders", rebalance=False).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
+    orders = _orders_kpc(spark, sf_dir)
     snapshot_commit(spark, src_dir,
                     orders.filter(F.col("k") <= 600).coalesce(1),
                     mode="append")                                  # v0
@@ -1163,14 +1117,9 @@ def stream_snapshot_replication_mor_parity(spark: SparkSession,
                   .option("cdf", "true").load(src_dir))
 
         def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            changes = batch_df.select(
-                "k", "pri", "cents",
-                F.col("_commit_version").alias("seq"),
-                F.when(F.col("_change_type") == "D", F.lit("D"))
-                .otherwise(F.lit("U")).alias("op"),
-            ).localCheckpoint(eager=True)  # pin the batch before the
-            #                                tripwire (its lineage
-            #                                reads the SOURCE table)
+            # pin the batch before the tripwire (its lineage reads the
+            # SOURCE table)
+            changes = feed_changes(batch_df).localCheckpoint(eager=True)
             real = S._read_entries
 
             def tripwire(*a, **kw):
@@ -1182,6 +1131,8 @@ def stream_snapshot_replication_mor_parity(spark: SparkSession,
             try:
                 S._read_entries = tripwire
                 snapshot_apply_cdc_mor(spark, dst_dir, changes, "k",
+                                       seq="_commit_version",
+                                       op="_change_type",
                                        epoch_key=str(epoch_id))
             finally:
                 S._read_entries = real

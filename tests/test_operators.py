@@ -2431,6 +2431,8 @@ def test_snapshot_partial_merge_untouched_entries_identical(spark,
     from pyspark.sql import functions as F
 
     from data_pipeline_stripe_spark.operators import snapshots as S
+    from data_pipeline_stripe_spark.operators.snapshot_check import (
+        check_carried)
 
     t = str(tmp_path / "snap_cow")
     for lo in (0, 100, 200):
@@ -2441,22 +2443,15 @@ def test_snapshot_partial_merge_untouched_entries_identical(spark,
                 F.lit(f"band{lo}").alias("v")),
             mode="append")
     base_version = S.snapshot_current_version(t)
-    pre = {e["path"]: e for e in S._read_manifest(t, base_version)["files"]}
-    assert len(pre) == 3
+    assert len(S._read_manifest(t, base_version)["files"]) == 3
 
     upd = spark.createDataFrame(
         [(150, "upd"), (151, "new")], ["k", "v"])  # 150 exists, 151 odd
     version, merged = S.snapshot_merge(spark, t, upd, "k")
     post = S._read_manifest(t, version)
-    post_by_path = {e["path"]: e for e in post["files"]}
-    carried = set(pre) & set(post_by_path)
-    # exactly the two untouched band files carried forward, IDENTICAL
-    assert len(carried) == 2
-    for p in carried:
-        assert post_by_path[p] == pre[p]
+    # exactly the two untouched band files carried forward, IDENTICAL;
     # the dirty band's file was rewritten (not carried)
-    dirty_pre = set(pre) - carried
-    assert dirty_pre.isdisjoint(post_by_path)
+    check_carried(t, base_version, version, 2, context="partial merge")
     # semantics: update applied, insert landed, every other row intact
     rows = {r.k: r.v for r in S.snapshot_read(spark, t).collect()}
     assert rows[150] == "upd" and rows[151] == "new"
@@ -2483,7 +2478,8 @@ def test_snapshot_apply_cdc_row_deletes_and_cdf_replay(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from data_pipeline_stripe_spark.operators import snapshots as S
-    from data_pipeline_stripe_spark.operators.merge import apply_cdc
+    from data_pipeline_stripe_spark.operators.snapshot_check import (
+        check_replay)
 
     t = str(tmp_path / "snap_cdc")
     S.snapshot_commit(
@@ -2520,18 +2516,7 @@ def test_snapshot_apply_cdc_row_deletes_and_cdf_replay(spark, tmp_path):
         F.col("_change_type") == "I").collect()} == {20, 30}
 
     # replay: base(v0) + feed == final table
-    replay_changes = (
-        feed.withColumn("op", F.when(F.col("_change_type") == "D",
-                                     F.lit("D")).otherwise(F.lit("U")))
-        .withColumnRenamed("_commit_version", "seq")
-        .select("k", "val", "seq", "op")
-    )
-    replayed = apply_cdc(
-        S.snapshot_read(spark, t, version=0), replay_changes, "k")
-    assert (
-        sorted((r.k, r.val) for r in replayed.drop("cdc_action").collect())
-        == sorted((r.k, r.val)
-                  for r in S.snapshot_read(spark, t).collect()))
+    check_replay(spark, t, "k", 0, context="cdf replay")
 
     # a plain overwrite records no change log → the feed refuses it
     S.snapshot_commit(spark, t, S.snapshot_read(spark, t),
@@ -2551,6 +2536,8 @@ def test_snapshot_partial_compaction_carries_clean_files(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from data_pipeline_stripe_spark.operators import snapshots as S
+    from data_pipeline_stripe_spark.operators.snapshot_check import (
+        check_carried)
 
     t = str(tmp_path / "snap_pcompact")
     # band 0: one file; band 200+: four small files
@@ -2561,15 +2548,11 @@ def test_snapshot_partial_compaction_carries_clean_files(spark, tmp_path):
                           spark.range(lo, lo + 10).coalesce(1).select(
                               F.col("id")), mode="append")
     base_v = S.snapshot_current_version(t)
-    pre = {e["path"]: e for e in S._read_manifest(t, base_v)["files"]}
     version, before, after = S.snapshot_compact(
         spark, t, target_files=1, predicates=[("id", ">=", 200)])
     assert (before, after) == (5, 2)
-    post = {e["path"]: e for e in S._read_manifest(t, version)["files"]}
-    carried = set(pre) & set(post)
-    assert len(carried) == 1  # the band-0 file, untouched
-    for p in carried:
-        assert post[p] == pre[p]
+    # the band-0 file, untouched
+    check_carried(t, base_v, version, 1, context="partial compaction")
     assert S.snapshot_read(spark, t).count() == 140
     assert sorted(r.id for r in S.snapshot_read(spark, t).collect()) == (
         list(range(100)) + list(range(200, 240)))
@@ -2636,6 +2619,8 @@ def test_snapshot_merge_not_matched_by_source_delete(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from data_pipeline_stripe_spark.operators import snapshots as S
+    from data_pipeline_stripe_spark.operators.snapshot_check import (
+        check_carried)
 
     t = str(tmp_path / "snap_nmbs")
     base = spark.createDataFrame(
@@ -2645,9 +2630,7 @@ def test_snapshot_merge_not_matched_by_source_delete(spark, tmp_path):
             spark, t,
             base.filter((F.col("k") >= lo) & (F.col("k") <= hi))
             .coalesce(1), mode="append")
-    pre = {e["path"]: e
-           for e in S._read_manifest(t, S.snapshot_current_version(t))
-           ["files"]}
+    base_v = S.snapshot_current_version(t)
     upd = spark.createDataFrame(
         [(8, "u8"), (10, "u10"), (12, "u12")], "k int, val string")
     v, audit = S.snapshot_merge(
@@ -2662,10 +2645,7 @@ def test_snapshot_merge_not_matched_by_source_delete(spark, tmp_path):
     assert acts[9] == "deleted" and acts[14] == "deleted"
     assert acts[8] == "updated" and acts[1] == "kept" and acts[20] == "kept"
     # files outside both bands carried forward byte-identical
-    post = {e["path"]: e for e in S._read_manifest(t, v)["files"]}
-    carried = set(pre) & set(post)
-    assert len(carried) == 2
-    assert all(post[p] == pre[p] for p in carried)
+    check_carried(t, base_v, v, 2, context="scoped delete clause")
     # deletes ride the change feed with their OLD values
     drows = sorted(
         (r.k, r.val)
@@ -4262,7 +4242,8 @@ def test_upsert_keys_merge_on_read(spark, tmp_path):
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
-    from data_pipeline_stripe_spark.operators.merge import apply_cdc
+    from data_pipeline_stripe_spark.operators.snapshot_check import \
+        check_replay
     from data_pipeline_stripe_spark.sources.snapshot_source import \
         register_snapshot_source
 
@@ -4323,25 +4304,9 @@ def test_upsert_keys_merge_on_read(spark, tmp_path):
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(180)
-    streamed = sorted(
-        (r["_commit_version"], r["_change_type"], r["k"], r["v"])
-        for r in spark.read.parquet(out).collect())
-    batch = sorted(
-        (r["_commit_version"], r["_change_type"], r["k"], r["v"])
-        for r in S.snapshot_read_cdf(spark, t, 0,
-                                     to_version=v_up).collect())
-    assert streamed == batch
-    # replay the feed from version 0's state: must reproduce the head
-    base_state = S.snapshot_read(spark, t, version=0)
-    replayed = apply_cdc(
-        base_state,
-        spark.read.parquet(out).select(
-            "k", "v", F.col("_commit_version").alias("seq"),
-            F.when(F.col("_change_type") == "D", F.lit("D"))
-            .otherwise(F.lit("U")).alias("op")),
-        "k").drop("cdc_action")
-    ra = replayed
-    assert ra.exceptAll(a).count() == 0 and a.exceptAll(ra).count() == 0
+    # ...and replayed from version 0's state reproduces the head
+    check_replay(spark, t, "k", 0, v_up, feed=spark.read.parquet(out),
+                 context="upsert_keys stream")
 
     # chained upsert of an overlapping key: latest wins
     S.snapshot_upsert_keys(
@@ -4381,7 +4346,8 @@ def test_apply_cdc_mor_merge_on_read(spark, tmp_path):
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
-    from data_pipeline_stripe_spark.operators.merge import apply_cdc
+    from data_pipeline_stripe_spark.operators.snapshot_check import \
+        check_replay
     from data_pipeline_stripe_spark.sources.snapshot_source import \
         register_snapshot_source
 
@@ -4459,24 +4425,9 @@ def test_apply_cdc_mor_merge_on_read(spark, tmp_path):
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(180)
-    streamed = sorted(
-        (r["_commit_version"], r["_change_type"], r["k"], r["v"])
-        for r in spark.read.parquet(out).collect())
-    batch = sorted(
-        (r["_commit_version"], r["_change_type"], r["k"], r["v"])
-        for r in S.snapshot_read_cdf(spark, t, 0,
-                                     to_version=v_mor).collect())
-    assert streamed == batch
-    # replay from version 0 reproduces the head
-    replayed = apply_cdc(
-        S.snapshot_read(spark, t, version=0),
-        spark.read.parquet(out).select(
-            "k", "v", F.col("_commit_version").alias("seq"),
-            F.when(F.col("_change_type") == "D", F.lit("D"))
-            .otherwise(F.lit("U")).alias("op")),
-        "k").drop("cdc_action")
-    assert replayed.exceptAll(a).count() == 0 \
-        and a.exceptAll(replayed).count() == 0
+    # ...and replayed from version 0 reproduces the head
+    check_replay(spark, t, "k", 0, v_mor, feed=spark.read.parquet(out),
+                 context="apply_cdc_mor stream")
 
     # pure-delete batch → uncovered descriptor only, no data files
     v2, info2 = S.snapshot_apply_cdc_mor(
@@ -5193,3 +5144,91 @@ def test_branch_cherry_pick_onto_moved_main(spark, tmp_path):
     with pytest.raises(S.SnapshotConflictError, match="append-only"):
         S.snapshot_cherry_pick(spark, t, "meta")
     S.snapshot_drop_branch(t, "meta")
+
+
+def _checked_table(spark, path):
+    """Three one-key-band appends of (k, v) over k in 0..29 (versions
+    0-2), then a copy-on-write apply_cdc that deletes k 3 and updates
+    k 5 in the first band (version 3)."""
+    from pyspark.sql import functions as F
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    for lo in (0, 10, 20):
+        S.snapshot_commit(spark, path, spark.range(lo, lo + 10).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
+            .coalesce(1), mode="append")
+    S.snapshot_apply_cdc(spark, path, spark.createDataFrame(
+        [(3, 0, 1, "D"), (5, 55, 1, "U")],
+        "k long, v long, seq long, op string"), "k")
+    return path
+
+
+@pytest.mark.parametrize("defect", ["replay", "stream", "feed", "carried"])
+def test_snapshot_checks_raise_on_seeded_defect(spark, tmp_path,
+                                                monkeypatch, defect):
+    """Each change-feed check passes on a sound table and raises, naming
+    its context, on one seeded defect: the feed lost its D row (the
+    replay no longer reproduces the head; a streamed feed no longer
+    equals the batch feed), an expectation off by one, and a rewrite
+    that dropped a file it should have carried."""
+    from pyspark.sql import functions as F
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+    from data_pipeline_stripe_spark.operators import snapshot_check as C
+
+    t = _checked_table(spark, str(tmp_path / "t"))
+
+    def lose_d(feed):
+        return feed.filter(F.col("_change_type") != "D")
+
+    if defect == "replay":
+        C.check_replay(spark, t, "k", 2, context="ctx")
+        real = C.snapshot_read_cdf
+        monkeypatch.setattr(C, "snapshot_read_cdf",
+                            lambda *a, **kw: lose_d(real(*a, **kw)))
+        with pytest.raises(RuntimeError, match=r"ctx: replaying the "
+                           r"change feed over \(2, 3\] does not"):
+            C.check_replay(spark, t, "k", 2, context="ctx")
+    elif defect == "stream":
+        feed = S.snapshot_read_cdf(spark, t, 2)
+        C.check_replay(spark, t, "k", 2, feed=feed, context="ctx")
+        with pytest.raises(RuntimeError, match=r"ctx: the streamed change "
+                           r"feed over \(2, 3\] differs"):
+            C.check_replay(spark, t, "k", 2, feed=lose_d(feed),
+                           context="ctx")
+    elif defect == "feed":
+        C.check_feed(spark, t, 2, 3, {"D": 1, "U": 1}, context="ctx")
+        with pytest.raises(RuntimeError,
+                           match=r"ctx: the change feed over \(2, 3\] has"):
+            C.check_feed(spark, t, 2, 3, {"D": 1, "U": 2}, context="ctx")
+    else:
+        C.check_carried(t, 2, 3, 2, context="ctx")
+        real = C._read_manifest
+        base = {e["path"] for e in real(t, 2)["files"]}
+
+        def dropped_carried(table_dir, version):
+            m = real(table_dir, version)
+            if version == 3:
+                lost = next(e for e in m["files"] if e["path"] in base)
+                m = dict(m, files=[e for e in m["files"] if e is not lost])
+            return m
+
+        monkeypatch.setattr(C, "_read_manifest", dropped_carried)
+        with pytest.raises(RuntimeError,
+                           match="ctx: expected exactly 2 of the 3 files"):
+            C.check_carried(t, 2, 3, 2, context="ctx")
+
+
+def test_snapshot_check_job_counts(spark, tmp_path):
+    """check_feed counts by change type in one Spark job (the feed of
+    appends builds without one); check_carried is a manifest diff with
+    none."""
+    from data_pipeline_stripe_spark.operators import snapshot_check as C
+
+    t = _checked_table(spark, str(tmp_path / "t"))
+    _, n_feed = _spark_jobs(spark, lambda: C.check_feed(
+        spark, t, 0, 2, {"I": 20}, context="ctx"))
+    _, n_carried = _spark_jobs(spark, lambda: C.check_carried(
+        t, 2, 3, 2, context="ctx"))
+    assert (n_feed, n_carried) == (1, 0)

@@ -1083,8 +1083,8 @@ def test_cdf_replication_replays_idempotently_after_sink_crash(spark,
     replica converges to the source head instead of double-applying —
     the replica's version history shows BOTH applications, the state
     shows one."""
-    from pyspark.sql import functions as F
-
+    from data_pipeline_stripe_spark.operators.snapshot_check import (
+        feed_changes)
     from data_pipeline_stripe_spark.operators.snapshots import (
         snapshot_apply_cdc, snapshot_commit, snapshot_current_version,
         snapshot_read)
@@ -1108,13 +1108,8 @@ def test_cdf_replication_replays_idempotently_after_sink_crash(spark,
                   .option("cdf", "true").load(src))
 
         def apply_batch(batch_df, epoch_id):
-            snapshot_apply_cdc(
-                spark, dst,
-                batch_df.select(
-                    "k", "v", F.col("_commit_version").alias("seq"),
-                    F.when(F.col("_change_type") == "D", F.lit("D"))
-                    .otherwise(F.lit("U")).alias("op")),
-                "k")
+            snapshot_apply_cdc(spark, dst, feed_changes(batch_df), "k",
+                               seq="_commit_version", op="_change_type")
             if crash_armed["armed"]:
                 crash_armed["armed"] = False
                 raise RuntimeError("injected crash AFTER apply, "
