@@ -146,11 +146,14 @@ per-day CSVs in a driver loop); this is beyond-reference surface.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 _SNAPDIR = "_snapshots"
 
@@ -1398,6 +1401,25 @@ def _resolve_version(table_dir: str, version: int | None,
 
 _DV_PATH_COL = "__dv_path"
 _DV_POS_COL = "__dv_pos"
+_DV_SCHEMA = "path string, pos long"  # of every deletion-vector file
+
+
+def _eq_delete_keys(spark: SparkSession, table_dir: str,
+                    desc: dict) -> DataFrame:
+    """The distinct keys of the equality-delete descriptor ``desc``,
+    read under the Spark schema its sidecar's own footer records — no
+    schema-inference job. Not the head schema: a sidecar written
+    before a key column widened keeps its narrower type."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    abs_dir = os.path.join(table_dir, desc["path"])
+    part = min(f for f in os.listdir(abs_dir) if f.endswith(".parquet"))
+    meta = pq.read_schema(os.path.join(abs_dir, part)).metadata
+    schema = StructType.fromJson(json.loads(
+        meta[b"org.apache.spark.sql.parquet.row.metadata"]))
+    return spark.read.schema(schema).parquet(abs_dir) \
+        .select(*desc["cols"]).dropDuplicates()
 
 
 def _read_entries(spark: SparkSession, table_dir: str,
@@ -1472,9 +1494,9 @@ def _read_entries(spark: SparkSession, table_dir: str,
         if dved:
             raw = with_meta([os.path.join(table_dir, e["path"])
                              for e in dved])
-            dv_df = spark.read.parquet(
+            dv_df = spark.read.schema(_DV_SCHEMA).parquet(
                 *sorted({os.path.join(table_dir, e["dv"]["path"])
-                         for e in dved})).select("path", "pos")
+                         for e in dved}))
             alive = raw.join(
                 F.broadcast(dv_df),
                 (raw[_DV_PATH_COL] == dv_df["path"])
@@ -1503,11 +1525,8 @@ def _read_entries(spark: SparkSession, table_dir: str,
         if df is None:
             continue
         for d in ds:
-            keys_df = spark.read.parquet(
-                os.path.join(table_dir, d["path"])) \
-                .select(*d["cols"]).dropDuplicates()
-            df = df.join(F.broadcast(keys_df), on=list(d["cols"]),
-                         how="left_anti")
+            df = df.join(F.broadcast(_eq_delete_keys(spark, table_dir, d)),
+                         on=list(d["cols"]), how="left_anti")
         outs.append(df)
     if not outs:
         from ..sources.readers import empty_frame
@@ -2665,9 +2684,18 @@ def snapshot_read_cdf(spark: SparkSession, table_dir: str,
     deletes) reproduces the ``to_version`` state exactly —
     ``operators/snapshot_check.py:check_replay`` asserts it. Deleted
     rows carry their pre-delete values; updates are logged only when a
-    value actually changed (``snapshot_diff`` semantics)."""
+    value actually changed (``snapshot_diff`` semantics).
+    ``from_version`` < 0 is refused: the CDF stream's default start
+    (-1) serves version 0's rows as 'I' first, which this range feed
+    never does; read version 0 plus the feed from 0 for that."""
     from pyspark.sql import functions as F
 
+    if from_version < 0:
+        raise ValueError(
+            f"snapshot_read_cdf: from_version {from_version} < 0 on "
+            f"{table_dir} — the feed starts after a committed version; "
+            "the CDF stream's initial load is version 0's "
+            "snapshot_read as 'I' rows plus snapshot_read_cdf(0, to)")
     to_v = (snapshot_current_version(table_dir)
             if to_version is None else to_version)
     if to_v is None or to_v < from_version:
@@ -2701,9 +2729,7 @@ def snapshot_read_cdf(spark: SparkSession, table_dir: str,
                 parent_m["schema"], eq_deletes=parent_m.get("eq_deletes"))
             dead: list[DataFrame] = []
             for d in uncovered:
-                keys_df = spark.read.parquet(
-                    os.path.join(table_dir, d["path"])) \
-                    .select(*d["cols"]).dropDuplicates()
+                keys_df = _eq_delete_keys(spark, table_dir, d)
                 dead.append(remaining.join(
                     F.broadcast(keys_df), on=list(d["cols"]),
                     how="left_semi"))
@@ -3485,15 +3511,15 @@ def snapshot_delete_where(spark: SparkSession, table_dir: str,
     old_dv_dirs = sorted({e["dv"]["path"] for e in dirty
                           if e.get("dv") and e["path"] in touched_paths})
     if old_dv_dirs:
-        old_rows = spark.read.parquet(
+        old_rows = spark.read.schema(_DV_SCHEMA).parquet(
             *[os.path.join(table_dir, p) for p in old_dv_dirs]) \
-            .select("path", "pos") \
             .filter(F.col("path").isin(*sorted(touched_paths)))
         new_dv = new_dv.unionByName(old_rows)
     new_dv.coalesce(1).write.mode("error").parquet(
         os.path.join(table_dir, dv_rel))
     total_counts = {r["path"]: r["n"] for r in
-                    spark.read.parquet(os.path.join(table_dir, dv_rel))
+                    spark.read.schema(_DV_SCHEMA)
+                    .parquet(os.path.join(table_dir, dv_rel))
                     .groupBy("path").agg(F.count(F.lit(1)).alias("n"))
                     .collect()}
     # fail CLOSED on any extraction mismatch: every DV path must name a
@@ -3553,8 +3579,8 @@ def _write_key_sidecar(spark: SparkSession, table_dir: str,
     (float min/max can silently exclude NaN rows). NULL keys are
     refused — an anti-join never matches NULL, so the key would delete
     or replace nothing; only a footer reporting a NULL (or no null
-    count) pays a Spark probe, to fetch the example row for
-    ``null_msg``."""
+    count) pays a Spark probe, logged at INFO, to fetch the example row
+    for ``null_msg``."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -3590,10 +3616,14 @@ def _write_key_sidecar(spark: SparkSession, table_dir: str,
         shutil.rmtree(abs_dir)
         return None
     if n_nulls != 0:
+        log.info("key sidecar %s of %s: a footer reports a NULL key or "
+                 "no null count; probing the sidecar with a Spark job",
+                 rel, table_dir)
         null_cond = F.lit(False)
         for c in key_cols:
             null_cond = null_cond | F.col(c).isNull()
-        bad = spark.read.parquet(abs_dir).filter(null_cond).first()
+        bad = spark.read.schema(keys.schema).parquet(abs_dir) \
+            .filter(null_cond).first()
         if bad is not None:
             raise ValueError(null_msg.format(row=bad.asDict()))
     return {"path": rel, "cols": key_cols, "rows": n_rows,
@@ -3639,7 +3669,9 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
     on top of it with nothing re-written — racing trickle CDC writers
     never abort each other. A pinned base keeps strict read-validation
     and aborts; every other conflict (e.g. an expire swept an
-    unpublished sidecar) re-raises.
+    unpublished sidecar) re-raises. Each re-derivation logs one INFO
+    line (verb, table, the version the head moved to). The written
+    rows are read back under ``rows.schema``, with no inference job.
 
     Returns (version, rows appended, covered keys, delete keys); an
     epoch replay or an empty batch returns (head, 0, 0, 0)."""
@@ -3687,7 +3719,7 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
             shutil.rmtree(os.path.join(table_dir, data_rel))
             rows, entries = None, []
         else:
-            written = spark.read.parquet(
+            written = spark.read.schema(rows.schema).parquet(
                 os.path.join(table_dir, data_rel)).select(*key_cols)
             desc = _write_key_sidecar(
                 spark, table_dir,
@@ -3729,6 +3761,9 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
             if pinned or not any(s in str(exc) for s in _HEAD_MOVED):
                 raise
         base_version = snapshot_current_version(table_dir)
+        log.info("%s: %s moved to version %d under the commit; "
+                 "re-deriving it on the new head", verb, table_dir,
+                 base_version)
         manifest = _read_manifest_meta(table_dir, base_version)
         check(manifest, rows)
     raise SnapshotConflictError(
@@ -3824,6 +3859,13 @@ def snapshot_upsert_keys(spark: SparkSession, table_dir: str,
     return version, {"rows": n_rows, "keys": n_keys}
 
 
+def _provably_empty(df: DataFrame) -> bool:
+    """Whether the optimizer bounds ``df`` to zero rows (e.g. a filter
+    folded against a literal), decided on the driver with no job."""
+    bound = df._jdf.queryExecution().optimizedPlan().maxRows()
+    return bound.isDefined() and bound.get() == 0
+
+
 def snapshot_apply_cdc_mor(spark: SparkSession, table_dir: str,
                            changes: DataFrame, key,
                            seq: str = "seq", op: str = "op",
@@ -3856,9 +3898,26 @@ def snapshot_apply_cdc_mor(spark: SparkSession, table_dir: str,
     ``_mor_commit``'s — NULL change keys and key columns the table
     lacks are refused, ``epoch_key`` gives the exactly-once replay
     no-op. An empty batch is a no-op returning the current version.
-    Returns (version, {"upserts": n, "deletes": n})."""
+
+    The change input is evaluated ONCE. When the optimizer proves one
+    side empty (literal ops, e.g. a deletes-only batch) only the other
+    side is written, straight from the input. Otherwise the U write and
+    the D-key sidecar would each re-run the winner window and re-scan
+    the input (a streaming source re-reads its micro-batch), so the
+    winners are a lazy ``localCheckpoint``, filled by the first write
+    and read by the second. The trade-off: its blocks live in executor
+    storage with no lineage to recompute them. Spark's ContextCleaner
+    releases them once the frame is unreachable; a lost executor fails
+    this apply, the stream re-runs the epoch, and ``epoch_key`` makes an
+    already-committed epoch a no-op. A U side that writes no rows is
+    discarded by the commit (its schema is still checked against the
+    table). Returns (version, {"upserts": n, "deletes": n})."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
+
+    def split(last: DataFrame) -> tuple[DataFrame, DataFrame]:
+        return (last.filter(F.col(op) == "U").drop(op),
+                last.filter(F.col(op) == "D"))
 
     def winners(key_cols: list[str]):
         for c in (seq, op):
@@ -3878,9 +3937,13 @@ def snapshot_apply_cdc_mor(spark: SparkSession, table_dir: str,
                           "'D', got "),
                     F.coalesce(F.col(op), F.lit("NULL")))),
             ).otherwise(F.col(op)))
-        ups = last.filter(F.col(op) == "U").drop(op)
-        return (None if ups.isEmpty() else ups,
-                last.filter(F.col(op) == "D"))
+        ups, dels = split(last)
+        if _provably_empty(ups):
+            return None, dels
+        if _provably_empty(dels):
+            return ups, None
+        # both sides are written: evaluate the winners once for the two
+        return split(last.localCheckpoint(eager=False))
 
     version, n_up, _, n_del = _mor_commit(
         spark, table_dir, "snapshot_apply_cdc_mor", key, base_version,

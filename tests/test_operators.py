@@ -4503,15 +4503,34 @@ def test_compact_only_files_with_deletes(spark, tmp_path):
     assert (v2, b2, a2) == (v, 2, 2)
 
 
+def test_snapshot_read_cdf_refuses_negative_from_version(spark, tmp_path):
+    """-1 is the CDF stream's initial-load start, not a batch range: the
+    batch feed used to serve (0, head] without version 0's rows. It is
+    refused, naming the initial load's equivalent."""
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = _mor_table(spark, str(tmp_path / "t"))
+    S.snapshot_delete_keys(spark, t, spark.createDataFrame(
+        [(3,)], "k long"), "k")
+    with pytest.raises(ValueError, match=r"initial load is version 0's "
+                       r"snapshot_read as 'I' rows plus "
+                       r"snapshot_read_cdf\(0, to\)"):
+        S.snapshot_read_cdf(spark, t, -1)
+    assert S.snapshot_read_cdf(spark, t, 0).count() == 1
+
+
 def test_trickle_cdc_verbs_rederive_on_interleaved_rewrite(
-        spark, tmp_path):
+        spark, tmp_path, caplog):
     """Lock-free trickle writers (r13 second half — the re-derive loop
     in _mor_commit): an UNPINNED snapshot_delete_keys /
     snapshot_upsert_keys whose publish loses the race to an
     interleaved REWRITE (here: another equality delete, injected
     between the manifest read and the publish) re-derives on the
-    moved head and lands — BOTH changes applied, the serial order.
+    moved head and lands — BOTH changes applied, the serial order —
+    and logs one line naming the verb, the table and the moved head.
     A PINNED base_version keeps strict read-validation and aborts."""
+    import logging
+
     import pytest
     from pyspark.sql import functions as F
 
@@ -4536,11 +4555,16 @@ def test_trickle_cdc_verbs_rederive_on_interleaved_rewrite(
 
     S._publish_commit = racy_publish
     try:
-        v, info = S.snapshot_delete_keys(
-            spark, t, spark.createDataFrame([(3,)], "k long"), "k")
+        with caplog.at_level(logging.INFO, logger=S.__name__):
+            v, info = S.snapshot_delete_keys(
+                spark, t, spark.createDataFrame([(3,)], "k long"), "k")
     finally:
         S._publish_commit = real_publish
     assert fired["n"] == 1
+    assert [r.getMessage() for r in caplog.records
+            if "re-deriving" in r.getMessage()] == [
+        f"snapshot_delete_keys: {t} moved to version 1 under the "
+        "commit; re-deriving it on the new head"]
     got = {r.k for r in S.snapshot_read(spark, t).collect()}
     assert got == set(range(50)) - {3, 7}  # BOTH deletes applied
 
@@ -4608,22 +4632,40 @@ def _cdc(spark, ks, op):
         F.lit(1).alias("seq"), F.lit(op).alias("op"))
 
 
+def _stream_cdc(spark, ks, path):
+    """CDC changes shaped like a stream's micro-batch: a file scan whose
+    op comes from the data (every third key deleted), so the optimizer
+    cannot prove either side of the apply empty. Read under its known
+    schema: opening it runs no job."""
+    from pyspark.sql import functions as F
+
+    df = _cdc(spark, ks, "U").withColumn(
+        "op", F.when(F.col("k") % 3 == 0, "D").otherwise("U"))
+    df.write.parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
+
+
 @pytest.mark.parametrize("verb, budget", [
-    ("upsert_keys", 4),
+    ("upsert_keys", 3),
     ("delete_keys", 1),
-    ("apply_cdc_mor_upserts", 5),
+    ("apply_cdc_mor_upserts", 2),
     ("apply_cdc_mor_deletes", 1),
-    ("apply_cdc_mor_both", 8),
+    ("apply_cdc_mor_both", 4),
+    ("apply_cdc_mor_stream", 4),
 ])
 def test_trickle_cdc_verb_job_budget(spark, tmp_path, verb, budget):
     """Spark jobs per call of the merge-on-read verbs stay within their
-    budget. The upserts-only apply pays no probe on its empty delete
-    sidecar (7 jobs before the shared sidecar writer, now 5)."""
+    budget. An apply whose literal ops let the optimizer prove one side
+    empty writes only the other side; one with both sides evaluates its
+    winners once (a local checkpoint) for the two writes. The written
+    rows are read back under their known schema (no inference job)."""
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
 
     t = _mor_table(spark, str(tmp_path / "t"))
+    stream = (_stream_cdc(spark, (10, 40), str(tmp_path / "changes"))
+              if verb == "apply_cdc_mor_stream" else None)
     calls = {
         "upsert_keys": lambda: S.snapshot_upsert_keys(
             spark, t, _cdc(spark, (10, 20), "U").select("k", "v"), "k"),
@@ -4636,6 +4678,8 @@ def test_trickle_cdc_verb_job_budget(spark, tmp_path, verb, budget):
         "apply_cdc_mor_both": lambda: S.snapshot_apply_cdc_mor(
             spark, t, _cdc(spark, (10, 20), "U").unionByName(
                 _cdc(spark, (50, 55), "D")), "k"),
+        "apply_cdc_mor_stream": lambda: S.snapshot_apply_cdc_mor(
+            spark, t, stream, "k"),
     }
     (version, _), jobs = _spark_jobs(spark, calls[verb])
     assert version == 1
@@ -4645,6 +4689,62 @@ def test_trickle_cdc_verb_job_budget(spark, tmp_path, verb, budget):
     assert sorted(os.path.join("eqdel", d)
                   for d in os.listdir(os.path.join(t, "eqdel"))) \
         == sorted(d["path"] for d in m["eq_deletes"])
+
+
+def test_apply_cdc_mor_evaluates_its_changes_once(spark, tmp_path):
+    """The U write and the D-key sidecar of a two-sided apply read one
+    evaluation of the change input: a Python UDF on the key counts each
+    input row once (three times before the winners were checkpointed),
+    and the replica holds the applied changes."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = _mor_table(spark, str(tmp_path / "t"))
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(k):
+        seen.add(1)
+        return k
+
+    changes = _stream_cdc(
+        spark, (10, 40), str(tmp_path / "changes")).withColumn(
+        "k", F.udf(count, LongType())("k"))
+    version, info = S.snapshot_apply_cdc_mor(spark, t, changes, "k")
+    assert seen.value == 30
+    assert (version, info) == (1, {"upserts": 20, "deletes": 10})
+    got = {r.k: r.v for r in S.snapshot_read(spark, t).collect()}
+    assert got == {k: (k * 10 if k < 10 or k >= 40 else k * 7)
+                   for k in range(100) if not (10 <= k < 40 and k % 3 == 0)}
+
+
+def test_snapshot_read_plans_eq_deletes_without_jobs(spark, tmp_path):
+    """Planning a read over equality-delete sidecars runs no Spark job:
+    each sidecar is opened under the schema its own footer records, not
+    inferred. A sidecar written before the key column widened keeps its
+    narrower type and still deletes."""
+    from pyspark.sql import functions as F
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = str(tmp_path / "t")
+    S.snapshot_commit(spark, t, spark.range(100).select(
+        F.col("id").cast("int").alias("k")).coalesce(1))
+    for k in range(5):
+        S.snapshot_delete_keys(spark, t, spark.createDataFrame(
+            [(k,)], "k int"), "k")
+    df, jobs = _spark_jobs(spark, lambda: S.snapshot_read(spark, t))
+    assert jobs == 0
+    assert sorted(r.k for r in df.collect()) == list(range(5, 100))
+
+    S.snapshot_commit(spark, t, spark.createDataFrame(
+        [(2**40,)], "k long"))  # widens k to long
+    S.snapshot_delete_keys(spark, t, spark.createDataFrame(
+        [(99,)], "k long"), "k")
+    df, jobs = _spark_jobs(spark, lambda: S.snapshot_read(spark, t))
+    assert jobs == 0
+    assert sorted(r.k for r in df.collect()) == list(range(5, 99)) + [2**40]
 
 
 @pytest.mark.parametrize("constrained", [False, True])
