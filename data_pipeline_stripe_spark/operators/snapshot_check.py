@@ -1,12 +1,15 @@
 """Change-feed checks for snapshot tables (operators/snapshots.py): the
-three laws a gate, a test or an interleaving harness asserts after a
+four laws a gate, a test or an interleaving harness asserts after a
 run of commits, each written once.
 
+- ``check_stream``: what a ``snapshot_table`` stream, plain or CDF,
+  wrote to its parquet sink over ``(from, to]`` equals the batch read
+  over the same range as a multiset (Structured Streaming, SIGMOD'18:
+  a stream's output equals the batch query over the same prefix).
 - ``check_replay``: applying the change feed over ``(from, to]`` to the
   ``from`` state reproduces the ``to`` state. A stream's sink output
   is checked the same way, after it is shown equal to the batch feed
-  over the same range (Structured Streaming, SIGMOD'18: a stream's
-  output equals the batch query over the same prefix).
+  over the same range, as ``check_stream`` does.
 - ``check_feed``: the feed over a range holds exactly the expected
   number of rows per change type.
 - ``check_carried``: a copy-on-write rewrite carried exactly ``n`` base
@@ -19,13 +22,16 @@ Each check raises ``RuntimeError`` naming the caller's ``context``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import empty_frame
 from .merge import apply_cdc
 from .snapshots import (_read_manifest, snapshot_current_version,
-                        snapshot_read, snapshot_read_cdf)
+                        snapshot_read, snapshot_read_cdf,
+                        snapshot_read_incremental)
 
 
 def frames_differ(a: DataFrame, b: DataFrame) -> bool:
@@ -64,6 +70,48 @@ def _batch_feed(spark: SparkSession, table_dir: str, from_version: int,
         allowMissingColumns=True)
 
 
+def _check_streamed(streamed: DataFrame, twin: DataFrame, noun: str,
+                    from_version: int, to_version: int,
+                    context: str) -> None:
+    """Raise unless the ``streamed`` rows equal their batch ``twin``
+    over ``(from_version, to_version]`` as a multiset."""
+    if frames_differ(streamed, twin.select(*streamed.columns)):
+        raise RuntimeError(
+            f"{context}: the streamed {noun} over ({from_version}, "
+            f"{to_version}] differs from the batch {noun} over the same "
+            "range")
+
+
+def check_stream(spark: SparkSession, table_dir: str, out_dir: str,
+                 from_version: int, to_version: int | None = None, *,
+                 cdf: bool = False, context: str) -> DataFrame:
+    """Raise unless the parquet sink ``out_dir`` of a ``snapshot_table``
+    stream that consumed ``(from_version, to_version]`` (default: the
+    head) holds exactly the batch twin's rows, as a multiset. The plain
+    twin is ``snapshot_read(to_version)`` from -1 (the stream's initial
+    load serves the live state) and ``snapshot_read_incremental``
+    otherwise; the CDF twin is the batch feed over the range, from -1
+    with version 0's rows as 'I'. The sink is read under the twin's
+    schema, so no inference job; a sink with no parquet file holds 0
+    rows. Returns the sink's rows."""
+    to_v = (snapshot_current_version(table_dir) if to_version is None
+            else to_version)
+    if cdf:
+        twin = _batch_feed(spark, table_dir, from_version, to_v)
+    elif from_version < 0:
+        twin = snapshot_read(spark, table_dir, version=to_v)
+    else:
+        twin = snapshot_read_incremental(spark, table_dir, from_version,
+                                         to_v)
+    written = os.path.isdir(out_dir) and any(
+        f.endswith(".parquet") for f in os.listdir(out_dir))
+    sink = (spark.read.schema(twin.schema).parquet(out_dir) if written
+            else empty_frame(spark, twin.schema))
+    _check_streamed(sink, twin, "change feed" if cdf else "read",
+                    from_version, to_v, context)
+    return sink
+
+
 def check_replay(spark: SparkSession, table_dir: str, key,
                  from_version: int, to_version: int | None = None, *,
                  feed: DataFrame | None = None,
@@ -72,7 +120,8 @@ def check_replay(spark: SparkSession, table_dir: str, key,
     (default: the head) onto the ``from_version`` state and raise unless
     the result equals ``snapshot_read(to_version)`` as a multiset.
     ``key`` may be composite. ``feed`` is a stream's sink output over
-    that range; it must first equal the batch feed over the same range.
+    that range; it must first equal the batch feed over the same range
+    (``check_stream``'s comparison).
     ``from_version`` -1 is the stream's default start: the base is then
     empty, with the head's schema. Returns the replayed rows (table
     columns), so a gate can hash them."""
@@ -81,10 +130,9 @@ def check_replay(spark: SparkSession, table_dir: str, key,
     batch = _batch_feed(spark, table_dir, from_version, to_v)
     if feed is None:
         feed = batch
-    elif frames_differ(feed, batch.select(*feed.columns)):
-        raise RuntimeError(
-            f"{context}: the streamed change feed over ({from_version}, "
-            f"{to_v}] differs from the batch feed over the same range")
+    else:
+        _check_streamed(feed, batch, "change feed", from_version, to_v,
+                        context)
     head = snapshot_read(spark, table_dir, version=to_v)
     base = (empty_frame(spark, head.schema) if from_version < 0
             else snapshot_read(spark, table_dir, version=from_version))
@@ -105,8 +153,9 @@ def check_feed(spark: SparkSession, table_dir: str, from_version: int,
     exactly ``expect`` rows per change type (``{"D": n}``; a type not
     named means 0). The count is one Spark job: the feed is coalesced
     into one partition, so the grouping needs no shuffle. Building the
-    feed may add its own (a change log's schema read, an equality
-    delete's broadcast keys). Returns the feed."""
+    feed runs none (a change log is read under the schema its footer
+    records); an equality delete's broadcast keys add their own at the
+    count. Returns the feed."""
     feed = snapshot_read_cdf(spark, table_dir, from_version, to_version)
     got = {r["_change_type"]: r["count"] for r in
            feed.coalesce(1).groupBy("_change_type").count().collect()}

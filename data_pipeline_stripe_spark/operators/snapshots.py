@@ -669,6 +669,15 @@ def _epoch_sort_key(key: str):
         return (1, 0, key)
 
 
+def _epoch_applied(manifest: dict, epoch_key: str | None) -> bool:
+    """True when ``manifest`` already records ``epoch_key``: the key is
+    at or below its ``last_epoch`` (``_epoch_sort_key`` order), so an
+    epoch-keyed commit of it is a replay and must not apply again."""
+    last = manifest.get("last_epoch")
+    return (epoch_key is not None and last is not None
+            and _epoch_sort_key(epoch_key) <= _epoch_sort_key(last))
+
+
 def _json_stat(value):
     """Parquet footer stat → JSON-storable scalar, or None when the
     value has no faithful JSON form (then the column is simply not
@@ -937,11 +946,10 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
             f"snapshot_commit: {table_dir} moved to version {early_prev} "
             f"but this commit was derived from a read of version "
             f"{expected_version} — re-read and re-derive")
-    if epoch_key is not None and early_prev is not None:
-        last = _read_manifest_meta(table_dir, early_prev).get("last_epoch")
-        if last is not None and (
-                _epoch_sort_key(epoch_key) <= _epoch_sort_key(last)):
-            return early_prev  # replayed / stale epoch: already applied
+    if epoch_key is not None and early_prev is not None and (
+            _epoch_applied(_read_manifest_meta(table_dir, early_prev),
+                           epoch_key)):
+        return early_prev  # replayed / stale epoch: already applied
     if mode == "append" and early_prev is not None:
         # raises on a type-incompatible append before the data write
         _evolved_schema_json(
@@ -1135,11 +1143,8 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
             # (concurrent snapshot_expire under fast-moving writers) —
             # not a commit failure: re-resolve current and retry
             continue
-        if epoch_key is not None:
-            last = prev_manifest.get("last_epoch")
-            if last is not None and (
-                    _epoch_sort_key(epoch_key) <= _epoch_sort_key(last)):
-                return prev  # a racing writer applied this epoch first
+        if _epoch_applied(prev_manifest, epoch_key):
+            return prev  # a racing writer applied this epoch first
         if mode == "append" and prev is not None:
             # extra_segments: ALREADY-SERIALIZED descriptors appended
             # by reference (fast-forward of an append-only branch) —
@@ -1404,21 +1409,29 @@ _DV_POS_COL = "__dv_pos"
 _DV_SCHEMA = "path string, pos long"  # of every deletion-vector file
 
 
-def _eq_delete_keys(spark: SparkSession, table_dir: str,
-                    desc: dict) -> DataFrame:
-    """The distinct keys of the equality-delete descriptor ``desc``,
-    read under the Spark schema its sidecar's own footer records — no
-    schema-inference job. Not the head schema: a sidecar written
-    before a key column widened keeps its narrower type."""
+def _footer_schema(abs_dir: str):
+    """The Spark schema recorded in the footer of the first parquet
+    file of ``abs_dir`` (a directory one Spark write filled, so every
+    file shares it): reading under it costs no schema-inference job.
+    Used for the files whose schema no manifest records — key
+    sidecars and change logs."""
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    abs_dir = os.path.join(table_dir, desc["path"])
     part = min(f for f in os.listdir(abs_dir) if f.endswith(".parquet"))
     meta = pq.read_schema(os.path.join(abs_dir, part)).metadata
-    schema = StructType.fromJson(json.loads(
+    return StructType.fromJson(json.loads(
         meta[b"org.apache.spark.sql.parquet.row.metadata"]))
-    return spark.read.schema(schema).parquet(abs_dir) \
+
+
+def _eq_delete_keys(spark: SparkSession, table_dir: str,
+                    desc: dict) -> DataFrame:
+    """The distinct keys of the equality-delete descriptor ``desc``,
+    read under the schema its sidecar's own footer records. Not the
+    head schema: a sidecar written before a key column widened keeps
+    its narrower type."""
+    abs_dir = os.path.join(table_dir, desc["path"])
+    return spark.read.schema(_footer_schema(abs_dir)).parquet(abs_dir) \
         .select(*desc["cols"]).dropDuplicates()
 
 
@@ -2717,8 +2730,9 @@ def snapshot_read_cdf(spark: SparkSession, table_dir: str,
         if kind == "log":
             if not items:
                 continue  # layout-only commit (compaction): zero changes
-            f = spark.read.parquet(
-                *[os.path.join(table_dir, e["path"]) for e in items])
+            paths = [os.path.join(table_dir, e["path"]) for e in items]
+            f = spark.read.schema(
+                _footer_schema(os.path.dirname(paths[0]))).parquet(*paths)
         elif kind == "D":
             # the parent's live rows the commit's uncovered descriptors
             # match, folded descriptor-by-descriptor so a row matched
@@ -3689,9 +3703,7 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
         raise ValueError(f"{verb}: {table_dir} has no commits — use "
                          "snapshot_commit for the initial load")
     manifest = _read_manifest_meta(table_dir, base_version)
-    last = manifest.get("last_epoch")
-    if epoch_key is not None and last is not None and (
-            _epoch_sort_key(epoch_key) <= _epoch_sort_key(last)):
+    if _epoch_applied(manifest, epoch_key):
         return base_version, 0, 0, 0
 
     def check(m: dict, rows: DataFrame | None) -> None:

@@ -14,6 +14,12 @@ source's oldest-first order), consumed one per trigger — 4 real
 micro-batches. In production that line is a kafka/kinesis source; the
 stateful operator and the sink are what is under test and are
 production-shaped (foreachBatch parquet sink, availableNow drain).
+
+Every gate runs its streams through one drain (streaming/events.py:
+``drain`` — foreachBatch, an availableNow or processing-time trigger,
+run until caught up, then stop), and the ``snapshot_table`` source gates
+check each sink against the batch read over the same range with
+``check_stream`` (operators/snapshot_check.py).
 """
 
 from __future__ import annotations
@@ -25,10 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..operators.snapshot_check import (check_replay, feed_changes,
-                                        frames_differ)
+from ..operators.snapshot_check import (check_replay, check_stream,
+                                        feed_changes, frames_differ)
 from ..sources import load_table
 from ..sources.readers import empty_frame, inline_dim
+from ..streaming.events import drain
 from .io_roundtrip import _orders_kpc, _scratch
 from .registry import query
 
@@ -112,6 +119,15 @@ def _four_batch_events_dir(sf_dir: str, scratch: str,
     return in_dir
 
 
+def _append_to(out_dir: str):
+    """A ``foreachBatch`` sink appending each micro-batch to the parquet
+    directory ``out_dir``."""
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_df.write.mode("append").parquet(out_dir)
+
+    return sink
+
+
 @query(
     "stream_dedup_parity",
     oracle="""
@@ -156,18 +172,7 @@ def stream_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="10 days",
     )
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = (
-        deduped.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(scratch, "_ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    drain(deduped, _append_to(out_dir), os.path.join(scratch, "_ckpt"))
 
     return (
         spark.read.parquet(out_dir)
@@ -222,18 +227,8 @@ def stateful_totals_stream_parity(spark: SparkSession,
         )
     )
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = (
-        totals.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(scratch, "_ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    drain(totals, _append_to(out_dir), os.path.join(scratch, "_ckpt"),
+          output_mode="update")
 
     emitted = spark.read.parquet(out_dir)
     last = W.partitionBy("event_type").orderBy(F.col("n_events").desc())
@@ -293,18 +288,7 @@ def stream_attribution_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchases, clicks, attribution_window="2 days", watermark="1 hour"
     )
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(scratch, "_ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    drain(joined, _append_to(out_dir), os.path.join(scratch, "_ckpt"))
 
     return spark.read.parquet(out_dir).select(
         F.col("purchase_id").cast("long").alias("purchase_id"),
@@ -360,18 +344,7 @@ def stream_session_window_parity(spark: SparkSession,
         gap="1 day", watermark="2 hours",
     )
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = (
-        sess.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(scratch, "_ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    drain(sess, _append_to(out_dir), os.path.join(scratch, "_ckpt"))
 
     return (
         spark.read.parquet(out_dir)
@@ -432,7 +405,15 @@ def stream_restart_recovery_parity(spark: SparkSession,
     ckpt = os.path.join(scratch, "_ckpt")
     marker = os.path.join(scratch, "crashed_once")
 
-    def start_drain():
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        if epoch_id >= 2 and not os.path.exists(marker):
+            with open(marker, "w") as fh:
+                fh.write(str(epoch_id))
+            raise RuntimeError(
+                f"injected crash before epoch {epoch_id} wrote")
+        batch_df.write.mode("append").parquet(out_dir)
+
+    def run() -> None:
         totals = stateful_running_totals(
             read_event_stream(spark, in_dir, max_files_per_trigger=1)
             .withColumn(
@@ -440,28 +421,11 @@ def stream_restart_recovery_parity(spark: SparkSession,
                 F.round(F.col("value") * 100).cast("long").cast("double"),
             )
         )
+        drain(totals, sink, ckpt, output_mode="update")
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            if epoch_id >= 2 and not os.path.exists(marker):
-                with open(marker, "w") as fh:
-                    fh.write(str(epoch_id))
-                raise RuntimeError(
-                    f"injected crash before epoch {epoch_id} wrote")
-            batch_df.write.mode("append").parquet(out_dir)
-
-        return (
-            totals.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    q1 = start_drain()
     first_err = None
     try:
-        q1.processAllAvailable()
-        q1.stop()
+        run()
     except Exception as exc:  # expected: the injected crash
         first_err = exc
     if not os.path.exists(marker):
@@ -472,9 +436,7 @@ def stream_restart_recovery_parity(spark: SparkSession,
             "fired (fewer than 3 micro-batches?) — the gate would prove "
             "nothing; fix the scaffold") from first_err
 
-    q2 = start_drain()  # NEW query object, SAME checkpoint
-    q2.processAllAvailable()
-    q2.stop()
+    run()  # NEW query object, SAME checkpoint
 
     emitted = spark.read.parquet(out_dir)
     last = W.partitionBy("event_type").orderBy(F.col("n_events").desc())
@@ -524,32 +486,23 @@ def stream_snapshot_sink_parity(spark: SparkSession,
     ckpt = os.path.join(scratch, "_ckpt")
     marker = os.path.join(scratch, "crashed_once")
 
-    def start_drain():
-        stream = read_event_stream(spark, in_dir, max_files_per_trigger=1)
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        snapshot_commit(spark, table_dir,
+                        batch_df.select("event_type", "value"),
+                        mode="append", epoch_key=str(epoch_id))
+        if epoch_id >= 2 and not os.path.exists(marker):
+            with open(marker, "w") as fh:
+                fh.write(str(epoch_id))
+            raise RuntimeError(
+                f"injected crash AFTER epoch {epoch_id} committed")
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            snapshot_commit(spark, table_dir,
-                            batch_df.select("event_type", "value"),
-                            mode="append", epoch_key=str(epoch_id))
-            if epoch_id >= 2 and not os.path.exists(marker):
-                with open(marker, "w") as fh:
-                    fh.write(str(epoch_id))
-                raise RuntimeError(
-                    f"injected crash AFTER epoch {epoch_id} committed")
+    def run() -> None:
+        drain(read_event_stream(spark, in_dir, max_files_per_trigger=1),
+              sink, ckpt)
 
-        return (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    q1 = start_drain()
     first_err = None
     try:
-        q1.processAllAvailable()
-        q1.stop()
+        run()
     except Exception as exc:  # expected: the injected crash
         first_err = exc
     if not os.path.exists(marker):
@@ -559,9 +512,7 @@ def stream_snapshot_sink_parity(spark: SparkSession,
             "— the replay window was not exercised; fix the scaffold"
         ) from first_err
 
-    q2 = start_drain()  # replays epoch 2 → idempotent no-op, then 3
-    q2.processAllAvailable()
-    q2.stop()
+    run()  # replays epoch 2 → idempotent no-op, then 3
 
     return (
         snapshot_read(spark, table_dir)
@@ -598,8 +549,6 @@ def stream_snapshot_source_parity(spark: SparkSession,
     version. The final sink hash-matches the whole events fixture only
     if every version's rows arrived exactly once across the restart
     boundary."""
-    import glob
-
     from ..operators.snapshots import snapshot_commit
     from ..sources.snapshot_source import register_snapshot_source
 
@@ -622,47 +571,20 @@ def stream_snapshot_source_parity(spark: SparkSession,
         ev.filter((F.col("day") >= c1) & (F.col("day") < c2)),
         mode="append")
 
-    def drain() -> None:
-        stream = spark.readStream.format("snapshot_table").load(table_dir)
+    def run(label: str) -> DataFrame:
+        drain(spark.readStream.format("snapshot_table").load(table_dir),
+              _append_to(out_dir), ckpt)
+        return check_stream(
+            spark, table_dir, out_dir, -1,
+            context=f"stream_snapshot_source_parity[{label}]")
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    drain()
-    expect1 = ev.filter(F.col("day") < c2).count()
-    got1 = (spark.read.parquet(out_dir).count()
-            if glob.glob(os.path.join(out_dir, "*.parquet")) else 0)
-    if got1 != expect1:
-        raise RuntimeError(
-            f"stream_snapshot_source_parity: first drain served {got1} "
-            f"rows, expected {expect1} (versions 0-1)")
-
+    run("first")
     # a new version lands while NO stream is running; the restarted
     # query must consume exactly its delta from the checkpointed offset
     snapshot_commit(spark, table_dir, ev.filter(F.col("day") >= c2),
                     mode="append")
-    drain()
-    total = ev.count()
-    got2 = spark.read.parquet(out_dir).count()
-    if got2 != total:
-        raise RuntimeError(
-            f"stream_snapshot_source_parity: after restart the sink "
-            f"holds {got2} rows, expected {total} — "
-            + ("the restarted drain re-read already-consumed versions"
-               if got2 > total else "the delta was lost"))
-
     return (
-        spark.read.parquet(out_dir)
+        run("restart")
         .groupBy("event_type")
         .agg(F.count("*").alias("n_events"),
              F.sum("cents").alias("total_value_cents"))
@@ -706,8 +628,6 @@ def stream_snapshot_cdf_source_parity(spark: SparkSession,
     against the oracle's direct computation — a feed that drops a
     delete, double-serves an insert, or loses a pre-delete value
     cannot reproduce the head table."""
-    import glob
-
     from ..operators.snapshots import snapshot_apply_cdc, snapshot_commit
     from ..sources.snapshot_source import register_snapshot_source
 
@@ -730,31 +650,14 @@ def stream_snapshot_cdf_source_parity(spark: SparkSession,
                     ev.filter(F.col("slot") == 1).drop("slot"),
                     mode="append")
 
-    def drain() -> None:
-        stream = (spark.readStream.format("snapshot_table")
-                  .option("cdf", "true").load(table_dir))
+    def run() -> None:
+        drain(spark.readStream.format("snapshot_table")
+              .option("cdf", "true").load(table_dir),
+              _append_to(out_dir), ckpt)
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    drain()
-    base_rows = ev.filter(F.col("slot") < 2).count()
-    got1 = (spark.read.parquet(out_dir).count()
-            if glob.glob(os.path.join(out_dir, "*.parquet")) else 0)
-    if got1 != base_rows:
-        raise RuntimeError(
-            f"stream_snapshot_cdf_source_parity: first drain served "
-            f"{got1} change rows, expected {base_rows} 'I' rows")
+    run()
+    check_stream(spark, table_dir, out_dir, -1, cdf=True,
+                 context="stream_snapshot_cdf_source_parity[first]")
 
     # while NO stream runs: one CDC commit (row-level updates + DELETES
     # — a rewrite the plain source would refuse) and one append
@@ -771,7 +674,7 @@ def stream_snapshot_cdf_source_parity(spark: SparkSession,
     snapshot_commit(spark, table_dir,
                     ev.filter(F.col("slot") == 2).drop("slot"),
                     mode="append")
-    drain()
+    run()
 
     feed = spark.read.parquet(out_dir)
     n_deleted = feed.filter(F.col("_change_type") == "D").count()
@@ -846,8 +749,6 @@ def stream_cdf_equality_delete_parity(spark: SparkSession,
     must equal the batch feed over the same range and, replayed over
     an empty base (``check_replay``), reproduce the head table, which
     the oracle restates directly."""
-    import glob
-
     from ..operators.snapshots import snapshot_commit, snapshot_delete_keys
     from ..sources.snapshot_source import register_snapshot_source
 
@@ -870,29 +771,14 @@ def stream_cdf_equality_delete_parity(spark: SparkSession,
                     ev.filter(F.col("slot") == 1).drop("slot"),
                     mode="append")                               # v1
 
-    def drain() -> None:
-        stream = (spark.readStream.format("snapshot_table")
-                  .option("cdf", "true").load(table_dir))
+    def run() -> None:
+        drain(spark.readStream.format("snapshot_table")
+              .option("cdf", "true").load(table_dir),
+              _append_to(out_dir), ckpt)
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (stream.writeStream.outputMode("append")
-             .foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.processAllAvailable()
-        q.stop()
-
-    drain()
-    base_rows = ev.filter(F.col("slot") < 2).count()
-    got1 = (spark.read.parquet(out_dir).count()
-            if glob.glob(os.path.join(out_dir, "*.parquet")) else 0)
-    if got1 != base_rows:
-        raise RuntimeError(
-            f"stream_cdf_equality_delete_parity: first drain served "
-            f"{got1} change rows, expected {base_rows} 'I' rows")
+    run()
+    check_stream(spark, table_dir, out_dir, -1, cdf=True,
+                 context="stream_cdf_equality_delete_parity[first]")
 
     # while NO stream runs: delete #1, append, delete #2, re-insert
     k7 = ev.filter(F.pmod(F.col("k"), F.lit(7)) == 3).select("k") \
@@ -909,7 +795,7 @@ def stream_cdf_equality_delete_parity(spark: SparkSession,
         .select("k", "event_type",
                 (F.col("cents") * 10 + 5).alias("cents"))
     snapshot_commit(spark, table_dir, reins, mode="append")      # v5
-    drain()
+    run()
 
     feed = spark.read.parquet(out_dir)
     # per-version D pins: delete #1 touches slots 0/1 only; delete #2
@@ -966,10 +852,10 @@ def stream_snapshot_replication_parity(spark: SparkSession,
     NO stream runs, A takes a scoped MERGE with WHEN NOT MATCHED BY
     SOURCE DELETE (updates + row-level deletes) and a fresh append; the
     restarted drain must carry B to A's exact head state from the
-    checkpoint — the query raises if row counts diverge after either
-    drain. The hash gates B's final rows against the oracle's direct
-    reconstruction, so a dropped delete, a double-applied update, or a
-    lost insert flips it. Replication is naturally idempotent: re-
+    checkpoint — the query raises if B's rows differ from A's head
+    after either drain. The hash gates B's final rows against the
+    oracle's direct reconstruction, so a dropped delete, a
+    double-applied update, or a lost insert flips it. Replication is naturally idempotent: re-
     applying a replayed batch upserts the same values and re-deletes
     absent keys."""
     from ..operators.snapshots import (snapshot_apply_cdc, snapshot_commit,
@@ -995,31 +881,20 @@ def stream_snapshot_replication_parity(spark: SparkSession,
         empty_frame(spark, "k long, pri string, cents long"),
         mode="append")
 
-    def drain() -> None:
-        stream = (spark.readStream.format("snapshot_table")
-                  .option("cdf", "true").load(src_dir))
+    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        snapshot_apply_cdc(spark, dst_dir, feed_changes(batch_df), "k",
+                           seq="_commit_version", op="_change_type")
 
-        def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            snapshot_apply_cdc(spark, dst_dir, feed_changes(batch_df), "k",
-                               seq="_commit_version", op="_change_type")
+    def replicate(label: str) -> None:
+        drain(spark.readStream.format("snapshot_table")
+              .option("cdf", "true").load(src_dir), apply_batch, ckpt)
+        if frames_differ(snapshot_read(spark, src_dir),
+                         snapshot_read(spark, dst_dir)):
+            raise RuntimeError(
+                f"stream_snapshot_replication_parity[{label}]: the "
+                "replica's rows differ from the source head")
 
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    drain()
-    n_src = orders.count()
-    n_dst = snapshot_read(spark, dst_dir).count()
-    if n_dst != n_src:
-        raise RuntimeError(
-            f"stream_snapshot_replication_parity: after the first drain "
-            f"the replica holds {n_dst} rows, the source {n_src}")
+    replicate("first")
 
     # while NO stream runs: a scoped merge-with-delete and an append
     src_upd = orders.filter(
@@ -1034,14 +909,7 @@ def stream_snapshot_replication_parity(spark: SparkSession,
         inline_dim(spark, [(9000001, "NEW", 123)],
                    "k long, pri string, cents long"),
         mode="append")                                              # v3
-    drain()
-    n_head = snapshot_read(spark, src_dir).count()
-    n_dst = snapshot_read(spark, dst_dir).count()
-    if n_dst != n_head:
-        raise RuntimeError(
-            f"stream_snapshot_replication_parity: after the restart the "
-            f"replica holds {n_dst} rows, the source head {n_head} — "
-            "the delta (incl. deletes) must replicate exactly")
+    replicate("restart")
     return snapshot_read(spark, dst_dir)
 
 
@@ -1112,48 +980,37 @@ def stream_snapshot_replication_mor_parity(spark: SparkSession,
         empty_frame(spark, "k long, pri string, cents long"),
         mode="append")
 
-    def drain() -> None:
-        stream = (spark.readStream.format("snapshot_table")
-                  .option("cdf", "true").load(src_dir))
+    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        # pin the batch before the tripwire (its lineage reads the
+        # SOURCE table)
+        changes = feed_changes(batch_df).localCheckpoint(eager=True)
+        real = S._read_entries
 
-        def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            # pin the batch before the tripwire (its lineage reads the
-            # SOURCE table)
-            changes = feed_changes(batch_df).localCheckpoint(eager=True)
-            real = S._read_entries
+        def tripwire(*a, **kw):
+            raise RuntimeError(
+                "stream_snapshot_replication_mor_parity: the "
+                "mor-apply read replica entries — each applied "
+                "batch must be O(batch), zero band reads")
 
-            def tripwire(*a, **kw):
-                raise RuntimeError(
-                    "stream_snapshot_replication_mor_parity: the "
-                    "mor-apply read replica entries — each applied "
-                    "batch must be O(batch), zero band reads")
+        try:
+            S._read_entries = tripwire
+            snapshot_apply_cdc_mor(spark, dst_dir, changes, "k",
+                                   seq="_commit_version",
+                                   op="_change_type",
+                                   epoch_key=str(epoch_id))
+        finally:
+            S._read_entries = real
 
-            try:
-                S._read_entries = tripwire
-                snapshot_apply_cdc_mor(spark, dst_dir, changes, "k",
-                                       seq="_commit_version",
-                                       op="_change_type",
-                                       epoch_key=str(epoch_id))
-            finally:
-                S._read_entries = real
+    def replicate(label: str) -> None:
+        drain(spark.readStream.format("snapshot_table")
+              .option("cdf", "true").load(src_dir), apply_batch, ckpt)
+        if frames_differ(snapshot_read(spark, src_dir),
+                         snapshot_read(spark, dst_dir)):
+            raise RuntimeError(
+                f"stream_snapshot_replication_mor_parity[{label}]: the "
+                "replica's rows differ from the source head")
 
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    drain()
-    n_src = orders.count()
-    n_dst = snapshot_read(spark, dst_dir).count()
-    if n_dst != n_src:
-        raise RuntimeError(
-            f"stream_snapshot_replication_mor_parity: after the first "
-            f"drain the replica holds {n_dst} rows, the source {n_src}")
+    replicate("first")
 
     # while NO stream runs, every commit shape the feed can carry:
     src_upd = orders.filter(
@@ -1178,14 +1035,7 @@ def stream_snapshot_replication_mor_parity(spark: SparkSession,
         inline_dim(spark, [(9000001, "NEW", 123)],
                    "k long, pri string, cents long"),
         mode="append")                                              # v5
-    drain()
-
-    head = snapshot_read(spark, src_dir)
-    replica = snapshot_read(spark, dst_dir)
-    if frames_differ(head, replica):
-        raise RuntimeError(
-            "stream_snapshot_replication_mor_parity: the replica "
-            "diverged from the source head after the restart drain")
+    replicate("restart")
     # the replica really is merge-on-read: descriptors accumulated
     m = S._read_manifest_meta(
         dst_dir, S.snapshot_current_version(dst_dir))
@@ -1203,7 +1053,7 @@ def stream_snapshot_replication_mor_parity(spark: SparkSession,
             "stream_snapshot_replication_mor_parity: OPTIMIZE left "
             "descriptors behind")
     compacted = snapshot_read(spark, dst_dir)
-    if frames_differ(compacted, head):
+    if frames_differ(compacted, snapshot_read(spark, src_dir)):
         raise RuntimeError(
             "stream_snapshot_replication_mor_parity: compaction "
             "changed the replica's state")
@@ -1264,10 +1114,10 @@ def stream_snapshot_source_ratelimited_parity(spark: SparkSession,
     for s in range(6):
         commit_slot(s)
 
-    def drain(expected_rows: int, label: str) -> list[int]:
-        """Run the rate-limited stream until the sink holds
-        ``expected_rows``, then stop; returns per-batch row counts of
-        the non-empty epochs this drain produced."""
+    def run(label: str) -> list[int]:
+        """Run the rate-limited stream until it has caught up with the
+        head, check the sink against the batch read of the head, and
+        return the row counts of the non-empty batches of this run."""
         batch_rows: list[int] = []
 
         def sink(bdf: DataFrame, epoch_id: int) -> None:
@@ -1284,40 +1134,19 @@ def stream_snapshot_source_ratelimited_parity(spark: SparkSession,
             if n:
                 batch_rows.append(n)
 
-        q = (
-            spark.readStream.format("snapshot_table")
-            .option("maxFilesPerTrigger", "2")
-            .option("cursorLocation", cursor)
-            .load(table_dir)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .trigger(processingTime="50 milliseconds")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            # drain-until-caught-up: processAllAvailable blocks until
-            # every version available at call time has been served and
-            # its batch committed — one blocking call instead of the
-            # old 0.25 s poll loop whose every probe was a full Spark
-            # job (guide §1: half the gate's wall time was
-            # sleep+poll). The admission bound still applies per
-            # trigger (processingTime trigger, NOT availableNow, which
-            # would snapshot the head once and skip the cursor walk).
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = spark.read.parquet(out_dir).count()
-        if got != expected_rows:
-            raise RuntimeError(
-                f"stream_snapshot_source_ratelimited_parity[{label}]: "
-                f"sink holds {got} rows, expected {expected_rows} — "
-                + ("rows re-served across the restart"
-                   if got > expected_rows else "the drain lost rows"))
+        # a processing-time trigger, not availableNow (which would fix
+        # the head once and skip the cursor walk): the admission bound
+        # applies per trigger
+        drain(spark.readStream.format("snapshot_table")
+              .option("maxFilesPerTrigger", "2")
+              .option("cursorLocation", cursor)
+              .load(table_dir), sink, ckpt, every="50 milliseconds")
+        check_stream(
+            spark, table_dir, out_dir, -1,
+            context=f"stream_snapshot_source_ratelimited_parity[{label}]")
         return batch_rows
 
-    first_total = sum(slot_counts[s] for s in range(6))
-    batches1 = drain(first_total, "catch-up")
+    batches1 = run("catch-up")
     legal = set(slot_counts.values())
     if len(batches1) < 3:
         raise RuntimeError(
@@ -1335,8 +1164,7 @@ def stream_snapshot_source_ratelimited_parity(spark: SparkSession,
     # consume exactly the remainder, still bounded
     commit_slot(6)
     commit_slot(7)
-    total = sum(slot_counts.values())
-    batches2 = drain(total, "restart")
+    batches2 = run("restart")
     if len(batches2) != 2 or any(n not in legal for n in batches2):
         raise RuntimeError(
             f"stream_snapshot_source_ratelimited_parity: the restarted "
@@ -1381,8 +1209,6 @@ def stream_snapshot_source_skip_changes_parity(spark: SparkSession,
     additionally raises unless the head state genuinely DIFFERS from
     the sink by the CDC's row count, so a silently-ignored CDC commit
     cannot fake the pass."""
-    import glob
-
     from ..operators.snapshots import (snapshot_apply_cdc,
                                        snapshot_commit, snapshot_read)
     from ..sources.snapshot_source import register_snapshot_source
@@ -1405,30 +1231,15 @@ def stream_snapshot_source_skip_changes_parity(spark: SparkSession,
                         ev.filter(F.col("slot") == s).drop("slot"),
                         mode="append")
 
-    def drain(skip: bool) -> None:
-        stream = (spark.readStream.format("snapshot_table")
-                  .option("skipChangeCommits", str(skip).lower())
-                  .load(table_dir))
+    def run(skip: bool) -> None:
+        drain(spark.readStream.format("snapshot_table")
+              .option("skipChangeCommits", str(skip).lower())
+              .load(table_dir), _append_to(out_dir), ckpt)
 
-        def sink(bdf: DataFrame, epoch_id: int) -> None:
-            bdf.write.mode("append").parquet(out_dir)
-
-        q = (stream.writeStream.outputMode("append")
-             .foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.processAllAvailable()
-        q.stop()
-
-    drain(skip=True)
-    got1 = (spark.read.parquet(out_dir).count()
-            if glob.glob(os.path.join(out_dir, "*.parquet")) else 0)
-    expect1 = ev.filter(F.col("slot") < 2).count()
-    if got1 != expect1:
-        raise RuntimeError(
-            f"stream_snapshot_source_skip_changes_parity: first drain "
-            f"served {got1} rows, expected {expect1}")
+    run(skip=True)
+    check_stream(
+        spark, table_dir, out_dir, -1,
+        context="stream_snapshot_source_skip_changes_parity[first]")
 
     # a CDC rewrite + a third append land while NO stream runs
     changes = (ev.filter((F.col("slot") < 2) & (F.col("k7").isin(2, 3)))
@@ -1448,7 +1259,7 @@ def stream_snapshot_source_skip_changes_parity(spark: SparkSession,
 
     # pinned: WITHOUT the option the restarted stream refuses the range
     try:
-        drain(skip=False)
+        run(skip=False)
         raise RuntimeError(
             "stream_snapshot_source_skip_changes_parity: the plain "
             "source consumed a rewrite commit without "
@@ -1460,7 +1271,7 @@ def stream_snapshot_source_skip_changes_parity(spark: SparkSession,
                 "the append-only refusal naming the option, got: "
                 f"{exc}") from exc
 
-    drain(skip=True)
+    run(skip=True)
     sink_df = spark.read.parquet(out_dir)
     total = ev.count()
     if sink_df.count() != total:
@@ -1565,11 +1376,8 @@ def stream_lsh_index_maintenance_parity(spark: SparkSession,
     pair restatement would be wrong whenever a bucket crosses the cap
     mid-stream)."""
     from ..llm import dedup
-    from ..operators.snapshots import (_epoch_sort_key,
-                                       _read_manifest_meta,
-                                       snapshot_commit,
-                                       snapshot_current_version,
-                                       snapshot_read)
+    from ..operators.snapshots import (_epoch_applied, _resolve_version,
+                                       snapshot_commit, snapshot_read)
     from ..sources.snapshot_source import register_snapshot_source
 
     register_snapshot_source(spark)
@@ -1614,11 +1422,7 @@ def stream_lsh_index_maintenance_parity(spark: SparkSession,
         # exactly-once: an applied epoch must short-circuit BEFORE the
         # probe — the index already holds this batch's ids, and
         # probe_lsh_index (correctly) refuses overlapping ids
-        cur = snapshot_current_version(sig_t)
-        last = (_read_manifest_meta(sig_t, cur).get("last_epoch")
-                if cur is not None else None)
-        if last is not None and (
-                _epoch_sort_key(str(epoch_id)) <= _epoch_sort_key(last)):
+        if _epoch_applied(_resolve_version(sig_t, None), str(epoch_id)):
             return
         idx_sig = snapshot_read(spark, sig_t)
         idx_bands = snapshot_read(spark, bands_t)
@@ -1642,30 +1446,13 @@ def stream_lsh_index_maintenance_parity(spark: SparkSession,
         snapshot_commit(spark, sig_t, new_sig, mode="append",
                         epoch_key=str(epoch_id))
 
-    def drain(expect_sigs: int, label: str) -> None:
-        q = (spark.readStream.format("snapshot_table")
-             .option("maxFilesPerTrigger", "1")
-             .option("cursorLocation", cursor)
-             .load(src)
-             .writeStream.outputMode("append")
-             .foreachBatch(sink)
-             .trigger(processingTime="50 milliseconds")
-             .option("checkpointLocation", ckpt)
-             .start())
-        try:
-            # drain-until-caught-up: processAllAvailable blocks until
-            # every source version available at call time has been
-            # processed and its batch committed — replaces the 0.25 s
-            # poll loop whose every probe ran snapshot_read().count()
-            # as a full Spark job competing with the foreachBatch
-            # thread for the GIL (guide §1: measured 19 s of sleep +
-            # ~9 s of poll jobs in a 35 s gate). Naturally bounded by
-            # the probe compute itself, so a strict ×100 run needs no
-            # watchdog constant; the count check below still fails
-            # closed on a lost or re-applied batch.
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    def run(expect_sigs: int, label: str) -> None:
+        # one ingest batch per trigger: a processing-time trigger, so
+        # the cursor walk admits one version at a time
+        drain(spark.readStream.format("snapshot_table")
+              .option("maxFilesPerTrigger", "1")
+              .option("cursorLocation", cursor)
+              .load(src), sink, ckpt, every="50 milliseconds")
         got = snapshot_read(spark, sig_t).count()
         if got != expect_sigs:
             raise RuntimeError(
@@ -1676,11 +1463,11 @@ def stream_lsh_index_maintenance_parity(spark: SparkSession,
 
     commit_slot(0)
     commit_slot(1)
-    drain(slot_counts[0] + slot_counts[1], "first")
+    run(slot_counts[0] + slot_counts[1], "first")
     pairs_mid = snapshot_read(spark, pairs_t).count()
     commit_slot(2)
     commit_slot(3)
-    drain(n_docs, "restart")
+    run(n_docs, "restart")
 
     # the one-shot batch build must equal the streamed index exactly
     # (materialized once: each side feeds two exceptAll directions)
@@ -1838,8 +1625,7 @@ def stream_ivf_index_maintenance_parity(spark: SparkSession,
     tables. Hash sections: ``assign`` (the index), ``cent`` (the
     retrained centroids as scalar rows), ``topk`` (the probe)."""
     from ..llm import similarity as sim
-    from ..operators.snapshots import (_epoch_sort_key,
-                                       _read_manifest_meta,
+    from ..operators.snapshots import (_epoch_applied, _resolve_version,
                                        snapshot_commit,
                                        snapshot_current_version,
                                        snapshot_read)
@@ -1890,18 +1676,10 @@ def stream_ivf_index_maintenance_parity(spark: SparkSession,
             return
         # exactly-once: the ASSIGN table's epoch is the last thing any
         # path advances, so an applied epoch short-circuits everything
-        cur = snapshot_current_version(assign_t)
-        last = (_read_manifest_meta(assign_t, cur).get("last_epoch")
-                if cur is not None else None)
-        if last is not None and (
-                _epoch_sort_key(str(epoch_id)) <= _epoch_sort_key(last)):
+        if _epoch_applied(_resolve_version(assign_t, None), str(epoch_id)):
             return
         cents = snapshot_read(spark, cent_t)
-        cvers = snapshot_current_version(cent_t)
-        cent_epoch = _read_manifest_meta(cent_t, cvers).get("last_epoch")
-        if cent_epoch is not None and (
-                _epoch_sort_key(str(epoch_id))
-                <= _epoch_sort_key(cent_epoch)):
+        if _epoch_applied(_resolve_version(cent_t, None), str(epoch_id)):
             # replay after a crash BETWEEN the centroid overwrite and
             # the reassignment: centroids are current for this epoch —
             # skip straight to the full reassignment
@@ -1948,22 +1726,12 @@ def stream_ivf_index_maintenance_parity(spark: SparkSession,
         snapshot_commit(spark, assign_t, full, mode="overwrite",
                         epoch_key=str(epoch_id))
 
-    def drain(expect: int, label: str) -> None:
-        q = (spark.readStream.format("snapshot_table")
-             .option("maxFilesPerTrigger", "1")
-             .option("cursorLocation", cursor)
-             .load(src)
-             .writeStream.outputMode("append")
-             .foreachBatch(sink)
-             .trigger(processingTime="50 milliseconds")
-             .option("checkpointLocation", ckpt)
-             .start())
-        try:
-            # drain-until-caught-up without the poll loop (see the LSH
-            # gate's drain for the measurement rationale)
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    def run(expect: int, label: str) -> None:
+        # one ingest batch per trigger (see the LSH gate)
+        drain(spark.readStream.format("snapshot_table")
+              .option("maxFilesPerTrigger", "1")
+              .option("cursorLocation", cursor)
+              .load(src), sink, ckpt, every="50 milliseconds")
         got = snapshot_read(spark, assign_t).count()
         if got != expect:
             raise RuntimeError(
@@ -1972,14 +1740,14 @@ def stream_ivf_index_maintenance_parity(spark: SparkSession,
 
     commit_slot(0)
     commit_slot(1)
-    drain(slot_counts[0] + slot_counts[1], "first")
+    run(slot_counts[0] + slot_counts[1], "first")
     if snapshot_current_version(cent_t) != 0:
         raise RuntimeError(
             "stream_ivf_index_maintenance_parity: the pre-drift half "
             "retrained — the energy floor fired early")
     commit_slot(2)
     commit_slot(3)
-    drain(n_vecs, "restart")
+    run(n_vecs, "restart")
 
     cents = snapshot_read(spark, cent_t).localCheckpoint(eager=True)
     gen = cents.agg(F.max("generation")).first()[0]

@@ -191,9 +191,13 @@ def _file_slices(table_dir: str, entries: list[dict], columns: list[str],
     ]
 
 
-def _cdf_slices(table_dir: str, start_v: int, end_v: int) -> list[tuple]:
-    """(rel_path, kind, version, dv_rel, prior_eq, dead_eq) change
-    slices for the feed over ``(start_v, end_v]`` — ``start_v == -1``
+def _cdf_slices(table_dir: str, start_v: int, end_v: int,
+                columns: list[str] | None = None,
+                schema_json: str | None = None
+                ) -> list[SnapshotFileSlice]:
+    """The CDF stream's slices for the feed over ``(start_v, end_v]``,
+    declaring the reader's output ``columns`` / ``schema_json`` (a plan
+    that is only inspected may leave them unset) — ``start_v == -1``
     includes version 0's initial commit as 'I' rows. Renders the batch
     CDF's own classification (``_change_units``) per file: 'I' units
     as kind 'data', 'U' units as kind 'upsert', recorded change logs
@@ -206,25 +210,33 @@ def _cdf_slices(table_dir: str, start_v: int, end_v: int) -> list[tuple]:
     Delta's own CDF rule."""
     from ..operators.snapshots import _change_units, _manifest_chain
 
-    def refs(ds: list[dict]) -> list[tuple]:
-        return [(d["path"], list(d["cols"])) for d in ds]
+    join = os.path.join
+
+    def refs(ds: list[dict]) -> list[tuple] | None:
+        return [(join(table_dir, d["path"]), tuple(d["cols"]))
+                for d in ds] or None
+
+    def file_slice(e: dict, kind: str, v: int, **eq) -> SnapshotFileSlice:
+        return SnapshotFileSlice(
+            join(table_dir, e["path"]), columns, kind=kind, version=v,
+            schema_json=schema_json, cdf=True, rel_path=e["path"], **eq)
 
     context = "snapshot CDF source"
     chain = _manifest_chain(table_dir, start_v, end_v, context)
-    slices: list[tuple] = []
+    slices: list[SnapshotFileSlice] = []
     for kind, m, items in _change_units(table_dir, chain, context,
                                         with_root=start_v < 0):
         v = m["version"]
         if kind == "D":
             slices.extend(
-                (e["path"], "eqdead", v,
-                 e["dv"]["path"] if e.get("dv") else None,
-                 refs(prior) or None, refs(dead))
+                file_slice(e, "eqdead", v,
+                           dv_abs=(join(table_dir, e["dv"]["path"])
+                                   if e.get("dv") else None),
+                           eq_abs=refs(prior), eq_dead_abs=refs(dead))
                 for e, prior, dead in items[2])
         else:
             slice_kind = {"I": "data", "U": "upsert", "log": "log"}[kind]
-            slices.extend((e["path"], slice_kind, v, None, None, None)
-                          for e in items)
+            slices.extend(file_slice(e, slice_kind, v) for e in items)
     return slices
 
 
@@ -248,12 +260,6 @@ def _version_delta_size(table_dir: str, v: int,
     m = _read_manifest_meta(table_dir, v)
     d = m["cdf_delta"] if cdf and m["mode"] != "append" else m["delta"]
     return (d["files"], d["rows"], d["bytes"])
-
-
-def _version_delta_count(table_dir: str, v: int, cdf: bool) -> int:
-    """File count of ``_version_delta_size`` — the admission unit
-    ``maxFilesPerTrigger`` counts, as one number for tests."""
-    return _version_delta_size(table_dir, v, cdf)[0]
 
 
 def _budget_spent(totals: tuple, budgets: tuple) -> bool:
@@ -626,26 +632,9 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
         if e < 0 or e <= s:
             return [SnapshotFileSlice(None, self.columns)]
         if self.cdf:
-            slices = _cdf_slices(self.table_dir, s, e)
-            if not slices:
-                return [SnapshotFileSlice(None, self.columns)]
-            join = os.path.join
-            return [
-                SnapshotFileSlice(
-                    join(self.table_dir, rel),
-                    self.columns, kind=kind, version=v,
-                    schema_json=self.schema_json, cdf=True,
-                    dv_abs=(join(self.table_dir, dv_rel)
-                            if dv_rel else None),
-                    rel_path=rel,
-                    eq_abs=([(join(self.table_dir, p), tuple(c))
-                             for p, c in prior_eq]
-                            if prior_eq else None),
-                    eq_dead_abs=([(join(self.table_dir, p), tuple(c))
-                                  for p, c in dead_eq]
-                                 if dead_eq else None))
-                for (rel, kind, v, dv_rel, prior_eq, dead_eq) in slices
-            ]
+            return (_cdf_slices(self.table_dir, s, e, self.columns,
+                                self.schema_json)
+                    or [SnapshotFileSlice(None, self.columns)])
         if s >= 0:
             entries = _delta_entries(self.table_dir, s, e,
                                      self.skip_change_commits)

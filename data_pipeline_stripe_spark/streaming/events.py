@@ -9,7 +9,9 @@ data. The batch queries in queries/stripe.py stay the semantic source of
 truth; these aggregations mirror them.
 
 Local testing: parquet-directory source + memory sink driven to
-completion with processAllAvailable() (synchronous, deterministic).
+completion (synchronous, deterministic); ``drain`` is the one
+foreachBatch drain every sink here and every streaming gate
+(queries/streaming_gate.py) runs through.
 In production the source line changes to kafka/kinesis; nothing else does.
 """
 
@@ -18,6 +20,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def drain(stream: DataFrame, sink, checkpoint: str, *,
+          output_mode: str = "append", every: str | None = None) -> None:
+    """Run ``stream`` through the ``foreachBatch`` function ``sink``
+    until everything available at the call has been processed, then
+    stop it — also when a batch raises, whose error then propagates.
+    The trigger is ``availableNow`` unless ``every`` names a
+    processing-time interval (``"50 milliseconds"``): a rate-limited
+    source needs one, because ``availableNow`` fixes the end offset
+    once and so skips the source's per-trigger admission walk."""
+    writer = (stream.writeStream.outputMode(output_mode)
+              .foreachBatch(sink)
+              .option("checkpointLocation", checkpoint))
+    writer = (writer.trigger(processingTime=every) if every is not None
+              else writer.trigger(availableNow=True))
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
 
 def read_event_stream(spark: SparkSession, path: str,
                       max_files_per_trigger: int = 1) -> DataFrame:
@@ -361,15 +385,8 @@ def write_partitioned_exactly_once(agg: DataFrame, out_dir: str,
             .parquet(out_dir)
         )
 
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    drain(agg, write_batch, f"{out_dir}/_checkpoint",
+          output_mode="complete")
 
 
 def run_to_memory(agg: DataFrame, query_name: str,
@@ -415,12 +432,4 @@ def merge_stream_into_table(changes: DataFrame, table_dir: str, key: str,
         )
         merged.write.mode("overwrite").parquet(table_dir)
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{table_dir}_checkpoint")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    drain(changes, merge_batch, f"{table_dir}_checkpoint")

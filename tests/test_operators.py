@@ -4747,6 +4747,22 @@ def test_snapshot_read_plans_eq_deletes_without_jobs(spark, tmp_path):
     assert sorted(r.k for r in df.collect()) == list(range(5, 99)) + [2**40]
 
 
+def test_snapshot_read_cdf_plans_change_logs_without_jobs(spark, tmp_path):
+    """Planning the change feed over a copy-on-write merge runs no Spark
+    job: the merge's recorded change log is opened under the schema its
+    own footer records, not inferred."""
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = _mor_table(spark, str(tmp_path / "t"))
+    S.snapshot_merge(spark, t, spark.createDataFrame(
+        [(3, 0), (200, 2000)], "k long, v long"), "k")
+    feed, jobs = _spark_jobs(spark, lambda: S.snapshot_read_cdf(spark, t, 0))
+    assert jobs == 0
+    assert sorted((r._change_type, r.k, r.v, r._commit_version)
+                  for r in feed.collect()) == [("I", 200, 2000, 1),
+                                               ("U", 3, 0, 1)]
+
+
 @pytest.mark.parametrize("constrained", [False, True])
 @pytest.mark.parametrize("verb, budget, constrained_budget", [
     ("append", 1, 2),
@@ -5264,14 +5280,17 @@ def _checked_table(spark, path):
     return path
 
 
-@pytest.mark.parametrize("defect", ["replay", "stream", "feed", "carried"])
+@pytest.mark.parametrize("defect", ["replay", "stream", "feed", "carried",
+                                    "sink_lost_row",
+                                    "sink_reserved_version"])
 def test_snapshot_checks_raise_on_seeded_defect(spark, tmp_path,
                                                 monkeypatch, defect):
     """Each change-feed check passes on a sound table and raises, naming
     its context, on one seeded defect: the feed lost its D row (the
     replay no longer reproduces the head; a streamed feed no longer
-    equals the batch feed), an expectation off by one, and a rewrite
-    that dropped a file it should have carried."""
+    equals the batch feed), an expectation off by one, a rewrite that
+    dropped a file it should have carried, and a plain stream's sink
+    that lost a row or served a version twice."""
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
@@ -5297,6 +5316,34 @@ def test_snapshot_checks_raise_on_seeded_defect(spark, tmp_path,
                            r"feed over \(2, 3\] differs"):
             C.check_replay(spark, t, "k", 2, feed=lose_d(feed),
                            context="ctx")
+    elif defect == "sink_lost_row":
+        from data_pipeline_stripe_spark.sources.snapshot_source import \
+            register_snapshot_source
+        from data_pipeline_stripe_spark.streaming import drain
+
+        register_snapshot_source(spark)
+        out, bad = str(tmp_path / "out"), str(tmp_path / "bad")
+        drain(spark.readStream.format("snapshot_table").load(t),
+              lambda b, _: b.write.mode("append").parquet(out),
+              str(tmp_path / "ckpt"))
+        sink = C.check_stream(spark, t, out, -1, context="ctx")
+        sink.filter(F.col("k") != 7).write.parquet(bad)
+        with pytest.raises(RuntimeError, match=r"ctx: the streamed read "
+                           r"over \(-1, 3\] differs"):
+            C.check_stream(spark, t, bad, -1, context="ctx")
+    elif defect == "sink_reserved_version":
+        out, bad = str(tmp_path / "out"), str(tmp_path / "bad")
+        S.snapshot_read_incremental(spark, t, 0, 2).write.parquet(out)
+        C.check_stream(spark, t, out, 0, 2, context="ctx")
+        # a sink that was never written holds 0 rows: right for an
+        # empty range
+        C.check_stream(spark, t, str(tmp_path / "none"), 2, 2,
+                       context="ctx")
+        spark.read.parquet(out).unionByName(
+            S.snapshot_read_incremental(spark, t, 1, 2)).write.parquet(bad)
+        with pytest.raises(RuntimeError, match=r"ctx: the streamed read "
+                           r"over \(0, 2\] differs"):
+            C.check_stream(spark, t, bad, 0, 2, context="ctx")
     elif defect == "feed":
         C.check_feed(spark, t, 2, 3, {"D": 1, "U": 1}, context="ctx")
         with pytest.raises(RuntimeError,

@@ -145,6 +145,24 @@ def test_foreachbatch_sink_is_idempotent(spark, stream_dir, tmp_path):
     assert first == second and len(first) == 5
 
 
+def test_drain_stops_the_query_when_the_sink_raises(spark, stream_dir,
+                                                   tmp_path):
+    """drain re-raises a foreachBatch error and leaves no query
+    running; a drain whose sink succeeds runs each batch once."""
+    def boom(batch_df, epoch_id):
+        raise ValueError("sink failed on purpose")
+
+    stream = streaming.read_event_stream(spark, stream_dir)
+    with pytest.raises(Exception, match="sink failed on purpose"):
+        streaming.drain(stream, boom, str(tmp_path / "ckpt_a"))
+    assert spark.streams.active == []
+
+    epochs = []
+    streaming.drain(stream, lambda b, e: epochs.append(e),
+                    str(tmp_path / "ckpt_b"), every="50 milliseconds")
+    assert epochs == [0] and spark.streams.active == []
+
+
 def test_session_windows_smoke(spark, stream_dir):
     stream = streaming.read_event_stream(spark, stream_dir)
     agg = streaming.sessionized_event_counts(stream, gap="30 minutes")
@@ -1046,7 +1064,7 @@ def test_cdf_stream_source_slices_and_starting_version(spark, tmp_path):
         _delta_entries(t, 1, 4)
     # ... the CDF source classifies it: v2 log slices, v3 nothing,
     # v4 data slices
-    kinds = {v: {s[1] for s in _cdf_slices(t, 1, 4) if s[2] == v}
+    kinds = {v: {s.kind for s in _cdf_slices(t, 1, 4) if s.version == v}
              for v in (2, 3, 4)}
     assert kinds[2] == {"log"} and kinds[3] == set() \
         and kinds[4] == {"data"}
@@ -1155,7 +1173,7 @@ def test_cdf_replication_replays_idempotently_after_sink_crash(spark,
 
 def test_stream_source_admission_control_units(spark, tmp_path):
     """Rate-limiting legs beneath the gated query:
-    _version_delta_count counts appends' new files and CDF rewrites'
+    _version_delta_size counts appends' new files and CDF rewrites'
     log files; latestOffset with maxFilesPerTrigger advances whole
     versions within the budget (always at least one); the cursor file
     persists atomically and floors a fresh reader's cursor."""
@@ -1165,7 +1183,7 @@ def test_stream_source_admission_control_units(spark, tmp_path):
     from data_pipeline_stripe_spark.operators.snapshots import (
         snapshot_apply_cdc, snapshot_commit, snapshot_read)
     from data_pipeline_stripe_spark.sources.snapshot_source import (
-        SnapshotTableStreamReader, _version_delta_count)
+        SnapshotTableStreamReader, _version_delta_size)
 
     t = str(tmp_path / "adm")
     df = spark.range(8).select(F.col("id").alias("k"),
@@ -1181,9 +1199,9 @@ def test_stream_source_admission_control_units(spark, tmp_path):
     n0 = len(_read_manifest(t, 0)["files"])
     n1 = len(_read_manifest(t, 1)["files"]) - n0
     assert n0 >= 2 and n1 >= 1  # multi-file versions (layout-dependent)
-    assert _version_delta_count(t, 0, cdf=False) == n0
-    assert _version_delta_count(t, 1, cdf=False) == n1
-    assert _version_delta_count(t, 2, cdf=True) >= 1  # its change log
+    assert _version_delta_size(t, 0, cdf=False)[0] == n0
+    assert _version_delta_size(t, 1, cdf=False)[0] == n1
+    assert _version_delta_size(t, 2, cdf=True)[0] >= 1  # its change log
 
     schema = snapshot_read(spark, t).schema
     sch = StructType(schema.fields)
@@ -1669,7 +1687,7 @@ def test_admission_prices_equality_delete_band(spark, tmp_path):
 
     import data_pipeline_stripe_spark.operators.snapshots as S
     from data_pipeline_stripe_spark.sources.snapshot_source import \
-        _version_delta_count
+        _version_delta_size
 
     t = str(tmp_path / "eqadm")
     df = spark.range(8).select(F.col("id").alias("k"))
@@ -1680,8 +1698,8 @@ def test_admission_prices_equality_delete_band(spark, tmp_path):
         t, S._read_manifest_meta(t, 1)))
     v_eq, _ = S.snapshot_delete_keys(
         spark, t, spark.createDataFrame([(2,)], "k long"), "k")
-    assert _version_delta_count(t, v_eq, cdf=True) == n_files
-    assert _version_delta_count(t, v_eq, cdf=False) == 0
+    assert _version_delta_size(t, v_eq, cdf=True)[0] == n_files
+    assert _version_delta_size(t, v_eq, cdf=False)[0] == 0
 
 
 def test_stream_initial_load_applies_equality_deletes(spark, tmp_path):
@@ -1744,7 +1762,7 @@ def test_equality_delete_key_band_pruning(spark, tmp_path):
     assert m["eq_deletes"][0]["bands"] == {"k": [3, 7]}
 
     # (a) the CDF D scan opens only the in-band file
-    eqdead = [s for s in _cdf_slices(t, 1, v) if s[1] == "eqdead"]
+    eqdead = [s for s in _cdf_slices(t, 1, v) if s.kind == "eqdead"]
     assert len(eqdead) == 1, eqdead
     # (b) the batch DataSource attaches the sidecar only in-band
     reader = SnapshotTableBatchReader(
@@ -1814,7 +1832,7 @@ def test_cdf_stream_serves_equality_delete_d_rows(spark, tmp_path):
 
     # driver-side slice shape: the eq-delete versions contribute
     # 'eqdead' slices (no refusal)
-    kinds = {s[1] for s in _cdf_slices(t, 0, v_last)}
+    kinds = {s.kind for s in _cdf_slices(t, 0, v_last)}
     assert "eqdead" in kinds, kinds
 
     out = str(tmp_path / "out")
