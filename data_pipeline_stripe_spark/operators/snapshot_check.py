@@ -18,16 +18,21 @@ run of commits, each written once.
   unchanged data file keeps its manifest entry).
 
 Each check raises ``RuntimeError`` naming the caller's ``context``.
+So does ``no_entry_reads``, the tripwire that pins a verb to opening no
+existing data file, until commit summaries count the files a commit
+opens.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import empty_frame
+from . import snapshots as _snapshots
 from .merge import apply_cdc
 from .snapshots import (_read_manifest, snapshot_current_version,
                         snapshot_read, snapshot_read_cdf,
@@ -40,6 +45,25 @@ def frames_differ(a: DataFrame, b: DataFrame) -> bool:
     short-circuits on the first differing row (two ``count()`` calls
     would pay two job launches for the same answer)."""
     return not a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty()
+
+
+@contextmanager
+def no_entry_reads(context: str):
+    """Inside the block, reading a snapshot table's data files through
+    ``snapshots._read_entries`` raises ``RuntimeError`` naming
+    ``context``: the pin for an O(new) or O(keys) verb that must open
+    no existing data file."""
+    real = _snapshots._read_entries
+
+    def tripwire(*a, **kw):
+        raise RuntimeError(f"{context} read table entries — it must open "
+                           "no existing data file")
+
+    _snapshots._read_entries = tripwire
+    try:
+        yield
+    finally:
+        _snapshots._read_entries = real
 
 
 def feed_changes(feed: DataFrame) -> DataFrame:

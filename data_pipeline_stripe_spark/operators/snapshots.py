@@ -164,6 +164,22 @@ class SnapshotConflictError(RuntimeError):
     the retry budget ran out under sustained contention."""
 
 
+class SnapshotHeadMovedError(SnapshotConflictError):
+    """The only fault is that the head moved past the version a commit
+    was derived from: re-deriving the commit on the new head resolves
+    it."""
+
+
+# the table properties every commit carries from its parent unless it
+# sets them (``_publish_commit``)
+_TABLE_PROPS = ("cluster_cols", "partition_spec", "constraints",
+                "eq_deletes")
+
+# the publish attempts a commit may lose to racing writers before it
+# gives up (``_publish_commit``, ``_mor_commit``)
+_COMMIT_RETRIES = 20
+
+
 def _manifest_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, _SNAPDIR, f"v{version}.json")
 
@@ -252,6 +268,14 @@ def _entry_totals(entries: list[dict]) -> dict:
     return {"files": len(entries),
             "rows": sum(e.get("rows") or 0 for e in entries),
             "bytes": sum(e.get("bytes") or 0 for e in entries)}
+
+
+def _segment_totals(segs: list[dict], base: dict) -> dict:
+    """``base`` ({"files", "rows", "bytes"}) plus the totals of the
+    segment descriptors ``segs``."""
+    return {"files": base["files"] + sum(s["n_files"] for s in segs),
+            "rows": base["rows"] + sum(s.get("rows") or 0 for s in segs),
+            "bytes": base["bytes"] + sum(s.get("bytes") or 0 for s in segs)}
 
 
 def _segment_rollup(entries: list[dict]) -> dict:
@@ -554,7 +578,7 @@ def _disjoint_append_segments(table_dir: str, from_v: int, to_v: int,
         chain = _manifest_chain(table_dir, from_v, to_v,
                                 "snapshot conflict rebase")
     except ValueError as exc:
-        raise SnapshotConflictError(
+        raise SnapshotHeadMovedError(
             f"snapshot_commit: {table_dir} moved past the read version "
             f"{from_v} and the interleaved range cannot be validated "
             f"({exc}) — re-read and re-derive") from None
@@ -566,7 +590,7 @@ def _disjoint_append_segments(table_dir: str, from_v: int, to_v: int,
                 # moved — rebase straight through (r13); the publish
                 # loop re-validates grown constraints separately
                 continue
-            raise SnapshotConflictError(
+            raise SnapshotHeadMovedError(
                 f"snapshot_commit: version {m['version']} of {table_dir} "
                 f"is a concurrent {m['mode']} — a rewrite derived from "
                 f"version {from_v} cannot be rebased over it; re-read "
@@ -822,7 +846,8 @@ def _evolved_schema_json(prev_schema_json: str, df_schema) -> str:
     columns as NULL and narrower-written columns through Spark's native
     parquet upcast; newer files read columns they lack as NULL. An
     incompatible append raises instead of publishing a manifest later
-    reads would choke on."""
+    reads would choke on. ``df_schema=None`` evolves by nothing: the
+    prev schema, all nullable."""
     from pyspark.sql.types import StructField, StructType
 
     prev = StructType.fromJson(json.loads(prev_schema_json))
@@ -834,7 +859,7 @@ def _evolved_schema_json(prev_schema_json: str, df_schema) -> str:
     prev_by_fold = {f.name.casefold(): f for f in prev.fields}
     widened: dict[str, object] = {}
     added = []
-    for f in df_schema.fields:
+    for f in (prev if df_schema is None else df_schema).fields:
         have = prev_by_fold.get(f.name.casefold())
         if have is None:
             added.append(f)
@@ -896,7 +921,7 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
                     mode: str = "append",
                     epoch_key: str | None = None,
                     expected_version: int | None = None,
-                    cluster_cols="auto") -> int:
+                    cluster_cols: list[str] | None = None) -> int:
     """Commit ``df`` as the next version of ``table_dir``. Returns the
     committed version number.
 
@@ -932,7 +957,11 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
     are), and a commit whose key is <= the last committed one is a
     NO-OP returning the current version — O(1) per commit, no
     ever-growing ledger. The check re-runs on every rebase, so two
-    writers racing the SAME epoch resolve to exactly one application."""
+    writers racing the SAME epoch resolve to exactly one application.
+
+    ``cluster_cols`` records the table's clustering lineage
+    (``snapshot_commit_clustered``); without it an append keeps the
+    lineage and an overwrite clears it."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"snapshot_commit: unknown mode {mode!r}")
     os.makedirs(os.path.join(table_dir, _SNAPDIR), exist_ok=True)
@@ -942,7 +971,7 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
     # re-checked inside the retry loop because the base can move.
     early_prev = snapshot_current_version(table_dir)
     if expected_version is not None and early_prev != expected_version:
-        raise SnapshotConflictError(
+        raise SnapshotHeadMovedError(
             f"snapshot_commit: {table_dir} moved to version {early_prev} "
             f"but this commit was derived from a read of version "
             f"{expected_version} — re-read and re-derive")
@@ -958,179 +987,137 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
 
     new_entries = _file_entries(table_dir,
                                 _write_parquet(table_dir, "data", df))
-    if cluster_cols == "auto":
-        # appends inherit the table's clustering lineage (the batch may
-        # not be clustered, but the declared layout intent stands);
-        # an overwrite replaces the whole layout, so it clears it
-        # unless the caller declares one (snapshot_commit_clustered)
-        cluster_cols = "inherit" if mode == "append" else None
     return _publish_commit(
         table_dir, mode=mode, new_entries=new_entries,
         batch_schema=df.schema, epoch_key=epoch_key,
-        expected_version=expected_version, cluster_cols=cluster_cols,
-        # a plain overwrite replaces the table: the old partition spec
-        # describes files that are gone (appends keep it — their
-        # unpartitioned entries simply never partition-prune)
-        partition_spec=("inherit" if mode == "append" else None),
+        expected_version=expected_version,
+        props={} if cluster_cols is None else {"cluster_cols": cluster_cols},
         enforce=lambda c: _enforce_constraints(
             spark, table_dir, c, new_entries, df.schema.json(),
             "snapshot_commit"))
 
 
 def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
-                    batch_schema, epoch_key: str | None = None,
-                    max_retries: int = 20,
+                    batch_schema=None, epoch_key: str | None = None,
                     expected_version: int | None = None,
                     keep_segments: list[dict] | None = None,
                     keep_entries: list[dict] | None = None,
                     changes_entries: list[dict] | None = None,
-                    cdf_key=None,
-                    cluster_cols="inherit",
-                    partition_spec="inherit",
-                    constraints="inherit",
-                    dirty_probe=None,
-                    extra_commit_dirs: set[str] | None = None,
-                    enforce=None,
-                    eq_deletes="inherit",
+                    cdf_key=None, props: dict | None = None,
+                    dirty_probe=None, enforce=None,
                     extra_segments: list[dict] | None = None) -> int:
-    """The OCC publish loop over ALREADY-WRITTEN immutable file entries
-    — the Spark-free core of the commit protocol. ``snapshot_commit``
-    writes its data via Spark and then calls this; the multi-process
-    concurrency test races it directly across OS processes (the data
-    write has no concurrency surface — each commit writes into its own
-    fresh directory — so this loop IS the protocol).
+    """Publish the next version of ``table_dir`` over ALREADY-WRITTEN
+    immutable files and return it: the optimistic-concurrency loop
+    every commit goes through, and the Spark-free core of the protocol
+    (the multi-process test races it across OS processes). Each attempt
+    reads the head, builds the manifest on it, fsyncs it under a temp
+    name and publishes it with ``os.link`` (put-if-absent); a manifest
+    is a list of segment descriptors that reuses the parent's unchanged
+    segments by reference, so commit metadata is O(new).
 
-    HIERARCHICAL MANIFESTS (r12, VERDICT r11 item 1): the manifest a
-    version publishes is a LIST of immutable segment descriptors
-    (``_write_segments``), not a flat file-entry array. An append
-    writes one new segment (O(new files)) and a manifest list that
-    reuses every prior segment BY REFERENCE — commit metadata is
-    O(new), never O(table); at ~10^6 files the old layout re-serialized
-    the full entry list per commit. Each descriptor carries a
-    column-stat rollup so scans prune whole segments before opening
-    them, and each manifest carries its own ``delta``/``cdf_delta``
-    totals so the streaming admission probe never re-parses file lists.
+    Inputs:
 
-    Beyond append/overwrite, the internal ``mode="rewrite"`` is the
-    copy-on-write commit the MERGE/compaction verbs use: the manifest
-    carries forward untouched prior segments verbatim
-    (``keep_segments``), rewrites the partially-kept entries into fresh
-    segments (``keep_entries``), and adds ``new_entries``. Metadata-only
-    commits (RESTORE, constraint add/drop, manifest compaction) pass
-    the whole file set as ``keep_segments`` alone — adopted with zero
-    re-serialization. A rewrite is always derived from a read, so
-    ``expected_version`` is mandatory.
+    - ``mode``: ``"append"`` (the parent's segments, then
+      ``new_entries``, then ``extra_segments``), ``"overwrite"``
+      (``new_entries`` alone) or ``"rewrite"`` (copy-on-write and
+      metadata-only commits: ``keep_segments`` by reference,
+      ``keep_entries`` re-serialized by ``_write_segments_grouped``
+      against the head's equality deletes, then ``new_entries``).
+    - ``new_entries``: the data files this commit adds. They form new
+      segments stamped with the commit's sequence number.
+    - ``extra_segments``: already-written descriptors an append adopts
+      by reference (fast-forward, cherry-pick). One without a ``seq``
+      is stamped like ``new_entries``.
+    - ``batch_schema``: the schema of the added rows. A root commit or
+      an overwrite publishes it; an append or rewrite publishes the
+      head's schema evolved by it (``_evolved_schema_json``). A commit
+      that adds no rows may omit it and publishes the head's schema.
+    - ``expected_version``: read validation; mandatory for a rewrite,
+      which is always derived from a read.
+    - ``epoch_key``: idempotence. If the head already applied the key,
+      the commit is a no-op that returns the head.
+    - ``changes_entries`` and ``cdf_key``: the recorded change log and
+      its key. ``[]`` means no row changed; ``None`` means not
+      recorded, and ``snapshot_read_cdf`` raises across the commit.
+    - ``props``: the table properties (``_TABLE_PROPS``) this commit
+      sets.
+    - ``dirty_probe``: a rewrite's own dirty test. With it, a rewrite
+      whose head moved rebases over interleaved appends whose files all
+      probe clean and over metadata-only commits
+      (``_disjoint_append_segments``).
+    - ``enforce``: checks this commit's written rows against a
+      constraints dict and raises ValueError on a violating row. It
+      runs on the first attempt and again whenever the effective
+      constraints hold a pair it has not checked.
 
-    CONFLICT NARROWING (r12, VERDICT r11 item 3): when a rewrite finds
-    the table moved past ``expected_version``, it aborts UNLESS
-    ``dirty_probe`` is given and every interleaved commit is an APPEND
-    whose file entries all probe CLEAN (the probe is the verb's own
-    dirty-split test — a file it would have marked dirty must abort,
-    Iceberg's validation-then-rebase rule): then the rewrite REBASES by
-    carrying the interleaved appends' segments verbatim on top of its
-    own keep/new set, which reproduces the serial order exactly
-    (disjoint appends commute with a band-scoped rewrite). Interleaved
-    rewrites, overwrites, or appends touching the dirty band still
-    abort with ``SnapshotConflictError``.
+    Inheritance (the Iceberg rule for table properties): a property
+    that ``props`` does not name is the parent's, except that an
+    overwrite clears ``cluster_cols`` and ``partition_spec``, whose
+    layout went with the old files. An ``eq_deletes`` descriptor
+    without a ``seq`` is one this commit adds; it is stamped with the
+    commit's sequence number, and a descriptor that no segment is old
+    enough to need is dropped.
 
-    ``changes_entries`` records the commit's row-level change log (CDF):
-    pre-written parquet entries of (table columns + ``_change_type``
-    I/U/D), or ``[]`` for a commit that provably changed no rows
-    (compaction). ``None`` means "not recorded" — ``snapshot_read_cdf``
-    raises for such a commit (plain overwrites). Appends never need one:
-    their change set IS their new files.
+    Until the link wins, nothing references what this commit wrote, so
+    a concurrent ``snapshot_expire`` may sweep it. Every attempt first
+    checks that these still exist: the directories of ``new_entries``
+    and ``changes_entries``, the sidecars of the added equality
+    deletes, the deletion-vector directories of ``keep_entries``, and
+    the new segments.
 
-    ``cluster_cols`` records the table's clustering lineage in the
-    manifest (the Delta ``clusterBy`` table-property pattern):
-    "inherit" (default) carries the prior version's lineage forward —
-    appends and rewrites do not change the table's declared layout
-    intent — while an explicit list (``snapshot_commit_clustered``) or
-    ``None`` (plain overwrite: the old layout is gone with the old
-    files) sets or clears it. ``snapshot_compact`` reads the lineage
-    so OPTIMIZE re-clusters instead of round-robining the sorted
-    layout away (VERDICT r10's compaction wart).
+    Conflicts:
 
-    METADATA-CONFLICT DETECTION (r13, VERDICT r12 item 1): the OCC
-    loop used to validate DATA disjointness only — a CHECK constraint
-    landing between a commit's data write and its publish was
-    inherited without re-validating the already-written files (the
-    race ``snapshot_add_constraint``'s docstring documented). Now
-    every data-adding verb passes ``enforce``, a callable that checks
-    its written files against a given constraint dict and raises
-    ValueError on a violating row. The loop calls it on the first
-    attempt and again whenever the EFFECTIVE inherited constraints
-    hold a (name, expression) pair it has not enforced yet — O(new
-    files) per distinct constraint state — and the ValueError aborts
-    the commit before publication. Verbs whose carried rows are
-    provably already-validated (compaction, delete, drop, restore)
-    pass no ``enforce`` and inherit the constraints as they are.
-    Rewrites can also
-    REBASE THROUGH interleaved METADATA-ONLY commits (constraint
-    add/drop, manifest compaction — commits whose entry set is
-    byte-identical to their parent's): carrying the base's segments
-    over them reproduces the serial order for data while the inherit
-    rules + re-validation reproduce it for metadata."""
+    - ``SnapshotHeadMovedError``: the head moved past
+      ``expected_version`` and the commit cannot rebase over what
+      landed. Re-deriving on the new head resolves it.
+    - ``SnapshotConflictError``: an interleaved append wrote inside the
+      rewrite's dirty band, an overwrite without ``expected_version``
+      lost the link race, something this commit wrote was swept, or
+      the commit lost ``_COMMIT_RETRIES`` + 1 attempts.
+
+    Losing the link race alone is no conflict: the loop re-reads the
+    head and the checks above classify the winner."""
     snapdir = os.path.join(table_dir, _SNAPDIR)
     os.makedirs(snapdir, exist_ok=True)
     if mode == "rewrite" and expected_version is None:
         raise ValueError(
             "snapshot _publish_commit: rewrite commits are derived from "
             "a read — expected_version is mandatory")
+    props = dict(props or {})
+    if mode == "overwrite":
+        props.setdefault("cluster_cols", None)
+        props.setdefault("partition_spec", None)
+    added_eq = [d for d in props.get("eq_deletes") or [] if "seq" not in d]
     commit_id = uuid.uuid4().hex[:12]
-    # the directories whose survival every publish attempt re-verifies:
-    # until the link wins, nothing references them, so a concurrent
-    # snapshot_expire may sweep them — publishing afterwards would
-    # create a committed version pointing at deleted files (ADVICE r9)
-    commit_dirs = {os.path.dirname(e["path"])
-                   for e in new_entries + (changes_entries or [])}
-    commit_dirs |= extra_commit_dirs or set()  # e.g. a fresh DV dir
-    # segments THIS commit writes (unreferenced until the link wins, so
-    # the same expire-sweep re-verification applies to them)
+    commit_dirs = (
+        {os.path.dirname(e["path"])
+         for e in new_entries + (changes_entries or [])}
+        | {d["path"] for d in added_eq}
+        | {e["dv"]["path"] for e in keep_entries or [] if e.get("dv")})
     new_segs = _write_segments(table_dir, new_entries) if new_entries \
         else []
-    base_segs: list[dict] | None = None  # rewrite: computed once (the
-    #                                      base is pinned by
-    #                                      expected_version)
-    rebase_segs: list[dict] = []  # interleaved appends carried by a
-    #                               narrowed-conflict rebase
+    base_segs: list[dict] | None = None  # rewrite: written once
+    rebase_segs: list[dict] = []  # interleaved appends a rebase carries
     enforced: set | None = None  # (name, expr) pairs `enforce` cleared
-    # does THIS commit add an equality-delete descriptor? (a descriptor
-    # without a seq is the one being added — snapshot_delete_keys) —
-    # drives the cdf_delta unit below
-    new_eq_delete = (eq_deletes != "inherit"
-                     and any("seq" not in d for d in (eq_deletes or [])))
-    # ...and does any of them need a lazy D band scan? (covered
-    # descriptors are replaced by their own delta — U rows only)
-    new_uncovered_eq = (
-        eq_deletes != "inherit"
-        and any("seq" not in d and not d.get("covered")
-                for d in (eq_deletes or [])))
-    # adopted-by-reference segments lacking a seq stamp (cherry-pick:
-    # the data is logically NEW at this publish) — stamped per attempt
+    # adopted segments without a seq (cherry-pick): new at this publish
     unstamped_extra = [d for d in (extra_segments or [])
                        if "seq" not in d]
+    delta = _segment_totals(extra_segments or [],
+                            _entry_totals(new_entries))
 
-    for attempt in range(max_retries + 1):
+    for _ in range(_COMMIT_RETRIES + 1):
         prev = snapshot_current_version(table_dir)
         if expected_version is not None and prev != expected_version:
             if (mode == "rewrite" and dirty_probe is not None
                     and prev is not None
                     and prev > expected_version):
-                # CONFLICT NARROWING: rebase over interleaved appends
-                # that are provably disjoint from the dirty band.
-                # ACCUMULATE across retries (ADVICE r12 medium): if a
-                # first narrowing is followed by a retry (e.g. the
-                # expire-swept-manifest `continue` below) and ANOTHER
-                # append lands, the second narrowing covers only
-                # (new expected, prev] — overwriting would drop the
-                # first narrowing's carried segments, a lost update.
-                # The ranges are disjoint because expected_version
-                # advances to prev after each narrowing.
+                # accumulate across attempts: the ranges are disjoint
+                # because expected_version advances to prev each time
                 rebase_segs += _disjoint_append_segments(
                     table_dir, expected_version, prev, dirty_probe)
                 expected_version = prev
             else:
-                raise SnapshotConflictError(
+                raise SnapshotHeadMovedError(
                     f"snapshot_commit: {table_dir} moved to version "
                     f"{prev} but this commit was derived from a read of "
                     f"version {expected_version} — re-read and re-derive")
@@ -1139,95 +1126,47 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
                 _read_manifest_meta(table_dir, prev)
                 if prev is not None else {})
         except FileNotFoundError:
-            # prev was expired between the version listing and the read
-            # (concurrent snapshot_expire under fast-moving writers) —
-            # not a commit failure: re-resolve current and retry
-            continue
+            continue  # a concurrent expire removed prev: re-resolve
         if _epoch_applied(prev_manifest, epoch_key):
             return prev  # a racing writer applied this epoch first
-        if mode == "append" and prev is not None:
-            # extra_segments: ALREADY-SERIALIZED descriptors appended
-            # by reference (fast-forward of an append-only branch) —
-            # they keep their own seq stamps
-            segments = (prev_manifest["segments"] + new_segs
-                        + (extra_segments or []))
-            # additive schema evolution — recomputed per rebase because
-            # the base (and so the evolved union) may have moved
-            schema_json = _evolved_schema_json(
-                prev_manifest["schema"], batch_schema)
-        elif mode == "rewrite" and prev is not None:
-            if base_segs is None:
-                base_segs = list(keep_segments or [])
-                if keep_entries:
-                    base_segs += _write_segments_grouped(
-                        table_dir, keep_entries,
-                        prev_manifest.get("eq_deletes"))
-            segments = base_segs + rebase_segs + new_segs
-            schema_json = _evolved_schema_json(
-                prev_manifest["schema"], batch_schema)
-        else:
+        if mode == "overwrite" or prev is None:
             segments = new_segs
             schema_json = batch_schema.json()
-        # METADATA-CONFLICT DETECTION (r13): a constraint that landed
-        # after this commit's files were written must be enforced on
-        # them too (or the commit must abort) — inheriting it unchecked
-        # would publish data the table's contract was never allowed
-        # to see
-        eff_constraints = (prev_manifest.get("constraints")
-                           if constraints == "inherit" else constraints)
-        pairs = set((eff_constraints or {}).items())
+        else:
+            if mode == "append":
+                segments = (prev_manifest["segments"] + new_segs
+                            + (extra_segments or []))
+            else:
+                if base_segs is None:
+                    base_segs = list(keep_segments or []) + \
+                        _write_segments_grouped(
+                            table_dir, keep_entries or [],
+                            prev_manifest.get("eq_deletes"))
+                segments = base_segs + rebase_segs + new_segs
+            # recomputed per attempt: the head may have evolved
+            schema_json = _evolved_schema_json(
+                prev_manifest["schema"], batch_schema)
+        eff = {k: props[k] if k in props else prev_manifest.get(k)
+               for k in _TABLE_PROPS}
+        pairs = set((eff["constraints"] or {}).items())
         if enforce is not None and (enforced is None
                                     or not pairs <= enforced):
-            enforce(eff_constraints)  # ValueError on a violating row
+            enforce(eff["constraints"])  # ValueError on a violating row
             enforced = (enforced or set()) | pairs
-        delta = _entry_totals(new_entries)
-        if extra_segments:
-            delta = {
-                "files": delta["files"] + sum(
-                    s["n_files"] for s in extra_segments),
-                "rows": delta["rows"] + sum(
-                    s.get("rows") or 0 for s in extra_segments),
-                "bytes": delta["bytes"] + sum(
-                    s.get("bytes") or 0 for s in extra_segments),
-            }
         version = (prev if prev is not None else -1) + 1
-        # SEQUENCE NUMBERS (r13): segments of THIS commit's new data
-        # are stamped with the table's MONOTONIC sequence counter
-        # (``last_seq`` + 1, carried manifest-to-manifest; legacy
-        # manifests default to their version — seq == version held
-        # before branches existed) — the age scope equality deletes
-        # apply under (a delete at seq D touches only segments with
-        # seq < D, so a key re-inserted after the delete survives it).
-        # A COUNTER, not the version, because a BRANCH adopts its
-        # parent's segments (seqs up to the fork) while its own
-        # versions restart at 1 — stamping the branch-local version
-        # made a branch delete's seq collide below adopted segments'
-        # and silently skip them; inheriting the parent's counter
-        # keeps every new branch commit strictly newer than everything
-        # it adopted. Re-stamped per attempt: a rebase moves the seq.
+        # SEQUENCE NUMBERS: the table's monotonic counter (``last_seq``
+        # + 1; legacy manifests default to their version), not the
+        # version, because a branch restarts its versions while it
+        # adopts its parent's segments. Equality deletes apply to
+        # segments with a lower seq. Re-stamped per attempt.
         seq = prev_manifest.get(
             "last_seq", prev if prev is not None else -1) + 1
-        for d in new_segs:
+        for d in new_segs + unstamped_extra:
             d["seq"] = seq
-        # adopted segments WITHOUT a seq stamp are cherry-picked data:
-        # logically new at THIS publish (re-stamped per attempt too)
-        for d in unstamped_extra:
-            d["seq"] = seq
-        # EQUALITY DELETES (r13): a manifest-level list of key-value
-        # sidecar descriptors, inherited like constraints; descriptors
-        # SELF-CLEAN — one no segment is old enough to need anymore
-        # (every seg seq >= its seq: rewrites/compaction materialized
-        # the delete into the data) drops off the list
-        eff_eq = (prev_manifest.get("eq_deletes")
-                  if eq_deletes == "inherit" else eq_deletes) or []
-        # a descriptor WITHOUT a seq is the one THIS commit adds
-        # (snapshot_delete_keys): its scope is everything before the
-        # sequence number that actually publishes — stamped per
-        # attempt, since a rebase moves the seq
-        eff_eq = [dict(d, seq=seq) if "seq" not in d else d
-                  for d in eff_eq]
-        eff_eq = [d for d in eff_eq
-                  if any(s.get("seq", 0) < d["seq"] for s in segments)]
+        eq = [dict(d, seq=seq) if "seq" not in d else d
+              for d in eff["eq_deletes"] or []]
+        eq = [d for d in eq
+              if any(s.get("seq", 0) < d["seq"] for s in segments)]
         manifest = {
             "format_version": _FORMAT_VERSION,
             "version": version,
@@ -1235,68 +1174,34 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
             "mode": mode,
             "committed_at": time.time(),
             "segments": segments,
-            # the monotonic sequence counter: covers this commit's own
-            # seq AND every adopted seq (a strict fast-forward adopts
-            # branch segments whose counter ran ahead of main's
-            # version — the max keeps future main commits newer)
+            # covers every adopted seq too (a strict fast-forward adopts
+            # branch segments whose counter ran ahead of main's)
             "last_seq": max(
                 [seq] + [s.get("seq", 0) for s in segments]
-                + [d["seq"] for d in eff_eq]),
-            # per-version delta summaries: what this commit ADDS for a
-            # plain consumer (new data entries) and for a CDF consumer
-            # (appends: same; rewrites: their recorded change log) — the
-            # O(1) admission-probe units (VERDICT r11 item 7)
+                + [d["seq"] for d in eq]),
+            # the admission-probe units: what the commit adds for a
+            # plain consumer and for a CDF consumer. An uncovered
+            # equality delete's CDF unit is the parent's band, the scan
+            # its lazy D rows cost; a covered one serves only U rows.
             "delta": delta,
-            # an EQUALITY-DELETE commit records its PARENT's live band
-            # (+ its own delta) as the CDF unit: that is exactly the
-            # scan a CDF consumer pays to compute the commit's lazy D
-            # rows (the 'eqdead' slices of the streaming source / the
-            # batch CDF's remaining-join) — 0 would let admission
-            # control admit an unbounded band scan as free (r13). A
-            # covered-only commit (upsert: the descriptor is replaced
-            # by its own delta) serves only U rows — its unit is just
-            # the delta.
             "cdf_delta": (
                 delta if mode == "append"
-                else {"files": delta["files"] + sum(
-                          s["n_files"]
-                          for s in prev_manifest["segments"]),
-                      "rows": delta["rows"] + sum(
-                          s.get("rows") or 0
-                          for s in prev_manifest["segments"]),
-                      "bytes": delta["bytes"] + sum(
-                          s.get("bytes") or 0
-                          for s in prev_manifest["segments"])}
-                if new_uncovered_eq and prev_manifest.get("segments")
-                else delta if new_eq_delete and new_entries
+                else _segment_totals(prev_manifest["segments"], delta)
+                if any(not d.get("covered") for d in added_eq)
+                and prev_manifest.get("segments")
+                else delta if added_eq and new_entries
                 else _entry_totals(changes_entries or [])),
             "schema": schema_json,
             "last_epoch": (
                 epoch_key if epoch_key is not None
                 else prev_manifest.get("last_epoch")
             ),
-            # the commit's OWN epoch (None for batch commits) — distinct
-            # from last_epoch, which is the inherited idempotence
-            # high-water mark carried by every descendant
+            # the commit's OWN epoch; last_epoch is the inherited mark
             "epoch_key": epoch_key,
             "changes": changes_entries,
             "cdf_key": cdf_key,
-            "cluster_cols": (prev_manifest.get("cluster_cols")
-                             if cluster_cols == "inherit"
-                             else cluster_cols),
-            # the table's declared partition spec (r12) — same inherit
-            # semantics as the clustering lineage: appends/rewrites
-            # keep it, snapshot_commit_partitioned sets it, a plain
-            # overwrite clears it
-            "partition_spec": (prev_manifest.get("partition_spec")
-                               if partition_spec == "inherit"
-                               else partition_spec),
-            # CHECK constraints are TABLE properties (r12): they
-            # survive every commit shape including plain overwrites
-            # (the data changed; the contract did not) — only the
-            # add/drop verbs replace the dict
-            "constraints": eff_constraints,
-            "eq_deletes": eff_eq,
+            **eff,
+            "eq_deletes": eq,
         }
         for d in sorted(commit_dirs):
             if not os.path.isdir(os.path.join(table_dir, d)):
@@ -1316,39 +1221,29 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
         tmp = _manifest_path(table_dir, version) + f".tmp.{commit_id}"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
-            # durability before visibility — FOR THE MANIFEST: its bytes
-            # must be on stable storage BEFORE the link makes the
-            # version name resolvable, or a power loss could leave a
-            # torn v{N}.json that reads as a committed version. The DATA
-            # files' durability is the filesystem's writeback contract
-            # (Spark does not fsync parquet output); a power loss in the
-            # seconds after publish can lose data-file bytes on any
-            # parquet pipeline — the manifest fsync guarantees the
-            # PROTOCOL state (version chain, no torn manifests), not
-            # physical data-page durability (ADVICE r9: claim scoped)
+            # durability before visibility — FOR THE MANIFEST: a torn
+            # v{N}.json must never read as a committed version. Data
+            # files follow the filesystem's writeback (Spark does not
+            # fsync parquet): the fsync guarantees the protocol state,
+            # not physical data-page durability
             fh.flush()
             os.fsync(fh.fileno())
         try:
-            # atomic put-if-absent: publishes the COMPLETE temp file
-            # under the version name, or fails EEXIST — THE commit
+            # atomic put-if-absent: THE commit
             os.link(tmp, _manifest_path(table_dir, version))
         except FileExistsError:
             os.unlink(tmp)
-            if mode != "append":
+            if mode == "overwrite" and expected_version is None:
                 raise SnapshotConflictError(
                     f"snapshot_commit: version {version} of {table_dir} "
-                    f"was committed concurrently; a {mode} based on "
+                    f"was committed concurrently; an overwrite based on "
                     f"version {prev} cannot be rebased — re-read and "
                     "re-derive the replacement") from None
-            continue  # append: rebase onto the new current and retry
+            continue  # the version check classifies the winner
         except FileNotFoundError:
-            # a concurrent snapshot_expire swept this tmp between write
-            # and link (its grace window was <= our in-flight time):
-            # not a version conflict — rewrite the tmp and retry
-            continue
+            continue  # a concurrent expire swept the tmp: rewrite it
         os.unlink(tmp)
-        # persist the directory entry for v{N}.json as well — link is
-        # atomic in memory but the dirent needs its own writeback
+        # the dirent of v{N}.json needs its own writeback
         dir_fd = os.open(snapdir, os.O_RDONLY)
         try:
             os.fsync(dir_fd)
@@ -1357,9 +1252,9 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
         _write_latest_hint(table_dir, version)
         return version
     raise SnapshotConflictError(
-        f"snapshot_commit: lost the commit race {max_retries + 1} times "
-        f"on {table_dir} — sustained contention; serialize the writers "
-        "or re-run the commit")
+        f"snapshot_commit: lost the commit race {_COMMIT_RETRIES + 1} "
+        f"times on {table_dir} — sustained contention; serialize the "
+        "writers or re-run the commit")
 
 
 def snapshot_version_at(table_dir: str, as_of: float) -> int:
@@ -3209,9 +3104,7 @@ def snapshot_commit_partitioned(spark: SparkSession, table_dir: str,
         spec)
     return _publish_commit(
         table_dir, mode=mode, new_entries=new_entries,
-        batch_schema=df.schema,
-        cluster_cols=("inherit" if mode == "append" else None),
-        partition_spec=spec,
+        batch_schema=df.schema, props={"partition_spec": spec},
         enforce=lambda c: _enforce_constraints(
             spark, table_dir, c, new_entries, df.schema.json(),
             "snapshot_commit_partitioned"),
@@ -3427,15 +3320,12 @@ def snapshot_drop_partitions(spark: SparkSession, table_dir: str,
             _read_entries(spark, table_dir, dropped, manifest["schema"],
                           eq_deletes=manifest.get("eq_deletes")),
             [f["name"] for f in json.loads(manifest["schema"])["fields"]])
-    from pyspark.sql.types import StructType
-
     rows = [e.get("rows") if e.get("rows") is None
             else e["rows"] - (e.get("dv") or {}).get("rows", 0)
             for e in dropped]
     version = _publish_commit(
         table_dir, mode="rewrite",
         new_entries=[],
-        batch_schema=StructType.fromJson(json.loads(manifest["schema"])),
         expected_version=base_version,
         keep_segments=keep_segs,
         keep_entries=keep_entries,
@@ -3558,18 +3448,14 @@ def snapshot_delete_where(spark: SparkSession, table_dir: str,
             updated.append(e)  # probed dirty, no row matched: unchanged
     # exact D-row change log (old values) for the CDF surface
     changes_entries = _write_delete_log(table_dir, matched, cols)
-    from pyspark.sql.types import StructType
-
     version = _publish_commit(
         table_dir, mode="rewrite",
         new_entries=[],
-        batch_schema=StructType.fromJson(json.loads(manifest["schema"])),
         expected_version=base_version,
         keep_segments=keep_segs,
         keep_entries=keep_entries + updated,
         changes_entries=changes_entries, cdf_key=key,
-        dirty_probe=probe,
-        extra_commit_dirs={dv_rel})
+        dirty_probe=probe)
     return version, {"files_touched": len(total_counts),
                      "rows_deleted": rows_deleted,
                      "files_rewritten": 0}
@@ -3644,13 +3530,6 @@ def _write_key_sidecar(spark: SparkSession, table_dir: str,
             "bands": {c: lo_hi[c] for c in key_cols if c in bandable}}
 
 
-# the version-moved conflict shapes: the plain mismatch, a narrowing
-# range with an expired prefix, an interleaved rewrite the narrowing
-# refuses — all mean only "the head moved"
-_HEAD_MOVED = ("moved to version", "moved past the read version",
-               "is a concurrent")
-
-
 def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
                 base_version: int | None, epoch_key: str | None,
                 inputs, dedup_keys: bool = False
@@ -3690,8 +3569,6 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
     Returns (version, rows appended, covered keys, delete keys); an
     epoch replay or an empty batch returns (head, 0, 0, 0)."""
     import shutil
-
-    from pyspark.sql.types import StructType
 
     key_cols = [key] if isinstance(key, str) else list(key)
     if not key_cols:
@@ -3752,25 +3629,24 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
             descs.append(desc)
     if not descs:
         return base_version, 0, 0, 0
-    for _ in range(21):
+    for _ in range(_COMMIT_RETRIES + 1):
         try:
             version = _publish_commit(
                 table_dir, mode="rewrite", new_entries=entries,
-                batch_schema=(rows.schema if entries else StructType
-                              .fromJson(json.loads(manifest["schema"]))),
+                batch_schema=rows.schema if entries else None,
                 epoch_key=epoch_key, expected_version=base_version,
                 keep_segments=list(manifest["segments"]),
                 changes_entries=None,  # the CDF derives it (see above)
                 cdf_key=key_cols[0] if len(key_cols) == 1 else key_cols,
                 dirty_probe=lambda e: False,  # every append commutes
-                eq_deletes=list(manifest.get("eq_deletes") or []) + descs,
-                extra_commit_dirs={d["path"] for d in descs},
+                props={"eq_deletes": list(manifest.get("eq_deletes") or [])
+                       + descs},
                 enforce=(lambda c: _enforce_constraints(
                     spark, table_dir, c, entries, rows.schema.json(), verb))
                 if entries else None)
             return version, n_rows, n_covered, n_deleted
-        except SnapshotConflictError as exc:
-            if pinned or not any(s in str(exc) for s in _HEAD_MOVED):
+        except SnapshotHeadMovedError:
+            if pinned:
                 raise
         base_version = snapshot_current_version(table_dir)
         log.info("%s: %s moved to version %d under the commit; "
@@ -3779,8 +3655,8 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
         manifest = _read_manifest_meta(table_dir, base_version)
         check(manifest, rows)
     raise SnapshotConflictError(
-        f"{verb}: {table_dir} kept moving through 20 re-derivations — "
-        "quiesce the writers")
+        f"{verb}: {table_dir} kept moving through {_COMMIT_RETRIES} "
+        "re-derivations — quiesce the writers")
 
 
 def snapshot_delete_keys(spark: SparkSession, table_dir: str,
@@ -4041,16 +3917,11 @@ def snapshot_add_constraint(spark: SparkSession, table_dir: str,
             f"{name!r} ({expr}) — e.g. {bad.first().asDict()}; clean "
             "the data first (Delta refuses exactly this)")
     constraints[name] = expr
-    from pyspark.sql.types import StructType
-
     return _publish_commit(
-        table_dir, mode="rewrite",
-        new_entries=[],
-        batch_schema=StructType.fromJson(json.loads(manifest["schema"])),
+        table_dir, mode="rewrite", new_entries=[],
         expected_version=manifest["version"],
         keep_segments=list(manifest["segments"]),
-        changes_entries=[],
-        constraints=constraints)
+        changes_entries=[], props={"constraints": constraints})
 
 
 def snapshot_drop_constraint(table_dir: str, name: str,
@@ -4066,16 +3937,11 @@ def snapshot_drop_constraint(table_dir: str, name: str,
             f"snapshot_drop_constraint: no constraint {name!r} on "
             f"{table_dir} (have {sorted(constraints)})")
     del constraints[name]
-    from pyspark.sql.types import StructType
-
     return _publish_commit(
-        table_dir, mode="rewrite",
-        new_entries=[],
-        batch_schema=StructType.fromJson(json.loads(manifest["schema"])),
+        table_dir, mode="rewrite", new_entries=[],
         expected_version=manifest["version"],
         keep_segments=list(manifest["segments"]),
-        changes_entries=[],
-        constraints=constraints)
+        changes_entries=[], props={"constraints": constraints})
 
 
 def snapshot_compact_manifests(table_dir: str,
@@ -4118,9 +3984,6 @@ def snapshot_compact_manifests(table_dir: str,
     dv_dirs = sorted({e["dv"]["path"] for e in entries if e.get("dv")})
     if len(undersized) <= 1 and len(dv_dirs) <= 1:
         return manifest["version"]  # nothing worth merging
-    from pyspark.sql.types import StructType
-
-    extra_dirs: set[str] = set()
     if len(dv_dirs) > 1:
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -4154,20 +4017,13 @@ def snapshot_compact_manifests(table_dir: str,
             (dict(e, dv={"path": dv_rel, "rows": e["dv"]["rows"]})
              if e.get("dv") else e)
             for e in entries]
-        extra_dirs.add(dv_rel)
-    # grouped by delete-applicability class: the re-chunked segments
-    # must keep their data's age, or active equality deletes would
-    # stop/start applying to the wrong rows (r13)
-    new_segs = _write_segments_grouped(table_dir, entries,
-                                       manifest.get("eq_deletes"))
+    # re-chunked by the loop grouped by delete-applicability class: the
+    # new segments keep their data's age, or active equality deletes
+    # would stop/start applying to the wrong rows
     return _publish_commit(
-        table_dir, mode="rewrite",
-        new_entries=[],
-        batch_schema=StructType.fromJson(json.loads(manifest["schema"])),
+        table_dir, mode="rewrite", new_entries=[],
         expected_version=manifest["version"],
-        keep_segments=new_segs,
-        changes_entries=[],
-        extra_commit_dirs=extra_dirs)
+        keep_entries=entries, changes_entries=[])
 
 
 def snapshot_commit_clustered(spark: SparkSession, table_dir: str,
@@ -4474,7 +4330,7 @@ def snapshot_restore(spark: SparkSession, table_dir: str, version: int,
         # deletes active at that version (inheriting the head's would
         # delete keys the target never saw deleted, or resurrect ones
         # it did)
-        eq_deletes=target_m.get("eq_deletes") or [],
+        props={"eq_deletes": target_m.get("eq_deletes") or []},
         changes_entries=changes_entries, cdf_key=key)
 
 
@@ -4564,7 +4420,7 @@ def snapshot_fast_forward(table_dir: str, name: str) -> int:
     next version by adopting its segments — zero data movement (the
     branch's data files already live in the shared storage). Strict
     Iceberg semantics: if main moved past the branch's fork point the
-    fast-forward ABORTS with ``SnapshotConflictError`` (re-branch and
+    fast-forward ABORTS with ``SnapshotHeadMovedError`` (re-branch and
     re-apply — a silent merge here could drop main's interleaved
     rows).
 
@@ -4584,7 +4440,7 @@ def snapshot_fast_forward(table_dir: str, name: str) -> int:
             f"snapshot_fast_forward: no branch {name!r} on {table_dir}")
     head = snapshot_current_version(table_dir)
     if head != fork["from_version"]:
-        raise SnapshotConflictError(
+        raise SnapshotHeadMovedError(
             f"snapshot_fast_forward: {table_dir} moved to version "
             f"{head} but branch {name!r} forked from "
             f"{fork['from_version']} — re-branch and re-apply the "
@@ -4602,26 +4458,16 @@ def snapshot_fast_forward(table_dir: str, name: str) -> int:
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(bm["schema"]))
+    props = {k: bm.get(k) for k in _TABLE_PROPS}
     if append_only:
         return _publish_commit(
-            table_dir, mode="append", new_entries=[],
-            batch_schema=schema,
-            expected_version=head,
-            extra_segments=_added_segments(chain[0], bm),
-            eq_deletes=bm.get("eq_deletes") or [],
-            constraints=bm.get("constraints"),
-            partition_spec=bm.get("partition_spec"),
-            cluster_cols=bm.get("cluster_cols"))
+            table_dir, mode="append", new_entries=[], batch_schema=schema,
+            expected_version=head, props=props,
+            extra_segments=_added_segments(chain[0], bm))
     return _publish_commit(
-        table_dir, mode="rewrite", new_entries=[],
-        batch_schema=schema,
-        expected_version=head,
-        keep_segments=list(bm["segments"]),
-        changes_entries=None,
-        eq_deletes=bm.get("eq_deletes") or [],
-        constraints=bm.get("constraints"),
-        partition_spec=bm.get("partition_spec"),
-        cluster_cols=bm.get("cluster_cols"))
+        table_dir, mode="rewrite", new_entries=[], batch_schema=schema,
+        expected_version=head, props=props,
+        keep_segments=list(bm["segments"]), changes_entries=None)
 
 
 def snapshot_cherry_pick(spark: SparkSession, table_dir: str,
@@ -4676,8 +4522,7 @@ def snapshot_cherry_pick(spark: SparkSession, table_dir: str,
                 "snapshot_fast_forward from an unmoved fork point, or "
                 "re-branch and re-apply")
     fork_m, bm = chain[0], chain[-1]
-    for field in ("constraints", "partition_spec", "cluster_cols",
-                  "eq_deletes"):
+    for field in _TABLE_PROPS:
         if (bm.get(field) or None) != (fork_m.get(field) or None):
             raise SnapshotConflictError(
                 f"snapshot_cherry_pick: branch {name!r} changed table "

@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.snapshot_check import (check_carried, check_feed,
-                                        check_replay, frames_differ)
+                                        check_replay, frames_differ,
+                                        no_entry_reads)
 from ..sources import load_table
 from ..sources.readers import inline_dim
 from .io_roundtrip import _orders_kpc, _scratch
@@ -3498,18 +3499,9 @@ def snapshot_equality_delete_parity(spark: SparkSession,
     # (a) the eq delete commits without opening any data file
     keys = base.filter((F.col("k") > 300) & (F.col("k") <= 500)) \
         .select("k")
-    real = S._read_entries
-
-    def tripwire(*a, **kw):
-        raise RuntimeError(
-            "snapshot_equality_delete_parity: snapshot_delete_keys "
-            "read table entries — the commit must be O(keys)")
-
-    try:
-        S._read_entries = tripwire
+    with no_entry_reads(
+            "snapshot_equality_delete_parity: snapshot_delete_keys"):
         v_eq, info = S.snapshot_delete_keys(spark, eq_dir, keys, "k")
-    finally:
-        S._read_entries = real
     if info["keys"] == 0:
         raise RuntimeError(
             "snapshot_equality_delete_parity: empty key set — fixture "
@@ -3910,19 +3902,9 @@ def snapshot_upsert_keys_parity(spark: SparkSession,
                           base.filter(F.col("k") > 500).coalesce(1),
                           mode="append")
 
-    real = S._read_entries
-
-    def tripwire(*a, **kw):
-        raise RuntimeError(
-            "snapshot_upsert_keys_parity: the upsert read table "
-            "entries — the commit must be O(new), zero band reads")
-
-    try:
-        S._read_entries = tripwire
+    with no_entry_reads("snapshot_upsert_keys_parity: the upsert"):
         v1, info1 = S.snapshot_upsert_keys(spark, table_dir, up1, "k")
         v2, info2 = S.snapshot_upsert_keys(spark, table_dir, up2, "k")
-    finally:
-        S._read_entries = real
     if info1["rows"] != up1.count() or info2["rows"] != up2.count():
         raise RuntimeError(
             "snapshot_upsert_keys_parity: row accounting diverged")

@@ -13,11 +13,11 @@ into 4 time-ordered parquet files with ascending mtimes (the file
 source's oldest-first order), consumed one per trigger — 4 real
 micro-batches. In production that line is a kafka/kinesis source; the
 stateful operator and the sink are what is under test and are
-production-shaped (foreachBatch parquet sink, availableNow drain).
+production-shaped (foreachBatch parquet sink, drained until caught up).
 
 Every gate runs its streams through one drain (streaming/events.py:
-``drain`` — foreachBatch, an availableNow or processing-time trigger,
-run until caught up, then stop), and the ``snapshot_table`` source gates
+``drain`` — foreachBatch, a 50 ms processing-time trigger, run until
+caught up, then stop), and the ``snapshot_table`` source gates
 check each sink against the batch read over the same range with
 ``check_stream`` (operators/snapshot_check.py).
 """
@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..operators.snapshot_check import (check_replay, check_stream,
-                                        feed_changes, frames_differ)
+                                        feed_changes, frames_differ,
+                                        no_entry_reads)
 from ..sources import load_table
 from ..sources.readers import empty_frame, inline_dim
 from ..streaming.events import drain
@@ -984,22 +985,12 @@ def stream_snapshot_replication_mor_parity(spark: SparkSession,
         # pin the batch before the tripwire (its lineage reads the
         # SOURCE table)
         changes = feed_changes(batch_df).localCheckpoint(eager=True)
-        real = S._read_entries
-
-        def tripwire(*a, **kw):
-            raise RuntimeError(
-                "stream_snapshot_replication_mor_parity: the "
-                "mor-apply read replica entries — each applied "
-                "batch must be O(batch), zero band reads")
-
-        try:
-            S._read_entries = tripwire
+        with no_entry_reads(
+                "stream_snapshot_replication_mor_parity: the mor-apply"):
             snapshot_apply_cdc_mor(spark, dst_dir, changes, "k",
                                    seq="_commit_version",
                                    op="_change_type",
                                    epoch_key=str(epoch_id))
-        finally:
-            S._read_entries = real
 
     def replicate(label: str) -> None:
         drain(spark.readStream.format("snapshot_table")
@@ -1140,7 +1131,7 @@ def stream_snapshot_source_ratelimited_parity(spark: SparkSession,
         drain(spark.readStream.format("snapshot_table")
               .option("maxFilesPerTrigger", "2")
               .option("cursorLocation", cursor)
-              .load(table_dir), sink, ckpt, every="50 milliseconds")
+              .load(table_dir), sink, ckpt)
         check_stream(
             spark, table_dir, out_dir, -1,
             context=f"stream_snapshot_source_ratelimited_parity[{label}]")
@@ -1452,7 +1443,7 @@ def stream_lsh_index_maintenance_parity(spark: SparkSession,
         drain(spark.readStream.format("snapshot_table")
               .option("maxFilesPerTrigger", "1")
               .option("cursorLocation", cursor)
-              .load(src), sink, ckpt, every="50 milliseconds")
+              .load(src), sink, ckpt)
         got = snapshot_read(spark, sig_t).count()
         if got != expect_sigs:
             raise RuntimeError(
@@ -1731,7 +1722,7 @@ def stream_ivf_index_maintenance_parity(spark: SparkSession,
         drain(spark.readStream.format("snapshot_table")
               .option("maxFilesPerTrigger", "1")
               .option("cursorLocation", cursor)
-              .load(src), sink, ckpt, every="50 milliseconds")
+              .load(src), sink, ckpt)
         got = snapshot_read(spark, assign_t).count()
         if got != expect:
             raise RuntimeError(

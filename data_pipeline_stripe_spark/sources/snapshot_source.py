@@ -79,10 +79,11 @@ BELOW the checkpoint — Spark records that as the batch end and
 re-serves consumed versions, duplicate rows; ADVICE r11), so it
 serves head ONCE — unbounded but correct, offsets never regress —
 and the bound resumes from the first partitions/commit sync.
-Trigger note:
-``availableNow`` snapshots the head offset once up front, so
-per-batch admission applies to ``processingTime`` triggers (use the
-gated query's drain-until-caught-up loop for bounded full drains).
+Trigger note: this source cannot serve ``availableNow`` (Spark falls
+back to one Trigger.Once batch, which need not serve versions committed
+after an uncommitted batch), and per-batch admission needs a trigger
+per batch: drain it under a ``processingTime`` trigger, as
+``streaming.drain`` does.
 
 BATCH + SQL SURFACE (r11, VERDICT r10 item 6): the same format name
 serves batch reads — ``spark.read.format("snapshot_table")

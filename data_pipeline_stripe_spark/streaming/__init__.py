@@ -5,7 +5,6 @@ from .events import (
     sessionized_event_counts,
     sessionize_with_timeout,
     stateful_running_totals,
-    stateful_running_totals_v2,
     enrich_with_dim,
     dedup_event_stream,
     purchase_click_attribution,
@@ -21,7 +20,6 @@ __all__ = [
     "sessionized_event_counts",
     "sessionize_with_timeout",
     "stateful_running_totals",
-    "stateful_running_totals_v2",
     "enrich_with_dim",
     "dedup_event_stream",
     "purchase_click_attribution",

@@ -23,20 +23,20 @@ from pyspark.sql import types as T
 
 
 def drain(stream: DataFrame, sink, checkpoint: str, *,
-          output_mode: str = "append", every: str | None = None) -> None:
+          output_mode: str = "append") -> None:
     """Run ``stream`` through the ``foreachBatch`` function ``sink``
     until everything available at the call has been processed, then
     stop it — also when a batch raises, whose error then propagates.
-    The trigger is ``availableNow`` unless ``every`` names a
-    processing-time interval (``"50 milliseconds"``): a rate-limited
-    source needs one, because ``availableNow`` fixes the end offset
-    once and so skips the source's per-trigger admission walk."""
-    writer = (stream.writeStream.outputMode(output_mode)
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint))
-    writer = (writer.trigger(processingTime=every) if every is not None
-              else writer.trigger(availableNow=True))
-    q = writer.start()
+    The trigger is a 50 ms processing-time one, which every source
+    serves: a rate-limited source walks its admission cursor once per
+    trigger, and the ``snapshot_table`` source cannot serve
+    ``availableNow`` (Spark would fall back to one Trigger.Once batch,
+    which need not serve data committed after an uncommitted batch)."""
+    q = (stream.writeStream.outputMode(output_mode)
+         .foreachBatch(sink)
+         .option("checkpointLocation", checkpoint)
+         .trigger(processingTime="50 milliseconds")
+         .start())
     try:
         q.processAllAvailable()
     finally:
@@ -133,72 +133,6 @@ def stateful_running_totals(events: DataFrame) -> DataFrame:
         .applyInPandasWithState(update, out_schema, state_schema,
                                 outputMode="update",
                                 timeoutConf="NoTimeout")
-    )
-
-
-def stateful_running_totals_v2(events: DataFrame) -> DataFrame:
-    """The same running-totals contract on Spark 4's
-    ``transformWithStateInPandas`` — the successor stateful API: state
-    lives in NAMED variables handed out by a ``StatefulProcessorHandle``
-    (value/list/map state, timers, TTL) instead of the single implicit
-    GroupState tuple, and the store is RocksDB-backed (the query must run
-    with the RocksDB state-store provider — the caller sets
-    ``spark.sql.streaming.stateStore.providerClass``; the default HDFS
-    provider is refused by this operator family).
-
-    Behavior twin of :func:`stateful_running_totals`: per event_type
-    running (n_events, total_value) across micro-batches, the updated
-    totals emitted for every key a batch touches — the parity test pins
-    both operators to the same batch oracle.
-
-    Environment note: the transformWithState Python<->JVM state protocol
-    rides the ``protobuf`` package, which this container does not ship —
-    the parity test skips itself here (and runs anywhere protobuf is
-    installed); ``stateful_running_totals`` remains the
-    tested-everywhere path."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType([
-        T.StructField("event_type", T.StringType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("n", T.LongType()),
-        T.StructField("v", T.DoubleType()),
-    ])
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, v = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                v += float(pdf["value"].sum())
-            self._totals.update((n, v))
-            yield pd.DataFrame({
-                "event_type": [key[0]],
-                "n_events": [n],
-                "total_value": [round(v, 2)],
-            })
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.groupBy("event_type")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
     )
 
 
@@ -372,7 +306,7 @@ def write_partitioned_exactly_once(agg: DataFrame, out_dir: str,
     content instead of appending duplicates. This is the idempotent-sink
     pattern for aggregation outputs (complete/update modes) that plain
     file sinks (append-only) can't express. Drives the stream to
-    completion (availableNow)."""
+    completion (``drain``)."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         (
@@ -418,7 +352,7 @@ def merge_stream_into_table(changes: DataFrame, table_dir: str, key: str,
     partition overwrite of only the dirty partitions
     (operators/merge.py + pipelines' partitioned sinks) — the batch
     loop here is identical. Drives the stream to completion
-    (availableNow)."""
+    (``drain``)."""
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from ..operators.merge import apply_cdc

@@ -2314,7 +2314,7 @@ for i in range(n):
         os.path.join(table_dir, rel, "part-0.parquet"))
     _publish_commit(table_dir, mode="append",
                     new_entries=_file_entries(table_dir, rel),
-                    batch_schema=schema, max_retries=50)
+                    batch_schema=schema)
 print("CHILD_OK")
 """.format(repo=os.path.dirname(os.path.dirname(os.path.abspath(
         __file__))))
@@ -4111,25 +4111,17 @@ def test_equality_delete_commit_opens_no_data_files(spark, tmp_path):
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
+    from data_pipeline_stripe_spark.operators.snapshot_check import \
+        no_entry_reads
 
     t = str(tmp_path / "eq0")
     df = spark.range(5000).select(F.col("id").alias("k"),
                                   (F.col("id") * 10).alias("v"))
     S.snapshot_commit(spark, t, df.repartition(8))
-    real = S._read_entries
-
-    def tripwire(*a, **kw):
-        raise AssertionError(
-            "snapshot_delete_keys read table entries — the commit "
-            "is supposed to be O(keys), zero data files")
-
     keys = spark.createDataFrame([(i,) for i in range(0, 50, 7)],
                                  "k long")
-    try:
-        S._read_entries = tripwire
+    with no_entry_reads("snapshot_delete_keys"):
         v, info = S.snapshot_delete_keys(spark, t, keys, "k")
-    finally:
-        S._read_entries = real
     assert info["keys"] == len(range(0, 50, 7))
     m = S._read_manifest_meta(t, v)
     assert len(m["eq_deletes"]) == 1
@@ -4242,8 +4234,8 @@ def test_upsert_keys_merge_on_read(spark, tmp_path):
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
-    from data_pipeline_stripe_spark.operators.snapshot_check import \
-        check_replay
+    from data_pipeline_stripe_spark.operators.snapshot_check import (
+        check_replay, no_entry_reads)
     from data_pipeline_stripe_spark.sources.snapshot_source import \
         register_snapshot_source
 
@@ -4261,19 +4253,9 @@ def test_upsert_keys_merge_on_read(spark, tmp_path):
     up = spark.range(40, 120).filter(
         (F.col("id") < 60) | (F.col("id") >= 100)).select(
         F.col("id").alias("k"), (F.col("id") * 1000).alias("v"))
-    real = S._read_entries
-
-    def tripwire(*a, **kw):
-        raise AssertionError(
-            "snapshot_upsert_keys read table entries — the commit is "
-            "supposed to be O(new), zero band reads")
-
-    try:
-        S._read_entries = tripwire
+    with no_entry_reads("snapshot_upsert_keys"):
         v_up, info = S.snapshot_upsert_keys(spark, t, up, "k",
                                             epoch_key="e1")
-    finally:
-        S._read_entries = real
     assert info["rows"] == 40 and info["keys"] == 40
     # epoch replay: no-op
     v_again, info2 = S.snapshot_upsert_keys(spark, t, up, "k",
@@ -4346,8 +4328,8 @@ def test_apply_cdc_mor_merge_on_read(spark, tmp_path):
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
-    from data_pipeline_stripe_spark.operators.snapshot_check import \
-        check_replay
+    from data_pipeline_stripe_spark.operators.snapshot_check import (
+        check_replay, no_entry_reads)
     from data_pipeline_stripe_spark.sources.snapshot_source import \
         register_snapshot_source
 
@@ -4379,19 +4361,9 @@ def test_apply_cdc_mor_merge_on_read(spark, tmp_path):
         .unionByName(spark.range(200, 205).select(
             F.col("id").alias("k"), (F.col("id") + 5).alias("v"),
             F.lit(1).alias("seq"), F.lit("U").alias("op"))))
-    real = S._read_entries
-
-    def tripwire(*a, **kw):
-        raise AssertionError(
-            "snapshot_apply_cdc_mor read table entries — the commit "
-            "is supposed to be O(batch), zero band reads")
-
-    try:
-        S._read_entries = tripwire
+    with no_entry_reads("snapshot_apply_cdc_mor"):
         v_mor, info = S.snapshot_apply_cdc_mor(spark, t, changes, "k",
                                                epoch_key="e1")
-    finally:
-        S._read_entries = real
     assert info == {"upserts": 15, "deletes": 12}, info
     # epoch replay no-op
     assert S.snapshot_apply_cdc_mor(
@@ -4601,6 +4573,64 @@ def test_trickle_cdc_verbs_rederive_on_interleaved_rewrite(
                 "k", base_version=head)
     finally:
         S._publish_commit = real_publish
+
+
+def test_rewrite_that_loses_the_link_race_rebases(spark, tmp_path):
+    """A commit that read the head and then loses the ``os.link`` to a
+    concurrent publish goes round the publish loop again, so the
+    version check classifies the winner: a rebase or a conflict. The
+    race is staged through ``_enforce_constraints``, which the loop
+    calls between reading the head and linking: its first call
+    publishes one append. An upsert rebases over a disjoint append; a
+    merge rebases over an append outside its key band and still aborts,
+    with a plain conflict, on one inside it."""
+    import pytest
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    real_enforce = S._enforce_constraints
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "k long, v string").coalesce(1)
+
+    def racing(t, rows):
+        fired = []
+
+        def enforce(*a, **kw):
+            if not fired:
+                fired.append(1)
+                S.snapshot_commit(spark, t, frame(rows))
+            return real_enforce(*a, **kw)
+        return fired, enforce
+
+    base = {k: "base" for k in range(20)}
+
+    def run(name, verb, raced_rows):
+        t = str(tmp_path / name)
+        S.snapshot_commit(spark, t, frame(list(base.items())))
+        fired, S._enforce_constraints = racing(t, raced_rows)
+        try:
+            verb(t)
+        finally:
+            S._enforce_constraints = real_enforce
+        assert fired
+        return t, {r.k: r.v for r in S.snapshot_read(spark, t).collect()}
+
+    t, rows = run("upsert", lambda t: S.snapshot_upsert_keys(
+        spark, t, frame([(3, "up")]), "k"), [(100, "raced")])
+    assert S.snapshot_current_version(t) == 2
+    assert rows == {**base, 3: "up", 100: "raced"}
+
+    t, rows = run("merge_out", lambda t: S.snapshot_merge(
+        spark, t, frame([(3, "up")]), "k"), [(100, "raced")])
+    assert S.snapshot_current_version(t) == 2
+    assert rows == {**base, 3: "up", 100: "raced"}
+
+    with pytest.raises(S.SnapshotConflictError,
+                       match="inside the band") as exc:
+        run("merge_in", lambda t: S.snapshot_merge(
+            spark, t, frame([(3, "up")]), "k"), [(3, "raced")])
+    assert type(exc.value) is S.SnapshotConflictError
 
 
 def _spark_jobs(spark, fn):
@@ -5379,3 +5409,109 @@ def test_snapshot_check_job_counts(spark, tmp_path):
     _, n_carried = _spark_jobs(spark, lambda: C.check_carried(
         t, 2, 3, 2, context="ctx"))
     assert (n_feed, n_carried) == (1, 0)
+
+
+
+def test_commit_verbs_inherit_unset_table_properties(spark, tmp_path):
+    """One table of what each committing verb SETS among the table
+    properties and the schema; every property it does not set equals
+    its parent's (the Iceberg rule: properties carry from snapshot to
+    snapshot unless a commit sets them). Each row runs on a fresh copy
+    of a table whose head holds a value for every property. An
+    overwrite clears the clustering lineage and the partition spec; its
+    inherited equality delete drops off because no segment is older."""
+    import json
+    import shutil
+
+    from data_pipeline_stripe_spark.operators import snapshots as S
+
+    def frame(rows, ddl="k long, v string"):
+        return spark.createDataFrame(rows, ddl).coalesce(1)
+
+    # v0-v3: a head with a partition spec, a clustering lineage, a CHECK
+    # constraint and an equality delete
+    base = str(tmp_path / "base")
+    spec = [{"name": "kb", "source": "k", "transform": "bucket:2"}]
+    S.snapshot_commit_partitioned(
+        spark, base, frame([(k, "a") for k in range(20)]), spec)
+    S.snapshot_commit_clustered(
+        spark, base, frame([(k, "b") for k in range(20, 40)]), ["k"], 1)
+    S.snapshot_add_constraint(spark, base, "k_nonneg", "k >= 0")
+    S.snapshot_delete_keys(spark, base, frame([(5,)], "k long"), "k")
+    head = S._read_manifest_meta(base, 3)
+    assert head["cluster_cols"] == ["k"] and head["partition_spec"] == spec
+    assert head["constraints"] == {"k_nonneg": "k >= 0"}
+    assert len(head["eq_deletes"]) == 1
+    spec3 = [{"name": "kb3", "source": "k", "transform": "bucket:3"}]
+    wide = frame([(50, "c", 1)], "k long, v string, w long")
+    kvw = ["k", "v", "w"]
+    added = object()  # eq_deletes: the parent's list plus one new one
+    both = {"k_nonneg": "k >= 0", "v_set": "v is not null"}
+
+    def branch(t, on_branch):
+        on_branch(S.snapshot_create_branch(t, "b"))
+        return "b"
+
+    cases = [
+        ("append", lambda t: S.snapshot_commit(spark, t, wide),
+         {"schema": kvw}),
+        ("overwrite", lambda t: S.snapshot_commit(
+            spark, t, frame([(50, "c")]), mode="overwrite"),
+         {"cluster_cols": None, "partition_spec": None, "eq_deletes": []}),
+        ("partitioned overwrite", lambda t: S.snapshot_commit_partitioned(
+            spark, t, frame([(50, "c")]), spec3, mode="overwrite"),
+         {"cluster_cols": None, "partition_spec": spec3,
+          "eq_deletes": []}),
+        ("clustered overwrite", lambda t: S.snapshot_commit_clustered(
+            spark, t, frame([(50, "c")]), ["v"], 1, mode="overwrite"),
+         {"cluster_cols": ["v"], "partition_spec": None,
+          "eq_deletes": []}),
+        ("merge", lambda t: S.snapshot_merge(
+            spark, t, frame([(25, "m"), (60, "n")]), "k"), {}),
+        ("delete_where", lambda t: S.snapshot_delete_where(
+            spark, t, [("k", "=", 25)]), {}),
+        ("drop_partitions", lambda t: S.snapshot_drop_partitions(
+            spark, t, [("kb", "=", 0)]), {}),
+        ("delete_keys", lambda t: S.snapshot_delete_keys(
+            spark, t, frame([(7,)], "k long"), "k"), {"eq_deletes": added}),
+        ("upsert_keys", lambda t: S.snapshot_upsert_keys(
+            spark, t, frame([(7, "u")]), "k"), {"eq_deletes": added}),
+        ("add_constraint", lambda t: S.snapshot_add_constraint(
+            spark, t, "v_set", "v is not null"), {"constraints": both}),
+        ("drop_constraint", lambda t: S.snapshot_drop_constraint(
+            t, "k_nonneg"), {"constraints": {}}),
+        ("compact_manifests", S.snapshot_compact_manifests, {}),
+        ("restore", lambda t: S.snapshot_restore(spark, t, 1),
+         {"eq_deletes": []}),
+        ("fast_forward append", lambda t: S.snapshot_fast_forward(
+            t, branch(t, lambda b: S.snapshot_commit(spark, b, wide))),
+         {"schema": kvw}),
+        ("fast_forward rewrite", lambda t: S.snapshot_fast_forward(
+            t, branch(t, lambda b: S.snapshot_add_constraint(
+                spark, b, "v_set", "v is not null"))),
+         {"constraints": both}),
+        ("cherry_pick", lambda t: (
+            branch(t, lambda b: S.snapshot_commit(spark, b, wide)),
+            S.snapshot_commit(spark, t, frame([(60, "d")])),
+            S.snapshot_cherry_pick(spark, t, "b")),
+         {"schema": kvw}),
+    ]
+    for name, run, sets in cases:
+        t = str(tmp_path / name.replace(" ", "_"))
+        shutil.copytree(base, t, symlinks=True)
+        run(t)
+        m = S._read_manifest_meta(t, S.snapshot_current_version(t))
+        parent = S._read_manifest_meta(t, m["parent"])
+        for prop in ("cluster_cols", "partition_spec", "constraints",
+                     "eq_deletes"):
+            want = sets.get(prop, parent.get(prop))
+            if want is added:
+                assert m[prop][:-1] == parent[prop], (name, prop)
+                assert len(m[prop]) == len(parent[prop]) + 1, (name, prop)
+            else:
+                assert m.get(prop) == want, (name, prop, m.get(prop))
+        if "schema" in sets:
+            names = [f["name"] for f in json.loads(m["schema"])["fields"]]
+            assert names == sets["schema"], (name, names)
+        else:
+            assert m["schema"] == parent["schema"], name

@@ -410,24 +410,16 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         import data_pipeline_stripe_spark.operators.snapshots as S
+        from data_pipeline_stripe_spark.operators.snapshot_check import \
+            no_entry_reads
 
         table_dir = _orders_band_table(sf_dir, "scaling_eq_delete")
         keys = spark.range(401, 801, 2).limit(200) \
             .select(F.col("id").alias("k")).localCheckpoint(eager=True)
-        real = S._read_entries
-
-        def tripwire(*a, **kw):
-            raise RuntimeError(
-                "snapshot_delete_keys opened table entries — the "
-                "commit is supposed to be O(keys)")
-
         t0 = time.time()
-        try:
-            S._read_entries = tripwire
+        with no_entry_reads("snapshot_delete_keys"):
             version, info = S.snapshot_delete_keys(
                 spark, table_dir, keys, "k")
-        finally:
-            S._read_entries = real
         dt = time.time() - t0
         if info["keys"] != 200:
             raise RuntimeError(
@@ -477,6 +469,8 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         import data_pipeline_stripe_spark.operators.snapshots as S
+        from data_pipeline_stripe_spark.operators.snapshot_check import \
+            no_entry_reads
 
         table_dir = _orders_band_table(sf_dir, "scaling_upsert_keys")
         batch = spark.range(401, 801, 2).limit(200).select(
@@ -484,20 +478,10 @@ def main() -> None:
             F.lit("9-UPSERT").alias("pri"),
             (F.col("id") * 7).alias("cents")).localCheckpoint(
             eager=True)
-        real = S._read_entries
-
-        def tripwire(*a, **kw):
-            raise RuntimeError(
-                "snapshot_upsert_keys opened table entries — the "
-                "commit is supposed to be O(new)")
-
         t0 = time.time()
-        try:
-            S._read_entries = tripwire
+        with no_entry_reads("snapshot_upsert_keys"):
             version, info = S.snapshot_upsert_keys(
                 spark, table_dir, batch, "k")
-        finally:
-            S._read_entries = real
         dt = time.time() - t0
         if info["keys"] != 200:
             raise RuntimeError(
