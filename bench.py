@@ -152,11 +152,12 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
 
-    from data_pipeline_stripe_spark.session import get_session
+    from data_pipeline_stripe_spark.session import (default_parallelism,
+                                                    get_session)
     from data_pipeline_stripe_spark.queries import REGISTRY
 
+    cpus = default_parallelism()
     spark = get_session(app_name="bench", master=f"local[{cpus}]",
                         shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -45,8 +45,7 @@ def _frontier_pass(df: DataFrame, c1: str, c2: str,
 
 
 def pareto_frontier(df: DataFrame, c1: str, c2: str,
-                    keys: list[str] | None = None,
-                    prefilter: bool = True) -> DataFrame:
+                    keys: list[str] | None = None) -> DataFrame:
     """Rows of ``df`` on the maximization frontier of integer columns
     (``c1``, ``c2``), per ``keys`` group (global if None). Both
     criteria must be integral (cent-grid quantized per the repo numeric
@@ -65,25 +64,23 @@ def pareto_frontier(df: DataFrame, c1: str, c2: str,
     Exact duplicates of a frontier point dominate neither each other
     nor themselves, so all copies are kept (skyline set semantics).
 
-    ``prefilter`` (the distributed-skyline optimization, on by
-    default): when the group count is small, a single window partition
-    sorts the whole group on one core — the 100× scaling bench measured
-    11× growth on exactly that shape. The fix runs the SAME dominance
-    pass per (keys, spark_partition_id()) FIRST — fully parallel, and
-    provably safe: a row dominated within its physical partition is
-    dominated globally, and no global-frontier row can be eliminated by
-    its own partition — then the global pass sees only the tiny local
-    survivor set. The FINAL result is therefore identical under any
-    partitioning even though the intermediate depends on it (pinned by
-    the repartition-invariance test)."""
+    Local prefilter (the distributed-skyline optimization): when the
+    group count is small, a single window partition sorts the whole
+    group on one core — the 100× scaling bench measured 11× growth on
+    exactly that shape. So the SAME dominance pass runs per (keys,
+    spark_partition_id()) FIRST — fully parallel, and provably safe: a
+    row dominated within its physical partition is dominated globally,
+    and no global-frontier row can be eliminated by its own partition —
+    then the global pass sees only the tiny local survivor set. The
+    FINAL result is therefore identical under any partitioning even
+    though the intermediate depends on it (pinned by the
+    repartition-invariance test)."""
     part = keys or []
-    if prefilter:
-        pid = free_name(df.columns, "_pid")
-        local = _frontier_pass(
-            df.withColumn(pid, F.spark_partition_id()),
-            c1, c2, [*part, pid]).drop(pid)
-        return _frontier_pass(local, c1, c2, part)
-    return _frontier_pass(df, c1, c2, part)
+    pid = free_name(df.columns, "_pid")
+    local = _frontier_pass(
+        df.withColumn(pid, F.spark_partition_id()),
+        c1, c2, [*part, pid]).drop(pid)
+    return _frontier_pass(local, c1, c2, part)
 
 
 def pareto_frontier_oracle_sql(table: str, c1: str, c2: str,

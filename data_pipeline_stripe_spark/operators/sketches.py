@@ -544,43 +544,39 @@ def _cms_slot(row_col: str, key_col: str):
     )
 
 
-def cms_table(df: DataFrame, key_col: str, keys: list[str] | None = None
-              ) -> DataFrame:
+def cms_table(df: DataFrame, key_col: str) -> DataFrame:
     """Count-min sketch as an ordinary DataFrame — the mergeable
-    frequency-sketch state ((group keys), row, slot, n): for each of
-    D=4 hash rows, slot = md5("<row>:<key>") parsed to an int mod
-    W=256, counters are plain counts. Deterministic on any engine with
-    md5 (same hash-slice pattern as the MinHash slots); mergeable
-    across batches by summing n per (row, slot); total size D·W rows
-    per group regardless of input size. One map-side-combinable
-    shuffle. NULL keys are ignored (a NULL is not a frequency class;
-    it would also land in a NULL slot the probe join can never match,
-    silently inflating totals)."""
-    group = list(keys or [])
+    frequency-sketch state (row, slot, n): for each of D=4 hash rows,
+    slot = md5("<row>:<key>") parsed to an int mod W=256, counters are
+    plain counts. Deterministic on any engine with md5 (same hash-slice
+    pattern as the MinHash slots); mergeable across batches by summing
+    n per (row, slot); total size D·W rows regardless of input size.
+    One map-side-combinable shuffle. NULL keys are ignored (a NULL is
+    not a frequency class; it would also land in a NULL slot the probe
+    join can never match, silently inflating totals)."""
     rows = F.explode(F.array(*[F.lit(d) for d in range(_CMS_DEPTH)]))
     return (
         df.filter(F.col(key_col).isNotNull())
-        .select(*group, F.col(key_col), rows.alias("row"))
-        .select(*group, "row", _cms_slot("row", key_col).alias("slot"))
-        .groupBy(*group, "row", "slot")
+        .select(F.col(key_col), rows.alias("row"))
+        .select("row", _cms_slot("row", key_col).alias("slot"))
+        .groupBy("row", "slot")
         .agg(F.count("*").alias("n"))
     )
 
 
-def cms_heavy_hitters(df: DataFrame, key_col: str, support_ppm: int,
-                      keys: list[str] | None = None,
-                      exact_verify: bool = True) -> DataFrame:
+def cms_heavy_hitters(df: DataFrame, key_col: str,
+                      support_ppm: int) -> DataFrame:
     """Heavy hitters via count-min: candidate keys whose CMS estimate
     (min over the D row counters the key hashes to) reaches the support
-    threshold ``support_ppm`` parts-per-million of the (group's) total
-    row count, optionally verified with exact counts — the standard
-    two-phase frequent-items shape at 100 TB: the sketch probe joins
-    the D·W-row sketch (broadcastable), and the exact verify re-counts
-    ONLY the few candidates (semi-join pushdown), never the key
-    universe. CMS never undercounts, so exact_verify=True returns the
-    exact answer set. The threshold compare is pure integer arithmetic
-    (est·1e6 >= total·ppm — no division), so the cut is engine-exact.
-    Returns (*keys, key_col, est_count, n_exact).
+    threshold ``support_ppm`` parts-per-million of the total row
+    count, verified with exact counts — the standard two-phase
+    frequent-items shape at 100 TB: the sketch probe joins the D·W-row
+    sketch (broadcastable), and the exact verify re-counts ONLY the
+    few candidates (semi-join pushdown), never the key universe. CMS
+    never undercounts, so the verified result is the exact answer set.
+    The threshold compare is pure integer arithmetic (est·1e6 >=
+    total·ppm — no division), so the cut is engine-exact.
+    Returns (key_col, est_count, n_exact).
 
     When to use (measured, BENCH_DIFF.md §skew): NOT for small key
     universes — on a 10k-key 20M-row fixture the exact groupBy is ~12×
@@ -589,51 +585,43 @@ def cms_heavy_hitters(df: DataFrame, key_col: str, support_ppm: int,
     sketch's regime is a key universe too large for partial-agg state:
     exact shuffles |keys| partial rows and spills, CMS still shuffles
     D·W counters per task regardless of cardinality."""
-    group = list(keys or [])
-    sketch = cms_table(df, key_col, group)
-    # total per group = sum of any one sketch row (each row counts every
-    # input exactly once) — no second scan of the input
+    sketch = cms_table(df, key_col)
+    # total = sum of any one sketch row (each row counts every input
+    # exactly once) — no second scan of the input
     totals = (
         sketch.filter(F.col("row") == 0)
-        .groupBy(*group).agg(F.sum("n").alias("_total"))
+        .agg(F.sum("n").alias("_total"))
     )
     rows = F.explode(F.array(*[F.lit(d) for d in range(_CMS_DEPTH)]))
     probes = (
         df.filter(F.col(key_col).isNotNull())
-        .select(*group, key_col).distinct()
-        .select(*group, key_col, rows.alias("row"))
+        .select(key_col).distinct()
+        .select(key_col, rows.alias("row"))
         .withColumn("slot", _cms_slot("row", key_col))
     )
     est = (
-        probes.join(sketch, group + ["row", "slot"])
-        .groupBy(*group, key_col)
-        .agg(F.min("n").alias("est_count"))
-        .join(F.broadcast(totals), group) if group else
         probes.join(sketch, ["row", "slot"])
         .groupBy(key_col)
         .agg(F.min("n").alias("est_count"))
         .join(F.broadcast(totals))
+        .filter(F.col("est_count") * 1_000_000
+                >= F.col("_total") * support_ppm)
     )
-    est = est.filter(
-        F.col("est_count") * 1_000_000 >= F.col("_total") * support_ppm
-    )
-    if not exact_verify:
-        return est.select(*group, key_col, "est_count")
     exact = (
-        df.join(est.select(*group, key_col), group + [key_col], "left_semi")
-        .groupBy(*group, key_col)
+        df.join(est.select(key_col), [key_col], "left_semi")
+        .groupBy(key_col)
         .agg(F.count("*").alias("n_exact"))
     )
     return (
-        est.join(exact, group + [key_col])
+        est.join(exact, [key_col])
         .filter(F.col("n_exact") * 1_000_000 >= F.col("_total") * support_ppm)
-        .select(*group, key_col, "est_count", "n_exact")
+        .select(key_col, "est_count", "n_exact")
     )
 
 
 def cms_oracle_sql(table: str, key_col: str, support_ppm: int) -> str:
-    """DuckDB transcription of global (ungrouped) ``cms_heavy_hitters``
-    with exact_verify. NULL keys are filtered, mirroring cms_table."""
+    """DuckDB transcription of ``cms_heavy_hitters``. NULL keys are
+    filtered, mirroring cms_table."""
     d, w = _CMS_DEPTH, _CMS_WIDTH
     return f"""
     WITH hashed AS (

@@ -48,34 +48,28 @@ def salted_join(left: DataFrame, right: DataFrame, on: str,
     return l.join(r, [on, "_salt"], how).drop("_salt")
 
 
-def two_phase_agg(df: DataFrame, key: str, value: str, agg: str = "sum",
+def two_phase_agg(df: DataFrame, key: str, value: str,
                   n_salts: int = 16) -> DataFrame:
-    """Aggregation on a skewed key in two shuffles: first on (key, salt)
-    — partial results spread across reducers — then on key alone over the
-    tiny partial table. For algebraic aggregates (sum/count/min/max) the
-    result is exact. (Spark's map-side partial aggregation usually makes
-    this unnecessary; it matters when the hot key's partials themselves
-    overflow one reducer, e.g. count-distinct-style states.)
-    Returns (key, <value>_<agg>)."""
-    fns = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
-    if agg not in fns:
-        raise ValueError(f"unsupported agg {agg!r}; have {sorted(fns)}")
-    fn = fns[agg]
+    """Sum on a skewed key in two shuffles: first on (key, salt) —
+    partial sums spread across reducers — then on key alone over the
+    tiny partial table; a sum of partial sums is exact. (Spark's
+    map-side partial aggregation usually makes this unnecessary; it
+    matters when the hot key's partials themselves overflow one
+    reducer.) Returns (key, <value>_sum)."""
     # salt by the input PARTITION, not by hash(key, value): a hot key
     # with a constant value (count columns, boolean flags) would hash to
     # ONE salt and still funnel into a single reducer. Partition-derived
     # salts spread a hot key across reducers by construction. The refold
-    # of algebraic partials is grouping-insensitive EXACTLY (so the
-    # result is partitioning-independent) for integral/count/min/max
-    # values — the repo's quantize-to-integer-cents policy; for floating
-    # double sums the per-salt grouping changes fp addition order, so
-    # results are only deterministic up to fp association (quantize
-    # first if bit-reproducibility matters).
+    # of partial sums is grouping-insensitive EXACTLY (so the result is
+    # partitioning-independent) for integral values — the repo's
+    # quantize-to-integer-cents policy; for floating double sums the
+    # per-salt grouping changes fp addition order, so results are only
+    # deterministic up to fp association (quantize first if
+    # bit-reproducibility matters).
     salt = F.pmod(F.spark_partition_id(), F.lit(n_salts)).cast("int")
     partial = (
         df.withColumn("_salt", salt)
         .groupBy(key, "_salt")
-        .agg(fn(value).alias("_partial"))
+        .agg(F.sum(value).alias("_partial"))
     )
-    refold = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}[agg]
-    return partial.groupBy(key).agg(refold("_partial").alias(f"{value}_{agg}"))
+    return partial.groupBy(key).agg(F.sum("_partial").alias(f"{value}_sum"))

@@ -147,6 +147,7 @@ from __future__ import annotations
 
 import json
 import logging
+import operator
 import os
 import time
 import uuid
@@ -178,6 +179,11 @@ _TABLE_PROPS = ("cluster_cols", "partition_spec", "constraints",
 # the publish attempts a commit may lose to racing writers before it
 # gives up (``_publish_commit``, ``_mor_commit``)
 _COMMIT_RETRIES = 20
+
+# the comparison operators of a predicate term, applied alike to Spark
+# Columns (row filters) and Python values (partition tuples)
+_CMP_OPS = {"=": operator.eq, "!=": operator.ne, ">=": operator.ge,
+            ">": operator.gt, "<=": operator.le, "<": operator.lt}
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
@@ -920,7 +926,6 @@ def _file_entries(table_dir: str, rel_dir: str) -> list[dict]:
 def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
                     mode: str = "append",
                     epoch_key: str | None = None,
-                    expected_version: int | None = None,
                     cluster_cols: list[str] | None = None) -> int:
     """Commit ``df`` as the next version of ``table_dir``. Returns the
     committed version number.
@@ -942,14 +947,6 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
     replaying "replace the whole table" over a state it never saw would
     silently drop the winner's rows.
 
-    ``expected_version`` adds READ VALIDATION (serializable
-    read-modify-write): the commit aborts with ``SnapshotConflictError``
-    unless the table is still at exactly that version when the publish
-    is attempted. Without it, a commit only guarantees it doesn't
-    clobber the version it targets; a transform derived from an earlier
-    read (MERGE, compaction) must pass the version it READ, or a commit
-    landing between read and publish would be silently overwritten.
-
     ``epoch_key`` makes the commit IDEMPOTENT — the exactly-once sink
     contract a streaming ``foreachBatch`` needs (the Delta txn
     appId/version pattern): each manifest carries the LAST committed
@@ -970,11 +967,6 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
     # not pay a (potentially table-sized) parquet write first. Each is
     # re-checked inside the retry loop because the base can move.
     early_prev = snapshot_current_version(table_dir)
-    if expected_version is not None and early_prev != expected_version:
-        raise SnapshotHeadMovedError(
-            f"snapshot_commit: {table_dir} moved to version {early_prev} "
-            f"but this commit was derived from a read of version "
-            f"{expected_version} — re-read and re-derive")
     if epoch_key is not None and early_prev is not None and (
             _epoch_applied(_read_manifest_meta(table_dir, early_prev),
                            epoch_key)):
@@ -990,7 +982,6 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
     return _publish_commit(
         table_dir, mode=mode, new_entries=new_entries,
         batch_schema=df.schema, epoch_key=epoch_key,
-        expected_version=expected_version,
         props={} if cluster_cols is None else {"cluster_cols": cluster_cols},
         enforce=lambda c: _enforce_constraints(
             spark, table_dir, c, new_entries, df.schema.json(),
@@ -1071,9 +1062,9 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
       ``expected_version`` and the commit cannot rebase over what
       landed. Re-deriving on the new head resolves it.
     - ``SnapshotConflictError``: an interleaved append wrote inside the
-      rewrite's dirty band, an overwrite without ``expected_version``
-      lost the link race, something this commit wrote was swept, or
-      the commit lost ``_COMMIT_RETRIES`` + 1 attempts.
+      rewrite's dirty band, an overwrite lost the link race, something
+      this commit wrote was swept, or the commit lost
+      ``_COMMIT_RETRIES`` + 1 attempts.
 
     Losing the link race alone is no conflict: the loop re-reads the
     head and the checks above classify the winner."""
@@ -1233,7 +1224,7 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
             os.link(tmp, _manifest_path(table_dir, version))
         except FileExistsError:
             os.unlink(tmp)
-            if mode == "overwrite" and expected_version is None:
+            if mode == "overwrite":
                 raise SnapshotConflictError(
                     f"snapshot_commit: version {version} of {table_dir} "
                     f"was committed concurrently; an overwrite based on "
@@ -1653,15 +1644,14 @@ def snapshot_pruned_files(table_dir: str,
     return [e["path"] for e in kept], stats["files_total"]
 
 
-def snapshot_plan_stats(table_dir: str, predicates: list[tuple],
-                        version: int | None = None) -> dict:
+def snapshot_plan_stats(table_dir: str, predicates: list[tuple]) -> dict:
     """The two-level pruning decision as numbers: {files_kept,
     files_total, segments_opened, segments_total} — the pinnable proof
     that a banded scan of a many-segment table opened only the
     segments its predicate may match (VERDICT r11 item 1's gate pin
     (b))."""
     return _pruned_entries(
-        table_dir, _resolve_version(table_dir, version), predicates)[1]
+        table_dir, _resolve_version(table_dir, None), predicates)[1]
 
 
 def _term_filter(term):
@@ -1669,8 +1659,6 @@ def _term_filter(term):
     filter ``snapshot_scan`` applies after file pruning (pruning is
     file-granular; this keeps row semantics exact). Triples map to
     comparisons / isNull / isin; a list of triples maps to their OR."""
-    import operator as _op
-
     from pyspark.sql import functions as F
 
     if isinstance(term, list):
@@ -1688,11 +1676,9 @@ def _term_filter(term):
         if not members:
             return F.lit(False)
         return F.col(col).isin(*members)
-    py_ops = {"=": _op.eq, "!=": _op.ne, ">=": _op.ge, ">": _op.gt,
-              "<=": _op.le, "<": _op.lt}
-    if op not in py_ops:
+    if op not in _CMP_OPS:
         raise ValueError(f"snapshot_scan: unsupported operator {op!r}")
-    return py_ops[op](F.col(col), F.lit(value))
+    return _CMP_OPS[op](F.col(col), F.lit(value))
 
 
 def _field_term_filter(spec: list[dict], term):
@@ -1736,18 +1722,13 @@ def _field_term_filter(spec: list[dict], term):
             cond = cond | (lhs == rhs)
         return cond
     lhs, rhs = one(value)
-    import operator as _op
-
-    py_ops = {"=": _op.eq, "!=": _op.ne, ">=": _op.ge, ">": _op.gt,
-              "<=": _op.le, "<": _op.lt}
-    if op not in py_ops:
+    if op not in _CMP_OPS:
         raise ValueError(f"snapshot_scan: unsupported operator {op!r}")
-    return py_ops[op](lhs, rhs)
+    return _CMP_OPS[op](lhs, rhs)
 
 
 def snapshot_scan(spark: SparkSession, table_dir: str,
-                  predicates: list[tuple],
-                  version: int | None = None) -> DataFrame:
+                  predicates: list[tuple]) -> DataFrame:
     """Stats-pruned read: drop every file whose footer stats prove a
     predicate term cannot match, BEFORE Spark plans the scan, then
     apply the same predicate as a row filter (pruning is file-granular;
@@ -1772,7 +1753,7 @@ def snapshot_scan(spark: SparkSession, table_dir: str,
     Iceberg's serve-both-generations rule, replacing the r12 refusal;
     only bool/float literals (undecidable against tuples) still
     raise."""
-    m = _resolve_version(table_dir, version)
+    m = _resolve_version(table_dir, None)
     kept, _ = _pruned_entries(table_dir, m, predicates)
     spec_names = {f["name"] for f in m.get("partition_spec") or []}
 
@@ -3042,8 +3023,7 @@ def _file_entries_partitioned(table_dir: str, rel_dir: str,
 
 def snapshot_commit_partitioned(spark: SparkSession, table_dir: str,
                                 df: DataFrame, spec: list[dict],
-                                mode: str = "append",
-                                **kwargs) -> int:
+                                mode: str = "append") -> int:
     """Commit under an EXPLICIT PARTITION SPEC (r12): ``spec`` is a
     list of ``{"name", "source", "transform"}`` fields (transforms:
     identity / day / month / bucket:<n> — the reference's own date and
@@ -3107,8 +3087,7 @@ def snapshot_commit_partitioned(spark: SparkSession, table_dir: str,
         batch_schema=df.schema, props={"partition_spec": spec},
         enforce=lambda c: _enforce_constraints(
             spark, table_dir, c, new_entries, df.schema.json(),
-            "snapshot_commit_partitioned"),
-        **kwargs)
+            "snapshot_commit_partitioned"))
 
 
 def _derived_partition_terms(spec, predicates: list[tuple]) -> list:
@@ -3250,13 +3229,9 @@ def _partition_term_match(entry: dict, term) -> bool | None:
         have = raw
         if not isinstance(value, str):
             return None  # incomparable literal type: undecidable
-    import operator as _op
-
-    py_ops = {"=": _op.eq, "!=": _op.ne, ">=": _op.ge, ">": _op.gt,
-              "<=": _op.le, "<": _op.lt}
-    if op not in py_ops:
+    if op not in _CMP_OPS:
         raise ValueError(f"snapshot_scan: unsupported operator {op!r}")
-    return py_ops[op](have, value)
+    return _CMP_OPS[op](have, value)
 
 
 def snapshot_drop_partitions(spark: SparkSession, table_dir: str,
@@ -4028,8 +4003,7 @@ def snapshot_compact_manifests(table_dir: str,
 
 def snapshot_commit_clustered(spark: SparkSession, table_dir: str,
                               df: DataFrame, cluster_cols: list[str],
-                              n_files: int, mode: str = "append",
-                              **kwargs) -> int:
+                              n_files: int, mode: str = "append") -> int:
     """Commit with a CLUSTERED layout so manifest stats prune maximally:
     range-partition the batch on ``cluster_cols`` (disjoint spans per
     file — the layout.write_clustered recipe under the commit protocol)
@@ -4050,7 +4024,7 @@ def snapshot_commit_clustered(spark: SparkSession, table_dir: str,
         .sortWithinPartitions(*cluster_cols)
     )
     return snapshot_commit(spark, table_dir, clustered, mode=mode,
-                           cluster_cols=list(cluster_cols), **kwargs)
+                           cluster_cols=list(cluster_cols))
 
 
 def snapshot_history(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -4075,36 +4049,8 @@ def snapshot_history(spark: SparkSession, table_dir: str) -> DataFrame:
     Iceberg as the snapshots metadata table."""
     from ..sources.readers import inline_dim
 
-    return inline_dim(spark, _history_rows(table_dir), _HISTORY_COLS)
-
-
-_HISTORY_COLS = (
-    "version bigint, parent bigint, mode string, committed_at double, "
-    "n_files bigint, n_rows bigint, n_change_files bigint, "
-    "from_stream_epoch boolean, n_eq_deletes bigint, "
-    "n_pending_delete_keys bigint")
-
-_HISTORY_SCHEMA_JSON = json.dumps({"type": "struct", "fields": [
-    {"name": "version", "type": "long", "nullable": False,
-     "metadata": {}},
-    {"name": "parent", "type": "long", "nullable": True, "metadata": {}},
-    {"name": "mode", "type": "string", "nullable": False,
-     "metadata": {}},
-    {"name": "committed_at", "type": "double", "nullable": False,
-     "metadata": {}},
-    {"name": "n_files", "type": "long", "nullable": False,
-     "metadata": {}},
-    {"name": "n_rows", "type": "long", "nullable": True,
-     "metadata": {}},
-    {"name": "n_change_files", "type": "long", "nullable": True,
-     "metadata": {}},
-    {"name": "from_stream_epoch", "type": "boolean", "nullable": False,
-     "metadata": {}},
-    {"name": "n_eq_deletes", "type": "long", "nullable": False,
-     "metadata": {}},
-    {"name": "n_pending_delete_keys", "type": "long", "nullable": False,
-     "metadata": {}},
-]})
+    return inline_dim(spark, _history_rows(table_dir),
+                      _METADATA_TABLES["history"][0])
 
 
 def _history_rows(table_dir: str) -> list[tuple]:
@@ -4133,48 +4079,6 @@ def _history_rows(table_dir: str) -> list[tuple]:
     return rows
 
 
-_FILES_SCHEMA_JSON = json.dumps({"type": "struct", "fields": [
-    {"name": "path", "type": "string", "nullable": False,
-     "metadata": {}},
-    {"name": "seq", "type": "long", "nullable": False, "metadata": {}},
-    {"name": "n_rows", "type": "long", "nullable": True,
-     "metadata": {}},
-    {"name": "n_bytes", "type": "long", "nullable": True,
-     "metadata": {}},
-    {"name": "has_delete_vector", "type": "boolean", "nullable": False,
-     "metadata": {}},
-    {"name": "n_eq_deletes_applicable", "type": "long",
-     "nullable": False, "metadata": {}},
-    {"name": "partition", "type": "string", "nullable": True,
-     "metadata": {}},
-    {"name": "stats", "type": "string", "nullable": True,
-     "metadata": {}},
-]})
-
-
-_TAGS_SCHEMA_JSON = json.dumps({"type": "struct", "fields": [
-    {"name": "name", "type": "string", "nullable": False,
-     "metadata": {}},
-    {"name": "version", "type": "long", "nullable": False,
-     "metadata": {}},
-]})
-
-
-_BRANCHES_SCHEMA_JSON = json.dumps({"type": "struct", "fields": [
-    {"name": "name", "type": "string", "nullable": False,
-     "metadata": {}},
-    {"name": "fork_version", "type": "long", "nullable": False,
-     "metadata": {}},
-    {"name": "head_version", "type": "long", "nullable": True,
-     "metadata": {}},
-]})
-
-
-def _tags_rows(table_dir: str) -> list[tuple]:
-    """(name, pinned version) per tag — ``metadata 'tags'``."""
-    return sorted(snapshot_tags(table_dir).items())
-
-
 def _branches_rows(table_dir: str) -> list[tuple]:
     """(name, fork version, branch head version) per live branch —
     ``metadata 'branches'`` (the WAP operational surface)."""
@@ -4190,23 +4094,6 @@ def _branches_rows(table_dir: str) -> list[tuple]:
                 continue  # not a branch dir (or mid-create)
             rows.append((name, fork, snapshot_current_version(bdir)))
     return rows
-
-
-_EQ_DELETES_SCHEMA_JSON = json.dumps({"type": "struct", "fields": [
-    {"name": "path", "type": "string", "nullable": False,
-     "metadata": {}},
-    {"name": "key_cols", "type": "string", "nullable": False,
-     "metadata": {}},
-    {"name": "seq", "type": "long", "nullable": False, "metadata": {}},
-    {"name": "n_keys", "type": "long", "nullable": True,
-     "metadata": {}},
-    {"name": "key_bands", "type": "string", "nullable": True,
-     "metadata": {}},
-    {"name": "covered", "type": "boolean", "nullable": False,
-     "metadata": {}},
-    {"name": "n_files_applicable", "type": "long", "nullable": False,
-     "metadata": {}},
-]})
 
 
 def _eq_deletes_rows(table_dir: str, manifest: dict) -> list[tuple]:
@@ -4261,6 +4148,44 @@ def _files_rows(table_dir: str, manifest: dict) -> list[tuple]:
             json.dumps(stats, sort_keys=True) if stats else None,
         ))
     return rows
+
+
+# The metadata tables (Iceberg's ``history``/``files``/``refs`` tables):
+# kind -> (DDL schema, rows(table_dir, manifest), whether the rows are
+# of a resolved ``version``/``asOf`` target — the others get None).
+# ``snapshot_history`` and every ``OPTIONS (metadata '<kind>')`` view
+# build from these entries; a ``not null`` mark is part of the view's
+# declared schema.
+_METADATA_TABLES = {
+    "history": (
+        "version bigint not null, parent bigint, mode string not null, "
+        "committed_at double not null, n_files bigint not null, "
+        "n_rows bigint, n_change_files bigint, "
+        "from_stream_epoch boolean not null, "
+        "n_eq_deletes bigint not null, "
+        "n_pending_delete_keys bigint not null",
+        lambda table_dir, _: _history_rows(table_dir), False),
+    "files": (
+        "path string not null, seq bigint not null, n_rows bigint, "
+        "n_bytes bigint, has_delete_vector boolean not null, "
+        "n_eq_deletes_applicable bigint not null, partition string, "
+        "stats string",
+        _files_rows, True),
+    # (name, pinned version) per tag
+    "tags": (
+        "name string not null, version bigint not null",
+        lambda table_dir, _: sorted(snapshot_tags(table_dir).items()),
+        False),
+    "branches": (
+        "name string not null, fork_version bigint not null, "
+        "head_version bigint",
+        lambda table_dir, _: _branches_rows(table_dir), False),
+    "eq_deletes": (
+        "path string not null, key_cols string not null, "
+        "seq bigint not null, n_keys bigint, key_bands string, "
+        "covered boolean not null, n_files_applicable bigint not null",
+        _eq_deletes_rows, True),
+}
 
 
 def snapshot_restore(spark: SparkSession, table_dir: str, version: int,

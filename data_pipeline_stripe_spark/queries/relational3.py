@@ -1261,8 +1261,7 @@ def two_phase_agg_value_by_type(spark: SparkSession,
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    return two_phase_agg(ev, key="event_type", value="value_cents",
-                         agg="sum")
+    return two_phase_agg(ev, key="event_type", value="value_cents")
 
 
 @query(

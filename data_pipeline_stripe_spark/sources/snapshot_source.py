@@ -93,6 +93,16 @@ pure SQL via ``CREATE TEMPORARY VIEW t USING snapshot_table OPTIONS
 reader additionally routes WHERE clauses into manifest-stats file
 pruning (opt-in; see ``SnapshotTablePushdownReader`` for the
 relation-reuse sharp edge that keeps it off the default path).
+
+OPTIONS: ``path`` (the table directory, or ``.load(<path>)``).
+Stream: ``startingVersion`` or ``startingTimestamp``, ``cdf``,
+``skipChangeCommits``, ``maxFilesPerTrigger`` / ``maxRowsPerTrigger``
+/ ``maxBytesPerTrigger``, ``cursorLocation``. Batch: ``version`` or
+``asOf`` (resolved once, by ``_target_manifest``), ``pushdown``, and
+``metadata`` — one of the kinds of ``operators/snapshots.py::
+_METADATA_TABLES`` (history, files, tags, branches, eq_deletes; files
+and eq_deletes are of the version/asOf target). A boolean option is
+on when its value is "true" in any case.
 """
 
 from __future__ import annotations
@@ -147,24 +157,23 @@ class SnapshotFileSlice(InputPartition):
         self.cdf = cdf
 
 
-def _delta_entries(table_dir: str, start_v: int, end_v: int,
-                   skip_change_commits: bool = False) -> list[dict]:
-    """File entries ADDED in ``(start_v, end_v]`` — the plain stream's
-    append-only range walk, shared with ``snapshot_read_incremental``
-    (``_appended_entries``): raises ValueError on an overwrite/rewrite
-    in range (the caller must restart from a full re-read) UNLESS
-    ``skip_change_commits`` (Delta's ``skipChangeCommits``): then
-    rewrite commits contribute NOTHING — only appends' deltas are
-    served, so the stream survives merges/compactions/backfills at the
-    documented cost that updated/deleted rows are never re-served
-    (the CDF source is the exact form)."""
-    from ..operators.snapshots import _appended_entries
+def _flag(options, name: str) -> bool:
+    """A boolean option: ``"true"`` in any case is on, anything else
+    (or no value) is off."""
+    return str(options.get(name, "false")).lower() == "true"
 
-    return _appended_entries(
-        table_dir, start_v, end_v, "snapshot stream source",
-        "restart the stream from a fresh checkpoint (full re-read), or "
-        "pass option('skipChangeCommits', 'true') to serve appends only",
-        skip_change_commits)[0]
+
+def _target_manifest(options) -> dict:
+    """The manifest list of the ``version``/``asOf`` target (default:
+    the head) — the one parse of those options, shared by the batch
+    schema, the batch reader and the versioned metadata tables."""
+    from ..operators.snapshots import _resolve_version
+
+    version, as_of = options.get("version"), options.get("asOf")
+    return _resolve_version(
+        options.get("path"),
+        int(version) if version is not None else None,
+        float(as_of) if as_of is not None else None)
 
 
 def _file_slices(table_dir: str, entries: list[dict], columns: list[str],
@@ -456,7 +465,7 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
                 "snapshot stream source: pass the table directory as "
                 ".load(<path>) / option('path', ...)")
         self.columns = [f.name for f in schema.fields]
-        self.cdf = str(options.get("cdf", "false")).lower() == "true"
+        self.cdf = _flag(options, "cdf")
         self.schema_json = schema.json()
         start_ts = options.get("startingTimestamp")
         if start_ts is not None:
@@ -488,8 +497,7 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
         self.max_files = self._pos_int(options, "maxFilesPerTrigger")
         self.max_rows = self._pos_int(options, "maxRowsPerTrigger")
         self.max_bytes = self._pos_int(options, "maxBytesPerTrigger")
-        self.skip_change_commits = str(
-            options.get("skipChangeCommits", "false")).lower() == "true"
+        self.skip_change_commits = _flag(options, "skipChangeCommits")
         if self.skip_change_commits and self.cdf:
             raise ValueError(
                 "snapshot stream source: skipChangeCommits contradicts "
@@ -637,8 +645,17 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
                                 self.schema_json)
                     or [SnapshotFileSlice(None, self.columns)])
         if s >= 0:
-            entries = _delta_entries(self.table_dir, s, e,
-                                     self.skip_change_commits)
+            from ..operators.snapshots import _appended_entries
+
+            # the append-only range walk of snapshot_read_incremental:
+            # a rewrite in range raises, or under skipChangeCommits
+            # contributes nothing (its updated/deleted rows are never
+            # re-served — the CDF source is the exact form)
+            entries = _appended_entries(
+                self.table_dir, s, e, "snapshot stream source",
+                "restart the stream from a fresh checkpoint (full "
+                "re-read), or pass option('skipChangeCommits', 'true') "
+                "to serve appends only", self.skip_change_commits)[0]
             # an equality delete in range is a rewrite (refused, or
             # skipped under skipChangeCommits), and every appended file
             # is newer than the deletes before it: none applies
@@ -734,18 +751,11 @@ class SnapshotTableBatchReader(DataSourceReader):
     ``pushFilters`` — see ``SnapshotTablePushdownReader``."""
 
     def __init__(self, options, schema):
-        from ..operators.snapshots import _resolve_version
-
         self.table_dir = options.get("path")
-        version = options.get("version")
-        as_of = options.get("asOf")
         # the manifest LIST only — segments open at partitions() time,
         # and only the ones the pushed terms may match (r12: SQL
         # pushdown gets the same two-level pruning as snapshot_scan)
-        self.manifest = _resolve_version(
-            self.table_dir,
-            int(version) if version is not None else None,
-            float(as_of) if as_of is not None else None)
+        self.manifest = _target_manifest(options)
         self.columns = [f.name for f in schema.fields]
         self.schema_json = schema.json()
         self.pushed_terms: list[tuple] = []
@@ -811,19 +821,16 @@ class SnapshotMetadataReader(DataSourceReader):
     construction, served as one Arrow batch from a single partition —
     never a data-file open."""
 
-    def __init__(self, options, kind: str):
-        from ..operators.snapshots import _resolve_version
+    def __init__(self, options, kind: str, schema):
+        from ..operators.snapshots import _METADATA_TABLES
 
         self.kind = kind
         self.table_dir = options.get("path")
-        version = options.get("version")
-        as_of = options.get("asOf")
-        self.manifest = (
-            _resolve_version(
-                self.table_dir,
-                int(version) if version is not None else None,
-                float(as_of) if as_of is not None else None)
-            if kind in ("files", "eq_deletes") else None)
+        # the declared schema: the executor builds its Arrow batch from
+        # it (``StructType.fromDDL`` needs a session, executors have none)
+        self.schema = schema
+        self.manifest = (_target_manifest(options)
+                         if _METADATA_TABLES[kind][2] else None)
 
     def partitions(self):
         return [InputPartition(0)]
@@ -832,33 +839,16 @@ class SnapshotMetadataReader(DataSourceReader):
         import pyarrow as pa
 
         from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
 
-        from ..operators import snapshots as S
+        from ..operators.snapshots import _METADATA_TABLES
 
-        if self.kind == "history":
-            rows, sj = (S._history_rows(self.table_dir),
-                        S._HISTORY_SCHEMA_JSON)
-        elif self.kind == "tags":
-            rows, sj = S._tags_rows(self.table_dir), S._TAGS_SCHEMA_JSON
-        elif self.kind == "branches":
-            rows, sj = (S._branches_rows(self.table_dir),
-                        S._BRANCHES_SCHEMA_JSON)
-        elif self.kind == "eq_deletes":
-            rows = S._eq_deletes_rows(self.table_dir, self.manifest)
-            sj = S._EQ_DELETES_SCHEMA_JSON
-        else:
-            rows = S._files_rows(self.table_dir, self.manifest)
-            sj = S._FILES_SCHEMA_JSON
-        target = to_arrow_schema(StructType.fromJson(json.loads(sj)))
+        rows = _METADATA_TABLES[self.kind][1](self.table_dir,
+                                              self.manifest)
+        target = to_arrow_schema(self.schema)
         cols = list(zip(*rows)) if rows else [[] for _ in target]
         yield pa.RecordBatch.from_arrays(
             [pa.array(list(c), type=f.type)
              for c, f in zip(cols, target)], schema=target)
-
-
-_METADATA_KINDS = ("history", "files", "tags", "branches",
-                   "eq_deletes")
 
 
 class SnapshotTableDataSource(DataSource):
@@ -873,22 +863,24 @@ class SnapshotTableDataSource(DataSource):
     narrower-written columns upcast in the Arrow batch), so a stream
     survives additive evolution in its range; columns ADDED after the
     stream started only appear after a restart re-resolves the schema
-    (Delta's rule too). ``option("metadata", "history"|"files")``
-    serves the table's METADATA instead (``SnapshotMetadataReader``)."""
+    (Delta's rule too). ``option("metadata", <kind>)`` serves one of
+    the table's METADATA tables instead (``SnapshotMetadataReader``)."""
 
     @classmethod
     def name(cls) -> str:
         return "snapshot_table"
 
     def _metadata_kind(self) -> str | None:
+        from ..operators.snapshots import _METADATA_TABLES
+
         kind = self.options.get("metadata")
         if kind is None:
             return None
-        if kind not in _METADATA_KINDS:
+        if kind not in _METADATA_TABLES:
             raise ValueError(
                 f"snapshot source: unknown metadata table {kind!r} — "
-                f"one of {list(_METADATA_KINDS)}")
-        if str(self.options.get("cdf", "false")).lower() == "true":
+                f"one of {list(_METADATA_TABLES)}")
+        if _flag(self.options, "cdf"):
             raise ValueError(
                 "snapshot source: metadata tables have no change feed "
                 "— drop one of the options")
@@ -898,36 +890,23 @@ class SnapshotTableDataSource(DataSource):
         from pyspark.sql.types import (LongType, StringType, StructField,
                                        StructType)
 
-        from ..operators.snapshots import _resolve_version
-
-        table_dir = self.options.get("path")
-        if not table_dir:
+        if not self.options.get("path"):
             raise ValueError(
                 "snapshot source: pass the table directory as "
                 ".load(<path>)")
         kind = self._metadata_kind()
         if kind is not None:
-            from ..operators import snapshots as S
+            from ..operators.snapshots import _METADATA_TABLES
 
-            sj = {"history": S._HISTORY_SCHEMA_JSON,
-                  "files": S._FILES_SCHEMA_JSON,
-                  "tags": S._TAGS_SCHEMA_JSON,
-                  "branches": S._BRANCHES_SCHEMA_JSON,
-                  "eq_deletes": S._EQ_DELETES_SCHEMA_JSON}[kind]
-            return StructType.fromJson(json.loads(sj))
-        version = self.options.get("version")
-        as_of = self.options.get("asOf")
+            return _METADATA_TABLES[kind][0]
         try:
-            m = _resolve_version(
-                table_dir,
-                int(version) if version is not None else None,
-                float(as_of) if as_of is not None else None)
+            m = _target_manifest(self.options)
         except ValueError as exc:
             raise ValueError(f"snapshot source: {exc}") from None
         committed = StructType.fromJson(json.loads(m["schema"]))
         fields = [StructField(f.name, f.dataType, True)
                   for f in committed.fields]
-        if str(self.options.get("cdf", "false")).lower() == "true":
+        if _flag(self.options, "cdf"):
             from ..operators.snapshots import _CDF_COLS, _cdf_cols_taken
 
             if _cdf_cols_taken([f.name for f in committed.fields]):
@@ -945,13 +924,13 @@ class SnapshotTableDataSource(DataSource):
     def reader(self, schema) -> DataSourceReader:
         kind = self._metadata_kind()
         if kind is not None:
-            return SnapshotMetadataReader(self.options, kind)
-        if str(self.options.get("cdf", "false")).lower() == "true":
+            return SnapshotMetadataReader(self.options, kind, schema)
+        if _flag(self.options, "cdf"):
             raise ValueError(
                 "snapshot source: the change feed is a STREAMING "
                 "surface (readStream) or snapshot_read_cdf — the batch "
                 "reader serves table states, not change rows")
-        if str(self.options.get("pushdown", "false")).lower() == "true":
+        if _flag(self.options, "pushdown"):
             return SnapshotTablePushdownReader(self.options, schema)
         return SnapshotTableBatchReader(self.options, schema)
 

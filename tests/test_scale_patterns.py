@@ -27,7 +27,7 @@ def test_two_phase_agg_exact(spark, sf_dir):
     direct = {r.l_returnflag: round(r.s, 2) for r in
               li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("s")).collect()}
     salted = {r.l_returnflag: round(r.l_quantity_sum, 2) for r in
-              two_phase_agg(li, "l_returnflag", "l_quantity", "sum").collect()}
+              two_phase_agg(li, "l_returnflag", "l_quantity").collect()}
     assert direct == salted
 
 

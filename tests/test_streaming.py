@@ -1010,16 +1010,17 @@ def test_cdf_stream_source_slices_and_starting_version(spark, tmp_path):
     """The CDF streaming source (sources/snapshot_source.py, option
     cdf=true): _cdf_slices classifies appends as 'data' (I rows), CDC
     rewrites as 'log' slices and compactions as nothing, while the
-    plain source's _delta_entries REFUSES the same rewrite range
+    plain source's partitions() REFUSES the same rewrite range
     (Delta's rule); option("startingVersion", N) serves exactly the
     feed from version N's changes on."""
     import pytest
     from pyspark.sql import functions as F
 
     from data_pipeline_stripe_spark.operators.snapshots import (
-        snapshot_apply_cdc, snapshot_commit, snapshot_compact)
+        snapshot_apply_cdc, snapshot_commit, snapshot_compact,
+        snapshot_read)
     from data_pipeline_stripe_spark.sources.snapshot_source import (
-        _cdf_slices, _delta_entries, register_snapshot_source)
+        SnapshotTableStreamReader, _cdf_slices, register_snapshot_source)
 
     t = str(tmp_path / "cdf_src")
     base = spark.createDataFrame(
@@ -1038,8 +1039,10 @@ def test_cdf_stream_source_slices_and_starting_version(spark, tmp_path):
                     mode="append")                          # v4
 
     # the plain source refuses any range crossing the rewrite ...
+    plain = SnapshotTableStreamReader({"path": t},
+                                      snapshot_read(spark, t).schema)
     with pytest.raises(ValueError, match="no append-only delta"):
-        _delta_entries(t, 1, 4)
+        plain.partitions({"version": 1}, {"version": 4})
     # ... the CDF source classifies it: v2 log slices, v3 nothing,
     # v4 data slices
     kinds = {v: {s.kind for s in _cdf_slices(t, 1, 4) if s.version == v}
@@ -1324,9 +1327,9 @@ def test_plain_stream_skip_change_commits(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from data_pipeline_stripe_spark.operators.snapshots import (
-        snapshot_apply_cdc, snapshot_commit)
+        snapshot_apply_cdc, snapshot_commit, snapshot_read)
     from data_pipeline_stripe_spark.sources.snapshot_source import (
-        _delta_entries, register_snapshot_source)
+        SnapshotTableStreamReader, register_snapshot_source)
 
     register_snapshot_source(spark)
     t = str(tmp_path / "skipcc")
@@ -1342,10 +1345,15 @@ def test_plain_stream_skip_change_commits(spark, tmp_path):
                     spark.createDataFrame([(9, 90)], "k int, cents int")
                     .coalesce(1))                                 # v3
 
+    schema = snapshot_read(spark, t).schema
+    v1, v3 = {"version": 1}, {"version": 3}
     with pytest.raises(ValueError, match="skipChangeCommits"):
-        _delta_entries(t, 1, 3)  # the error now names the option
-    skipped = _delta_entries(t, 1, 3, skip_change_commits=True)
-    assert len(skipped) == 1  # only v3's append file; v2 contributes 0
+        # the error names the option
+        SnapshotTableStreamReader({"path": t}, schema).partitions(v1, v3)
+    skipped = SnapshotTableStreamReader(
+        {"path": t, "skipChangeCommits": "true"}, schema).partitions(v1, v3)
+    # only v3's append file; v2 contributes 0
+    assert [s.abs_path is not None for s in skipped] == [True]
 
     out = str(tmp_path / "out")
     q = (
@@ -1653,6 +1661,68 @@ def test_metadata_eq_deletes_view(spark, tmp_path):
     S.snapshot_compact(spark, t, target_files=1)
     assert (spark.read.format("snapshot_table")
             .option("metadata", "eq_deletes").load(t).count()) == 0
+
+
+def test_metadata_view_schemas(spark, tmp_path):
+    """Each metadata view's declared schema — names, types and
+    nullability — and ``snapshot_history``'s. The oracle hashes values
+    only, so nothing else pins a NOT NULL mark. ``snapshot_history``
+    is a VALUES relation, whose nullability follows this table's rows
+    (v0 has no parent; no commit here lacks a row count)."""
+    from pyspark.sql import functions as F
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+    from data_pipeline_stripe_spark.sources.snapshot_source import \
+        register_snapshot_source
+
+    register_snapshot_source(spark)
+    t = str(tmp_path / "meta")
+    df = spark.range(8).select(F.col("id").alias("k"))
+    S.snapshot_commit(spark, t, df.coalesce(1))
+    S.snapshot_delete_keys(
+        spark, t, spark.createDataFrame([(3,)], "k long"), "k")
+    S.snapshot_create_tag(t, "v0_tag", version=0)
+    S.snapshot_create_branch(t, "audit")
+    history = [
+        ("version", "bigint", False), ("parent", "bigint", True),
+        ("mode", "string", False), ("committed_at", "double", False),
+        ("n_files", "bigint", False), ("n_rows", "bigint", True),
+        ("n_change_files", "bigint", True),
+        ("from_stream_epoch", "boolean", False),
+        ("n_eq_deletes", "bigint", False),
+        ("n_pending_delete_keys", "bigint", False)]
+    expected = {
+        "history": history,
+        "files": [
+            ("path", "string", False), ("seq", "bigint", False),
+            ("n_rows", "bigint", True), ("n_bytes", "bigint", True),
+            ("has_delete_vector", "boolean", False),
+            ("n_eq_deletes_applicable", "bigint", False),
+            ("partition", "string", True), ("stats", "string", True)],
+        "tags": [("name", "string", False), ("version", "bigint", False)],
+        "branches": [
+            ("name", "string", False), ("fork_version", "bigint", False),
+            ("head_version", "bigint", True)],
+        "eq_deletes": [
+            ("path", "string", False), ("key_cols", "string", False),
+            ("seq", "bigint", False), ("n_keys", "bigint", True),
+            ("key_bands", "string", True), ("covered", "boolean", False),
+            ("n_files_applicable", "bigint", False)],
+    }
+
+    def shape(schema):
+        return [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in schema.fields]
+
+    for kind, want in expected.items():
+        spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW meta_view USING "
+                  f"snapshot_table OPTIONS (path '{t}', metadata '{kind}')")
+        view = spark.table("meta_view")
+        assert shape(view.schema) == want, kind
+        assert view.collect(), kind  # the executor builds the rows
+    assert shape(S.snapshot_history(spark, t).schema) == [
+        (n, ty, n in ("parent", "n_change_files"))
+        for n, ty, _ in history]
 
 
 def test_admission_prices_equality_delete_band(spark, tmp_path):

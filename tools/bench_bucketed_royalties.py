@@ -29,15 +29,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     fixture = sys.argv[1] if len(sys.argv) > 1 else ".scratch/sf0.1x100"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
 
     from data_pipeline_stripe_spark.operators.layout import (
         write_bucketed_table,
     )
     from data_pipeline_stripe_spark.queries.stripe import _royalties_report
-    from data_pipeline_stripe_spark.session import get_session
+    from data_pipeline_stripe_spark.session import (default_parallelism,
+                                                    get_session)
     from data_pipeline_stripe_spark.sources import load_table
 
+    cpus = default_parallelism()
     spark = get_session(app_name="bench_bucketed_royalties",
                         master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -107,11 +107,11 @@ def main() -> None:
                 check=True,
             )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
-
     from data_pipeline_stripe_spark.queries import REGISTRY
-    from data_pipeline_stripe_spark.session import get_session
+    from data_pipeline_stripe_spark.session import (default_parallelism,
+                                                    get_session)
 
+    cpus = default_parallelism()
     spark = get_session(app_name="bench_scaling", master=f"local[{cpus}]",
                         shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -41,14 +41,14 @@ def main() -> None:
             check=True,
         )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
-
     from pyspark.sql import functions as F
 
     from data_pipeline_stripe_spark.llm import dedup
     from data_pipeline_stripe_spark.operators.skew import salted_join
-    from data_pipeline_stripe_spark.session import get_session
+    from data_pipeline_stripe_spark.session import (default_parallelism,
+                                                    get_session)
 
+    cpus = default_parallelism()
     spark = get_session(app_name="bench_skew", master=f"local[{cpus}]",
                         shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -53,9 +53,10 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from data_pipeline_stripe_spark.session import get_session
+    from data_pipeline_stripe_spark.session import (default_parallelism,
+                                                    get_session)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+    cpus = default_parallelism()
     spark = get_session(app_name="make_scaled_fixture",
                         master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

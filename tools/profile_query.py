@@ -34,9 +34,10 @@ def main() -> None:
     do_profile = "--profile" in sys.argv
 
     from data_pipeline_stripe_spark.queries import REGISTRY
-    from data_pipeline_stripe_spark.session import get_session
+    from data_pipeline_stripe_spark.session import (default_parallelism,
+                                                    get_session)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+    cpus = default_parallelism()
     spark = get_session(app_name=f"profile-{name}", master=f"local[{cpus}]",
                         shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
