@@ -151,6 +151,7 @@ import operator
 import os
 import time
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -180,8 +181,8 @@ _TABLE_PROPS = ("cluster_cols", "partition_spec", "constraints",
 # gives up (``_publish_commit``, ``_mor_commit``)
 _COMMIT_RETRIES = 20
 
-# the comparison operators of a predicate term, applied alike to Spark
-# Columns (row filters) and Python values (partition tuples)
+# the comparison operators of a predicate term, applied to Spark
+# Columns (row filters); ``_band_vote`` decides them on Python values
 _CMP_OPS = {"=": operator.eq, "!=": operator.ne, ">=": operator.ge,
             ">": operator.gt, "<=": operator.le, "<": operator.lt}
 
@@ -291,7 +292,7 @@ def _segment_rollup(entries: list[dict]) -> dict:
     a band for the column (one statless file makes the dimension
     unprunable), nulls summed only when every member reports one. A
     scan probes the rollup exactly like a file entry's stats
-    (``_entry_may_match`` on a {stats, rows} pseudo-entry), so segment
+    (``_term_vote`` on a {stats, rows} pseudo-entry), so segment
     pruning can never be less conservative than file pruning."""
     cols: set[str] = set()
     for e in entries:
@@ -380,9 +381,9 @@ def _write_segments(table_dir: str, entries: list[dict]) -> list[dict]:
         # an int records an INT [min, max] instead — lexicographic
         # min/max of digit strings is not numeric order ('10' < '9'),
         # which is why bucket:<n> fields could never vote at segment
-        # level before; _segment_partition_vote compares int bands
-        # only against int literals (exactly what bucket derivation
-        # emits) and string bands only against strings.
+        # level before; _term_vote compares int bands only against
+        # int literals (exactly what bucket derivation emits) and
+        # string bands only against strings.
         if chunk and all(e.get("partition") for e in chunk):
             fields = set(chunk[0]["partition"])
             if all(set(e["partition"]) == fields for e in chunk):
@@ -439,9 +440,9 @@ def _write_segments_grouped(table_dir: str, entries: list[dict],
 
 def _segment_pseudo_entry(desc: dict) -> dict:
     """A segment descriptor viewed as one big file entry, so the SAME
-    ``_entry_may_match`` probes drive segment-level pruning (partition
-    bands ride along for the r12 partition-field fast path; the seq
-    and DV-member count ride along for the delete-debt probe)."""
+    ``_term_vote`` drives segment-level pruning (partition bands ride
+    along as its band source; the seq and DV-member count ride along
+    for the delete-debt probe)."""
     out = {"stats": desc.get("stats", {}), "rows": desc.get("rows"),
            "_seq": desc.get("seq", 0)}
     if "n_dv" in desc:
@@ -449,73 +450,6 @@ def _segment_pseudo_entry(desc: dict) -> dict:
     if "partition_bands" in desc:
         out["partition_bands"] = desc["partition_bands"]
     return out
-
-
-def _segment_partition_vote(entry: dict, term) -> bool | None:
-    """Partition-band check for a SEGMENT-level entry: True (every
-    member file provably matches the term), False (no member can
-    match — skip the segment unopened), None (mixed / undecidable /
-    not a partition field / type-mismatched literal). String bands
-    (lexicographic min/max — semantic order for day/month/
-    identity-over-strings) vote against string literals; INT bands
-    (r13 — recorded when every member value parses, the bucket:<n>
-    case lexicographic order breaks: '10' < '9') vote against int
-    literals."""
-    bands = entry.get("partition_bands")
-    if not bands:
-        return None
-    if isinstance(term, list):
-        votes = [_segment_partition_vote(entry, sub) for sub in term]
-        if any(v is True for v in votes):
-            return True  # some disjunct matches every member
-        if votes and all(v is False for v in votes):
-            return False
-        return None
-    col, op, v = term
-    if col not in bands:
-        return None
-    lo, hi = bands[col]
-    if op == "is_null":
-        return False  # partition values are non-NULL by construction
-    if op == "is_not_null":
-        return True
-    # int bands (r13) compare only against int literals; string bands
-    # only against strings — same-type comparisons are semantic order
-    # in both cases (see the band-recording comment)
-    band_is_int = isinstance(lo, int)
-
-    def comparable(m) -> bool:
-        return (isinstance(m, int) and not isinstance(m, bool)
-                if band_is_int else isinstance(m, str))
-
-    if op == "in":
-        members = list(v)
-        if not all(comparable(m) for m in members):
-            return None
-        if all(m < lo or m > hi for m in members):
-            return False
-        if lo == hi and lo in members:
-            return True
-        return None
-    if not comparable(v):
-        return None
-    if op == "=":
-        if v < lo or v > hi:
-            return False
-        return True if lo == hi == v else None
-    if op == "!=":
-        if lo == hi == v:
-            return False
-        return True if (v < lo or v > hi) else None
-    if op == "<":
-        return True if hi < v else (False if lo >= v else None)
-    if op == "<=":
-        return True if hi <= v else (False if lo > v else None)
-    if op == ">":
-        return True if lo > v else (False if hi <= v else None)
-    if op == ">=":
-        return True if lo >= v else (False if hi < v else None)
-    return None
 
 
 def _is_metadata_only_commit(table_dir: str, parent_m: dict,
@@ -1458,90 +1392,141 @@ def snapshot_read(spark: SparkSession, table_dir: str,
                          m["schema"], eq_deletes=m.get("eq_deletes"))
 
 
-def _file_may_match(stats: dict, col: str, op: str, value) -> bool:
-    """Can any row of a file with these footer stats satisfy
-    ``col op value``? Missing stats → True (cannot prune). Parquet
-    min/max exclude nulls, and none of the band operators matches
-    NULL, so pruning on min/max alone is safe even for files with
-    nulls. Beyond the five band operators (r11):
+def _exact_literal(v) -> bool:
+    """A literal a partition value decides exactly: str or non-bool int
+    (partition values are strings; an int literal compares with the
+    parsed value). Everything else — bool, float, date — is
+    undecidable against a tuple and underivable as a partition term."""
+    return isinstance(v, (str, int)) and not isinstance(v, bool)
 
-    - ``("col", "is_null", None)`` prunes a file whose harvested null
-      count is exactly 0 (the count is only recorded when every row
-      group reported one — ``_collect_file_stats``); an unknown count
-      never prunes.
-    - ``("col", "in", [v1, v2, ...])`` keeps the file iff ANY member
-      lands inside the band (each member probed like ``=``). An empty
-      list matches nothing anywhere (pruned); a None member raises —
-      SQL ``IN (NULL)`` never matches and silently passing it through
-      would differ from every engine's semantics."""
-    cs = stats.get(col)
+
+def _any_vote(votes: list) -> bool | None:
+    """Tri-valued OR of pruning votes: True when some vote is True,
+    False when every vote is False (an empty list too), else None."""
+    if any(v is True for v in votes):
+        return True
+    return False if all(v is False for v in votes) else None
+
+
+def _band_vote(lo, hi, op: str, v) -> bool | None:
+    """Does ``x op v`` hold for EVERY x in [lo, hi] (True), for NONE
+    (False), or for some (None)? The one operator ladder of pruning:
+    a partition value is the point band [value, value], a segment's
+    partition band and a file's min/max stats are real bands."""
+    if op == "=":
+        every, none = lo == v == hi, not lo <= v <= hi
+    elif op == "!=":
+        every, none = not lo <= v <= hi, lo == v == hi
+    elif op == ">=":
+        every, none = lo >= v, not hi >= v
+    elif op == ">":
+        every, none = lo > v, not hi > v
+    elif op == "<=":
+        every, none = hi <= v, not lo <= v
+    elif op == "<":
+        every, none = hi < v, not lo < v
+    else:
+        raise ValueError(f"snapshot_scan: unsupported operator {op!r}")
+    return True if every else (False if none else None)
+
+
+def _stats_vote(entry: dict, col: str, op: str, v) -> bool | None:
+    """``col op v`` against an entry's footer stats: False when no row
+    can match, else None — stats never vote True, because Parquet
+    min/max exclude NULLs and no band operator matches NULL. Missing or
+    type-incomparable stats → None. ``is_null`` prunes on a harvested
+    null count of exactly 0 (recorded only when every row group
+    reported one — ``_collect_file_stats``); ``is_not_null`` prunes a
+    provably all-NULL file (null count == footer row count, the one
+    probe that needs the entry-level row count)."""
+    cs = entry.get("stats", {}).get(col) or {}
     if op == "is_null":
-        if value is not None:
+        return False if cs.get("nulls") == 0 else None
+    if op == "is_not_null":
+        nulls = cs.get("nulls")
+        return (False if nulls is not None and nulls == entry.get("rows")
+                else None)
+    lo, hi = cs.get("min"), cs.get("max")
+    if lo is None or hi is None or (type(lo) is not type(v) and not (
+            isinstance(lo, (int, float)) and isinstance(v, (int, float)))):
+        return None  # no band, or incomparable stat/literal types
+    return False if _band_vote(lo, hi, op, v) is False else None
+
+
+def _term_vote(entry: dict, term) -> bool | None:
+    """One scan term against one manifest entry or segment
+    pseudo-entry: True (every row matches), False (no row can — prune),
+    None (undecided). A term is a ``(col, op, value)`` triple or a LIST
+    of triples meaning their DISJUNCTION; the predicate list as a whole
+    is a conjunction of terms, so arbitrary CNF is expressible. An IN
+    list votes as the OR of its ``=`` votes; an empty one matches
+    nothing. The column's source decides:
+
+    - the entry's partition TUPLE (exact: a point band; an int literal
+      compares with the parsed value, a str literal with the string);
+    - a segment's partition BANDS (int bands vote on non-bool ints,
+      string bands on strings — ISO day/month strings order
+      lexicographically, digit strings would not: '10' < '9');
+    - otherwise the footer stats (``_stats_vote``, never True).
+
+    Partition values are non-NULL by construction. Malformed terms
+    raise: an empty OR-list, a None inside an IN list (SQL ``IN
+    (NULL)`` never matches), a non-None value for is_null /
+    is_not_null."""
+    if isinstance(term, list):
+        if not term:
             raise ValueError(
-                "snapshot_scan: is_null takes value None, got "
-                f"{value!r}")
-        nulls = (cs or {}).get("nulls")
-        return nulls is None or nulls > 0
+                "snapshot_scan: an empty OR-list matches nothing — "
+                "drop the term or pass an impossible triple explicitly")
+        return _any_vote([_term_vote(entry, sub) for sub in term])
+    col, op, v = term
     if op == "in":
-        members = list(value)
-        if any(v is None for v in members):
+        members = list(v)
+        if any(m is None for m in members):
             raise ValueError(
                 "snapshot_scan: NULL inside an IN list never matches — "
                 "drop it (or add an is_null disjunct)")
-        return any(_file_may_match(stats, col, "=", v) for v in members)
-    if not cs or cs.get("min") is None or cs.get("max") is None:
-        return True
-    lo, hi = cs["min"], cs["max"]
-    if type(lo) is not type(value) and not (
-            isinstance(lo, (int, float)) and isinstance(value, (int, float))):
-        return True  # incomparable stat/literal types: never prune
-    if op == "=":
-        return lo <= value <= hi
-    if op == "!=":
-        # only a CONSTANT column (min == max == value, null-free) can
-        # prove no row differs; the null check matters because != never
-        # matches NULL but min/max exclude nulls — a constant column
-        # WITH nulls still matches nothing for !=, so nulls can be
-        # ignored here (NULL rows don't satisfy != either way)
-        return not (lo == value and hi == value)
-    if op == ">=":
-        return hi >= value
-    if op == ">":
-        return hi > value
-    if op == "<=":
-        return lo <= value
-    if op == "<":
-        return lo < value
-    raise ValueError(f"snapshot_scan: unsupported operator {op!r}")
+        return _any_vote([_term_vote(entry, (col, "=", m))
+                          for m in members])
+    if op in ("is_null", "is_not_null") and v is not None:
+        raise ValueError(
+            f"snapshot_scan: {op} takes value None, got {v!r}")
+    tuple_vals = entry.get("partition") or {}
+    bands = entry.get("partition_bands") or {}
+    if col not in tuple_vals and col not in bands:
+        return _stats_vote(entry, col, op, v)
+    if op in ("is_null", "is_not_null"):
+        return op == "is_not_null"
+    if not _exact_literal(v):
+        return None
+    if col in bands:
+        lo, hi = bands[col]
+        if isinstance(lo, str) != isinstance(v, str):
+            return None
+    elif isinstance(v, str):
+        lo = hi = tuple_vals[col]
+    else:
+        try:
+            lo = hi = int(tuple_vals[col])
+        except ValueError:
+            return None
+    return _band_vote(lo, hi, op, v)
 
 
-def _entry_not_null_may_match(entry: dict, col: str) -> bool:
-    """``col IS NOT NULL`` against one entry: prunable only when the
-    file is provably ALL-NULL in that column — complete null count ==
-    footer row count (an all-null column usually carries no min/max,
-    so this is the one probe that needs the entry-level row count)."""
-    nulls = (entry.get("stats", {}).get(col) or {}).get("nulls")
-    rows = entry.get("rows")
-    return not (nulls is not None and rows is not None and nulls == rows)
-
-
-def _eq_desc_may_touch(entry: dict, desc: dict) -> bool:
-    """Can this equality-delete descriptor's key set match ANY row of
-    this entry? Decided from the descriptor's recorded per-column key
-    min/max (``bands`` — harvested by ``_write_key_sidecar`` for
-    str/int keys) against the entry's footer stats: a file whose
-    column range cannot intersect the key band provably contains no
-    matching row, so readers skip its anti-join entirely and CDF
-    D-computation never opens it — a keyed CDC delete over a narrow
-    recent band touches the band, not the table. Missing bands or
-    stats → True (conservative; correctness never depends on this).
-    Multi-column keys: a key row must match EVERY column, so any one
-    excluded band excludes the descriptor."""
-    for col, (lo, hi) in (desc.get("bands") or {}).items():
-        if not (_entry_may_match(entry, (col, ">=", lo))
-                and _entry_may_match(entry, (col, "<=", hi))):
-            return False
-    return True
+def _box_may_touch(entry: dict, bands: dict | None) -> bool:
+    """The one key-box test: can an entry hold a row inside the box
+    ``bands`` ({col: (lo, hi)}) — min <= hi and max >= lo on every
+    banded column? Key bands describe DATA columns, so only the footer
+    stats answer (a partition field that shares a column's name must
+    not); missing stats → True. It scopes a keyed write's dirty files
+    and segments (``snapshot_merge``, ``snapshot_apply_cdc``) and an
+    equality delete's reach (``_applicable_eq_deletes``): a file whose
+    range misses the delete's key band holds no deleted row, so its
+    anti-join never runs. A key row must match EVERY column, so one
+    excluded band excludes the box."""
+    return all(_stats_vote(entry, col, ">=", lo) is not False
+               and _stats_vote(entry, col, "<=", hi) is not False
+               for col, (lo, hi) in (bands or {}).items())
 
 
 def _applicable_eq_deletes(entry: dict, eq: list[dict]) -> list[dict]:
@@ -1549,43 +1534,21 @@ def _applicable_eq_deletes(entry: dict, eq: list[dict]) -> list[dict]:
     segment pseudo-entry: the delete is NEWER than the data (its seq
     exceeds the entry's ``_seq`` — a key re-inserted after the delete
     survives it) and its key band may intersect the entry's stats
-    (``_eq_desc_may_touch``). The one delete-scope rule of every read,
+    (``_box_may_touch``). The one delete-scope rule of every read,
     metadata view and delete-debt probe."""
     seq = entry.get("_seq", 0)
     return [d for d in eq
-            if seq < d["seq"] and _eq_desc_may_touch(entry, d)]
+            if seq < d["seq"] and _box_may_touch(entry, d.get("bands"))]
 
 
-def _entry_may_match(entry: dict, term) -> bool:
-    """One conjunct of a scan predicate against one manifest entry.
-    A term is a ``(col, op, value)`` triple, or a LIST of triples
-    meaning their DISJUNCTION (``a OR b OR ...`` — the file survives
-    if ANY branch may match). The predicate list as a whole stays a
-    conjunction of terms, so arbitrary CNF is expressible."""
-    stats = entry.get("stats", {})
-    # EXACT partition-tuple evaluation first (r12): a decided term
-    # needs no stats conservatism in either direction
-    exact = _partition_term_match(entry, term)
-    if exact is not None:
-        return exact
-    # segment-level partition bands (r12): skip a whole segment when
-    # no member's tuple can match (string-ordered fields only)
-    vote = _segment_partition_vote(entry, term)
-    if vote is not None:
-        return vote
-    if isinstance(term, list):
-        if not term:
-            raise ValueError(
-                "snapshot_scan: an empty OR-list matches nothing — "
-                "drop the term or pass an impossible triple explicitly")
-        return any(_entry_may_match(entry, sub) for sub in term)
-    c, op, v = term
-    if op == "is_not_null":
-        if v is not None:
-            raise ValueError(
-                f"snapshot_scan: is_not_null takes value None, got {v!r}")
-        return _entry_not_null_may_match(entry, c)
-    return _file_may_match(stats, c, op, v)
+def _predicate_probe(predicates: list):
+    """May an entry match the scan-CNF conjunction ``predicates``
+    (no term votes False)? The dirty test of the predicate-scoped
+    verbs and the scan's segment and file prune."""
+    def probe(entry: dict) -> bool:
+        return all(_term_vote(entry, term) is not False
+                   for term in predicates)
+    return probe
 
 
 def _pruned_entries(table_dir: str, m: dict, predicates: list[tuple]
@@ -1602,29 +1565,30 @@ def _pruned_entries(table_dir: str, m: dict, predicates: list[tuple]
     column-stat rollups — a segment whose rollup proves no member file
     can match is dropped without ever being opened (O(segments) driver
     JSON for a banded scan of a huge table, not O(files)); only the
-    surviving segments' entries are probed file-by-file. The plan
+    surviving segments' entries are probed file-by-file. Both levels
+    ask the same question (``_predicate_probe``: no term's
+    ``_term_vote`` is False). The plan
     stats record {files_kept, files_total, segments_opened,
     segments_total} so gates can pin that segment pruning happened."""
     # hidden partitioning (r12): source-column terms imply
     # partition-field terms, used for PRUNING only — the caller's
     # original terms stay the row filter, so this can only drop
     # provably-unmatchable files
-    probes = list(predicates) + _derived_partition_terms(
-        m.get("partition_spec"), predicates)
+    probe = _predicate_probe(list(predicates) + _derived_partition_terms(
+        m.get("partition_spec"), predicates))
     kept: list[dict] = []
     files_total = 0
     opened = 0
     for seg in m["segments"]:
         files_total += seg["n_files"]
-        pseudo = _segment_pseudo_entry(seg)
-        if not all(_entry_may_match(pseudo, term) for term in probes):
+        if not probe(_segment_pseudo_entry(seg)):
             continue
         opened += 1
         kept.extend(
             dict(e, _seq=seg.get("seq", 0))  # data-age annotation for
             #                                  equality-delete scoping
             for e in _segment_entries(table_dir, seg)
-            if all(_entry_may_match(e, term) for term in probes))
+            if probe(e))
     stats = {"files_kept": len(kept), "files_total": files_total,
              "segments_opened": opened,
              "segments_total": len(m["segments"])}
@@ -1652,6 +1616,11 @@ def snapshot_plan_stats(table_dir: str, predicates: list[tuple]) -> dict:
     (b))."""
     return _pruned_entries(
         table_dir, _resolve_version(table_dir, None), predicates)[1]
+
+
+def _term_cols(term) -> set:
+    """The columns one predicate term (triple or OR-list) names."""
+    return {sub[0] for sub in (term if isinstance(term, list) else [term])}
 
 
 def _term_filter(term):
@@ -1685,7 +1654,7 @@ def _field_term_filter(spec: list[dict], term):
     """Row-level Column filter equivalent to a PARTITION-FIELD term,
     expressed on the SOURCE column via the spec transform (r13,
     VERDICT r12 item 4: mixed-generation scans). Exactly mirrors
-    ``_partition_term_match``'s tuple semantics: day/month compare the
+    ``_term_vote``'s tuple semantics: day/month compare the
     formatted string, identity compares the cast string (numerically
     when the literal is an int), bucket recomputes the crc32 bucket.
     Literal types the tuple evaluation cannot decide (bool, float)
@@ -1703,7 +1672,7 @@ def _field_term_filter(spec: list[dict], term):
     expr = _partition_exprs([by_name[col]])[0][1]  # derived string
 
     def one(v):
-        if isinstance(v, bool) or not isinstance(v, (str, int)):
+        if not _exact_literal(v):
             raise ValueError(
                 f"snapshot_scan: partition-field term on {col!r} with "
                 f"a {type(v).__name__} literal is not decidable "
@@ -1737,18 +1706,20 @@ def snapshot_scan(spark: SparkSession, table_dir: str,
     op in {=, !=, >=, >, <=, <, is_null, is_not_null, in} or a LIST of
     such triples
     meaning their DISJUNCTION (CNF). is_null prunes on the harvested
-    per-file null counts; IN prunes each member like ``=``. Equivalent
-    to ``snapshot_read().filter(...)`` by construction — just with
-    fewer files planned.
+    per-file null counts; IN prunes each member like ``=``. Every
+    prune is a ``_term_vote`` that is not False. Equivalent to
+    ``snapshot_read().filter(...)`` by construction — just with fewer
+    files planned.
 
     PARTITION FIELDS (r12): a term naming a partition-spec FIELD (a
     hidden-partitioning name like ``day`` — not a data column) is
     evaluated EXACTLY against each entry's partition tuple: planned
     files == the matching partitions' files, and no residual row
-    filter runs (there is no such data column; the tuple guarantees
-    every surviving row matches). MIXED GENERATIONS (r13): when
-    un-tupled entries (plain appends, pre-spec history) survive the
-    prune, the term is additionally applied as a row filter on the
+    filter runs while every surviving entry votes True (there is no
+    such data column; the tuple guarantees every surviving row
+    matches). MIXED GENERATIONS (r13): when entries whose vote is not
+    True (plain appends, pre-spec history) survive the prune, the
+    term is additionally applied as a row filter on the
     SOURCE column via the spec's inverse (``_field_term_filter``) —
     Iceberg's serve-both-generations rule, replacing the r12 refusal;
     only bool/float literals (undecidable against tuples) still
@@ -1756,15 +1727,10 @@ def snapshot_scan(spark: SparkSession, table_dir: str,
     m = _resolve_version(table_dir, None)
     kept, _ = _pruned_entries(table_dir, m, predicates)
     spec_names = {f["name"] for f in m.get("partition_spec") or []}
-
-    def term_cols(t) -> set:
-        return ({sub[0] for sub in t} if isinstance(t, list)
-                else {t[0]})
-
     residual = []
     field_residual = []
     for term in predicates:
-        cols = term_cols(term)
+        cols = _term_cols(term)
         if cols & spec_names:
             if not cols <= spec_names:
                 raise ValueError(
@@ -1782,7 +1748,7 @@ def snapshot_scan(spark: SparkSession, table_dir: str,
             # and ONLY when mixed generations actually survive the
             # prune (all-tupled scans keep the no-residual plan).
             undecided = [e for e in kept
-                         if _partition_term_match(e, term) is not True]
+                         if _term_vote(e, term) is not True]
             if undecided:
                 field_residual.append(_field_term_filter(
                     m.get("partition_spec"), term))
@@ -2035,29 +2001,6 @@ def snapshot_expire(table_dir: str, keep_last: int = 2,
 _CDF_COLS = ("_change_type", "_commit_version")
 
 
-def _band_probe(keys: list[str], bands: dict[str, tuple]):
-    """The file-level dirty test for a write touching the key BOX
-    given by ``bands``: may-match on every banded column (min <= hi and
-    max >= lo — two ``_file_may_match`` probes), conservatively dirty
-    when stats are missing. Works unchanged on segment rollup
-    pseudo-entries, so the one probe drives the file split, the
-    segment split, and conflict narrowing."""
-    def probe(entry: dict) -> bool:
-        st = entry.get("stats", {})
-        return all(_file_may_match(st, k, ">=", bands[k][0])
-                   and _file_may_match(st, k, "<=", bands[k][1])
-                   for k in keys if k in bands)
-    return probe
-
-
-def _predicate_probe(predicates: list[tuple]):
-    """Dirty test for predicate-scoped verbs: the file MAY match the
-    scan-CNF conjunction (``_entry_may_match`` per term)."""
-    def probe(entry: dict) -> bool:
-        return all(_entry_may_match(entry, term) for term in predicates)
-    return probe
-
-
 def _split_dirty_by_probe(table_dir: str, m: dict, probe
                           ) -> tuple[list, list, list]:
     """Segment-aware dirty split (r12): returns (dirty_entries,
@@ -2224,7 +2167,7 @@ def snapshot_merge(spark: SparkSession, table_dir: str,
     """Transactional, predicate-scoped copy-on-write MERGE INTO the
     snapshot table: split the current version's files into DIRTY (key
     stats intersect the update batch's [min, max] key band —
-    ``_band_probe``) and CLEAN, ``merge_upsert`` the update batch
+    ``_box_may_touch``) and CLEAN, ``merge_upsert`` the update batch
     against ONLY the dirty files' rows (matched → full-row update,
     unmatched → insert; clean files cannot hold a match by stats), and
     commit rewritten-dirty + carried-clean as a REWRITE validated
@@ -2363,7 +2306,7 @@ def snapshot_merge(spark: SparkSession, table_dir: str,
         return base_version, base.withColumn(
             "merge_action", F.lit("kept"))
     if not_matched_by_source is None:
-        probe = _band_probe(keys, bands)
+        probe = partial(_box_may_touch, bands=bands)
     elif source_scope is None:
         # unscoped delete clause: ANY row anywhere may be unmatched —
         # every file is dirty (the documented O(table) worst case)
@@ -2373,8 +2316,8 @@ def snapshot_merge(spark: SparkSession, table_dir: str,
         # dirty = files that may hold a matched/inserted row (update
         # band box) OR a delete-candidate row (scope box) — the union
         # of the two probes, not their convex hull
-        scope_probe = _band_probe(list(scope_bands), scope_bands)
-        band_probe = _band_probe(keys, bands)
+        scope_probe = partial(_box_may_touch, bands=scope_bands)
+        band_probe = partial(_box_may_touch, bands=bands)
 
         def probe(entry, _empty=empty_batch):
             return scope_probe(entry) or (not _empty
@@ -2467,7 +2410,7 @@ def snapshot_apply_cdc(spark: SparkSession, table_dir: str,
     if n_changes == 0:
         base = snapshot_read(spark, table_dir, version=base_version)
         return base_version, base.withColumn("cdc_action", F.lit("kept"))
-    probe = _band_probe(keys, bands)
+    probe = partial(_box_may_touch, bands=bands)
     dirty, keep_segs, keep_entries = _split_dirty_by_probe(
         table_dir, manifest, probe)
     dirty_df = _read_entries(spark, table_dir, dirty, manifest["schema"],
@@ -2539,7 +2482,8 @@ def _change_units(table_dir: str, chain: list[dict], context: str,
         if uncovered:
             cands = []
             for e in _manifest_files(table_dir, parent_m):
-                dead = [d for d in uncovered if _eq_desc_may_touch(e, d)]
+                dead = [d for d in uncovered
+                        if _box_may_touch(e, d.get("bands"))]
                 if dead:
                     cands.append(
                         (e, _applicable_eq_deletes(e, prior), dead))
@@ -2978,7 +2922,8 @@ def _file_entries_partitioned(table_dir: str, rel_dir: str,
     NULL transform value from rows that entered via a PLAIN append —
     records no value for that field (a PARTIAL tuple: sound, because
     every recorded component is still exact for the file's rows and
-    ``_partition_term_match`` answers None for absent fields);
+    a term on an absent field is left to the stats, which do not carry
+    it — never pruned, never dropped);
     ``snapshot_commit_partitioned`` itself refuses NULLs up front and
     keeps the strict complete-tuple invariant."""
     from urllib.parse import unquote
@@ -3120,30 +3065,21 @@ def _derived_partition_terms(spec, predicates: list[tuple]) -> list:
             tr, name = f["transform"], f["name"]
             if tr in ("day", "month"):
                 width = 10 if tr == "day" else 7
-                if op in ("=", "<=", ">="):
+                # ts < X ⟹ day <= day(X); ts > X ⟹ day >= day(X)
+                wide = {"<": "<=", ">": ">="}.get(op, op)
+                if wide in ("=", "<=", ">="):
                     c = slice_of(val, width)
                     if c is not None:
-                        out.append((name, op, c))
-                elif op == "<":
-                    c = slice_of(val, width)
-                    if c is not None:  # ts < X ⟹ day <= day(X)
-                        out.append((name, "<=", c))
-                elif op == ">":
-                    c = slice_of(val, width)
-                    if c is not None:  # ts > X ⟹ day >= day(X)
-                        out.append((name, ">=", c))
+                        out.append((name, wide, c))
                 elif op == "in":
                     cs = [slice_of(v, width) for v in val]
                     if cs and all(c is not None for c in cs):
                         out.append((name, "in", sorted(set(cs))))
             elif tr == "identity":
                 if op == "in":
-                    if all(isinstance(v, (str, int))
-                           and not isinstance(v, bool) for v in val):
+                    if all(_exact_literal(v) for v in val):
                         out.append((name, op, list(val)))
-                elif op in ("=", "!=", "<", "<=", ">", ">=") and (
-                        isinstance(val, (str, int))
-                        and not isinstance(val, bool)):
+                elif op in _CMP_OPS and _exact_literal(val):
                     out.append((name, op, val))
             elif isinstance(tr, str) and tr.startswith("bucket:"):
                 n = int(tr.split(":", 1)[1])
@@ -3152,86 +3088,14 @@ def _derived_partition_terms(spec, predicates: list[tuple]) -> list:
                 # bucket (ADVICE r12 low: booleans render 'True' vs
                 # 'true', decimals/floats diverge too — a wrong bucket
                 # number EXACT-prunes the matching files away). str and
-                # non-bool int are the two safe classes.
-
-                def _hashable(v) -> bool:
-                    return (isinstance(v, (str, int))
-                            and not isinstance(v, bool))
-
-                if op == "=" and _hashable(val):
+                # non-bool int (``_exact_literal``) are the safe classes.
+                if op == "=" and _exact_literal(val):
                     out.append((name, "=",
                                 zlib.crc32(str(val).encode()) % n))
-                elif op == "in" and all(_hashable(v) for v in val):
+                elif op == "in" and all(_exact_literal(v) for v in val):
                     out.append((name, "in", sorted(
                         {zlib.crc32(str(v).encode()) % n for v in val})))
     return out
-
-
-def _partition_term_match(entry: dict, term) -> bool | None:
-    """EXACT evaluation of one scan term against an entry's partition
-    tuple: True (every row matches — no residual filter needed), False
-    (no row matches — prune), or None (the term is not decidable from
-    this entry's tuple: not a partition field of this entry, e.g. a
-    plain-append entry or pre-spec history). String compares are exact
-    for day/month (ISO forms order lexicographically) and
-    identity-over-strings; identity and bucket values with an integer
-    literal compare numerically."""
-    if isinstance(term, list):
-        votes = [_partition_term_match(entry, sub) for sub in term]
-        if any(v is True for v in votes):
-            return True
-        if votes and all(v is False for v in votes):
-            return False
-        return None
-    col, op, value = term
-    tuple_vals = entry.get("partition") or {}
-    if col not in tuple_vals:
-        return None  # not partition-decidable for this entry
-    raw = tuple_vals[col]
-    if op in ("is_null", "is_not_null"):
-        # partition values are non-NULL by construction
-        return op == "is_not_null"
-    if op == "in":
-        # BEFORE the scalar coercion (ADVICE r12 medium: an IN term's
-        # value is a list, so the old scalar-type guard returned None
-        # unconditionally and this branch was unreachable — drop/scan
-        # with partition-field IN never pruned). Coerce per member:
-        # int members compare via int(raw), str members via raw; any
-        # member of another type (or an unparseable raw for an int
-        # member) makes a definitive False unreachable.
-        members = list(value)
-        if any(v is None for v in members):
-            raise ValueError(
-                "snapshot_scan: NULL inside an IN list never matches — "
-                "drop it (or add an is_null disjunct)")
-        undecidable = False
-        for v in members:
-            if isinstance(v, bool):
-                undecidable = True
-            elif isinstance(v, int):
-                try:
-                    if int(raw) == v:
-                        return True
-                except ValueError:
-                    undecidable = True
-            elif isinstance(v, str):
-                if raw == v:
-                    return True
-            else:
-                undecidable = True
-        return None if undecidable else False
-    if isinstance(value, int) and not isinstance(value, bool):
-        try:
-            have: object = int(raw)
-        except ValueError:
-            return None
-    else:
-        have = raw
-        if not isinstance(value, str):
-            return None  # incomparable literal type: undecidable
-    if op not in _CMP_OPS:
-        raise ValueError(f"snapshot_scan: unsupported operator {op!r}")
-    return _CMP_OPS[op](have, value)
 
 
 def snapshot_drop_partitions(spark: SparkSession, table_dir: str,
@@ -3264,8 +3128,7 @@ def snapshot_drop_partitions(spark: SparkSession, table_dir: str,
     spec = manifest.get("partition_spec") or []
     spec_fields = {f["name"]: f for f in spec}
     for term in predicates:
-        cols = [t[0] for t in (term if isinstance(term, list) else [term])]
-        unknown = [c for c in cols if c not in spec_fields]
+        unknown = sorted(_term_cols(term) - spec_fields.keys())
         if unknown:
             raise ValueError(
                 f"snapshot_drop_partitions: {unknown} are not partition "
@@ -3278,11 +3141,12 @@ def snapshot_drop_partitions(spark: SparkSession, table_dir: str,
             # segment rollup pseudo-entry: a segment whose partition
             # BANDS prove no member matches is carried clean unopened
             # (r12 band fast path); anything else opens and decides
-            # per file — exactness over segment guessing
-            return not any(_segment_partition_vote(entry, t) is False
+            # per file — exactness over segment guessing, so the
+            # rollup's data-column stats are not asked
+            bands = {"partition_bands": entry.get("partition_bands")}
+            return not any(_term_vote(bands, t) is False
                            for t in predicates)
-        return all(_partition_term_match(entry, t) is True
-                   for t in predicates)
+        return all(_term_vote(entry, t) is True for t in predicates)
 
     dropped, keep_segs, keep_entries = _split_dirty_by_probe(
         table_dir, manifest, probe)
@@ -3448,7 +3312,7 @@ def _write_key_sidecar(spark: SparkSession, table_dir: str,
     and the NULL-key refusal come from the WRITTEN files' parquet
     footers, each read once (``_collect_file_stats``). Bands (per-column
     key min/max, which let readers and the CDF skip files the keys
-    cannot touch — ``_eq_desc_may_touch``) are recorded only for
+    cannot touch — ``_box_may_touch``) are recorded only for
     integral and string columns: their Python ordering agrees with
     Spark's and Spark's writer does not truncate their footer min/max
     (float min/max can silently exclude NaN rows). NULL keys are
@@ -4046,11 +3910,15 @@ def snapshot_history(spark: SparkSession, table_dir: str) -> DataFrame:
     their feed, plain overwrites have none) and 0 for layout-only
     commits (compaction). O(versions) manifest reads, driver-side —
     the operational surface Delta exposes as DESCRIBE HISTORY and
-    Iceberg as the snapshots metadata table."""
-    from ..sources.readers import inline_dim
+    Iceberg as the snapshots metadata table. The schema is the
+    ``history`` metadata table's, nullability included."""
+    from pyspark.sql.types import StructType
 
-    return inline_dim(spark, _history_rows(table_dir),
-                      _METADATA_TABLES["history"][0])
+    from ..sources.readers import read_dim_rows
+
+    schema = StructType.fromDDL(_METADATA_TABLES["history"][0])
+    return read_dim_rows(spark, [dict(zip(schema.names, r))
+                                 for r in _history_rows(table_dir)], schema)
 
 
 def _history_rows(table_dir: str) -> list[tuple]:

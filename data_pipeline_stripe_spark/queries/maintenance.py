@@ -1138,7 +1138,7 @@ def snapshot_compact_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snapshot_partial_merge_parity(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """Predicate-scoped copy-on-write MERGE
-    (operators/snapshots.py:snapshot_merge + _band_probe): the base is
+    (operators/snapshots.py:snapshot_merge + _box_may_touch): the base is
     committed as THREE key-band appends (k <= 400, (400, 800],
     (800, 1200], one file each; every fourth key withheld so the update
     batch also INSERTS); the update batch touches only the middle band.
@@ -3147,7 +3147,7 @@ def snapshot_partitioned_delete_parity(spark: SparkSession,
     """The three ADVICE r12 partition-surface fixes, composed as one
     lifecycle on a hidden-partitioned events table
     (operators/snapshots.py:snapshot_delete_where /
-    _partition_term_match / snapshot_compact):
+    _term_vote / snapshot_compact):
 
     (a) DELETE on a PARTITIONED table via deletion vectors — the r12
         path regex only matched flat 3-component layouts, so positions

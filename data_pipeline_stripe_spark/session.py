@@ -90,6 +90,9 @@ def get_session(app_name: str = "data-pipeline-stripe-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no [Stage ...] bar on stderr: it lands inside tools' result
+        # lines under 2>&1
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.codegen.useIdInClassName", "false")

@@ -693,10 +693,10 @@ def _filter_to_term(f):
     (col, op, value) — or None when the filter shape has no
     manifest-stats form (nested column, unsupported class, NULL inside
     an IN list). Stats pruning stays conservative by construction:
-    incomparable literal/stat type pairs never prune
-    (``_file_may_match``), and the reader hands EVERY filter back to
-    Spark for row-level evaluation, so a term mapped here only ever
-    REMOVES provably-unmatchable files."""
+    incomparable literal/stat type pairs never prune (the stats source
+    of ``_term_vote``), and the reader hands EVERY filter back to Spark
+    for row-level evaluation, so a term mapped here only ever REMOVES
+    provably-unmatchable files."""
     from pyspark.sql.datasource import (EqualNullSafe, EqualTo,
                                         GreaterThan, GreaterThanOrEqual,
                                         In, IsNotNull, IsNull, LessThan,

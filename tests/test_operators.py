@@ -2919,36 +2919,131 @@ def test_merge_key_validation():
         _key_cols(["a", "a"])
 
 
-def test_file_may_match_new_forms():
-    """Pure stats-probe legs: is_null prunes only on a COMPLETE zero
-    null count, IN probes each member, OR-terms keep a file any branch
-    admits, and malformed terms raise."""
-    import pytest
+_NONULL = {"stats": {"c": {"min": 1, "max": 9, "nulls": 0}}}
+_ALL_NULL = {"rows": 10, "stats": {"c": {"min": None, "max": None,
+                                         "nulls": 10}}}
+_CONST = {"rows": 4, "stats": {"c": {"min": 7, "max": 7, "nulls": 0}}}
+_SEG = {"partition_bands": {"day": ["2024-01-03", "2024-01-05"]}}
+_SEG_POINT = {"partition_bands": {"day": ["d", "d"]}}
+_ISEG = {"partition_bands": {"kb": [2, 5]}}
+_TUPLE = {"partition": {"day": "2024-01-03", "b": "2"}}
 
-    from data_pipeline_stripe_spark.operators.snapshots import (
-        _entry_may_match, _file_may_match)
 
-    st_nonull = {"c": {"min": 1, "max": 9, "nulls": 0}}
-    st_nulls = {"c": {"min": 1, "max": 9, "nulls": 3}}
-    st_unknown = {"c": {"min": 1, "max": 9, "nulls": None}}
-    assert _file_may_match(st_nonull, "c", "is_null", None) is False
-    assert _file_may_match(st_nulls, "c", "is_null", None) is True
-    assert _file_may_match(st_unknown, "c", "is_null", None) is True
-    assert _file_may_match({}, "c", "is_null", None) is True
-    with pytest.raises(ValueError, match="is_null takes"):
-        _file_may_match(st_nonull, "c", "is_null", 5)
+def _vote_row(name, entry, term, want):
+    return pytest.param(entry, term, want, id=name)
 
-    assert _file_may_match(st_nonull, "c", "in", [0, 5]) is True
-    assert _file_may_match(st_nonull, "c", "in", [0, 10]) is False
-    assert _file_may_match(st_nonull, "c", "in", []) is False
-    with pytest.raises(ValueError, match="NULL inside an IN"):
-        _file_may_match(st_nonull, "c", "in", [1, None])
 
-    entry = {"stats": st_nonull}
-    assert _entry_may_match(entry, [("c", "<", 0), ("c", ">", 5)]) is True
-    assert _entry_may_match(entry, [("c", "<", 0), ("c", ">", 9)]) is False
-    with pytest.raises(ValueError, match="empty OR"):
-        _entry_may_match(entry, [])
+@pytest.mark.parametrize("entry,term,want", [
+    # footer stats: False prunes, None keeps — stats never vote True
+    # (min/max exclude NULLs). is_null prunes only on a complete zero
+    # null count; is_not_null only on a provably all-NULL file.
+    _vote_row("stats-is_null-no-nulls", _NONULL, ("c", "is_null", None),
+              False),
+    _vote_row("stats-is_null-nulls", {"stats": {"c": {
+        "min": 1, "max": 9, "nulls": 3}}}, ("c", "is_null", None), None),
+    _vote_row("stats-is_null-unknown", {"stats": {"c": {
+        "min": 1, "max": 9, "nulls": None}}}, ("c", "is_null", None), None),
+    _vote_row("stats-is_null-no-stats", {}, ("c", "is_null", None), None),
+    _vote_row("stats-in-hit", _NONULL, ("c", "in", [0, 5]), None),
+    _vote_row("stats-in-miss", _NONULL, ("c", "in", [0, 10]), False),
+    _vote_row("stats-in-empty", _NONULL, ("c", "in", []), False),
+    _vote_row("stats-or-hit", _NONULL, [("c", "<", 0), ("c", ">", 5)],
+              None),
+    _vote_row("stats-or-miss", _NONULL, [("c", "<", 0), ("c", ">", 9)],
+              False),
+    _vote_row("stats-not_null-all-null", _ALL_NULL,
+              ("c", "is_not_null", None), False),
+    _vote_row("stats-not_null-some-null", {"rows": 10, "stats": {"c": {
+        "min": 1, "max": 5, "nulls": 3}}}, ("c", "is_not_null", None),
+        None),
+    _vote_row("stats-not_null-unknown", {"rows": 10, "stats": {"c": {
+        "min": 1, "max": 5, "nulls": None}}}, ("c", "is_not_null", None),
+        None),
+    _vote_row("stats-not_null-no-rows", {"stats": {"c": {
+        "min": None, "max": None, "nulls": 10}}},
+        ("c", "is_not_null", None), None),
+    _vote_row("stats-neq-const-equal", _CONST, ("c", "!=", 7), False),
+    _vote_row("stats-neq-const-other", _CONST, ("c", "!=", 8), None),
+    _vote_row("stats-neq-banded", {"rows": 4, "stats": {"c": {
+        "min": 1, "max": 9, "nulls": 0}}}, ("c", "!=", 7), None),
+    _vote_row("stats-or-null-forms", _ALL_NULL,
+              [("c", "is_not_null", None), ("c", "is_null", None)], None),
+    # segment partition bands: True = every member matches, False =
+    # none can, None = mixed / undecidable / type-mismatched literal
+    # (string bands vote on strings, int bands on non-bool ints)
+    _vote_row("seg-eq-below", _SEG, ("day", "=", "2024-01-01"), False),
+    _vote_row("seg-eq-inside", _SEG, ("day", "=", "2024-01-04"), None),
+    _vote_row("seg-eq-point", _SEG_POINT, ("day", "=", "d"), True),
+    _vote_row("seg-lt-none", _SEG, ("day", "<", "2024-01-03"), False),
+    _vote_row("seg-lt-every", _SEG, ("day", "<", "2024-01-06"), True),
+    _vote_row("seg-ge-every", _SEG, ("day", ">=", "2024-01-03"), True),
+    _vote_row("seg-gt-none", _SEG, ("day", ">", "2024-01-05"), False),
+    _vote_row("seg-neq-outside", _SEG, ("day", "!=", "2024-01-09"), True),
+    _vote_row("seg-neq-point", _SEG_POINT, ("day", "!=", "d"), False),
+    _vote_row("seg-in-miss", _SEG, ("day", "in", ["2024-01-01",
+                                                  "2024-01-09"]), False),
+    _vote_row("seg-in-inside", _SEG, ("day", "in", ["2024-01-04"]), None),
+    _vote_row("seg-is_null", _SEG, ("day", "is_null", None), False),
+    _vote_row("seg-is_not_null", _SEG, ("day", "is_not_null", None), True),
+    _vote_row("seg-or-every", _SEG, [("day", "<", "2024-01-01"),
+                                     ("day", ">=", "2024-01-02")], True),
+    _vote_row("seg-or-none", _SEG, [("day", "<", "2024-01-01"),
+                                    ("day", ">", "2024-01-09")], False),
+    _vote_row("seg-or-mixed", _SEG, [("day", "<", "2024-01-01"),
+                                     ("day", "=", "2024-01-04")], None),
+    _vote_row("seg-other-col", _SEG, ("other", "=", "x"), None),
+    _vote_row("seg-int-literal", _SEG, ("day", "=", 5), None),
+    _vote_row("seg-no-bands", {}, ("day", "=", "x"), None),
+    _vote_row("iseg-eq-outside", _ISEG, ("kb", "=", 9), False),
+    _vote_row("iseg-eq-inside", _ISEG, ("kb", "=", 3), None),
+    _vote_row("iseg-eq-point", {"partition_bands": {"kb": [4, 4]}},
+              ("kb", "=", 4), True),
+    _vote_row("iseg-lt-none", _ISEG, ("kb", "<", 2), False),
+    _vote_row("iseg-ge-every", _ISEG, ("kb", ">=", 2), True),
+    _vote_row("iseg-in-miss", _ISEG, ("kb", "in", [0, 1]), False),
+    _vote_row("iseg-in-inside", _ISEG, ("kb", "in", [0, 3]), None),
+    _vote_row("iseg-str-literal", _ISEG, ("kb", "=", "3"), None),
+    _vote_row("iseg-bool-literal", _ISEG, ("kb", "=", True), None),
+    # partition tuples: exact; an int literal compares with the parsed
+    # value, a str literal with the string, anything else is undecided
+    _vote_row("tuple-in-hit", _TUPLE, ("day", "in", ["2024-01-03", "x"]),
+              True),
+    _vote_row("tuple-in-miss", _TUPLE, ("day", "in", ["nope"]), False),
+    _vote_row("tuple-int-in-hit", _TUPLE, ("b", "in", [2, 7]), True),
+    _vote_row("tuple-int-in-miss", _TUPLE, ("b", "in", [3, 7]), False),
+    _vote_row("tuple-bool-in", _TUPLE, ("b", "in", [True]), None),
+    _vote_row("tuple-int-lt", _TUPLE, ("b", "<", 10), True),
+    _vote_row("tuple-str-lt", _TUPLE, ("b", "<", "10"), False),
+    _vote_row("tuple-float", _TUPLE, ("day", "=", 1.5), None),
+    _vote_row("tuple-unparsed-int", _TUPLE, ("day", "=", 3), None),
+    _vote_row("tuple-is_not_null", _TUPLE, ("day", "is_not_null", None),
+              True),
+    # malformed terms raise, whichever source would answer
+    _vote_row("bad-is_null-value", _NONULL, ("c", "is_null", 5),
+              "is_null takes"),
+    _vote_row("bad-is_not_null-value", _ALL_NULL, ("c", "is_not_null", 1),
+              "is_not_null takes"),
+    _vote_row("bad-in-null", _NONULL, ("c", "in", [1, None]),
+              "NULL inside an IN"),
+    _vote_row("bad-empty-or", _NONULL, [], "empty OR"),
+    _vote_row("bad-tuple-is_null-value", _TUPLE, ("day", "is_null", 5),
+              "is_null takes"),
+    _vote_row("bad-seg-is_not_null-value", _SEG,
+              ("day", "is_not_null", "x"), "is_not_null takes"),
+    _vote_row("bad-later-disjunct", _NONULL,
+              [("c", ">", 5), ("c", "is_null", 5)], "is_null takes"),
+])
+def test_term_vote(entry, term, want):
+    """The one pruning vote, as a truth table: True = every row of the
+    entry matches, False = none can, None = undecided; a string is the
+    error a malformed term raises."""
+    from data_pipeline_stripe_spark.operators.snapshots import _term_vote
+
+    if isinstance(want, str):
+        with pytest.raises(ValueError, match=want):
+            _term_vote(entry, term)
+    else:
+        assert _term_vote(entry, term) is want
 
 
 def test_snapshot_overwrite_where_validation(spark, tmp_path):
@@ -3075,40 +3170,6 @@ def test_rewrite_verbs_preserve_clustered_layout(spark, tmp_path):
     got = S.snapshot_read(spark, t)
     assert got.filter("v = 0").count() == 10
     assert got.count() == 1000
-
-
-def test_not_null_and_neq_pruning_forms():
-    """r11 late additions: IS NOT NULL prunes only a provably all-NULL
-    file (complete nulls == rows); != prunes only a constant column
-    equal to the literal."""
-    import pytest
-
-    from data_pipeline_stripe_spark.operators.snapshots import \
-        _entry_may_match
-
-    all_null = {"rows": 10, "stats": {"c": {"min": None, "max": None,
-                                            "nulls": 10}}}
-    some_null = {"rows": 10, "stats": {"c": {"min": 1, "max": 5,
-                                             "nulls": 3}}}
-    unknown = {"rows": 10, "stats": {"c": {"min": 1, "max": 5,
-                                           "nulls": None}}}
-    no_rows = {"stats": {"c": {"min": None, "max": None, "nulls": 10}}}
-    assert _entry_may_match(all_null, ("c", "is_not_null", None)) is False
-    assert _entry_may_match(some_null, ("c", "is_not_null", None)) is True
-    assert _entry_may_match(unknown, ("c", "is_not_null", None)) is True
-    assert _entry_may_match(no_rows, ("c", "is_not_null", None)) is True
-    with pytest.raises(ValueError, match="is_not_null takes"):
-        _entry_may_match(all_null, ("c", "is_not_null", 1))
-
-    const = {"rows": 4, "stats": {"c": {"min": 7, "max": 7, "nulls": 0}}}
-    banded = {"rows": 4, "stats": {"c": {"min": 1, "max": 9, "nulls": 0}}}
-    assert _entry_may_match(const, ("c", "!=", 7)) is False
-    assert _entry_may_match(const, ("c", "!=", 8)) is True
-    assert _entry_may_match(banded, ("c", "!=", 7)) is True
-    # OR-terms recurse through the entry-level probes too
-    assert _entry_may_match(
-        all_null, [("c", "is_not_null", None), ("c", "is_null", None)]
-    ) is True
 
 
 def test_manifest_segments_chunking_rollup_and_expire(spark, tmp_path):
@@ -3421,57 +3482,6 @@ def test_segment_partition_bands_skip_unopened(spark, tmp_path):
     assert stats2["segments_opened"] == 0 and stats2["files_kept"] == 0
 
 
-def test_segment_partition_vote_pure_logic():
-    """_segment_partition_vote truth table (no Spark): True = every
-    member matches, False = none can, None = mixed / undecidable /
-    type-mismatched literal (string bands vote on strings, r13 int
-    bands vote on ints)."""
-    from data_pipeline_stripe_spark.operators.snapshots import \
-        _segment_partition_vote as vote
-
-    seg = {"partition_bands": {"day": ["2024-01-03", "2024-01-05"]}}
-    assert vote(seg, ("day", "=", "2024-01-01")) is False
-    assert vote(seg, ("day", "=", "2024-01-04")) is None  # mixed
-    assert vote({"partition_bands": {"day": ["d", "d"]}},
-                ("day", "=", "d")) is True
-    assert vote(seg, ("day", "<", "2024-01-03")) is False
-    assert vote(seg, ("day", "<", "2024-01-06")) is True
-    assert vote(seg, ("day", ">=", "2024-01-03")) is True
-    assert vote(seg, ("day", ">", "2024-01-05")) is False
-    assert vote(seg, ("day", "!=", "2024-01-09")) is True
-    assert vote({"partition_bands": {"day": ["d", "d"]}},
-                ("day", "!=", "d")) is False
-    assert vote(seg, ("day", "in", ["2024-01-01", "2024-01-09"])) is False
-    assert vote(seg, ("day", "in", ["2024-01-04"])) is None
-    assert vote(seg, ("day", "is_null", None)) is False
-    assert vote(seg, ("day", "is_not_null", None)) is True
-    # OR-list: any True disjunct -> True; all False -> False; else None
-    assert vote(seg, [("day", "<", "2024-01-01"),
-                      ("day", ">=", "2024-01-02")]) is True
-    assert vote(seg, [("day", "<", "2024-01-01"),
-                      ("day", ">", "2024-01-09")]) is False
-    assert vote(seg, [("day", "<", "2024-01-01"),
-                      ("day", "=", "2024-01-04")]) is None
-    # undecidable shapes: not a band field, type-mismatched literal,
-    # no bands
-    assert vote(seg, ("other", "=", "x")) is None
-    assert vote(seg, ("day", "=", 5)) is None
-    assert vote({}, ("day", "=", "x")) is None
-    # int bands (r13): numeric interval logic against int literals;
-    # string literals are the mismatched type there
-    iseg = {"partition_bands": {"kb": [2, 5]}}
-    assert vote(iseg, ("kb", "=", 9)) is False
-    assert vote(iseg, ("kb", "=", 3)) is None
-    assert vote({"partition_bands": {"kb": [4, 4]}},
-                ("kb", "=", 4)) is True
-    assert vote(iseg, ("kb", "<", 2)) is False
-    assert vote(iseg, ("kb", ">=", 2)) is True
-    assert vote(iseg, ("kb", "in", [0, 1])) is False
-    assert vote(iseg, ("kb", "in", [0, 3])) is None
-    assert vote(iseg, ("kb", "=", "3")) is None
-    assert vote(iseg, ("kb", "=", True)) is None
-
-
 def test_hidden_partitioning_source_predicate_derivation(spark, tmp_path):
     """r12 hidden partitioning: a SOURCE-column predicate implies a
     partition-field term. The decisive case is bucket:<n> — per-file
@@ -3781,23 +3791,14 @@ def test_delete_where_on_partitioned_table(spark, tmp_path):
 
 
 def test_partition_term_match_in_reachable(spark, tmp_path):
-    """Regression (ADVICE r12 medium): the IN branch of
-    _partition_term_match ran after a scalar-type guard that returned
-    None for lists — so partition-field IN never pruned, never
-    dropped, and snapshot_scan always raised the no-tuple error."""
+    """Regression (ADVICE r12 medium): the IN branch of the partition
+    tuple evaluation ran after a scalar-type guard that returned None
+    for lists — so partition-field IN never pruned, never dropped, and
+    snapshot_scan always raised the no-tuple error. The tuple votes
+    themselves are rows of ``test_term_vote``."""
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
-
-    # pure-function checks
-    e = {"partition": {"day": "2024-01-03", "b": "2"}}
-    assert S._partition_term_match(e, ("day", "in",
-                                       ["2024-01-03", "x"])) is True
-    assert S._partition_term_match(e, ("day", "in", ["nope"])) is False
-    assert S._partition_term_match(e, ("b", "in", [2, 7])) is True
-    assert S._partition_term_match(e, ("b", "in", [3, 7])) is False
-    # a bool member is undecidable, never a definitive False
-    assert S._partition_term_match(e, ("b", "in", [True])) is None
 
     t = str(tmp_path / "pin")
     df = spark.range(300).select(
@@ -3821,6 +3822,35 @@ def test_partition_term_match_in_reachable(spark, tmp_path):
                                          [("day", "in", days)])
     assert info["rows_dropped"] == expect
     assert S.snapshot_read(spark, t).count() == 300 - expect
+
+
+def test_eq_delete_reaches_column_shadowing_partition_field(
+        spark, tmp_path):
+    """An equality delete's key band describes a DATA column, so only
+    footer stats may decide which files it reaches. A plain append can
+    add a column named like a partition field; after compaction the
+    file's partition tuple (day=2024-01-02) must not stand in for that
+    column's values ('x'), or the delete skips the file and the row
+    survives."""
+    from pyspark.sql import functions as F
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = str(tmp_path / "shadow")
+    ts = F.expr("timestamp'2024-01-01 00:00:00' + "
+                "make_interval(0,0,0,CAST(id % 2 AS INT),0,0,0)")
+    S.snapshot_commit_partitioned(
+        spark, t, spark.range(4).select(F.col("id").alias("k"),
+                                        ts.alias("ts")),
+        [{"name": "day", "source": "ts", "transform": "day"}])
+    S.snapshot_commit(spark, t, spark.range(4, 5).select(
+        F.col("id").alias("k"), ts.alias("ts"), F.lit("x").alias("day")))
+    S.snapshot_compact(spark, t)
+    S.snapshot_delete_keys(
+        spark, t, spark.createDataFrame([("x",)], "day string"), "day")
+    out = S.snapshot_read(spark, t)
+    assert out.filter("day = 'x'").count() == 0
+    assert out.count() == 4
 
 
 def test_bucket_predicate_skips_unhashable_literals(spark, tmp_path):

@@ -1665,10 +1665,9 @@ def test_metadata_eq_deletes_view(spark, tmp_path):
 
 def test_metadata_view_schemas(spark, tmp_path):
     """Each metadata view's declared schema — names, types and
-    nullability — and ``snapshot_history``'s. The oracle hashes values
-    only, so nothing else pins a NOT NULL mark. ``snapshot_history``
-    is a VALUES relation, whose nullability follows this table's rows
-    (v0 has no parent; no commit here lacks a row count)."""
+    nullability — and ``snapshot_history``'s, which is the ``history``
+    view's. The oracle hashes values only, so nothing else pins a NOT
+    NULL mark."""
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
@@ -1720,9 +1719,7 @@ def test_metadata_view_schemas(spark, tmp_path):
         view = spark.table("meta_view")
         assert shape(view.schema) == want, kind
         assert view.collect(), kind  # the executor builds the rows
-    assert shape(S.snapshot_history(spark, t).schema) == [
-        (n, ty, n in ("parent", "n_change_files"))
-        for n, ty, _ in history]
+    assert shape(S.snapshot_history(spark, t).schema) == history
 
 
 def test_admission_prices_equality_delete_band(spark, tmp_path):

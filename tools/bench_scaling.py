@@ -177,10 +177,9 @@ def main() -> None:
         # partitioning — up to 32 files per band — so the bound is the
         # stats-derived dirty set, not a constant)
         from data_pipeline_stripe_spark.operators.snapshots import \
-            _band_probe
-        probe = _band_probe(["k"], {"k": (401, 800)})
+            _box_may_touch
         dirty_paths = {e["path"] for e in pre_manifest["files"]
-                       if probe(e)}
+                       if _box_may_touch(e, {"k": (401, 800)})}
         clean_paths = pre - dirty_paths
         if (not rewritten_src <= dirty_paths
                 or not clean_paths <= post or not clean_paths):
@@ -214,7 +213,7 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         from data_pipeline_stripe_spark.operators.snapshots import (
-            _entry_may_match, _read_manifest, snapshot_commit,
+            _predicate_probe, _read_manifest, snapshot_commit,
             snapshot_current_version, snapshot_overwrite_where)
         from data_pipeline_stripe_spark.sources import load_table
 
@@ -247,8 +246,9 @@ def main() -> None:
         dt = time.time() - t0
         post = {e["path"] for e in _read_manifest(table_dir,
                                                   version)["files"]}
+        probe = _predicate_probe(preds)
         dirty_paths = {e["path"] for e in pre_manifest["files"]
-                       if all(_entry_may_match(e, t) for t in preds)}
+                       if probe(e)}
         clean_paths = pre - dirty_paths
         if (not (pre - post) <= dirty_paths
                 or not clean_paths <= post or not clean_paths):
