@@ -18,9 +18,10 @@ run of commits, each written once.
   unchanged data file keeps its manifest entry).
 
 Each check raises ``RuntimeError`` naming the caller's ``context``.
-So does ``no_entry_reads``, the tripwire that pins a verb to opening no
+So do ``no_entry_reads``, the tripwire that pins a verb to opening no
 existing data file, until commit summaries count the files a commit
-opens.
+opens, and ``check_refuses``, the one form of a gate's "this call must
+be refused" leg.
 """
 
 from __future__ import annotations
@@ -64,6 +65,25 @@ def no_entry_reads(context: str):
         yield
     finally:
         _snapshots._read_entries = real
+
+
+def check_refuses(fn, exc_type, needle: str | None = None, *,
+                  context: str, what: str) -> BaseException:
+    """Call ``fn()`` and raise ``RuntimeError`` naming ``context`` and
+    ``what`` (the refusal that did not happen) unless it raises
+    ``exc_type`` — whose message contains ``needle``, when given.
+    Returns the refusal. The "did not refuse" error is raised outside
+    the ``try``, so ``exc_type`` can never catch it, even when ``what``
+    contains the needle; any other exception propagates."""
+    try:
+        fn()
+    except exc_type as exc:
+        if needle is not None and needle not in str(exc):
+            raise RuntimeError(
+                f"{context}: expected a refusal naming {needle!r}, got: "
+                f"{exc}") from exc
+        return exc
+    raise RuntimeError(f"{context}: {what}")
 
 
 def feed_changes(feed: DataFrame) -> DataFrame:

@@ -80,9 +80,15 @@ SCALING.md's lakehouse mapping documents):
   resolves to the newest retained version committed at or before the
   timestamp (``snapshot_version_at``); version-based travel stays the
   exact form.
-- **Clustered commits.** ``snapshot_commit_clustered`` range-partitions
-  the batch on the cluster columns before committing, so per-file
-  manifest stats are tight/disjoint and scan pruning is maximal.
+- **Clustered and partitioned commits, one write path.**
+  ``snapshot_commit_clustered`` range-partitions the batch on the
+  cluster columns, so per-file manifest stats are tight/disjoint and
+  scan pruning is maximal; ``snapshot_commit_partitioned`` writes it
+  under a partition spec. Both layouts are table properties, and
+  ``_write_data`` is the one writer of table rows: an append writes
+  under the layout it sets, or as the caller's frame is partitioned;
+  a rewrite of table rows (MERGE, CDC, replaceWhere, compaction)
+  writes under the table's recorded layout.
 - **Streaming source AND sink.** The epoch-keyed commit is an
   exactly-once ``foreachBatch`` sink; ``sources/snapshot_source.py``
   exposes the table as a Spark streaming SOURCE whose offsets are
@@ -821,46 +827,91 @@ def _evolved_schema_json(prev_schema_json: str, df_schema) -> str:
     return union.json()
 
 
-def _write_parquet(table_dir: str, root: str, df: DataFrame,
-                   *partition_cols: str) -> str:
+def _write_data(table_dir: str, df: DataFrame, layout: dict | None = None,
+                n_files: int | None = None, root: str = "data"
+                ) -> list[dict]:
     """Write ``df`` as parquet into a FRESH ``<root>/<id>`` directory of
-    the table (``data`` for commit data, ``changes`` for change logs)
-    and return that table-relative directory. Nothing references it
-    until a manifest publishes, so a failed commit leaves only
-    ``snapshot_expire``'s garbage."""
+    the table (``data`` for table rows, ``changes`` for change logs)
+    and return its manifest entries (``_file_entries``). Nothing
+    references the directory until a manifest publishes, so a failed
+    commit leaves only ``snapshot_expire``'s garbage. Every verb that
+    writes table rows writes them here, so ONE function decides how
+    data files are laid out: an append writes under the layout it sets,
+    or as the caller's frame is partitioned; a rewrite of table rows
+    writes under the table's recorded layout.
+
+    ``layout`` holds the layout properties (a manifest will do). Under a
+    ``partition_spec`` the derived ``__part_*`` columns are staged and
+    written ``partitionBy`` (hidden partitioning: the data files keep
+    the source columns and none of the derived ones); with ``n_files``
+    the rows are first hash-partitioned on them into ``n_files`` tasks,
+    so each partition's rows co-locate instead of every task writing a
+    file per partition it holds. Under ``cluster_cols`` (``n_files``
+    required) the rows are range-partitioned into ``n_files`` files
+    when no spec is set, and sorted within each file after any
+    partition columns, so per-file footer stats stay tight and
+    mostly disjoint. Without a layout the frame is written as it is
+    partitioned."""
+    spec = (layout or {}).get("partition_spec") or []
+    cols = (layout or {}).get("cluster_cols") or []
+    exprs = _partition_exprs(spec)
+    pcols = [c for c, _ in exprs]
+    if exprs:
+        df = df.withColumns(dict(exprs))
+        if n_files:
+            df = df.repartition(n_files, *pcols)
+    elif cols:
+        df = df.repartitionByRange(n_files, *cols)
+    if cols:
+        df = df.sortWithinPartitions(*pcols, *cols)
     rel = os.path.join(root, uuid.uuid4().hex[:12])
-    writer = df.write.mode("error")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(os.path.join(table_dir, rel))
-    return rel
+    df.write.mode("error").partitionBy(*pcols).parquet(
+        os.path.join(table_dir, rel))
+    return _file_entries(table_dir, rel)
 
 
 def _file_entries(table_dir: str, rel_dir: str) -> list[dict]:
-    """Manifest entries (path + footer stats) for every parquet file
-    under ``table_dir/rel_dir`` — used for data commit dirs
-    (``data/<id>``) and change-log dirs (``changes/<id>``) alike."""
-    abs_dir = os.path.join(table_dir, rel_dir)
+    """Manifest entries (path, footer stats, rows, bytes) for every
+    parquet file under ``table_dir/rel_dir``, walked recursively. A
+    file under ``partitionBy`` directories records its PARTITION TUPLE
+    (the decoded ``__part_*`` directory values). A
+    ``__HIVE_DEFAULT_PARTITION__`` component, a NULL transform value,
+    records no value for its field: a PARTIAL tuple, sound because
+    every recorded component is still exact for the file's rows, and a
+    term on an absent field is left to the stats, which do not carry
+    it (never pruned, never dropped)."""
+    from urllib.parse import unquote
+
     entries = []
-    for f in sorted(os.listdir(abs_dir)):
-        if not f.endswith(".parquet"):
-            continue
-        rel = os.path.join(rel_dir, f)
-        abs_path = os.path.join(table_dir, rel)
-        stats, rows = _collect_file_stats(abs_path)
-        entries.append({"path": rel, "stats": stats, "rows": rows,
-                        # on-disk size — the admission-control byte
-                        # budget's unit (maxBytesPerTrigger, r11);
-                        # entries written before this field read as 0
-                        # and only the other budgets bind
-                        "bytes": os.path.getsize(abs_path)})
+    for root, _dirs, files in sorted(os.walk(
+            os.path.join(table_dir, rel_dir))):
+        for f in sorted(files):
+            if not f.endswith(".parquet"):
+                continue
+            rel = os.path.relpath(os.path.join(root, f), table_dir)
+            abs_path = os.path.join(table_dir, rel)
+            stats, rows = _collect_file_stats(abs_path)
+            entry = {"path": rel, "stats": stats, "rows": rows,
+                     # on-disk size — the admission-control byte
+                     # budget's unit (maxBytesPerTrigger, r11);
+                     # entries written before this field read as 0
+                     # and only the other budgets bind
+                     "bytes": os.path.getsize(abs_path)}
+            part = {}
+            for comp in rel.split(os.sep):
+                k, eq, v = comp.partition("=")
+                if (k.startswith(_PART_PREFIX) and eq
+                        and v != "__HIVE_DEFAULT_PARTITION__"):
+                    part[k[len(_PART_PREFIX):]] = unquote(v)
+            if part:
+                entry["partition"] = part
+            entries.append(entry)
     return entries
 
 
 def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
                     mode: str = "append",
-                    epoch_key: str | None = None,
-                    cluster_cols: list[str] | None = None) -> int:
+                    epoch_key: str | None = None) -> int:
     """Commit ``df`` as the next version of ``table_dir``. Returns the
     committed version number.
 
@@ -890,11 +941,29 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
     ever-growing ledger. The check re-runs on every rebase, so two
     writers racing the SAME epoch resolve to exactly one application.
 
-    ``cluster_cols`` records the table's clustering lineage
-    (``snapshot_commit_clustered``); without it an append keeps the
-    lineage and an overwrite clears it."""
+    The batch is written as it is partitioned and sets no layout: an
+    append keeps the table's partition spec and clustering lineage (its
+    files carry no partition tuple), an overwrite clears both.
+    ``snapshot_commit_partitioned`` and ``snapshot_commit_clustered``
+    are this commit under a layout they set."""
+    return _commit_rows(spark, table_dir, df, mode, "snapshot_commit",
+                        epoch_key=epoch_key)
+
+
+def _commit_rows(spark: SparkSession, table_dir: str, df: DataFrame,
+                 mode: str, verb: str, *, epoch_key: str | None = None,
+                 props: dict | None = None,
+                 n_files: int | None = None) -> int:
+    """The one commit body of the three append verbs: write ``df``
+    under the layout ``props`` sets (``_write_data``) and publish it
+    with ``mode``. A commit that sets a ``partition_spec`` refuses a
+    written file whose tuple lacks a field — a NULL transform value —
+    checked on the WRITTEN output, one evaluation (r13: a
+    nondeterministic batch could pass a separate pre-check yet write a
+    NULL partition directory); the unpublished directory is
+    ``snapshot_expire``'s garbage."""
     if mode not in ("append", "overwrite"):
-        raise ValueError(f"snapshot_commit: unknown mode {mode!r}")
+        raise ValueError(f"{verb}: unknown mode {mode!r}")
     os.makedirs(os.path.join(table_dir, _SNAPDIR), exist_ok=True)
 
     # EARLY checks BEFORE writing any data files — a doomed commit must
@@ -911,15 +980,20 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame,
             _read_manifest_meta(table_dir, early_prev)["schema"],
             df.schema)
 
-    new_entries = _file_entries(table_dir,
-                                _write_parquet(table_dir, "data", df))
+    props = props or {}
+    new_entries = _write_data(table_dir, df, props, n_files)
+    spec = props.get("partition_spec") or []
+    for e in new_entries:
+        if len(e.get("partition", {})) < len(spec):
+            raise ValueError(
+                f"{verb}: file {e['path']!r} lacks partition components "
+                f"of spec {[f['name'] for f in spec]} — transform "
+                "sources must be non-NULL")
     return _publish_commit(
         table_dir, mode=mode, new_entries=new_entries,
-        batch_schema=df.schema, epoch_key=epoch_key,
-        props={} if cluster_cols is None else {"cluster_cols": cluster_cols},
+        batch_schema=df.schema, epoch_key=epoch_key, props=props,
         enforce=lambda c: _enforce_constraints(
-            spark, table_dir, c, new_entries, df.schema.json(),
-            "snapshot_commit"))
+            spark, table_dir, c, new_entries, df.schema.json(), verb))
 
 
 def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
@@ -981,7 +1055,9 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
     layout went with the old files. An ``eq_deletes`` descriptor
     without a ``seq`` is one this commit adds; it is stamped with the
     commit's sequence number, and a descriptor that no segment is old
-    enough to need is dropped.
+    enough to need is dropped. Every attempt refuses a commit whose
+    effective partition spec names a field like a column of its
+    evolved schema, whichever verb brings the two together.
 
     Until the link wins, nothing references what this commit wrote, so
     a concurrent ``snapshot_expire`` may sweep it. Every attempt first
@@ -1073,6 +1149,18 @@ def _publish_commit(table_dir: str, *, mode: str, new_entries: list[dict],
                 prev_manifest["schema"], batch_schema)
         eff = {k: props[k] if k in props else prev_manifest.get(k)
                for k in _TABLE_PROPS}
+        shadowed = sorted(
+            {f["name"].casefold() for f in eff["partition_spec"] or []}
+            & {f["name"].casefold()
+               for f in json.loads(schema_json)["fields"]})
+        if shadowed:
+            raise ValueError(
+                f"snapshot_commit: partition field name(s) {shadowed} of "
+                f"{table_dir} collide with data columns — a term on the "
+                "name is a partition-field term, so the column could "
+                "not be queried; partition fields are metadata-only "
+                "names (Iceberg hidden partitioning): rename the field "
+                "or the column")
         pairs = set((eff["constraints"] or {}).items())
         if enforce is not None and (enforced is None
                                     or not pairs <= enforced):
@@ -1895,31 +1983,18 @@ def snapshot_expire(table_dir: str, keep_last: int = 2,
     survivors = [v for v in committed if v not in doomed]
     # branch manifests reference shared storage (r13 WAP): collect
     # their references alongside the main lineage's
-    branch_manifests = []
+    manifests = []
     broot = os.path.join(table_dir, _BRANCH_ROOT)
     if os.path.isdir(broot):
         for b in sorted(os.scandir(broot), key=lambda e: e.name):
             bdir = os.path.join(broot, b.name)
             for bv in _all_manifest_versions(bdir):
-                branch_manifests.append(_read_manifest(bdir, bv))
+                manifests.append(_read_manifest(bdir, bv))
+    manifests += [_read_manifest(table_dir, v) for v in survivors]
     referenced = set()  # (root, commit_id) pairs a survivor references
     referenced_segs = set()  # segment file names survivors reference
     referenced_files = set()  # exact rel paths (file-level GC, r12)
-    for m in branch_manifests:
-        for seg in m["segments"]:
-            referenced_segs.add(os.path.basename(seg["path"]))
-        for e in m["files"] + (m.get("changes") or []):
-            parts = e["path"].split(os.sep)
-            referenced.add((parts[0], parts[1]))
-            referenced_files.add(e["path"])
-            if e.get("dv"):
-                dparts = e["dv"]["path"].split(os.sep)
-                referenced.add((dparts[0], dparts[1]))
-        for d in m.get("eq_deletes") or []:
-            qparts = d["path"].split(os.sep)
-            referenced.add((qparts[0], qparts[1]))
-    for v in survivors:
-        m = _read_manifest(table_dir, v)
+    for m in manifests:
         for seg in m["segments"]:
             referenced_segs.add(os.path.basename(seg["path"]))
         for e in m["files"] + (m.get("changes") or []):
@@ -2062,8 +2137,7 @@ def _write_change_log(spark: SparkSession, table_dir: str,
 
     log = snapshot_diff(before, after, key).select(
         F.col("op").alias("_change_type"), *cols)
-    return _file_entries(table_dir,
-                         _write_parquet(table_dir, "changes", log))
+    return _write_data(table_dir, log, root="changes")
 
 
 def _write_delete_log(table_dir: str, deleted: DataFrame,
@@ -2077,27 +2151,29 @@ def _write_delete_log(table_dir: str, deleted: DataFrame,
         return None
     from pyspark.sql import functions as F
 
-    return _file_entries(table_dir, _write_parquet(
-        table_dir, "changes",
-        deleted.select(F.lit("D").alias("_change_type"), *cols)))
+    return _write_data(
+        table_dir, deleted.select(F.lit("D").alias("_change_type"), *cols),
+        root="changes")
 
 
 def _cow_publish(spark: SparkSession, table_dir: str, verb: str,
-                 manifest: dict, rel: str, schema, dirty_df: DataFrame,
-                 keep_segs: list[dict], keep_entries: list[dict],
-                 probe, key) -> tuple[int, list[dict]]:
+                 manifest: dict, new_entries: list[dict], schema,
+                 dirty_df: DataFrame, keep_segs: list[dict],
+                 keep_entries: list[dict], probe, key) -> int:
     """The shared tail of the copy-on-write verbs (MERGE, CDC apply,
-    replaceWhere), run once the verb has written its replacement files
-    (``schema``) into ``rel``: harvest their entries; with ``key``,
-    record the exact change log of ``dirty_df`` → the COMMITTED files
-    (read back, not the lazy plan: re-executing it could evaluate
-    nondeterministic expressions differently than the write did — feed
-    ≠ table — and would pay the dirty-band work twice); then publish a
-    REWRITE of the read version ``manifest`` that carries the clean
-    segments/entries forward, rebases over interleaved appends the
-    verb's dirty ``probe`` clears, and enforces the table's CHECK
-    constraints on the new files. Returns (version, new entries)."""
-    new_entries = _file_entries(table_dir, rel)
+    replaceWhere), run once the verb has written the rewritten band
+    (``schema``) as ``new_entries``, by ``_write_data`` under the
+    table's recorded layout (partition spec and clustering lineage, as
+    many files as were dirty — else every rewrite would slowly
+    de-partition and de-cluster the table): with ``key``, record the
+    exact change log of ``dirty_df`` → the COMMITTED files (read back,
+    not the lazy plan: re-executing it could evaluate nondeterministic
+    expressions differently than the write did — feed ≠ table — and
+    would pay the dirty-band work twice); then publish a REWRITE of the
+    read version ``manifest`` that carries the clean segments/entries
+    forward, rebases over interleaved appends the verb's dirty
+    ``probe`` clears, and enforces the table's CHECK constraints on the
+    new files. Returns the version."""
     changes_entries = None
     if key is not None:
         cols = [f["name"] for f in json.loads(manifest["schema"])["fields"]]
@@ -2105,31 +2181,13 @@ def _cow_publish(spark: SparkSession, table_dir: str, verb: str,
                                       schema.json())
         changes_entries = _write_change_log(
             spark, table_dir, dirty_df, committed_new, key, cols)
-    version = _publish_commit(
+    return _publish_commit(
         table_dir, mode="rewrite", new_entries=new_entries,
         batch_schema=schema, expected_version=manifest["version"],
         keep_segments=keep_segs, keep_entries=keep_entries,
         changes_entries=changes_entries, cdf_key=key, dirty_probe=probe,
         enforce=lambda c: _enforce_constraints(
             spark, table_dir, c, new_entries, schema.json(), verb))
-    return version, new_entries
-
-
-def _rewrite_layout(df: DataFrame, manifest: dict, n_dirty: int) -> DataFrame:
-    """Layout for a copy-on-write rewrite's replacement files: when the
-    table carries a clustering lineage, range-cluster the rewritten
-    band on it (as many files as were dirty, min 1) so the new files'
-    footer stats stay tight and later ``snapshot_scan``s keep pruning
-    — without this, every MERGE/CDC/replaceWhere would slowly
-    de-cluster the table the same way round-robin compaction used to
-    (r11). Unclustered tables write the plan's natural partitioning
-    unchanged."""
-    cols = manifest.get("cluster_cols")
-    if not cols:
-        return df
-    n = max(n_dirty, 1)
-    return df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-
 
 
 def _update_bands(updates: DataFrame, keys: list[str], verb: str):
@@ -2358,10 +2416,9 @@ def snapshot_merge(spark: SparkSession, table_dir: str,
     else:
         new_state = merged.drop("merge_action")
 
-    rel = _write_parquet(table_dir, "data",
-                         _rewrite_layout(new_state, manifest, len(dirty)))
-    version, _ = _cow_publish(
-        spark, table_dir, "snapshot_merge", manifest, rel,
+    version = _cow_publish(
+        spark, table_dir, "snapshot_merge", manifest,
+        _write_data(table_dir, new_state, manifest, max(len(dirty), 1)),
         new_state.schema, dirty_df, keep_segs, keep_entries, probe,
         keys[0] if len(keys) == 1 else keys)
     clean_df = _read_entries(
@@ -2418,10 +2475,9 @@ def snapshot_apply_cdc(spark: SparkSession, table_dir: str,
     applied = apply_cdc(dirty_df, changes, keys, seq=seq, op=op)
     new_state = applied.drop("cdc_action")
 
-    rel = _write_parquet(table_dir, "data",
-                         _rewrite_layout(new_state, manifest, len(dirty)))
-    version, _ = _cow_publish(
-        spark, table_dir, "snapshot_apply_cdc", manifest, rel,
+    version = _cow_publish(
+        spark, table_dir, "snapshot_apply_cdc", manifest,
+        _write_data(table_dir, new_state, manifest, max(len(dirty), 1)),
         new_state.schema, dirty_df, keep_segs, keep_entries, probe,
         keys[0] if len(keys) == 1 else keys)
     return version, applied
@@ -2603,7 +2659,6 @@ def snapshot_read_cdf(spark: SparkSession, table_dir: str,
 def snapshot_compact(spark: SparkSession, table_dir: str,
                      target_files: int = 1,
                      predicates: list[tuple] | None = None,
-                     cluster_cols: list[str] | None = None,
                      base_version: int | None = None,
                      only_with_deletes: bool = False
                      ) -> tuple[int, int, int]:
@@ -2623,24 +2678,22 @@ def snapshot_compact(spark: SparkSession, table_dir: str,
     log, so incremental CDF consumers pass through compactions with
     zero change rows instead of erroring.
 
-    CLUSTERING-PRESERVING (r11, VERDICT r10's wart): when the table
-    has a recorded clustering lineage (``snapshot_commit_clustered``)
-    — or the caller passes ``cluster_cols`` explicitly — the rewrite
-    is ``repartitionByRange + sortWithinPartitions`` on those columns,
-    so the compacted files keep tight, mostly-disjoint footer stats
-    and later ``snapshot_scan``s prune no worse than before. Before,
-    ``repartition(n)`` round-robined a clustered table into wide-stats
-    files: OPTIMIZE destroyed what clustering built. Pass
-    ``cluster_cols=[]`` to force the round-robin layout explicitly.
-
-    PARTITION-SPEC-PRESERVING (r13, ADVICE r12): when the table
-    records a partition spec, the rewrite re-derives the transform
-    columns from the source columns, writes ``partitionBy``, and
-    records each compacted file's exact partition tuple — OPTIMIZE no
-    longer demotes a partitioned table to stats-only pruning, and
+    LAYOUT-PRESERVING: the rewrite writes under the table's recorded
+    layout (``_write_data``), like every rewrite of table rows. With a
+    clustering lineage (``snapshot_commit_clustered``, r11) it is
+    ``repartitionByRange + sortWithinPartitions`` on those columns, so
+    the compacted files keep tight, mostly-disjoint footer stats and
+    later ``snapshot_scan``s prune no worse than before (a round-robin
+    ``repartition(n)`` would smear every file across the whole range:
+    OPTIMIZE would destroy what clustering built). With a partition
+    spec (r13, ADVICE r12) the transform columns are re-derived from
+    the source columns and written ``partitionBy``, and each compacted
+    file records its exact partition tuple — OPTIMIZE does not demote
+    a partitioned table to stats-only pruning, and
     ``snapshot_drop_partitions`` keeps working on compacted files. A
     side effect: un-tupled plain-append history gets UPGRADED to
-    tupled entries (generation unification).
+    tupled entries (generation unification). An unlaid table is
+    round-robined into ``target_files`` files.
 
     ``only_with_deletes=True`` (r13 second half — Iceberg's
     rewrite-files-with-deletes) compacts ONLY the files carrying
@@ -2707,44 +2760,12 @@ def snapshot_compact(spark: SparkSession, table_dir: str,
         return base_version, files_before, files_before
     df = _read_entries(spark, table_dir, dirty, manifest["schema"],
                        eq_deletes=manifest.get("eq_deletes"))
-    if cluster_cols is None:
-        cluster_cols = manifest.get("cluster_cols")
-    spec = manifest.get("partition_spec")
-    if spec:
-        # PARTITION-SPEC-PRESERVING (r13, ADVICE r12 low: harvesting
-        # via _file_entries recorded no partition tuple, so OPTIMIZE
-        # silently demoted a partitioned table to stats-only pruning
-        # and broke snapshot_drop_partitions for the rewritten files).
-        # Re-derive the transform columns from the SOURCE columns —
-        # they live in every data file regardless of whether the
-        # source entry carried a tuple — write partitionBy, and record
-        # each compacted file's exact tuple. Rows whose transform is
-        # NULL (possible only via plain-append history; the partitioned
-        # commit verb refuses them) land in the default dir and their
-        # entries carry a PARTIAL tuple. Pre-repartition BY THE
-        # TRANSFORM COLUMNS so each partition's rows co-locate instead
-        # of every task writing one file per partition it happens to
-        # hold (the r12 first-measurement catch).
-        exprs = _partition_exprs(spec)
-        pcols = [c for c, _ in exprs]
-        staged = df
-        for c, ex in exprs:
-            staged = staged.withColumn(c, ex)
-        staged = staged.repartition(max(target_files, 1), *pcols)
-        if cluster_cols:
-            staged = staged.sortWithinPartitions(*pcols, *cluster_cols)
-        new_entries = _file_entries_partitioned(
-            table_dir, _write_parquet(table_dir, "data", staged, *pcols),
-            spec, tolerate_default=True)
-    else:
-        if cluster_cols:
-            compacted = (df.repartitionByRange(target_files,
-                                               *cluster_cols)
-                         .sortWithinPartitions(*cluster_cols))
-        else:
-            compacted = df.repartition(target_files)
-        new_entries = _file_entries(
-            table_dir, _write_parquet(table_dir, "data", compacted))
+    # under the recorded layout (``_write_data``); an unlaid table is
+    # round-robined into ``target_files`` files
+    laid = manifest.get("partition_spec") or manifest.get("cluster_cols")
+    new_entries = _write_data(
+        table_dir, df if laid else df.repartition(target_files), manifest,
+        target_files)
     version = _publish_commit(
         table_dir, mode="rewrite",
         new_entries=new_entries,
@@ -2830,13 +2851,11 @@ def snapshot_overwrite_where(spark: SparkSession, table_dir: str,
     # shadowing keys in carried-forward clean files. One evaluation
     # total (the write); the read-back is O(replacement). An abort here
     # leaves only this unreferenced dir — snapshot_expire's garbage.
-    replacement_cols = dirty_df.columns
-    rel = _write_parquet(table_dir, "data", _rewrite_layout(
-        replacement.select(*replacement_cols), manifest,
-        max(len(dirty), 1)))
-    abs_dir = os.path.join(table_dir, rel)
-    written = spark.read.schema(dirty_df.schema).parquet(abs_dir)
-    stray = written.filter(~F.coalesce(cond, F.lit(False))).limit(1)
+    replacement = replacement.select(*dirty_df.columns)
+    n_files = max(len(dirty), 1)
+    written = _write_data(table_dir, replacement, manifest, n_files)
+    stray = _read_entries(spark, table_dir, written, manifest["schema"]) \
+        .filter(~F.coalesce(cond, F.lit(False))).limit(1)
     if not stray.isEmpty():
         raise ValueError(
             "snapshot_overwrite_where: replacement rows fall outside "
@@ -2846,15 +2865,13 @@ def snapshot_overwrite_where(spark: SparkSession, table_dir: str,
     # keep the dirty files' NON-matching rows: stats are file-granular,
     # so a dirty file may straddle the predicate boundary. NULL
     # predicate values are KEPT (they do not match, so they are not
-    # replaced) — coalesce pins the tri-state to a boolean. Appended
-    # into the same fresh commit dir (distinct part-file names).
+    # replaced) — coalesce pins the tri-state to a boolean.
     kept = dirty_df.filter(~F.coalesce(cond, F.lit(False)))
-    _rewrite_layout(kept, manifest, max(len(dirty), 1)).write \
-        .mode("append").parquet(abs_dir)
-    new_state = kept.unionByName(replacement.select(*replacement_cols))
-    version, new_entries = _cow_publish(
-        spark, table_dir, "snapshot_overwrite_where", manifest, rel,
-        new_state.schema, dirty_df, keep_segs, keep_entries, probe, key)
+    new_entries = written + _write_data(table_dir, kept, manifest, n_files)
+    version = _cow_publish(
+        spark, table_dir, "snapshot_overwrite_where", manifest,
+        new_entries, kept.unionByName(replacement).schema, dirty_df,
+        keep_segs, keep_entries, probe, key)
     n_written = sum(e["rows"] for e in new_entries)
     n_carried = (sum(s["n_files"] for s in keep_segs)
                  + len(keep_entries))
@@ -2910,62 +2927,6 @@ def _partition_exprs(spec: list[dict]):
     return out
 
 
-def _file_entries_partitioned(table_dir: str, rel_dir: str,
-                              spec: list[dict],
-                              tolerate_default: bool = False
-                              ) -> list[dict]:
-    """Manifest entries for a partitionBy layout: walk
-    ``rel_dir/__part_a=.../__part_b=.../*.parquet`` recursively and
-    record each file's PARTITION TUPLE (decoded directory values) next
-    to its footer stats. ``tolerate_default`` (the compaction path,
-    ADVICE r12 low): a ``__HIVE_DEFAULT_PARTITION__`` component — a
-    NULL transform value from rows that entered via a PLAIN append —
-    records no value for that field (a PARTIAL tuple: sound, because
-    every recorded component is still exact for the file's rows and
-    a term on an absent field is left to the stats, which do not carry
-    it — never pruned, never dropped);
-    ``snapshot_commit_partitioned`` itself refuses NULLs up front and
-    keeps the strict complete-tuple invariant."""
-    from urllib.parse import unquote
-
-    entries = []
-    for root, _dirs, files in sorted(os.walk(
-            os.path.join(table_dir, rel_dir))):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            rel = os.path.relpath(os.path.join(root, f), table_dir)
-            tuple_vals = {}
-            for comp in rel.split(os.sep):
-                if comp.startswith(_PART_PREFIX) and "=" in comp:
-                    k, v = comp.split("=", 1)
-                    if v == "__HIVE_DEFAULT_PARTITION__":
-                        if not tolerate_default:
-                            raise ValueError(
-                                f"snapshot_commit_partitioned: file "
-                                f"{rel!r} landed in a NULL partition "
-                                "directory — transform sources must be "
-                                "non-NULL")
-                        continue
-                    tuple_vals[k[len(_PART_PREFIX):]] = unquote(v)
-            if (not tolerate_default and
-                    sorted(tuple_vals) != sorted(
-                        f2["name"] for f2 in spec)):
-                raise ValueError(
-                    f"snapshot_commit_partitioned: file {rel!r} is "
-                    f"missing partition components for spec "
-                    f"{[f2['name'] for f2 in spec]}")
-            stats, rows = _collect_file_stats(
-                os.path.join(table_dir, rel))
-            entry = {"path": rel, "stats": stats, "rows": rows,
-                     "bytes": os.path.getsize(
-                         os.path.join(table_dir, rel))}
-            if tuple_vals:
-                entry["partition"] = tuple_vals
-            entries.append(entry)
-    return entries
-
-
 def snapshot_commit_partitioned(spark: SparkSession, table_dir: str,
                                 df: DataFrame, spec: list[dict],
                                 mode: str = "append") -> int:
@@ -2974,22 +2935,22 @@ def snapshot_commit_partitioned(spark: SparkSession, table_dir: str,
     identity / day / month / bucket:<n> — the reference's own date and
     month output partitioning, reference top10.py:266 and
     platform_usage.py:210, made a first-class table property). The
-    batch is written ``partitionBy`` the derived transform columns
+    batch is ``snapshot_commit``'s, written by ``_write_data`` under
+    the spec it sets: ``partitionBy`` the derived transform columns
     (hidden partitioning: data files keep every source column and none
     of the derived ones), each file's manifest entry records its exact
-    partition TUPLE, and the manifest records the spec. A scan term on
-    a partition FIELD NAME then prunes EXACTLY — planned files == the
-    matching partitions' files, no stats conservatism — and
+    partition TUPLE, and the manifest records the spec, which later
+    rewrites of the table's rows follow. A scan term on a partition
+    FIELD NAME then prunes EXACTLY — planned files == the matching
+    partitions' files, no stats conservatism — and
     ``snapshot_drop_partitions`` retires whole partitions as a
-    metadata-only commit. Rows with a NULL transform value are
-    refused — validated on the WRITTEN output before publication, one
-    evaluation (r13); commits from OTHER writers (plain appends) may interleave
-    — their entries carry no tuple and partition terms simply never
-    prune or drop them (Iceberg's spec-evolution rule: pruning exact
-    per entry, conservative across generations)."""
-    if mode not in ("append", "overwrite"):
-        raise ValueError(
-            f"snapshot_commit_partitioned: unknown mode {mode!r}")
+    metadata-only commit. Rows with a NULL transform value are refused
+    — validated on the WRITTEN output before publication, one
+    evaluation (r13); so is a field named like a data column
+    (``_publish_commit``). Plain appends may interleave — their
+    entries carry no tuple and partition terms simply never prune or
+    drop them (Iceberg's spec-evolution rule: pruning exact per entry,
+    conservative across generations)."""
     if not spec:
         raise ValueError(
             "snapshot_commit_partitioned: empty partition spec — use "
@@ -2998,41 +2959,9 @@ def snapshot_commit_partitioned(spark: SparkSession, table_dir: str,
     if len(set(names)) != len(names):
         raise ValueError(
             f"snapshot_commit_partitioned: duplicate field names {names}")
-    overlap = set(names) & {c for c in df.columns}
-    if overlap:
-        raise ValueError(
-            f"snapshot_commit_partitioned: partition field name(s) "
-            f"{sorted(overlap)} collide with data columns — partition "
-            "fields are metadata-only names (Iceberg hidden "
-            "partitioning); rename the field")
-    os.makedirs(os.path.join(table_dir, _SNAPDIR), exist_ok=True)
-    early_prev = snapshot_current_version(table_dir)
-    if mode == "append" and early_prev is not None:
-        _evolved_schema_json(
-            _read_manifest_meta(table_dir, early_prev)["schema"],
-            df.schema)
-    exprs = _partition_exprs(spec)
-    staged = df
-    for col, expr in exprs:
-        staged = staged.withColumn(col, expr)
-    # NULL transform values are validated on the WRITTEN output, not by
-    # a pre-check job (r13, VERDICT r12 item 6 — the same
-    # double-evaluation class ADVICE r11 flagged for replaceWhere: a
-    # nondeterministic batch could pass a separate pre-check evaluation
-    # yet write a NULL partition dir). A NULL value lands in
-    # __HIVE_DEFAULT_PARTITION__ and the strict harvest below raises
-    # BEFORE publication; the unreferenced dir is snapshot_expire's
-    # garbage. One evaluation total (the write).
-    new_entries = _file_entries_partitioned(
-        table_dir,
-        _write_parquet(table_dir, "data", staged, *[c for c, _ in exprs]),
-        spec)
-    return _publish_commit(
-        table_dir, mode=mode, new_entries=new_entries,
-        batch_schema=df.schema, props={"partition_spec": spec},
-        enforce=lambda c: _enforce_constraints(
-            spark, table_dir, c, new_entries, df.schema.json(),
-            "snapshot_commit_partitioned"))
+    return _commit_rows(spark, table_dir, df, mode,
+                        "snapshot_commit_partitioned",
+                        props={"partition_spec": spec})
 
 
 def _derived_partition_terms(spec, predicates: list[tuple]) -> list:
@@ -3439,16 +3368,16 @@ def _mor_commit(spark: SparkSession, table_dir: str, verb: str, key,
     n_rows = n_covered = n_deleted = 0
     if rows is not None:
         check(manifest, rows)  # before paying the data write
-        data_rel = os.path.join("data", uuid.uuid4().hex[:12])
-        rows.write.mode("error").parquet(os.path.join(table_dir, data_rel))
-        entries = _file_entries(table_dir, data_rel)
+        entries = _write_data(table_dir, rows)
+        data_dir = os.path.join(table_dir,
+                                os.path.dirname(entries[0]["path"]))
         n_rows = sum(e["rows"] for e in entries)
         if not n_rows:
-            shutil.rmtree(os.path.join(table_dir, data_rel))
+            shutil.rmtree(data_dir)
             rows, entries = None, []
         else:
             written = spark.read.schema(rows.schema).parquet(
-                os.path.join(table_dir, data_rel)).select(*key_cols)
+                data_dir).select(*key_cols)
             desc = _write_key_sidecar(
                 spark, table_dir,
                 written.dropDuplicates() if dedup_keys else written,
@@ -3869,10 +3798,12 @@ def snapshot_commit_clustered(spark: SparkSession, table_dir: str,
                               df: DataFrame, cluster_cols: list[str],
                               n_files: int, mode: str = "append") -> int:
     """Commit with a CLUSTERED layout so manifest stats prune maximally:
-    range-partition the batch on ``cluster_cols`` (disjoint spans per
-    file — the layout.write_clustered recipe under the commit protocol)
-    and sort within each file, so every data file's footer min/max for
-    the cluster columns is tight and mostly disjoint. A later
+    the batch is ``snapshot_commit``'s, written by ``_write_data``
+    under the clustering it sets — range-partitioned on
+    ``cluster_cols`` into ``n_files`` files (disjoint spans per file —
+    the layout.write_clustered recipe under the commit protocol) and
+    sorted within each, so every data file's footer min/max for the
+    cluster columns is tight and mostly disjoint. A later
     ``snapshot_scan`` on a cluster-column range then plans only the
     files whose span intersects it — the gated query pins planned-file
     count strictly below the unclustered twin's. For 2-D rectangle
@@ -3880,15 +3811,13 @@ def snapshot_commit_clustered(spark: SparkSession, table_dir: str,
     cluster on it (operators/zorder.py builds the read-side cover);
     for 1-D and prefix predicates, plain range clustering is already
     the optimal layout. The cluster columns are RECORDED in the
-    manifest as the table's clustering lineage (r11), so a later
-    ``snapshot_compact`` re-clusters on them instead of destroying the
-    layout."""
-    clustered = (
-        df.repartitionByRange(n_files, *cluster_cols)
-        .sortWithinPartitions(*cluster_cols)
-    )
-    return snapshot_commit(spark, table_dir, clustered, mode=mode,
-                           cluster_cols=list(cluster_cols))
+    manifest as the table's clustering lineage (r11), which
+    ``snapshot_compact`` and the copy-on-write verbs re-cluster on
+    instead of destroying the layout."""
+    return _commit_rows(spark, table_dir, df, mode,
+                        "snapshot_commit_clustered",
+                        props={"cluster_cols": list(cluster_cols)},
+                        n_files=n_files)
 
 
 def snapshot_history(spark: SparkSession, table_dir: str) -> DataFrame:

@@ -17,8 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.snapshot_check import (check_carried, check_feed,
-                                        check_replay, frames_differ,
-                                        no_entry_reads)
+                                        check_refuses, check_replay,
+                                        frames_differ, no_entry_reads)
 from ..sources import load_table
 from ..sources.readers import inline_dim
 from .io_roundtrip import _orders_kpc, _scratch
@@ -2381,13 +2381,11 @@ def snapshot_expire_retention_parity(spark: SparkSession,
         raise RuntimeError(
             f"snapshot_expire_retention_parity: retained versions "
             f"{snapshot_versions(table_dir)}, expected [3, 4, 5]")
-    try:
-        snapshot_read(spark, table_dir, version=2)
-        raise RuntimeError(
-            "snapshot_expire_retention_parity: an expired version is "
-            "still readable — retention did not take")
-    except FileNotFoundError:
-        pass
+    check_refuses(lambda: snapshot_read(spark, table_dir, version=2),
+                  FileNotFoundError,
+                  context="snapshot_expire_retention_parity",
+                  what="an expired version is still readable — "
+                  "retention did not take")
     # retained lineage still serves incremental consumers
     delta_n = snapshot_read_incremental(spark, table_dir, 3).count()
     expect_delta = ev.filter(F.col("slot").isin(3, 4)).count()
@@ -2799,14 +2797,13 @@ def snapshot_conflict_rebase_parity(spark: SparkSession,
     snapshot_commit(spark, table_dir, inband.coalesce(1), mode="append")
     upd2 = ord_all.filter((F.col("k") > 300) & (F.col("k") <= 500)) \
         .withColumn("cents", F.col("cents") * 3)
-    try:
-        snapshot_merge(spark, table_dir, upd2, "k", base_version=stale_v)
-        raise RuntimeError(
-            "snapshot_conflict_rebase_parity: a merge derived from a "
-            "stale read published over an IN-BAND append — the narrow "
-            "check is not narrow enough (lost rows)")
-    except SnapshotConflictError:
-        pass
+    check_refuses(
+        lambda: snapshot_merge(spark, table_dir, upd2, "k",
+                               base_version=stale_v),
+        SnapshotConflictError, context="snapshot_conflict_rebase_parity",
+        what="a merge derived from a stale read published over an "
+        "IN-BAND append — the narrow check is not narrow enough (lost "
+        "rows)")
     snapshot_merge(spark, table_dir, upd2, "k")  # fresh read succeeds
     return snapshot_read(spark, table_dir)
 
@@ -3082,28 +3079,21 @@ def snapshot_check_constraint_parity(spark: SparkSession,
                                          bad_merge, "k")),
     ]:
         head = snapshot_current_version(table_dir)
-        try:
-            attempt()
-            raise RuntimeError(
-                f"snapshot_check_constraint_parity: a violating "
-                f"{label} published — the constraint is not enforced")
-        except ValueError as exc:
-            if "valid_row" not in str(exc):
-                raise
+        check_refuses(attempt, ValueError, "valid_row",
+                      context="snapshot_check_constraint_parity",
+                      what=f"a violating {label} published — the "
+                      "constraint is not enforced")
         if snapshot_current_version(table_dir) != head:
             raise RuntimeError(
                 f"snapshot_check_constraint_parity: the aborted "
                 f"{label} still advanced the version")
 
     # a constraint the HEAD violates is refused (fail-closed add)
-    try:
-        snapshot_add_constraint(spark, table_dir, "tiny", "cents < 100")
-        raise RuntimeError(
-            "snapshot_check_constraint_parity: a head-violating "
-            "constraint was accepted")
-    except ValueError as exc:
-        if "violates" not in str(exc):
-            raise
+    check_refuses(
+        lambda: snapshot_add_constraint(spark, table_dir, "tiny",
+                                        "cents < 100"),
+        ValueError, "violates", context="snapshot_check_constraint_parity",
+        what="a head-violating constraint was accepted")
 
     # the clean merge lands and the final state hashes
     upd = base.filter((F.col("k") > 200) & (F.col("k") <= 400)) \
@@ -3350,16 +3340,12 @@ def snapshot_metadata_conflict_parity(spark: SparkSession,
     # (a) violating rewrite derived from the pre-add read: abort
     bad_upd = base.filter((F.col("k") > 200) & (F.col("k") <= 300)) \
         .withColumn("cents", F.lit(-1).cast("long"))
-    try:
-        S.snapshot_merge(spark, table_dir, bad_upd, "k",
-                         base_version=stale)
-        raise RuntimeError(
-            "snapshot_metadata_conflict_parity: a merge whose rows "
-            "violate the interleaved constraint PUBLISHED — the "
-            "inherited contract was not re-validated")
-    except ValueError as exc:
-        if "nonneg" not in str(exc):
-            raise
+    check_refuses(
+        lambda: S.snapshot_merge(spark, table_dir, bad_upd, "k",
+                                 base_version=stale),
+        ValueError, "nonneg", context="snapshot_metadata_conflict_parity",
+        what="a merge whose rows violate the interleaved constraint "
+        "PUBLISHED — the inherited contract was not re-validated")
     if S.snapshot_current_version(table_dir) != v_add:
         raise RuntimeError(
             "snapshot_metadata_conflict_parity: the aborted merge "
@@ -3394,16 +3380,15 @@ def snapshot_metadata_conflict_parity(spark: SparkSession,
     stray = inline_dim(spark, [(950, "1-URGENT", 10)],
                        "k long, pri string, cents long")
     head_before = S.snapshot_current_version(table_dir)
+    S._enforce_constraints = inject
     try:
-        S._enforce_constraints = inject
-        S.snapshot_commit(spark, table_dir, stray.coalesce(1),
-                          mode="append")
-        raise RuntimeError(
-            "snapshot_metadata_conflict_parity: an append violating "
-            "the mid-flight constraint PUBLISHED")
-    except ValueError as exc:
-        if "cap_k" not in str(exc):
-            raise
+        check_refuses(
+            lambda: S.snapshot_commit(spark, table_dir, stray.coalesce(1),
+                                      mode="append"),
+            ValueError, "cap_k",
+            context="snapshot_metadata_conflict_parity",
+            what="an append violating the mid-flight constraint "
+            "PUBLISHED")
     finally:
         S._enforce_constraints = real_enf
     if not state["fired"]:
@@ -3695,13 +3680,9 @@ def snapshot_wap_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, table_dir,
         late.filter(F.col("k") <= 1100).select("k"), "k")
     head_before_pick = S.snapshot_current_version(table_dir)
-    try:
-        S.snapshot_fast_forward(table_dir, "late")
-        raise RuntimeError(
-            "snapshot_wap_parity: a moved main accepted the strict "
-            "fast-forward")
-    except S.SnapshotConflictError:
-        pass
+    check_refuses(lambda: S.snapshot_fast_forward(table_dir, "late"),
+                  S.SnapshotConflictError, context="snapshot_wap_parity",
+                  what="a moved main accepted the strict fast-forward")
     v_pick = S.snapshot_cherry_pick(spark, table_dir, "late")
     S.snapshot_drop_branch(table_dir, "late")
     if S._read_manifest_meta(table_dir, v_pick)["mode"] != "append":
@@ -3821,15 +3802,11 @@ def snapshot_metadata_tables_parity(spark: SparkSession,
             f"snapshot_metadata_tables_parity: version-0 files "
             f"metadata has {v0_files} rows, expected 1")
     # metadata has no change feed
-    try:
-        (spark.read.format("snapshot_table").option("cdf", "true")
-         .option("metadata", "files").load(table_dir).count())
-        raise RuntimeError(
-            "snapshot_metadata_tables_parity: metadata+cdf did not "
-            "refuse")
-    except Exception as exc:
-        if "metadata" not in str(exc):
-            raise
+    check_refuses(
+        lambda: (spark.read.format("snapshot_table").option("cdf", "true")
+                 .option("metadata", "files").load(table_dir).count()),
+        Exception, "metadata", context="snapshot_metadata_tables_parity",
+        what="metadata+cdf did not refuse")
 
     hist = spark.table(hist_view).select(
         F.lit("history").alias("section"),

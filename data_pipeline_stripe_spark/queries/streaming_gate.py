@@ -31,9 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..operators.snapshot_check import (check_replay, check_stream,
-                                        feed_changes, frames_differ,
-                                        no_entry_reads)
+from ..operators.snapshot_check import (check_refuses, check_replay,
+                                        check_stream, feed_changes,
+                                        frames_differ, no_entry_reads)
 from ..sources import load_table
 from ..sources.readers import empty_frame, inline_dim
 from ..streaming.events import drain
@@ -1249,18 +1249,11 @@ def stream_snapshot_source_skip_changes_parity(spark: SparkSession,
                     mode="append")
 
     # pinned: WITHOUT the option the restarted stream refuses the range
-    try:
-        run(skip=False)
-        raise RuntimeError(
-            "stream_snapshot_source_skip_changes_parity: the plain "
-            "source consumed a rewrite commit without "
-            "skipChangeCommits — the append-only contract is broken")
-    except Exception as exc:
-        if "skipChangeCommits" not in str(exc):
-            raise RuntimeError(
-                "stream_snapshot_source_skip_changes_parity: expected "
-                "the append-only refusal naming the option, got: "
-                f"{exc}") from exc
+    check_refuses(
+        lambda: run(skip=False), Exception, "skipChangeCommits",
+        context="stream_snapshot_source_skip_changes_parity",
+        what="the plain source consumed a rewrite commit without "
+        "skipChangeCommits — the append-only contract is broken")
 
     run(skip=True)
     sink_df = spark.read.parquet(out_dir)

@@ -3086,9 +3086,8 @@ def test_snapshot_overwrite_where_validation(spark, tmp_path):
 
 def test_snapshot_cluster_lineage_and_compact(spark, tmp_path):
     """Lineage rules: a clustered commit records cluster_cols; plain
-    appends inherit it; a plain overwrite clears it; compaction
-    defaults to the lineage (preserving the layout) and
-    cluster_cols=[] forces the round-robin form."""
+    appends inherit it; a plain overwrite clears it; compaction follows
+    the lineage (preserving the layout)."""
     from pyspark.sql import functions as F
 
     from data_pipeline_stripe_spark.operators import snapshots as S
@@ -3106,12 +3105,6 @@ def test_snapshot_cluster_lineage_and_compact(spark, tmp_path):
     kept, total = S.snapshot_pruned_files(t, [("k", "<=", 20)])
     assert total == 4 and len(kept) < total
     assert S._read_manifest(t, v)["cluster_cols"] == ["k"]
-
-    # forced round-robin: every file spans everything, nothing prunes
-    v2, _, _ = S.snapshot_compact(spark, t, target_files=4,
-                                  cluster_cols=[])
-    kept2, total2 = S.snapshot_pruned_files(t, [("k", "<=", 20)])
-    assert total2 == 4 and len(kept2) == total2
 
     # plain overwrite clears the lineage
     S.snapshot_commit(spark, t, df, mode="overwrite")
@@ -3148,10 +3141,11 @@ def test_global_row_number_and_ntile_match_naive(spark):
 
 
 def test_rewrite_verbs_preserve_clustered_layout(spark, tmp_path):
-    """MERGE (and by the same _rewrite_layout path, CDC and
-    replaceWhere) into a CLUSTERED table re-clusters the rewritten
-    band, so the post-merge file stats still prune — without it every
-    copy-on-write verb would slowly round-robin the layout away."""
+    """MERGE (and by the same _write_data path, CDC and replaceWhere)
+    into a CLUSTERED table re-clusters the rewritten band under the
+    recorded lineage, so the post-merge file stats still prune —
+    without it every copy-on-write verb would slowly round-robin the
+    layout away."""
     from pyspark.sql import functions as F
 
     from data_pipeline_stripe_spark.operators import snapshots as S
@@ -3826,12 +3820,14 @@ def test_partition_term_match_in_reachable(spark, tmp_path):
 
 def test_eq_delete_reaches_column_shadowing_partition_field(
         spark, tmp_path):
-    """An equality delete's key band describes a DATA column, so only
-    footer stats may decide which files it reaches. A plain append can
-    add a column named like a partition field; after compaction the
-    file's partition tuple (day=2024-01-02) must not stand in for that
-    column's values ('x'), or the delete skips the file and the row
-    survives."""
+    """A column may not shadow a partition field, whichever verb adds
+    it: a term on the name is a partition-field term, so the column
+    could not be queried (after compaction a pruned scan for
+    day = 'x' found no row while the plain read found one). The plain
+    append that adds ``day`` to a ``day(ts)`` table is refused and
+    publishes nothing. An equality delete's key band still describes a
+    DATA column, so only footer stats decide which entries it reaches:
+    a tuple day=2024-01-02 must not stand in for the column's 'x'."""
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
@@ -3843,14 +3839,15 @@ def test_eq_delete_reaches_column_shadowing_partition_field(
         spark, t, spark.range(4).select(F.col("id").alias("k"),
                                         ts.alias("ts")),
         [{"name": "day", "source": "ts", "transform": "day"}])
-    S.snapshot_commit(spark, t, spark.range(4, 5).select(
-        F.col("id").alias("k"), ts.alias("ts"), F.lit("x").alias("day")))
-    S.snapshot_compact(spark, t)
-    S.snapshot_delete_keys(
-        spark, t, spark.createDataFrame([("x",)], "day string"), "day")
-    out = S.snapshot_read(spark, t)
-    assert out.filter("day = 'x'").count() == 0
-    assert out.count() == 4
+    with pytest.raises(ValueError, match="collide with data columns"):
+        S.snapshot_commit(spark, t, spark.range(4, 5).select(
+            F.col("id").alias("k"), ts.alias("ts"),
+            F.lit("x").alias("day")))
+    assert S.snapshot_current_version(t) == 0
+    entry = {"path": "data/a/f.parquet",
+             "partition": {"day": "2024-01-02"},
+             "stats": {"day": {"min": "x", "max": "x", "nulls": 0}}}
+    assert S._box_may_touch(entry, {"day": ("x", "x")})
 
 
 def test_bucket_predicate_skips_unhashable_literals(spark, tmp_path):
@@ -3926,6 +3923,48 @@ def test_compact_preserves_partition_spec(spark, tmp_path):
         spark, t, [("day", "=", "2024-01-01")])
     d1 = df.filter(F.date_format("ts", "yyyy-MM-dd") == "2024-01-01")
     assert info["rows_dropped"] == d1.count() + d1.filter("k < 5").count()
+
+
+@pytest.mark.parametrize("verb", ["merge", "apply_cdc",
+                                  "overwrite_where"])
+def test_rewrite_verbs_write_under_partition_spec(spark, tmp_path, verb):
+    """A copy-on-write rewrite of a partitioned table's rows writes
+    under the recorded spec: every non-empty rewritten file carries a
+    complete tuple, so dropping one day retires all of that day's rows.
+    Written without ``partitionBy``, the rewritten files carried no
+    tuple and the drop left their rows of the day readable."""
+    from pyspark.sql import functions as F
+
+    import data_pipeline_stripe_spark.operators.snapshots as S
+
+    t = str(tmp_path / verb)
+    df = spark.range(40).select(
+        F.col("id").alias("k"),
+        F.expr("timestamp'2024-01-01 00:00:00' + "
+               "make_interval(0,0,0,CAST(id % 4 AS INT),0,0,0)")
+        .alias("ts"),
+        (F.col("id") * 10).alias("v"))
+    spec = [{"name": "day", "source": "ts", "transform": "day"}]
+    S.snapshot_commit_partitioned(spark, t, df, spec)
+    upd = df.filter("k < 8").withColumn("v", F.lit(0))
+    if verb == "merge":
+        v, _ = S.snapshot_merge(spark, t, upd, "k")
+    elif verb == "apply_cdc":
+        v, _ = S.snapshot_apply_cdc(spark, t, upd.withColumns(
+            {"seq": F.lit(1), "op": F.lit("U")}), "k")
+    else:
+        v, _ = S.snapshot_overwrite_where(spark, t, [("k", "<", 8)], upd,
+                                          key="k")
+    m = S._read_manifest(t, v)
+    assert m["partition_spec"] == spec
+    assert all(e.get("partition", {}).get("day")
+               for e in m["files"] if e["rows"])
+    S.snapshot_drop_partitions(spark, t, [("day", "=", "2024-01-01")])
+    out = S.snapshot_read(spark, t)
+    assert out.filter(
+        F.date_format("ts", "yyyy-MM-dd") == "2024-01-01").count() == 0
+    assert out.count() == 30
+    assert out.filter("v = 0").count() == 6
 
 
 def test_rebase_segments_accumulate_across_retries(spark, tmp_path):
@@ -4672,14 +4711,19 @@ def _spark_jobs(spark, fn):
     return out, scheduler.nextJobId() - before
 
 
-def _mor_table(spark, path):
-    """A one-file snapshot table (k, v) over k in 0..99."""
+def _mor_table(spark, path, spec=None):
+    """A one-file snapshot table (k, v) over k in 0..99; under a
+    partition ``spec``, one file per partition."""
     from pyspark.sql import functions as F
 
     import data_pipeline_stripe_spark.operators.snapshots as S
 
-    S.snapshot_commit(spark, path, spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v")).coalesce(1))
+    df = spark.range(100).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")).coalesce(1)
+    if spec:
+        S.snapshot_commit_partitioned(spark, path, df, spec)
+    else:
+        S.snapshot_commit(spark, path, df)
     return path
 
 
@@ -4827,6 +4871,7 @@ def test_snapshot_read_cdf_plans_change_logs_without_jobs(spark, tmp_path):
 @pytest.mark.parametrize("verb, budget, constrained_budget", [
     ("append", 1, 2),
     ("merge", 8, 9),
+    ("merge_partitioned", 9, 10),
     ("apply_cdc", 8, 9),
     ("overwrite_where", 6, 7),
     ("delete_where", 7, 7),
@@ -4836,10 +4881,15 @@ def test_copy_on_write_verb_job_budget(spark, tmp_path, verb, budget,
                                        constrained_budget, constrained):
     """Spark jobs per call of the copy-on-write verbs over the one-file
     table and a 10-key band, without and with one CHECK constraint (the
-    constraint costs the data-adding verbs one enforcement job)."""
+    constraint costs the data-adding verbs one enforcement job). On a
+    table partitioned into two buckets of ``k``, the merge pays one job
+    more: the rewrite co-locates each partition's rows before writing
+    them ``partitionBy`` (``_write_data``)."""
     import data_pipeline_stripe_spark.operators.snapshots as S
 
-    t = _mor_table(spark, str(tmp_path / "t"))
+    spec = [{"name": "kb", "source": "k", "transform": "bucket:2"}]
+    t = _mor_table(spark, str(tmp_path / "t"),
+                   spec if verb == "merge_partitioned" else None)
     if verb == "compact":  # a second file to compact with the first
         S.snapshot_commit(spark, t, _cdc(spark, (100, 110), "U")
                           .select("k", "v").coalesce(1))
@@ -4852,6 +4902,8 @@ def test_copy_on_write_verb_job_budget(spark, tmp_path, verb, budget,
         "append": lambda: S.snapshot_commit(
             spark, t, _cdc(spark, (100, 110), "U").select("k", "v")),
         "merge": lambda: S.snapshot_merge(
+            spark, t, rows.select("k", "v"), "k")[0],
+        "merge_partitioned": lambda: S.snapshot_merge(
             spark, t, rows.select("k", "v"), "k")[0],
         "apply_cdc": lambda: S.snapshot_apply_cdc(spark, t, rows, "k")[0],
         "overwrite_where": lambda: S.snapshot_overwrite_where(
@@ -5338,6 +5390,33 @@ def _checked_table(spark, path):
         [(3, 0, 1, "D"), (5, 55, 1, "U")],
         "k long, v long, seq long, op string"), "k")
     return path
+
+
+def test_check_refuses_fails_when_the_call_returns():
+    """``check_refuses`` raises when the call returns normally, even
+    when ``what`` contains the needle and ``exc_type`` would catch a
+    RuntimeError; it returns a matching refusal, and wraps one whose
+    message lacks the needle."""
+    from data_pipeline_stripe_spark.operators.snapshot_check import (
+        check_refuses)
+
+    def refuse(msg):
+        def fn():
+            raise ValueError(msg)
+        return fn
+
+    with pytest.raises(RuntimeError, match="^gate: metadata did not"):
+        check_refuses(lambda: None, Exception, "metadata", context="gate",
+                      what="metadata did not refuse")
+    exc = check_refuses(refuse("bad metadata"), ValueError, "metadata",
+                        context="gate", what="x")
+    assert str(exc) == "bad metadata"
+    with pytest.raises(RuntimeError, match="naming 'metadata'"):
+        check_refuses(refuse("other"), ValueError, "metadata",
+                      context="gate", what="x")
+    with pytest.raises(KeyError):
+        check_refuses(lambda: {}["k"], ValueError, context="gate",
+                      what="x")
 
 
 @pytest.mark.parametrize("defect", ["replay", "stream", "feed", "carried",
